@@ -27,7 +27,8 @@ object ImageOps {
     * than throwing — corrupt files are data, not crashes, at 100 TB.
     *
     * Every format decodes through the engine's own from-spec codecs:
-    * PNG via [[graft.multimodal.PngCodec]], GIF via
+    * PNG via [[graft.multimodal.PngCodec]] (its zlib layer and CRCs are
+    * the JDK's `java.util.zip`), GIF via
     * [[graft.multimodal.GifCodec]], BMP via
     * [[graft.multimodal.BmpCodec]], baseline JPEG via
     * [[graft.multimodal.JpegCodec]] (each differentially proven against
@@ -392,8 +393,8 @@ object ImageOps {
 
   /** Encode packed-RGB pixels to PNG bytes — the engine's own
     * deterministic writer ([[graft.multimodal.PngCodec.encode]]: RGB8,
-    * engine zlib, engine CRC), so fixture trees are byte-reproducible
-    * across JVMs with no library codec on the write path either.
+    * the engine's own zlib encoder, JDK CRC-32), so fixture trees are
+    * byte-reproducible across JVMs.
     */
   def encodePng(img: Image): Array[Byte] = graft.multimodal.PngCodec.encode(img)
 }

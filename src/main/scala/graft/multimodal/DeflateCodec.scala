@@ -5,20 +5,20 @@ package graft.multimodal
   * the standard length/distance code tables, stored-block fallback for
   * incompressible data, the sync-flush empty-stored-block idiom) and
   * RFC 1950 (zlib header + Adler-32 trailer) — the write direction of
-  * [[InflateCodec]]. Also carries the from-spec CRC-32 (ISO 3309 /
-  * the PNG annex polynomial) so [[PngCodec]] needs no `java.util.zip`
-  * in either direction.
+  * [[InflateCodec]]. Decoding and checksums (`java.util.zip.CRC32`,
+  * `Adler32`) come from the JDK; this encoder stays the engine's own
+  * because its output builds the media fixtures, whose bytes reach
+  * query results.
   *
   * DEFLATE does not standardize encoder OUTPUT (any conforming
-  * bitstream is legal), so unlike the decoder this encoder cannot be
-  * differentially pinned against a reference byte-for-byte. What CAN
-  * be pinned, and is (DeflateCodecSpec):
+  * bitstream is legal), so this encoder cannot be differentially
+  * pinned against a reference byte-for-byte. What CAN be pinned, and
+  * is (DeflateCodecSpec):
   *
   *  - determinism: every output byte is a pure function of the input
   *    (no library state, no compression-level heuristics that may vary
   *    across JVM releases the way `Deflater`'s do);
-  *  - conformance two independent ways: every stream must inflate
-  *    bit-true through the engine's own [[InflateCodec]] AND through
+  *  - conformance: every stream inflates bit-true through
   *    `java.util.zip.Inflater`.
   *
   * Greedy-only matching (no lazy evaluation) keeps the emitted symbol
@@ -26,50 +26,6 @@ package graft.multimodal
   * reproducibility over ratio.
   */
 object DeflateCodec {
-
-  // ---------------------------------------------------------------------
-  // CRC-32 (the PNG/gzip polynomial, reflected form 0xEDB88320)
-  // ---------------------------------------------------------------------
-
-  private val CrcTable: Array[Int] = Array.tabulate(256) { n =>
-    var c = n
-    var k = 0
-    while (k < 8) {
-      c = if ((c & 1) != 0) 0xEDB88320 ^ (c >>> 1) else c >>> 1
-      k += 1
-    }
-    c
-  }
-
-  /** CRC-32 over `data`, continuing from `seed` (pass the previous
-    * return value to checksum a concatenation; start at 0).
-    */
-  def crc32(data: Array[Byte], seed: Int = 0): Int =
-    crc32Range(data, 0, data.length, seed)
-
-  /** CRC-32 over `data[off, off+len)`. */
-  def crc32Range(data: Array[Byte], off: Int, len: Int, seed: Int = 0): Int = {
-    var c = ~seed
-    var i = off
-    val end = off + len
-    while (i < end) {
-      c = CrcTable((c ^ data(i)) & 0xFF) ^ (c >>> 8)
-      i += 1
-    }
-    ~c
-  }
-
-  /** Adler-32 (RFC 1950 §8). */
-  def adler32(data: Array[Byte]): Int = {
-    var a = 1L; var b = 0L
-    var i = 0
-    while (i < data.length) {
-      a = (a + (data(i) & 0xFF)) % 65521
-      b = (b + a) % 65521
-      i += 1
-    }
-    ((b << 16) | a).toInt
-  }
 
   // ---------------------------------------------------------------------
   // RFC 1951 §3.2.5 code tables (encoder direction)
@@ -263,7 +219,9 @@ object DeflateCodec {
     val bos = new java.io.ByteArrayOutputStream(data.length / 2 + 16)
     bos.write(0x78); bos.write(0x01)
     bos.write(deflate(data))
-    val a = adler32(data)
+    val adler = new java.util.zip.Adler32
+    adler.update(data)
+    val a = adler.getValue.toInt
     bos.write((a >>> 24) & 0xFF); bos.write((a >>> 16) & 0xFF)
     bos.write((a >>> 8) & 0xFF); bos.write(a & 0xFF)
     bos.toByteArray

@@ -1,7 +1,8 @@
 package graft.multimodal
 
-/** GZIP (RFC 1952) member framing over the from-spec DEFLATE pair
-  * ([[InflateCodec]]/[[DeflateCodec]]). The unit is the MEMBER — a gzip
+/** GZIP (RFC 1952) member framing over [[InflateCodec]] (JDK `Inflater`
+  * decode, JDK `CRC32` checks) and the engine's deterministic
+  * [[DeflateCodec]] encoder. The unit is the MEMBER — a gzip
   * file is one or more members back to back, and the big-crawl formats
   * lean on that: Common Crawl's `.warc.gz` compresses EVERY record as
   * its own member so a reader can seek to a record offset and inflate
@@ -74,15 +75,17 @@ object GzipCodec {
         if ((flg & 2) != 0) {                      // FHCRC: CRC-16 of header
           if (off + 2 > bytes.length) fail()
           val stored = (bytes(off) & 0xFF) | ((bytes(off + 1) & 0xFF) << 8)
-          val calc = DeflateCodec.crc32Range(bytes, start, off - start) & 0xFFFF
-          if (stored != calc) fail()
+          val calc = new java.util.zip.CRC32
+          calc.update(bytes, start, off - start)
+          if (stored != (calc.getValue & 0xFFFF)) fail()
           off += 2
         }
         val (payload, end) =
           InflateCodec.inflateUnknown(bytes, off, maxMemberOut).getOrElse(fail())
         if (end + 8 > bytes.length) fail()
-        if (u32(bytes, end) != (DeflateCodec.crc32(payload) & 0xFFFFFFFFL))
-          fail()                                   // CRC32 trailer
+        val crc = new java.util.zip.CRC32
+        crc.update(payload)
+        if (u32(bytes, end) != crc.getValue) fail() // CRC32 trailer
         if (u32(bytes, end + 4) != (payload.length & 0xFFFFFFFFL))
           fail()                                   // ISIZE trailer
         off = end + 8
@@ -109,8 +112,9 @@ object GzipCodec {
     */
   private[multimodal] final class CrcCountStream(inner: java.io.InputStream)
       extends java.io.InputStream {
-    var crc: Int = 0
+    private val crc32 = new java.util.zip.CRC32
     var count: Long = 0L
+    def crc: Long = crc32.getValue
     private val one = new Array[Byte](1)
     override def read(): Int = {
       val n = read(one, 0, 1)
@@ -119,7 +123,7 @@ object GzipCodec {
     override def read(b: Array[Byte], off: Int, len: Int): Int = {
       val n = inner.read(b, off, len)
       if (n > 0) {
-        crc = DeflateCodec.crc32Range(b, off, n, crc)
+        crc32.update(b, off, n)
         count += n
       }
       n
@@ -137,11 +141,11 @@ object GzipCodec {
     * past both `Array[Byte]` and the `binaryFile` content column). For
     * each member, `f` receives the validated header and an InputStream
     * over the inflating payload ([[InflateCodec.InflateInputStream]],
-    * one 64 KiB ring regardless of member size; valid only during the
+    * bounded memory regardless of member size; valid only during the
     * call). Unread payload is drained afterwards so the CRC-32 and
     * ISIZE trailers are ALWAYS verified over the whole member — same
     * strictness as [[members]]. No decompression-bomb bound is needed
-    * here: nothing is materialized, so memory is O(ring) however large
+    * here: nothing is materialized, so memory is O(window) however large
     * a member inflates (ISIZE compares mod 2^32 per RFC 1952 §2.3.1).
     * Any malformation (or an underlying I/O failure) → None.
     */
@@ -194,17 +198,18 @@ object GzipCodec {
             while (next() != 0) ()
           }
           if ((flg & 2) != 0) {                    // FHCRC over the header
-            val headerBytes = hdr.toByteArray
-            val calc = DeflateCodec.crc32Range(headerBytes, 0,
-              headerBytes.length, 0) & 0xFFFF
+            val calc = new java.util.zip.CRC32
+            calc.update(hdr.toByteArray)
             val stored = next() | (next() << 8)
-            if (stored != calc) fail()
+            if (stored != (calc.getValue & 0xFFFF)) fail()
           }
           val headerLen = hdr.size().toLong
           val inf = new InflateCodec.InflateInputStream(in)
           val tracked = new CrcCountStream(inf)
-          out += f(MemberHeader(offset, name, mtime), tracked)
-          drain(tracked)
+          try {
+            out += f(MemberHeader(offset, name, mtime), tracked)
+            drain(tracked)
+          } finally inf.close()
           // trailer: CRC32 + ISIZE, little-endian, byte-aligned
           var crcStored = 0L
           var isize = 0L
@@ -218,7 +223,7 @@ object GzipCodec {
             val b = in.read(); if (b < 0) fail()
             isize |= b.toLong << (8 * k); k += 1
           }
-          if (crcStored != (tracked.crc & 0xFFFFFFFFL)) fail()
+          if (crcStored != tracked.crc) fail()
           if (isize != (tracked.count & 0xFFFFFFFFL)) fail()
           offset += headerLen + inf.compressedBytesConsumed + 8
         }
@@ -246,9 +251,11 @@ object GzipCodec {
       out.write(0)
     }
     out.write(DeflateCodec.deflate(payload))
-    val crc = DeflateCodec.crc32(payload)
+    val crc32 = new java.util.zip.CRC32
+    crc32.update(payload)
+    val crc = crc32.getValue
     k = 0
-    while (k < 4) { out.write((crc >> (8 * k)) & 0xFF); k += 1 }
+    while (k < 4) { out.write(((crc >> (8 * k)) & 0xFF).toInt); k += 1 }
     k = 0
     while (k < 4) { out.write((payload.length >> (8 * k)) & 0xFF); k += 1 }
     out.toByteArray

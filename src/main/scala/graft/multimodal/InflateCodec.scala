@@ -1,605 +1,248 @@
 package graft.multimodal
 
-/** Pure-JVM DEFLATE + zlib decoder implemented from the PUBLIC
-  * specifications — RFC 1951 (stored blocks, fixed and dynamic Huffman
-  * blocks, the code-length alphabet with 16/17/18 repeat codes, LZ77
-  * length/distance extra-bit tables, 32 KiB window) and RFC 1950 (the
-  * zlib wrapper: CMF/FLG consistency check, preset-dictionary
-  * rejection, Adler-32 verified over the decompressed output). This
-  * makes the engine's COMPRESSION layer engine-owned where its formats
-  * are: [[PngCodec]] inflates IDAT through this decoder, so a PNG
-  * decode touches no library codec at all; `java.util.zip.Deflater`
-  * remains the differential oracle in the specs (every Deflater level,
-  * random and redundant payloads, must round-trip bit-true through
-  * this decoder). The WRITE direction is [[DeflateCodec]] — the
-  * engine's own deterministic encoder, pinned by round-tripping
-  * through both this decoder and `Inflater`. TOTAL on arbitrary
-  * bytes — same contract as every codec here.
+import java.util.zip.{DataFormatException, Inflater}
+
+/** DEFLATE (RFC 1951) and zlib (RFC 1950) decoding over
+  * `java.util.zip.Inflater`, behind the contracts the engine's callers
+  * state: an exact output size where the framing declares one (PNG's
+  * IHDR, a zip directory), a `maxOut` bound against decompression bombs
+  * where it does not (gzip members, HTTP bodies, ZMBV segments), the
+  * zlib header, FDICT rejection and Adler-32 check (all done by
+  * `Inflater`'s zlib mode), and no bytes accepted after a zlib trailer.
+  * The write direction is [[DeflateCodec]], whose encoder the engine
+  * keeps so fixture bytes stay fixed.
+  *
+  * Every decode goes through `step`, one `inflate` call that turns
+  * `Inflater`'s stalls (a dictionary request, a call that makes no
+  * progress) into failures instead of spins. Every `Inflater` is `end()`ed in a
+  * `finally`, or by the owning object's `close()`, so native memory
+  * never waits for a GC. TOTAL on arbitrary bytes — same contract as
+  * every codec here.
   */
 object InflateCodec {
 
   private final class Malformed extends RuntimeException
   private def fail(): Nothing = throw new Malformed
 
+  /** One `inflate` call into `b[off, off+len)`. Returns 0 only when the
+    * stream has ended or the input is used up; throws when `Inflater`
+    * wants a preset dictionary or makes no progress at all.
+    */
+  private def step(inf: Inflater, b: Array[Byte], off: Int, len: Int): Int = {
+    val before = inf.getBytesRead
+    val n = inf.inflate(b, off, len)
+    if (n == 0 && !inf.finished() && (inf.needsDictionary() ||
+        (!inf.needsInput() && inf.getBytesRead == before)))
+      throw new DataFormatException("inflate stalled")
+    n
+  }
+
+  /** Inflate the input `inf` holds into exactly `expected` bytes: the
+    * stream must end there, with no output left over.
+    */
+  private def exact(inf: Inflater, expected: Int): Array[Byte] = {
+    if (expected < 0) fail()
+    val out = new Array[Byte](expected)
+    var got = 0
+    while (got < expected) {
+      val n = step(inf, out, got, expected - got)
+      if (n == 0) fail()
+      got += n
+    }
+    if (step(inf, new Array[Byte](1), 0, 1) != 0 || !inf.finished()) fail()
+    out
+  }
+
+  /** Inflate the input `inf` holds until the stream ends or the input
+    * is used up, failing past `maxOut` output bytes.
+    */
+  private def bounded(inf: Inflater, maxOut: Int): Array[Byte] = {
+    val out = new java.io.ByteArrayOutputStream(1024)
+    val buf = new Array[Byte](8192)
+    var n = step(inf, buf, 0, buf.length)
+    while (n > 0) {
+      if (n > maxOut - out.size()) fail()
+      out.write(buf, 0, n)
+      n = step(inf, buf, 0, buf.length)
+    }
+    out.toByteArray
+  }
+
+  /** Run `f` over a fresh `Inflater` fed `data[from, length)`; None on
+    * any malformation.
+    */
+  private def decode[A](data: Array[Byte], from: Int, nowrap: Boolean)(
+      f: Inflater => A): Option[A] = {
+    if (from < 0 || from > data.length) return None
+    val inf = new Inflater(nowrap)
+    try {
+      inf.setInput(data, from, data.length - from)
+      Some(f(inf))
+    } catch {
+      case _: Malformed | _: DataFormatException => None
+    } finally inf.end()
+  }
+
   /** zlib stream (RFC 1950) → bytes; `expected` is the exact output
     * size the caller knows from its own framing (PNG's IHDR), enforced
-    * strictly. None on any malformation, including an Adler-32
-    * mismatch.
+    * strictly. None on any malformation: a bad header, FDICT, an
+    * Adler-32 mismatch, or any byte after the trailer.
     */
   def zlib(data: Array[Byte], expected: Int): Option[Array[Byte]] =
-    try {
-      if (data.length < 6) fail()
-      val cmf = data(0) & 0xFF
-      val flg = data(1) & 0xFF
-      if ((cmf & 0x0F) != 8) fail() // method: deflate
-      if (((cmf << 8) | flg) % 31 != 0) fail() // header check bits
-      if ((flg & 0x20) != 0) fail() // FDICT: preset dictionary unsupported
-      val (out, endBit) = inflateEnd(data, 2, expected).getOrElse(fail())
-      // the DEFLATE stream must end exactly 4 bytes (the trailer) before
-      // the buffer end — otherwise the Adler check below would compare
-      // against unrelated trailing garbage rather than the real trailer
-      if (((endBit + 7) >> 3) != data.length - 4) fail()
-      // Adler-32 over the OUTPUT, stored big-endian after the stream
-      var a = 1L; var b = 0L
-      out.foreach { byte => a = (a + (byte & 0xFF)) % 65521; b = (b + a) % 65521 }
-      val stored = data.takeRight(4)
-      val adler = ((stored(0) & 0xFFL) << 24) | ((stored(1) & 0xFFL) << 16) |
-        ((stored(2) & 0xFFL) << 8) | (stored(3) & 0xFFL)
-      if (((b << 16) | a) != adler) fail()
-      Some(out)
-    } catch {
-      case _: Malformed | _: ArrayIndexOutOfBoundsException => None
+    decode(data, 0, nowrap = false) { inf =>
+      val out = exact(inf, expected)
+      if (inf.getRemaining != 0) fail()
+      out
     }
 
-  /** Raw DEFLATE (RFC 1951) from bit offset `from`*8 → exactly
-    * `expected` bytes.
+  /** zlib stream with UNKNOWN output size, bounded by `maxOut`; bytes
+    * after the Adler-32 trailer are ignored (the HTTP `deflate` body
+    * shape).
+    */
+  def zlibUnknown(data: Array[Byte], maxOut: Int): Option[Array[Byte]] =
+    decode(data, 0, nowrap = false) { inf =>
+      val out = bounded(inf, maxOut)
+      if (!inf.finished()) fail()
+      out
+    }
+
+  /** Raw DEFLATE (RFC 1951) from byte offset `from` → exactly
+    * `expected` bytes; bytes after the stream are not examined.
     */
   def inflate(data: Array[Byte], from: Int, expected: Int): Option[Array[Byte]] =
-    inflateEnd(data, from, expected).map(_._1)
+    decode(data, from, nowrap = true)(exact(_, expected))
 
   /** Raw DEFLATE from byte offset `from` with UNKNOWN output size — the
     * gzip-member shape (RFC 1952 puts ISIZE AFTER the stream, so a
     * member walker cannot know the size up front). Output is bounded by
     * `maxOut` (the decompression-bomb guard every caller of this family
-    * states); returns the bytes and the BYTE offset one past the last
-    * consumed byte (bit end rounded up — DEFLATE streams inside gzip are
-    * always followed by the byte-aligned 8-byte trailer). Decodes
-    * through the pull-based [[InflateInputStream]], so memory tracks
-    * the member's ACTUAL size, not the caller's worst-case bound (a
-    * many-member `.warc.gz` would otherwise pay one zeroed `maxOut`
-    * allocation per record).
+    * states) and grows with the member's actual size; returns the bytes
+    * and the byte offset one past the stream's last byte (DEFLATE
+    * streams inside gzip are followed by the byte-aligned trailer).
     */
   def inflateUnknown(data: Array[Byte], from: Int,
       maxOut: Int): Option[(Array[Byte], Int)] =
-    try {
-      if (from < 0 || from > data.length) fail()
-      val in = new java.io.ByteArrayInputStream(data, from, data.length - from)
-      val inf = new InflateInputStream(in)
-      val out = new java.io.ByteArrayOutputStream(1024)
-      val buf = new Array[Byte](8192)
-      var n = inf.read(buf)
-      while (n > 0) {
-        if (out.size() + n > maxOut) fail()
-        out.write(buf, 0, n)
-        n = inf.read(buf)
-      }
-      Some((out.toByteArray, from + inf.compressedBytesConsumed))
-    } catch {
-      case _: Malformed | _: ArrayIndexOutOfBoundsException |
-          _: java.io.IOException => None
-    }
-
-  /** As [[inflate]] but also returns the bit position one past the last
-    * consumed bit, so a wrapper (zlib) can check its trailer really
-    * starts where the stream ended. With `exact = false`, `expected` is
-    * an upper BOUND and the returned array is trimmed to what the
-    * stream produced.
-    */
-  private def inflateEnd(data: Array[Byte], from: Int,
-      expected: Int, exact: Boolean = true): Option[(Array[Byte], Long)] =
-    try {
-      if (expected < 0) fail()
-      val out = new Array[Byte](expected)
-      var got = 0
-      var bitPos = from.toLong * 8
-      val totalBits = data.length.toLong * 8
-      def bits(n: Int): Int = {
-        if (bitPos + n > totalBits) fail()
-        var v = 0
-        var k = 0
-        while (k < n) {
-          v |= ((data(((bitPos + k) >> 3).toInt) >> ((bitPos + k) & 7).toInt) & 1) << k
-          k += 1
-        }
-        bitPos += n
-        v
-      }
-      var fin = false
-      while (!fin) {
-        fin = bits(1) == 1
-        bits(2) match {
-          case 0 => // stored
-            bitPos = (bitPos + 7) & ~7L
-            val len = bits(8) | (bits(8) << 8)
-            val nlen = bits(8) | (bits(8) << 8)
-            if ((len ^ 0xFFFF) != nlen) fail()
-            var k = 0
-            while (k < len) {
-              if (got >= expected || bitPos + 8 > totalBits) fail()
-              out(got) = data((bitPos >> 3).toInt)
-              bitPos += 8
-              got += 1
-              k += 1
-            }
-          case 1 => // fixed Huffman
-            got = block(FixedLit, FixedDist, bits, out, got)
-          case 2 => // dynamic Huffman
-            val hlit = bits(5) + 257
-            val hdist = bits(5) + 1
-            val hclen = bits(4) + 4
-            val clLens = new Array[Int](19)
-            var k = 0
-            while (k < hclen) { clLens(ClOrder(k)) = bits(3); k += 1 }
-            val clTree = huffman(clLens)
-            val lens = new Array[Int](hlit + hdist)
-            var i = 0
-            while (i < lens.length) {
-              decodeSym(clTree, bits) match {
-                case s if s < 16 => lens(i) = s; i += 1
-                case 16 =>
-                  if (i == 0) fail()
-                  val r = 3 + bits(2)
-                  val v = lens(i - 1)
-                  var j = 0
-                  while (j < r) { if (i >= lens.length) fail(); lens(i) = v; i += 1; j += 1 }
-                case 17 =>
-                  val r = 3 + bits(3)
-                  i += r
-                  if (i > lens.length) fail()
-                case 18 =>
-                  val r = 11 + bits(7)
-                  i += r
-                  if (i > lens.length) fail()
-                case _ => fail()
-              }
-            }
-            got = block(huffman(lens.take(hlit)), huffman(lens.drop(hlit)), bits, out, got)
-          case _ => fail()
-        }
-      }
-      if (exact && got != expected) fail()
-      Some((if (got == expected) out else java.util.Arrays.copyOf(out, got),
-        bitPos))
-    } catch {
-      case _: Malformed | _: ArrayIndexOutOfBoundsException => None
+    decode(data, from, nowrap = true) { inf =>
+      val out = bounded(inf, maxOut)
+      if (!inf.finished()) fail()
+      (out, data.length - inf.getRemaining)
     }
 
   /** Shared-context streaming decode — the ZMBV shape: one zlib stream
     * whose producer sync-flushes after every frame, so each payload is
-    * a byte-aligned run of whole DEFLATE blocks (ending in the flush's
-    * empty stored block) and LZ77 distances reach back into PREVIOUS
-    * segments' output. The first segment carries the 2-byte zlib
-    * header; a 32 KiB history window persists across segments; output
-    * size per segment is discovered, not declared. No Adler check —
-    * the stream is never finalized (same as any streaming consumer).
+    * a byte-aligned run of whole DEFLATE blocks and LZ77 distances reach
+    * back into PREVIOUS segments' output. One `Inflater` carries the
+    * context: the first segment (and the first after [[reset]]) starts
+    * with the zlib header, and output size per segment is discovered,
+    * not declared. No Adler check — the stream is never finalized. A
+    * segment cut short yields the output its bytes carry; the caller's
+    * framing (ZMBV's body sizes) rejects what is missing. The owner
+    * calls [[close]] to free the native state.
     */
-  final class Stream {
-    private var hist: Array[Byte] = Array.emptyByteArray
-    private var sawHeader = false
+  final class Stream extends AutoCloseable {
+    private val inf = new Inflater()
 
     /** `maxOut` bounds the segment's decompressed size: a crafted
-      * sync-flushed segment can otherwise expand without limit via
-      * nested length/distance copies before any validity check (a
-      * decompression bomb inside an untrusted .avi/.mkv), and OOM is
-      * not a Malformed. Callers know the frame-derived bound (a ZMBV
-      * body is at most palette + pixels + vector table).
+      * sync-flushed segment can otherwise expand without limit (a
+      * decompression bomb inside an untrusted .avi/.mkv). Callers know
+      * the frame-derived bound (a ZMBV body is at most palette + pixels
+      * + vector table).
       */
     def segment(data: Array[Byte], from: Int,
         maxOut: Int = Int.MaxValue): Option[Array[Byte]] =
       try {
-        var start = from
-        if (!sawHeader) {
-          if (data.length < from + 2) fail()
-          val cmf = data(from) & 0xFF
-          val flg = data(from + 1) & 0xFF
-          if ((cmf & 0x0F) != 8 || ((cmf << 8) | flg) % 31 != 0 ||
-            (flg & 0x20) != 0) fail()
-          start = from + 2
-          sawHeader = true
-        }
-        val out = new java.io.ByteArrayOutputStream(1024)
-        var outLen = 0
-        val window = new scala.collection.mutable.ArrayBuffer[Byte](4096)
-        def emit(b: Byte): Unit = {
-          if (outLen >= maxOut) fail()
-          out.write(b); window += b; outLen += 1
-        }
-        def at(back: Int): Byte = { // back = distance from current end
-          if (back <= window.length) window(window.length - back)
-          else {
-            val k = hist.length - (back - window.length)
-            if (k < 0) fail()
-            hist(k)
-          }
-        }
-        var bitPos = start.toLong * 8
-        val totalBits = data.length.toLong * 8
-        def bits(n: Int): Int = {
-          if (bitPos + n > totalBits) fail()
-          var v = 0
-          var k = 0
-          while (k < n) {
-            v |= ((data(((bitPos + k) >> 3).toInt) >> ((bitPos + k) & 7).toInt) & 1) << k
-            k += 1
-          }
-          bitPos += n
-          v
-        }
-        def huffBlock(lit: Huff, dist: Huff): Unit = {
-          var done = false
-          while (!done) {
-            val sym = decodeSym(lit, bits)
-            if (sym < 256) emit(sym.toByte)
-            else if (sym == 256) done = true
-            else {
-              val li = sym - 257
-              if (li >= LenBase.length) fail()
-              val len = LenBase(li) + bits(LenExtra(li))
-              val di = decodeSym(dist, bits)
-              if (di >= DistBase.length) fail()
-              val d = DistBase(di) + bits(DistExtra(di))
-              var k = 0
-              while (k < len) { emit(at(d)); k += 1 }
-            }
-          }
-        }
-        var stop = false
-        while (!stop && bitPos < totalBits) {
-          val fin = bits(1)
-          bits(2) match {
-            case 0 =>
-              bitPos = (bitPos + 7) & ~7L
-              val len = bits(8) | (bits(8) << 8)
-              val nlen = bits(8) | (bits(8) << 8)
-              if ((len ^ 0xFFFF) != nlen) fail()
-              var k = 0
-              while (k < len) {
-                if (bitPos + 8 > totalBits) fail()
-                emit(data((bitPos >> 3).toInt))
-                bitPos += 8
-                k += 1
-              }
-            case 1 => huffBlock(FixedLit, FixedDist)
-            case 2 =>
-              val hlit = bits(5) + 257
-              val hdist = bits(5) + 1
-              val hclen = bits(4) + 4
-              val clLens = new Array[Int](19)
-              var k = 0
-              while (k < hclen) { clLens(ClOrder(k)) = bits(3); k += 1 }
-              val clTree = huffman(clLens)
-              val lens = new Array[Int](hlit + hdist)
-              var i = 0
-              while (i < lens.length) {
-                decodeSym(clTree, bits) match {
-                  case s if s < 16 => lens(i) = s; i += 1
-                  case 16 =>
-                    if (i == 0) fail()
-                    val r = 3 + bits(2)
-                    val v = lens(i - 1)
-                    var j = 0
-                    while (j < r) { if (i >= lens.length) fail(); lens(i) = v; i += 1; j += 1 }
-                  case 17 => i += 3 + bits(3); if (i > lens.length) fail()
-                  case 18 => i += 11 + bits(7); if (i > lens.length) fail()
-                  case _ => fail()
-                }
-              }
-              huffBlock(huffman(lens.take(hlit)), huffman(lens.drop(hlit)))
-            case _ => fail()
-          }
-          if (fin == 1) stop = true
-        }
-        // a sync-flushed segment ends byte-aligned with input exhausted;
-        // a BFINAL block may leave ≤7 zero pad bits
-        if (!stop && bitPos != totalBits) fail()
-        val produced = out.toByteArray
-        val keep = 32768
-        hist =
-          if (produced.length >= keep) java.util.Arrays.copyOfRange(produced, produced.length - keep, produced.length)
-          else {
-            val carry = math.min(hist.length, keep - produced.length)
-            java.util.Arrays.copyOfRange(hist, hist.length - carry, hist.length) ++ produced
-          }
-        Some(produced)
+        inf.setInput(data, from, data.length - from)
+        Some(bounded(inf, maxOut))
       } catch {
-        case _: Malformed | _: ArrayIndexOutOfBoundsException => None
+        case _: Malformed | _: DataFormatException |
+            _: ArrayIndexOutOfBoundsException => None
       }
+
+    /** Restart the stream at a keyframe: drop the window and expect a
+      * fresh zlib header on the next segment.
+      */
+    def reset(): Unit = inf.reset()
+
+    override def close(): Unit = inf.end()
   }
 
-  /** Pull-based RFC 1951 decoder over a `java.io.InputStream` — the
+  /** Pull-based raw DEFLATE decoder over a `java.io.InputStream` — the
     * bounded-memory read path for archive members bigger than a JVM
-    * array (round-11 re-plumb: a 100 TB ingest's dataset tarballs run
-    * 10–100 GiB, far past both `Array[Byte]` and the `binaryFile`
-    * content column). Memory is one 64 KiB ring regardless of stream
-    * size: decoded bytes land in the ring, the consumer drains them,
-    * and LZ77 distances (≤ 32 KiB by the RFC 1951 window bound) resolve
-    * against ring history that is never overwritten before it ages past
-    * the window (each fill stops at 4 KiB + one ≤258-byte match, so
-    * unread output stays ≤ `RingSize` − 32 KiB). Reads its input one
-    * byte at a time and never past the DEFLATE stream's final bit, so
-    * the caller's stream is positioned at the byte-aligned end (where
-    * gzip's trailer / zip's data descriptor sits) when `read` returns
-    * −1. Malformed input throws `java.io.IOException` — the stream
-    * contract's failure channel; walkers convert it to their total
-    * `None`.
+    * array (a 100 TB ingest's dataset tarballs run 10–100 GiB, far past
+    * both `Array[Byte]` and the `binaryFile` content column). Memory is
+    * `Inflater`'s window plus one input chunk regardless of stream size.
+    *
+    * `in` must support mark/reset (wrap it in a `BufferedInputStream`):
+    * input is read in chunks, and when the stream ends the bytes the
+    * decoder did not use are pushed back, so the caller's stream sits
+    * at the byte-aligned end (where gzip's trailer or zip's data
+    * descriptor follows) once `read` returns −1. Malformed or truncated
+    * input throws `java.io.IOException` — the stream contract's failure
+    * channel; walkers convert it to their total `None`. `close()` frees
+    * the `Inflater` and leaves `in` open: the caller owns it and reads
+    * on from it.
     */
   final class InflateInputStream(in: java.io.InputStream)
       extends java.io.InputStream {
-    private val RingSize = 65536
-    private val Mask = RingSize - 1
-    private val ring = new Array[Byte](RingSize)
-    private var wpos = 0L // total bytes produced
-    private var rpos = 0L // total bytes served
-    private var bytesIn = 0 // bytes fetched from `in`
-    private var cur = 0 // current input byte
-    private var used = 8 // bits of `cur` already consumed
-    private var finalBlock = false
-    private var mode = 0 // 0 header, 1 stored, 2 huffman, 3 done
-    private var storedLeft = 0
-    private var lit: Huff = null
-    private var dist: Huff = null
+    require(in.markSupported(), "InflateInputStream needs mark/reset on its source")
+    private val inf = new Inflater(true)
+    private val chunk = new Array[Byte](16384)
+    private var chunkLen = 0
+    private var consumed = 0L
+    private var closed = false
+    private var atEnd = false
 
-    /** Input bytes consumed up to the byte-aligned stream end (the old
-      * array decoder's `(bitEnd + 7) >> 3` convention).
+    /** Input bytes the DEFLATE stream occupies, up to its byte-aligned
+      * end (so far, until `read` has returned −1).
       */
-    def compressedBytesConsumed: Int = bytesIn
+    def compressedBytesConsumed: Long = if (closed) consumed else inf.getBytesRead
 
-    private def bad(): Nothing =
-      throw new java.io.IOException("malformed DEFLATE stream")
+    private def bad(msg: String): Nothing = throw new java.io.IOException(msg)
 
-    private def bits(n: Int): Int = {
-      var v = 0
-      var k = 0
-      while (k < n) {
-        if (used == 8) {
-          cur = in.read()
-          if (cur < 0) bad()
-          bytesIn += 1
-          used = 0
-        }
-        v |= ((cur >> used) & 1) << k
-        used += 1
-        k += 1
+    /** Stream end: push the unused tail of the last chunk back into
+      * `in`, record the consumed count, and free the `Inflater`.
+      */
+    private def finish(): Unit = {
+      var skip = (chunkLen - inf.getRemaining).toLong
+      atEnd = true
+      close()
+      in.reset()
+      while (skip > 0) {
+        val s = in.skip(skip)
+        if (s <= 0) bad("source lost its mark")
+        skip -= s
       }
-      v
-    }
-    private val bitsF: Int => Int = bits(_)
-
-    private def emit(b: Byte): Unit = {
-      ring((wpos & Mask).toInt) = b
-      wpos += 1
-    }
-
-    private def readDynamicTrees(): Unit = {
-      val hlit = bits(5) + 257
-      val hdist = bits(5) + 1
-      val hclen = bits(4) + 4
-      val clLens = new Array[Int](19)
-      var k = 0
-      while (k < hclen) { clLens(ClOrder(k)) = bits(3); k += 1 }
-      val clTree = huffman(clLens)
-      val lens = new Array[Int](hlit + hdist)
-      var i = 0
-      while (i < lens.length) {
-        decodeSym(clTree, bitsF) match {
-          case s if s < 16 => lens(i) = s; i += 1
-          case 16 =>
-            if (i == 0) bad()
-            val r = 3 + bits(2)
-            val v = lens(i - 1)
-            var j = 0
-            while (j < r) {
-              if (i >= lens.length) bad()
-              lens(i) = v; i += 1; j += 1
-            }
-          case 17 => i += 3 + bits(3); if (i > lens.length) bad()
-          case 18 => i += 11 + bits(7); if (i > lens.length) bad()
-          case _ => bad()
-        }
-      }
-      lit = huffman(lens.take(hlit))
-      dist = huffman(lens.drop(hlit))
-    }
-
-    private def endBlock(): Unit = mode = if (finalBlock) 3 else 0
-
-    /** One bounded decode step; only called with the ring drained. */
-    private def step(): Unit = mode match {
-      case 0 =>
-        finalBlock = bits(1) == 1
-        bits(2) match {
-          case 0 =>
-            used = 8 // byte-align (§3.2.4)
-            val len = bits(8) | (bits(8) << 8)
-            val nlen = bits(8) | (bits(8) << 8)
-            if ((len ^ 0xFFFF) != nlen) bad()
-            storedLeft = len
-            mode = 1
-            if (len == 0) endBlock()
-          case 1 => lit = FixedLit; dist = FixedDist; mode = 2
-          case 2 => readDynamicTrees(); mode = 2
-          case _ => bad()
-        }
-      case 1 =>
-        // stored data is byte-aligned raw input (§3.2.4 — mode 0
-        // aligned before LEN/NLEN), so it bulk-copies straight into
-        // the ring: the hot shape of incompressible members (image /
-        // audio payloads inside dataset tarballs deflate to stored
-        // blocks), where a per-bit read loop caps ingest at tens of
-        // MB/s. The contiguous ring span bounds each read; the
-        // bit-loop fallback covers the (impossible per the spec,
-        // cheap to keep total) unaligned case.
-        var k = math.min(storedLeft, 4096)
-        if (used == 8) {
-          while (k > 0) {
-            val w = (wpos & Mask).toInt
-            val n = math.min(k, RingSize - w)
-            val got = in.read(ring, w, n)
-            if (got <= 0) bad()
-            bytesIn += got
-            wpos += got
-            storedLeft -= got
-            k -= got
-          }
-        } else {
-          while (k > 0) { emit(bits(8).toByte); storedLeft -= 1; k -= 1 }
-        }
-        if (storedLeft == 0) endBlock()
-      case 2 =>
-        var blockDone = false
-        while (!blockDone && wpos - rpos < 4096) {
-          val sym = decodeSym(lit, bitsF)
-          if (sym < 256) emit(sym.toByte)
-          else if (sym == 256) { blockDone = true; endBlock() }
-          else {
-            val li = sym - 257
-            if (li >= LenBase.length) bad()
-            val l = LenBase(li) + bits(LenExtra(li))
-            val di = decodeSym(dist, bitsF)
-            if (di >= DistBase.length) bad()
-            val d = DistBase(di) + bits(DistExtra(di))
-            if (d > wpos) bad() // distance past stream start
-            var k = 0
-            while (k < l) { emit(ring(((wpos - d) & Mask).toInt)); k += 1 }
-          }
-        }
-      case _ => ()
     }
 
     override def read(): Int = {
       val one = new Array[Byte](1)
-      val n = read(one, 0, 1)
-      if (n < 0) -1 else one(0) & 0xFF
+      if (read(one, 0, 1) < 0) -1 else one(0) & 0xFF
     }
 
     override def read(b: Array[Byte], off: Int, len: Int): Int = {
       if (len == 0) return 0
+      if (atEnd) return -1
+      if (closed) bad("stream closed")
       try {
-        while (rpos == wpos && mode != 3) step()
+        var n = step(inf, b, off, len)
+        while (n == 0 && !inf.finished()) {
+          in.mark(chunk.length)
+          chunkLen = in.read(chunk, 0, chunk.length)
+          if (chunkLen <= 0) bad("truncated DEFLATE stream")
+          inf.setInput(chunk, 0, chunkLen)
+          n = step(inf, b, off, len)
+        }
+        if (n == 0) { finish(); -1 } else n
       } catch {
-        case _: Malformed => bad()
-      }
-      if (rpos == wpos) return -1
-      val n = math.min(len.toLong, wpos - rpos).toInt
-      var k = 0
-      while (k < n) {
-        b(off + k) = ring((rpos & Mask).toInt)
-        rpos += 1
-        k += 1
-      }
-      n
-    }
-  }
-
-  // RFC 1951 §3.2.7 code-length alphabet transmission order
-  private val ClOrder =
-    Array(16, 17, 18, 0, 8, 7, 9, 6, 10, 5, 11, 4, 12, 3, 13, 2, 14, 1, 15)
-
-  // §3.2.5 length/distance tables
-  private val LenBase = Array(3, 4, 5, 6, 7, 8, 9, 10, 11, 13, 15, 17, 19, 23,
-    27, 31, 35, 43, 51, 59, 67, 83, 99, 115, 131, 163, 195, 227, 258)
-  private val LenExtra = Array(0, 0, 0, 0, 0, 0, 0, 0, 1, 1, 1, 1, 2, 2, 2, 2,
-    3, 3, 3, 3, 4, 4, 4, 4, 5, 5, 5, 5, 0)
-  private val DistBase = Array(1, 2, 3, 4, 5, 7, 9, 13, 17, 25, 33, 49, 65, 97,
-    129, 193, 257, 385, 513, 769, 1025, 1537, 2049, 3073, 4097, 6145, 8193,
-    12289, 16385, 24577)
-  private val DistExtra = Array(0, 0, 0, 0, 1, 1, 2, 2, 3, 3, 4, 4, 5, 5, 6, 6,
-    7, 7, 8, 8, 9, 9, 10, 10, 11, 11, 12, 12, 13, 13)
-
-  /** Canonical Huffman decode table (RFC 1951 §3.2.2): per-length
-    * first-code offsets + a symbol array sorted by (length, symbol).
-    */
-  private final case class Huff(counts: Array[Int], symbols: Array[Int])
-
-  private def huffman(lens: Array[Int]): Huff = {
-    val counts = new Array[Int](16)
-    lens.foreach { l => if (l < 0 || l > 15) fail(); if (l > 0) counts(l) += 1 }
-    // over-subscribed code check (Kraft inequality)
-    var left = 1
-    var l = 1
-    while (l <= 15) {
-      left <<= 1
-      left -= counts(l)
-      if (left < 0) fail()
-      l += 1
-    }
-    // symbols sorted by (code length, symbol value) — canonical order
-    val idx = new Array[Int](16)
-    l = 2
-    while (l <= 15) { idx(l) = idx(l - 1) + counts(l - 1); l += 1 }
-    val symbols = new Array[Int](lens.count(_ > 0))
-    var s = 0
-    while (s < lens.length) {
-      val ln = lens(s)
-      if (ln > 0) { symbols(idx(ln)) = s; idx(ln) += 1 }
-      s += 1
-    }
-    Huff(counts, symbols)
-  }
-
-  private def decodeSym(h: Huff, bits: Int => Int): Int = {
-    var code = 0
-    var first = 0
-    var index = 0
-    var len = 1
-    while (len <= 15) {
-      code |= bits(1)
-      val count = h.counts(len)
-      if (code - first < count) return h.symbols(index + (code - first))
-      index += count
-      first = (first + count) << 1
-      code <<= 1
-      len += 1
-    }
-    fail()
-  }
-
-  private lazy val FixedLit: Huff = {
-    val lens = new Array[Int](288)
-    var i = 0
-    while (i < 288) {
-      lens(i) = if (i < 144) 8 else if (i < 256) 9 else if (i < 280) 7 else 8
-      i += 1
-    }
-    huffman(lens)
-  }
-  private lazy val FixedDist: Huff = huffman(Array.fill(30)(5))
-
-  /** One compressed block body: literals + length/distance copies. */
-  private def block(lit: Huff, dist: Huff, bits: Int => Int,
-      out: Array[Byte], got0: Int): Int = {
-    var got = got0
-    var done = false
-    while (!done) {
-      val sym = decodeSym(lit, bits)
-      if (sym < 256) {
-        if (got >= out.length) fail()
-        out(got) = sym.toByte
-        got += 1
-      } else if (sym == 256) {
-        done = true
-      } else {
-        val li = sym - 257
-        if (li >= LenBase.length) fail()
-        val len = LenBase(li) + bits(LenExtra(li))
-        val di = decodeSym(dist, bits)
-        if (di >= DistBase.length) fail()
-        val d = DistBase(di) + bits(DistExtra(di))
-        if (d > got || got + len > out.length) fail()
-        var k = 0
-        while (k < len) { out(got) = out(got - d); got += 1; k += 1 }
+        case e: DataFormatException =>
+          throw new java.io.IOException("malformed DEFLATE stream", e)
       }
     }
-    got
+
+    override def close(): Unit = if (!closed) {
+      consumed = inf.getBytesRead
+      closed = true
+      inf.end()
+    }
   }
 }

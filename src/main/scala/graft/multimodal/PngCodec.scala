@@ -4,15 +4,14 @@ import graft.images.ImageOps.Image
 
 /** Pure-JVM PNG decoder implemented from the PUBLIC specification (W3C
   * PNG / RFC 2083): signature check, chunk walk with CRC-32 verified on
-  * every chunk, IHDR validation, multi-IDAT zlib stream decompressed by
-  * the engine's own RFC 1950/1951 decoder ([[InflateCodec]] — a PNG
-  * decode touches no library codec at all),
-  * per-scanline unfiltering (None/Sub/Up/Average/Paeth with the
-  * spec's exact predictor), sub-byte sample unpacking, and color-type
-  * mapping to packed RGB. This makes the engine's PRIMARY image format
-  * engine-owned the way QOI already is ([[QoiCodec]]) — including
-  * Adam7 interlace, decoded pass-by-pass per §8.2, and 16-bit sample
-  * depth. Every conforming PNG shape decodes here; nothing falls back.
+  * every chunk (`java.util.zip.CRC32`), IHDR validation, multi-IDAT
+  * zlib stream decompressed by [[InflateCodec]] (`java.util.zip.Inflater`
+  * behind the exact-size contract), per-scanline unfiltering
+  * (None/Sub/Up/Average/Paeth with the spec's exact predictor), sub-byte
+  * sample unpacking, and color-type mapping to packed RGB. This makes
+  * the engine's PRIMARY image format engine-owned above the zlib layer,
+  * the way QOI is ([[QoiCodec]]) — including Adam7 interlace, decoded
+  * pass-by-pass per §8.2, and 16-bit sample depth. Every conforming PNG shape decodes here; nothing falls back.
   *
   * Coverage: color types 0 (gray), 2 (RGB), 3 (palette), 4 (gray+alpha),
   * 6 (RGBA); bit depths 1/2/4/8 for types 0 and 3, depth 8 or 16 for
@@ -51,11 +50,9 @@ object PngCodec {
 
   /** Deterministic PNG writer (fixture/production tier): 8-bit RGB
     * (color type 2), filter None on every row, one IDAT holding the
-    * engine's own zlib stream ([[DeflateCodec]]), CRCs from the
-    * engine's own table — a PNG is now engine-owned in BOTH directions,
-    * with no `java.util.zip` anywhere on the path. Every byte is a pure
-    * function of the pixels, so fixture trees are pinnable by
-    * `read_blob` byte identity.
+    * engine's own zlib stream ([[DeflateCodec]]), chunk CRCs from
+    * `java.util.zip.CRC32`. Every byte is a pure function of the
+    * pixels, so fixture trees are pinnable by `read_blob` byte identity.
     */
   def encode(img: Image): Array[Byte] = {
     val w = img.width; val h = img.height
@@ -84,7 +81,9 @@ object PngCodec {
       val t = typ.getBytes("US-ASCII")
       out.write(t)
       out.write(data)
-      be32(DeflateCodec.crc32(data, DeflateCodec.crc32(t)))
+      val crc = new java.util.zip.CRC32
+      crc.update(t); crc.update(data)
+      be32(crc.getValue.toInt)
     }
     out.write(Signature)
     chunk("IHDR", Array[Byte](
@@ -112,13 +111,15 @@ object PngCodec {
     var pos = 8
     var seenIhdr = false
     var seenIend = false
+    val crc = new java.util.zip.CRC32
 
     while (!seenIend) {
       if (pos + 8 > b.length) fail()
       val len = be32(b, pos)
       if (len < 0 || pos + 12 + len.toLong > b.length) fail()
       val typ = new String(b, pos + 4, 4, "US-ASCII")
-      if (DeflateCodec.crc32Range(b, pos + 4, 4 + len) != be32(b, pos + 8 + len)) fail()
+      crc.reset(); crc.update(b, pos + 4, 4 + len)
+      if (crc.getValue.toInt != be32(b, pos + 8 + len)) fail()
       typ match {
         case "IHDR" =>
           if (seenIhdr || len != 13) fail()
@@ -180,8 +181,6 @@ object PngCodec {
       if (wp == 0 || hp == 0) 0L else hp.toLong * (1 + rowBytesFor(wp))
     }.sum
     if (rawLen > Int.MaxValue - 8 || rawLen == 0) fail()
-    // the engine's own RFC 1950/1951 decoder — a PNG decode touches no
-    // library codec at all (InflateCodecSpec pins it against Deflater)
     val raw = InflateCodec.zlib(idat.toByteArray, rawLen.toInt).getOrElse(fail())
 
     // unfilter pass by pass (spec §6: filters operate on bytes; each

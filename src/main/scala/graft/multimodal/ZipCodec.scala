@@ -6,8 +6,8 @@ package graft.multimodal
   * (sig 0x02014b50 — the authoritative catalog: name, method, CRC-32,
   * sizes, local-header offset), then validate each member against its
   * local file header (sig 0x04034b50) and inflate/slice its data.
-  * Methods: 0 (stored) and 8 (DEFLATE via the from-spec
-  * [[InflateCodec]]); every member's CRC-32 is recomputed over the
+  * Methods: 0 (stored) and 8 (DEFLATE via [[InflateCodec]], over the
+  * JDK `Inflater`); every member's CRC-32 is recomputed over the
   * extracted payload and checked against the directory. Flag bit 3
   * (data descriptor — what `java.util.zip.ZipOutputStream` emits for
   * DEFLATED entries) is supported by trusting the central directory's
@@ -109,7 +109,9 @@ object ZipCodec {
             p
           case _ => fail() // methods we cannot verify end-to-end
         }
-        if ((DeflateCodec.crc32(payload) & 0xFFFFFFFFL) != crc) fail()
+        val calc = new java.util.zip.CRC32
+        calc.update(payload)
+        if (calc.getValue != crc) fail()
         if (hasDescriptor) {
           // optional-signature descriptor after the data. A descriptor
           // whose CRC field happens to equal the signature would shift
@@ -308,7 +310,7 @@ object ZipCodec {
   /** Bounded-memory member walk: for each directory entry, validate the
     * local header, hand `f` a streaming payload (stored bytes straight
     * from `readAt` windows; DEFLATE through the pull-based
-    * [[InflateCodec.InflateInputStream]] — one 64 KiB ring however big
+    * [[InflateCodec.InflateInputStream]] — bounded memory however big
     * the member), drain what `f` left unread, and verify the CRC-32 and
     * both sizes over the WHOLE payload — the same end-to-end guarantees
     * as [[entries]], without ever materializing a member. Data
@@ -351,9 +353,11 @@ object ZipCodec {
           case _ => fail() // methods we cannot verify end-to-end
         }
         val tracked = new GzipCodec.CrcCountStream(payload)
-        out += f(e, tracked)
-        GzipCodec.drain(tracked)
-        if ((tracked.crc & 0xFFFFFFFFL) != e.crc32) fail()
+        try {
+          out += f(e, tracked)
+          GzipCodec.drain(tracked)
+        } finally if (inf != null) inf.close()
+        if (tracked.crc != e.crc32) fail()
         if (tracked.count != e.uncompressedSize) fail()
         if (inf != null && inf.compressedBytesConsumed != e.compressedSize)
           fail()
@@ -396,7 +400,9 @@ object ZipCodec {
     val central = files.map { case (name, data, deflated) =>
       val nb = name.getBytes(java.nio.charset.StandardCharsets.UTF_8)
       val body = if (deflated) DeflateCodec.deflate(data) else data
-      val crc = DeflateCodec.crc32(data) & 0xFFFFFFFFL
+      val crc32 = new java.util.zip.CRC32
+      crc32.update(data)
+      val crc = crc32.getValue
       val localOff = out.size()
       w32(0x04034b50L); w16(20); w16(0); w16(if (deflated) 8 else 0)
       w16(0); w16(0) // mod time/date: fixed zero (deterministic fixtures)

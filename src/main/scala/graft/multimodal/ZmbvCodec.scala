@@ -123,7 +123,7 @@ object ZmbvCodec {
   private def decodeOrThrow(width: Int, height: Int,
       payloads: Seq[Array[Byte]]): Video = {
     if (width <= 0 || height <= 0 || payloads.isEmpty) fail()
-    var zs = new InflateCodec.Stream // shared context between keyframes
+    val zs = new InflateCodec.Stream // shared context between keyframes
     var fmt = -1; var bpp = 0; var comp = -1; var bw = 0; var bh = 0
     var prev: Array[Byte] = null
     var palette: Array[Byte] = Array.emptyByteArray
@@ -144,7 +144,7 @@ object ZmbvCodec {
           bw = p(5) & 0xFF
           bh = p(6) & 0xFF
           if (bw <= 0 || bh <= 0) fail()
-          zs = new InflateCodec.Stream // keyframe: fresh zlib context
+          zs.reset() // keyframe: fresh zlib context
           val body = inflateBody(zs, comp, p, 7, bodyBound(width, height, bpp))
           var off = 0
           if (fmt == FmtPal8) {
@@ -228,14 +228,14 @@ object ZmbvCodec {
         }
         out += Frame(fmt, width, height, prev.clone(), palette.clone())
       }
-    } finally ()
+    } finally zs.close()
     Video(width, height, out.result())
   }
 
   /** Inflate one frame's segment of the shared zlib stream (or copy, for
     * compression 0). Each ZMBV frame is a sync-flushed segment, decoded
-    * by the engine's own [[InflateCodec.Stream]] — the 32 KiB history
-    * persists across frames, so inter-frame segments may reference
+    * by one [[InflateCodec.Stream]] — the 32 KiB history persists across
+    * frames, so inter-frame segments may reference
     * bytes the PREVIOUS frames decompressed (the shared-context
     * property the spec proves by breaking a frame and watching the
     * next fail).
@@ -294,8 +294,7 @@ object ZmbvCodec {
       if !(dx == 0 && dy == 0)
     } yield (dx, dy))
     // the engine's own sync-flushed zlib encoder — one shared context
-    // across the whole clip, exactly the stream the engine's
-    // InflateCodec.Stream decodes (and Inflater, differentially)
+    // across the whole clip, the stream InflateCodec.Stream decodes
     val deflater = new DeflateCodec.Stream
     var prev: Array[Byte] = null
     var prevPal: Array[Byte] = null

@@ -1574,15 +1574,17 @@ object ArchiveQueries {
       // but the GLOBAL rule table grows with host count, so the join
       // keeps its host equi-key and AQE picks the strategy (broadcast
       // at fixture scale, shuffled hash at 10⁷ hosts).
-      val decided = links
-        .join(rules,
-          links("host") === rules("host") &&
+      // both sides descend from `recs`: aliased, so the host key is
+      // not one attribute compared with itself
+      val decided = links.as("lk")
+        .join(rules.as("r"),
+          col("lk.host") === col("r.host") &&
             graft.plans.RobotsMatchExpression.robotsMatch(
-              col("rpath"), links("path")), "left")
-        .groupBy(links("host"), links("path"), col("n"))
+              col("rpath"), col("lk.path")), "left")
+        .groupBy(col("lk.host"), col("lk.path"), col("n"))
         .agg(max(struct(length(col("rpath")).as("l"),
           col("allow").cast("int").as("a"))).as("best"))
-        .select(links("host"), col("n"),
+        .select(col("host"), col("n"),
           coalesce(col("best.a") === 1, lit(true)).as("ok"))
       val ruleCounts = rules.groupBy("host")
         .agg(count(lit(1)).as("n_rules"))

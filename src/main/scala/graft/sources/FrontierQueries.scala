@@ -469,15 +469,17 @@ object FrontierQueries {
       .withColumn("fresh", col("mo") >= 2)
     val rules = recs.filter(col("kind") === 1)
       .select(col("host"), col("path").as("rpath"), col("allow"))
-    paths
-      .join(rules,
-        paths("host") === rules("host") &&
+    // both sides descend from `recs`: aliased, so the host key is not
+    // one attribute compared with itself
+    paths.as("p")
+      .join(rules.as("r"),
+        col("p.host") === col("r.host") &&
           graft.plans.RobotsMatchExpression.robotsMatch(
-            col("rpath"), paths("path")), "left")
-      .groupBy(paths("host"), paths("path"), col("fresh"), col("pri"))
+            col("rpath"), col("p.path")), "left")
+      .groupBy(col("p.host"), col("p.path"), col("fresh"), col("pri"))
       .agg(max(struct(length(col("rpath")).as("l"),
         col("allow").cast("int").as("a"))).as("best"))
-      .select(paths("host"), paths("path"), col("fresh"), col("pri"),
+      .select(col("host"), col("path"), col("fresh"), col("pri"),
         coalesce(col("best.a") === 1, lit(true)).as("ok"))
   }
 

@@ -72,8 +72,8 @@ object HtmlOps {
     * content-coding removal per the `Content-Encoding` list (RFC 9110
     * §8.4 — codings are listed in the order applied, so the receiver
     * undoes them in REVERSE; transfer framing wraps the content coding,
-    * so de-chunk FIRST, then decode). Codings decoded from the
-    * engine's own spec codecs: `gzip`/`x-gzip` (RFC 1952,
+    * so de-chunk FIRST, then decode). Codings decoded by the
+    * engine's codecs over `java.util.zip`: `gzip`/`x-gzip` (RFC 1952,
     * CRC-32/ISIZE-verified), `deflate` (RFC 1950 zlib, with the raw
     * RFC 1951 fallback real servers ship), `identity` (no-op). Strict:
     * a missing/malformed status line, no separator, broken chunk
@@ -397,41 +397,15 @@ object HtmlOps {
   /** `deflate` content coding (RFC 9110 §8.4.1.2): a zlib stream
     * (RFC 1950) — but a large class of real servers ship RAW DEFLATE
     * (RFC 1951) under the same name, so the standard receiver heuristic
-    * applies: if the first two bytes form a consistent zlib header,
-    * inflate from offset 2 and verify the Adler-32 trailer; otherwise
-    * (or on failure) inflate raw from offset 0. Both paths run the
-    * engine's own [[graft.multimodal.InflateCodec]], 16 MiB bound.
+    * applies: inflate as zlib (header and Adler-32 trailer verified,
+    * bytes after the trailer ignored); if that fails, inflate raw from
+    * offset 0. Both paths run [[graft.multimodal.InflateCodec]] with a
+    * 16 MiB bound.
     */
-  private[text] def inflateBody(data: Array[Byte]): Option[Array[Byte]] = {
-    val zlibWrapped = data.length >= 6 && {
-      val cmf = data(0) & 0xFF
-      val flg = data(1) & 0xFF
-      (cmf & 0x0F) == 8 && ((cmf << 8) | flg) % 31 == 0 && (flg & 0x20) == 0
-    }
-    val viaZlib =
-      if (!zlibWrapped) None
-      else graft.multimodal.InflateCodec.inflateUnknown(data, 2, 1 << 24)
-        .filter { case (out, end) =>
-          // the 4-byte big-endian Adler-32 trailer must follow the
-          // stream and match the decompressed output
-          end + 4 <= data.length && {
-            var a = 1L
-            var b = 0L
-            out.foreach { byte =>
-              a = (a + (byte & 0xFF)) % 65521
-              b = (b + a) % 65521
-            }
-            val adler = ((data(end) & 0xFFL) << 24) |
-              ((data(end + 1) & 0xFFL) << 16) |
-              ((data(end + 2) & 0xFFL) << 8) | (data(end + 3) & 0xFFL)
-            ((b << 16) | a) == adler
-          }
-        }
-        .map(_._1)
-    viaZlib.orElse(
+  private[text] def inflateBody(data: Array[Byte]): Option[Array[Byte]] =
+    graft.multimodal.InflateCodec.zlibUnknown(data, 1 << 24).orElse(
       graft.multimodal.InflateCodec.inflateUnknown(data, 0, 1 << 24)
         .map(_._1))
-  }
 
   /** Remove RFC 9112 §7.1 chunked framing: `hex-size[;ext]CRLF data
     * CRLF` repeated, terminated by a 0-size chunk (trailer section

@@ -111,11 +111,14 @@ class ArchiveCodecSpec extends AnyFunSuite {
     head.write(Array[Byte](9, 9, 9)) // extra payload, opaque
     head.write("a comment".getBytes("ISO-8859-1")); head.write(0)
     val hb = head.toByteArray
-    val crc16 = DeflateCodec.crc32(hb) & 0xFFFF
+    def crc32(b: Array[Byte]): Long = {
+      val c = new java.util.zip.CRC32; c.update(b); c.getValue
+    }
+    val crc16 = (crc32(hb) & 0xFFFF).toInt
     head.write(crc16 & 0xFF); head.write((crc16 >> 8) & 0xFF)
     head.write(deflated)
-    val crc = DeflateCodec.crc32(payload)
-    for (k <- 0 until 4) head.write((crc >> (8 * k)) & 0xFF)
+    val crc = crc32(payload)
+    for (k <- 0 until 4) head.write(((crc >> (8 * k)) & 0xFF).toInt)
     for (k <- 0 until 4) head.write((payload.length >> (8 * k)) & 0xFF)
     val member = head.toByteArray
     val ms = GzipCodec.members(member, 1 << 20)

@@ -3,12 +3,11 @@ package graft.multimodal
 import org.scalatest.funsuite.AnyFunSuite
 
 /** DeflateCodec contract: the encoder's output is not standardized, so
-  * the pins are (1) determinism, (2) conformance through TWO independent
-  * decoders — the engine's own [[InflateCodec]] and `java.util.zip.
-  * Inflater` — across payload regimes, (3) the stored-block fallback on
-  * incompressible data, (4) the sync-flushed stream mode against both
-  * [[InflateCodec.Stream]] and a SYNC_FLUSH-fed `Inflater`, and (5) the
-  * from-spec CRC-32/Adler-32 against their `java.util.zip` twins.
+  * the pins are (1) determinism, (2) conformance through [[InflateCodec]]
+  * and a bare `java.util.zip.Inflater` across payload regimes, (3) the
+  * stored-block fallback on incompressible data, and (4) the
+  * sync-flushed stream mode against both [[InflateCodec.Stream]] and a
+  * SYNC_FLUSH-fed `Inflater`.
   */
 class DeflateCodecSpec extends AnyFunSuite {
 
@@ -84,6 +83,7 @@ class DeflateCodecSpec extends AnyFunSuite {
       val got = dec.segment(z, 0).getOrElse(fail(s"segment $k rejected"))
       assert(got.sameElements(seg), s"segment $k mismatch")
     }
+    dec.close()
   }
 
   test("stream mode: Inflater accepts the same segment stream") {
@@ -104,21 +104,5 @@ class DeflateCodecSpec extends AnyFunSuite {
       assert(out.sameElements(seg), s"segment $k: Inflater mismatch")
     }
     inf.end()
-  }
-
-  test("crc32 and adler32 match java.util.zip bit-for-bit") {
-    val rnd = new scala.util.Random(0xC3C)
-    for (_ <- 0 until 30) {
-      val p = Array.fill(rnd.nextInt(5000))(rnd.nextInt(256).toByte)
-      val jcrc = new java.util.zip.CRC32
-      jcrc.update(p)
-      assert(DeflateCodec.crc32(p) == jcrc.getValue.toInt)
-      val jadl = new java.util.zip.Adler32
-      jadl.update(p)
-      assert(DeflateCodec.adler32(p) == jadl.getValue.toInt)
-    }
-    // seeded continuation
-    val a = Array.fill(100)(1.toByte); val b = Array.fill(100)(2.toByte)
-    assert(DeflateCodec.crc32(b, DeflateCodec.crc32(a)) == DeflateCodec.crc32(a ++ b))
   }
 }

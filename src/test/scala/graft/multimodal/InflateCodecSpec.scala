@@ -2,13 +2,13 @@ package graft.multimodal
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** InflateCodec contract: differential round-trips against
-  * java.util.zip.Deflater at EVERY compression level (0 = stored
-  * blocks, 1 = fixed-leaning, 9 = dynamic Huffman) over random,
-  * redundant, and empty payloads; hand-assembled blocks of each BTYPE
-  * from this spec's own bit packer (sharing nothing with the decoder);
+/** InflateCodec contract: round-trips of java.util.zip.Deflater output
+  * at EVERY compression level (0 = stored blocks, 1 = fixed-leaning,
+  * 9 = dynamic Huffman) over random, redundant, and empty payloads;
+  * hand-assembled blocks of each BTYPE from this spec's own bit packer;
   * the zlib wrapper checks (header consistency, FDICT rejection,
-  * Adler-32 verification); and totality on mangled streams.
+  * Adler-32 verification, nothing after the trailer); the exact-size
+  * and `maxOut` bounds; and totality on mangled streams.
   */
 class InflateCodecSpec extends AnyFunSuite {
 
@@ -119,6 +119,22 @@ class InflateCodecSpec extends AnyFunSuite {
     // wrong expected size
     assert(InflateCodec.zlib(good, 499).isEmpty)
     assert(InflateCodec.zlib(good, 501).isEmpty)
+    // FDICT: a stream built against a preset dictionary is refused
+    // outright (Inflater would otherwise wait on needsDictionary())
+    val d = new java.util.zip.Deflater(6)
+    d.setDictionary(Array.tabulate(64)(i => (i % 251).toByte))
+    d.setInput(data); d.finish()
+    val buf = new Array[Byte](2048)
+    val dict = java.util.Arrays.copyOf(buf, d.deflate(buf))
+    d.end()
+    assert((dict(1) & 0x20) != 0, "precondition: FDICT flag set")
+    val t0 = System.nanoTime()
+    assert(InflateCodec.zlib(dict, 500).isEmpty, "FDICT must reject")
+    assert(InflateCodec.zlibUnknown(dict, 1 << 20).isEmpty, "FDICT must reject")
+    val zs = new InflateCodec.Stream
+    try assert(zs.segment(dict, 0).isEmpty, "FDICT must reject")
+    finally zs.close()
+    assert(System.nanoTime() - t0 < 5000000000L, "FDICT rejection must not spin")
   }
 
   test("totality: truncations and bit flips never throw") {
@@ -165,9 +181,14 @@ class InflateCodecSpec extends AnyFunSuite {
       val got = zs.segment(c, 0).getOrElse(fail(s"segment $i rejected"))
       assert(got.sameElements(want), s"segment $i")
     }
+    // reset() is a keyframe: the stream decodes from segment 0 again
+    zs.reset()
+    assert(zs.segment(compressed(0), 0).exists(_.sameElements(segs(0))))
+    zs.close()
     // shared-context proof: a FRESH stream cannot decode segment 1 alone
     val fresh = new InflateCodec.Stream
     val seg1Alone = fresh.segment(compressed(1), 0)
+    fresh.close()
     assert(seg1Alone.isEmpty || !seg1Alone.get.sameElements(segs(1)),
       "segment 1 must depend on segment 0's window (and it lacks the zlib header)")
   }
@@ -197,9 +218,16 @@ class InflateCodecSpec extends AnyFunSuite {
     val bounded = new InflateCodec.Stream
     assert(bounded.segment(seg, 0, maxOut = 4096).isEmpty,
       "segment expanding past maxOut must be rejected")
+    bounded.close()
     val roomy = new InflateCodec.Stream
     val got = roomy.segment(seg, 0, maxOut = 1 << 20).getOrElse(fail("exact bound rejected"))
+    roomy.close()
     assert(got.length == payload.length && got.forall(_ == 0))
+    // the same bound on the one-shot shapes
+    val raw = deflate(payload, 6).drop(2) // zlib header off: raw DEFLATE + trailer
+    assert(InflateCodec.inflateUnknown(raw, 0, 4096).isEmpty)
+    assert(InflateCodec.inflateUnknown(raw, 0, 1 << 20).exists(_._1.length == payload.length))
+    assert(InflateCodec.zlibUnknown(deflate(payload, 6), 4096).isEmpty)
   }
 
   test("zlib: a duplicated trailer appended after the stream is rejected") {
@@ -218,11 +246,11 @@ class InflateCodecSpec extends AnyFunSuite {
       "duplicated trailer alone must be rejected")
   }
 
-  test("PNG end-to-end still has zero library codecs: fixture decode through own inflate") {
+  test("PNG end-to-end: fixture decode through InflateCodec") {
     val img = graft.images.ImageOps.Image(16, 16,
       Array.fill(256)(((7 * 10) << 16) | ((255 - 70) << 8) | 7))
     val png = graft.images.ImageOps.encodePng(img)
-    val back = PngCodec.decode(png).getOrElse(fail("own-inflate PNG path rejected fixture"))
+    val back = PngCodec.decode(png).getOrElse(fail("PNG path rejected fixture"))
     assert(back.pixels.sameElements(img.pixels))
   }
 }
