@@ -288,31 +288,13 @@ object Dedup {
          |SELECT doc_id, simhash FROM sh ORDER BY doc_id""".stripMargin)
   }
 
-  /** Near-dup pairs by SimHash Hamming distance ≤ maxDist, bucketed by the
-    * 4×16-bit block trick (a pair within distance 3 shares at least one
-    * exact 16-bit block) so the join is equi, not cross.
+  /** Near-dup pairs by SimHash Hamming distance ≤ maxDist: the banded
+    * Hamming join ([[hammingJoin]], 4×16-bit bands) over (id, simhash).
     */
-  def simhashNearDupPairs(sims: DataFrame, idCol: String, maxDist: Int): DataFrame = {
-    // persisted for the same reason as minhashCandidatePairs: the self-join
-    // reads this frame twice, and its lineage is the full SimHash aggregation
-    val blocks = sims
-      .select(col(idCol), col("simhash"),
-        explode(sequence(lit(0), lit(3))).as("block"))
-      .withColumn("key", expr("shiftright(simhash, block * 16) & 65535L"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // hamming computed per bucket hit and gated BEFORE the distinct: most
-    // candidates fail the ≤ maxDist gate, so the dedup shuffle carries only
-    // the few surviving (id, id, int) triples (score-before-dedup, as in
-    // minhashCandidatePairs / Similarity.lshTopK)
-    blocks.as("a").join(blocks.as("b"),
-        col("a.block") === col("b.block") && col("a.key") === col("b.key") &&
-          col("a." + idCol) < col("b." + idCol))
-      .select(col("a." + idCol).as("id_a"), col("b." + idCol).as("id_b"),
-        bit_count(col("a.simhash").bitwiseXOR(col("b.simhash"))).as("hamming"))
-      .filter(col("hamming") <= maxDist)
-      .distinct()
+  def simhashNearDupPairs(sims: DataFrame, idCol: String, maxDist: Int): DataFrame =
+    hammingJoin(sims.select(col(idCol).as("id"), col("simhash").as("fp")),
+        bandBits = 16, maxDist)
       .orderBy("id_a", "id_b")
-  }
 
   /** The SimHash near-dup PAIR stage surfaced as its own oracle query —
     * [[simhashNearDupPairs]] was previously reachable only through specs.
@@ -395,9 +377,9 @@ object Dedup {
     * within `maxIters` rounds — silently returning under-merged clusters
     * would be a wrong answer, not a degraded one.
     *
-    * Small-graph fast path: below `smallGraphThreshold` edges (measured by
-    * a count on the caller-persisted pair frame, the same measured-gate
-    * pattern as [[graft.Graft.fanOutSmallScan]]) the component computation
+    * Small-graph fast path: up to `smallGraphThreshold` edges (measured by
+    * the bounded collect that also fetches them, [[smallGraphLabels]]; the
+    * measured-gate pattern of [[graft.Graft.fanOutSmallScan]]) the component computation
     * runs as driver-side union-find — a near-dup pair graph is orders of
     * magnitude smaller than its corpus, and at a few hundred edges each
     * propagation round's fixed cost (plan + codegen + 3 jobs, ~0.4 s) is
@@ -407,13 +389,15 @@ object Dedup {
     * min-id-per-component labels; DedupSpec runs the union-find
     * differential against the FORCED distributed path).
     */
-  /** Driver-side union-find labels for a BOUNDED pair graph (callers gate
-    * on a measured edge count ≤ ~100k, the golden-CSV bounded-collect
-    * budget). Shared by [[connectedComponents]] and
-    * [[StarComponents.starComponents]] so both small-graph gates collect
-    * once and run the identical reference algorithm.
+  /** Driver-side union-find labels for a pair graph of at most `maxEdges`
+    * edges (~100k, the golden-CSV bounded-collect budget), or None for a
+    * larger graph. One collect of at most `maxEdges + 1` rows both
+    * measures the graph and fetches it, so the pair plan runs once.
+    * Shared by [[connectedComponents]] and
+    * [[StarComponents.starComponents]] so both small-graph gates run the
+    * identical reference algorithm.
     */
-  private[dedup] def smallGraphLabels(pairs: DataFrame): DataFrame = {
+  private[dedup] def smallGraphLabels(pairs: DataFrame, maxEdges: Long): Option[DataFrame] = {
     val spark = pairs.sparkSession
     import spark.implicits._
     // iterative find + path compression: a recursive find could blow the
@@ -436,29 +420,28 @@ object Dedup {
       val minOfRoot = nodes.groupBy(find).map { case (r, ns) => r -> ns.min }
       nodes.map(n => (n, minOfRoot(find(n)))).toSeq
     }
-    if (pairs.schema.fields.head.dataType ==
-        org.apache.spark.sql.types.StringType) {
+    val stringIds = pairs.schema.fields.head.dataType ==
+      org.apache.spark.sql.types.StringType
+    val ends = Seq(col("doc_a"), col("doc_b")).map(c => if (stringIds) c else c.cast("long"))
+    val rows = pairs.select(ends: _*)
+      .limit(math.min(maxEdges + 1, Int.MaxValue).toInt).collect()
+    if (rows.length > maxEdges) None
+    else if (stringIds) {
       // string node ids (e.g. the hreflang URL graph): component minima
       // must match Spark's UTF8String BINARY ordering, not
       // java.lang.String's UTF-16 ordering (they differ above the BMP)
       implicit val utf8Ord: Ordering[String] = (a: String, b: String) =>
         org.apache.spark.unsafe.types.UTF8String.fromString(a)
           .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(b))
-      val es = pairs.select(col("doc_a"), col("doc_b"))
-        .collect().map(r => (r.getString(0), r.getString(1)))
-      labels(es).toDF("id", "label")
-    } else {
-      val es = pairs.select(col("doc_a").cast("long"), col("doc_b").cast("long"))
-        .collect().map(r => (r.getLong(0), r.getLong(1)))
-      labels(es).toDF("id", "label")
-    }
+      Some(labels(rows.map(r => (r.getString(0), r.getString(1)))).toDF("id", "label"))
+    } else Some(labels(rows.map(r => (r.getLong(0), r.getLong(1)))).toDF("id", "label"))
   }
 
   def connectedComponents(pairs: DataFrame, maxIters: Int = 50,
       smallGraphThreshold: Long = 100000L): DataFrame = {
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val nPairs = pairs.count()
-    if (nPairs <= smallGraphThreshold) return smallGraphLabels(pairs)
+    val small = smallGraphLabels(pairs, smallGraphThreshold)
+    if (small.isDefined) return small.get
     val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
       .persist(lvl)
@@ -488,6 +471,80 @@ object Dedup {
         s"connectedComponents did not converge within $maxIters rounds " +
           "(graph diameter exceeds the cap) — raise maxIters")
     cached.select(col("id"), col("label"))
+  }
+
+  /** Banded Hamming near-dup join, the one candidate generator of every
+    * fingerprint tier (text SimHash, image dHash/aHash, audio contours).
+    * Rows `(id, fp: bigint)`, `id` unique; `fp` splits into 4 bands of
+    * `bandBits` bits (16 for 64-bit hashes, 8 for the 31-bit audio
+    * contour). Candidates come from an equi-join on (band index, band
+    * value) and popcount(fp_a XOR fp_b) ≤ `maxDist` keeps them. A pair
+    * within distance 3 leaves a band untouched (pigeonhole), so recall is
+    * exact up to 3; above that, gated pairs that share no band are missed.
+    * The band rows are persisted (both join sides read them, and their
+    * lineage is the whole fingerprint pass). A pair meets once per shared
+    * band and survives only at its LOWEST one, so no `distinct` (and no
+    * dedup shuffle) is needed. Returns unordered `(id_a, id_b, hamming:
+    * int)` with id_a < id_b.
+    */
+  def hammingJoin(rows: DataFrame, bandBits: Int, maxDist: Int): DataFrame = {
+    val mask = lit((1L << bandBits) - 1)
+    def band(fp: Column, b: Int): Column = shiftright(fp, b * bandBits).bitwiseAND(mask)
+    val bands = rows.select(col("id"), col("fp"),
+        posexplode(array((0 until 4).map(band(col("fp"), _)): _*)).as(Seq("band", "key")))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val xor = col("a.fp").bitwiseXOR(col("b.fp"))
+    // no band below `a.band` is shared: each lower band of the XOR is non-zero
+    val lowestShared = (0 until 3)
+      .map(b => col("a.band") <= b || band(xor, b) =!= 0).reduce(_ && _)
+    bands.as("a").join(bands.as("b"),
+        col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
+          col("a.id") < col("b.id") && lowestShared)
+      .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
+        bit_count(xor).as("hamming"))
+      .filter(col("hamming") <= maxDist)
+  }
+
+  /** [[hammingJoin]] behind an exact-class collapse, for corpora whose
+    * fat head is exact duplicates: the band join sees one row per
+    * DISTINCT fingerprint, so bucket occupancy tracks distinct hashes, not
+    * corpus size. Rows `(id, fp, ...)`; the result equals the
+    * member-level join's.
+    *  - `clusters = false`: unordered member pairs `(id_a, id_b, dist:
+    *    bigint)`. Fingerprint pairs expand to their members; within-class
+    *    pairs (dist 0) come from a self-join on `fp`.
+    *  - `clusters = true`: the rows of every cluster member plus `label`,
+    *    the min id of its connected component ([[connectedComponents]]
+    *    over one node per class). A size ≥ 2 class with no cross-class
+    *    edge is a cluster already and keeps its own min id.
+    */
+  def hammingClassJoin(rows: DataFrame, bandBits: Int, maxDist: Int,
+      clusters: Boolean): DataFrame = {
+    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    val members = rows.persist(lvl)
+    if (clusters) {
+      val classes = members.groupBy("fp")
+        .agg(min(col("id")).as("id"), count(lit(1)).as("n_members"))
+        .persist(lvl)
+      val labels = connectedComponents(hammingJoin(classes, bandBits, maxDist)
+        .select(col("id_a").as("doc_a"), col("id_b").as("doc_b")))
+      members.join(classes.join(labels, Seq("id"), "left")
+        .where(col("label").isNotNull || col("n_members") >= 2)
+        .select(col("fp"), coalesce(col("label"), col("id")).as("label")), "fp")
+    } else {
+      // a class is named by its fingerprint, so pairs expand on `fp`
+      val cross = hammingJoin(members.select(col("fp").as("id"), col("fp")).distinct(),
+          bandBits, maxDist)
+        .join(members.select(col("fp").as("id_a"), col("id").as("ma")), "id_a")
+        .join(members.select(col("fp").as("id_b"), col("id").as("mb")), "id_b")
+        .select(least(col("ma"), col("mb")).as("id_a"),
+          greatest(col("ma"), col("mb")).as("id_b"),
+          col("hamming").cast("long").as("dist"))
+      val within = members.as("x")
+        .join(members.as("y"), col("x.fp") === col("y.fp") && col("x.id") < col("y.id"))
+        .select(col("x.id").as("id_a"), col("y.id").as("id_b"), lit(0L).as("dist"))
+      cross.unionByName(within)
+    }
   }
 
   /** Cluster-level near-dup dedup: MinHash candidate pairs (est-Jaccard ≥

@@ -50,12 +50,12 @@ object StarComponents {
     */
   def starComponents(pairs: DataFrame, maxIters: Int = 25,
       smallGraphThreshold: Long = 100000L): DataFrame = {
-    if (pairs.count() <= smallGraphThreshold)
-      // self-loops filtered to mirror the distributed loop exactly: it
-      // drops (u,u) edges up front, so a node with ONLY self-edges gets no
-      // label from either path
-      return Dedup.smallGraphLabels(
-        pairs.filter(col("doc_a") =!= col("doc_b")))
+    // self-loops filtered to mirror the distributed loop exactly: it
+    // drops (u,u) edges up front, so a node with ONLY self-edges gets no
+    // label from either path
+    val small = Dedup.smallGraphLabels(
+      pairs.filter(col("doc_a") =!= col("doc_b")), smallGraphThreshold)
+    if (small.isDefined) return small.get
     // Every round references the previous edge frame ~a dozen times (both
     // phases read it through unions and joins), so carrying lineage across
     // rounds would grow the LOGICAL plan exponentially even with the data
@@ -128,9 +128,9 @@ object StarComponents {
         Graft.table(spark, sfDir, "documents"), MinEstJaccard)
         .persist(StorageLevel.MEMORY_AND_DISK)
       val labels = starComponents(pairs)
-      // both starComponents paths consume `pairs` EAGERLY (the measured
-      // edge count plus either the driver union-find collect or the
-      // first round's localCheckpoint), so nothing downstream references
+      // both starComponents paths consume `pairs` EAGERLY (the bounded
+      // collect that measures the graph, plus the first round's
+      // localCheckpoint when it is large), so nothing downstream references
       // the cache — release it here instead of leaking it to the
       // caller's lifecycle (round-14 verdict finding 3)
       pairs.unpersist()

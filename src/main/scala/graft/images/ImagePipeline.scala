@@ -1,6 +1,5 @@
 package graft.images
 
-import graft.functions.SafeMath._
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -82,36 +81,22 @@ object ImagePipeline {
 
   /** Image near-duplicate pairs by perceptual hash — the MULTIMODAL dedup
     * path (the pixel sibling of the text MinHash/SimHash chains): dHash
-    * per image, then the SimHash block trick — a 64-bit hash splits into
-    * four 16-bit blocks, and any pair within Hamming distance ≤ 3 shares
-    * at least one identical block (pigeonhole, 4 blocks > 3 flips) — so
-    * candidates come from an EQUI-join on (block index, block value),
-    * never an all-pairs comparison, and the exact `bit_count(xor)` verify
-    * runs on candidates only. Input: (img_id long, content binary);
-    * decode-failed payloads drop out (corrupt files are data). The only
-    * bytes that ever shuffle are (id, 64-bit hash) pairs.
+    * per image, then the banded Hamming join
+    * ([[graft.dedup.Dedup.hammingJoin]], 4×16-bit bands), so candidates
+    * come from an equi-join, never an all-pairs comparison. Input:
+    * (img_id long, content binary); decode-failed payloads drop out
+    * (corrupt files are data). The only bytes that ever shuffle are
+    * (id, 64-bit hash) pairs.
     */
   def imageNearDupPairs(images: DataFrame, maxHamming: Int = 3): DataFrame = {
     require(maxHamming <= 3, "4-block bucketing guarantees recall only to 3")
     val dhashUdf = udf((bytes: Array[Byte]) =>
       ImageOps.decode(bytes).map(ImageOps.dHash))
     val hashed = images
-      .select(col("img_id"), dhashUdf(col("content")).as("h"))
-      .filter(col("h").isNotNull)
-    val blocks = hashed.select(col("img_id"), col("h"),
-        explode(sequence(lit(0), lit(3))).as("blk"))
-      .withColumn("bval", expr("(h >> (16 * blk)) & 65535"))
-    val cand = blocks.as("x")
-      .join(blocks.as("y"),
-        col("x.blk") === col("y.blk") && col("x.bval") === col("y.bval") &&
-          col("x.img_id") < col("y.img_id"))
-      .select(col("x.img_id").as("id_a"), col("y.img_id").as("id_b"),
-        col("x.h").as("ha"), col("y.h").as("hb"))
-      .distinct()
-    cand
-      .withColumn("hamming", expr("CAST(bit_count(ha ^ hb) AS BIGINT)"))
-      .filter(col("hamming") <= maxHamming)
-      .select(col("id_a"), col("id_b"), col("hamming"))
+      .select(col("img_id").as("id"), dhashUdf(col("content")).as("fp"))
+      .filter(col("fp").isNotNull)
+    graft.dedup.Dedup.hammingJoin(hashed, bandBits = 16, maxHamming)
+      .select(col("id_a"), col("id_b"), col("hamming").cast("long").as("hamming"))
       .orderBy("id_a", "id_b")
   }
 
@@ -135,20 +120,4 @@ object ImagePipeline {
         map_from_entries(array_sort(collect_list(struct(col("cls"),
           col("total").cast("double") / col("image_count").cast("double"))))).as("averages"))
   }
-
-  /** Stage 4 — the alphabet stat (`pyspark_stats.py:73-99`): group landmark
-    * rollups by first letter of the landmark name, per-class sum + safe avg.
-    * One shuffle instead of the reference's 156 driver-loop jobs.
-    */
-  def alphabetStat(rollup: DataFrame, names: DataFrame, cls: Int): DataFrame =
-    rollup.join(broadcast(names), "landmark_id")
-      .select(
-        upper(substring(col("name"), 1, 1)).as("letter"),
-        coalesce(element_at(col("predictions_sum"), cls), lit(0L)).as("cnt"),
-        col("image_count"))
-      .groupBy("letter")
-      .agg(sum(col("cnt")).as("count"),
-        safeDiv(sum(col("cnt")).cast("double"),
-          sum(col("image_count")).cast("double")).as("avg_per_image"))
-      .orderBy("letter")
 }

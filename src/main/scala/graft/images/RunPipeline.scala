@@ -37,13 +37,14 @@ object RunPipeline {
     // golden-format stat writer (reference `write_results`,
     // `pyspark_stats.py:40-52`): headers MUST match what `plots.py` reads
     // back per stat type — letter/count, letter/avg_count, city/…
-    def writeStat(stat: DataFrame, headers: (String, String),
-        out: String, dir: String, name: String): Unit = {
+    def writeCsv(csv: String, out: String, dir: String, name: String): Unit = {
       val p = Paths.get(out, "stats", dir)
       Files.createDirectories(p)
-      Files.writeString(p.resolve(s"$name.csv"),
-        StatsPipeline.toGoldenCsv(stat, headers))
+      Files.writeString(p.resolve(s"$name.csv"), csv)
     }
+    def writeStat(stat: DataFrame, headers: (String, String),
+        out: String, dir: String, name: String): Unit =
+      writeCsv(StatsPipeline.toGoldenCsv(stat, headers), out, dir, name)
 
     // ---- stage 1: detection (pyspark_yolox.py) --------------------------
     val images = ImagePipeline.scanImages(spark, cfg.imageDir, "*.{jpg,jpeg,png}")
@@ -87,16 +88,16 @@ object RunPipeline {
       ("primary_color", "count"), cfg.outDir, "closest_primary", "results")
 
     // ---- stage 3: stats (pyspark_stats.py), one plan per stat × class --
+    // (the two alphabet files share one)
     cfg.classesOfInterest.foreach { cls =>
-      writeStat(StatsPipeline.alphabetStat(rollup, cfg.names, cls)
-          .select(col("letter"), col("count")),
-        ("letter", "count"), cfg.outDir, "alphabet_count", cls.toString)
+      val alphabet = StatsPipeline.alphabetStat(rollup, cfg.names, cls).collect().toSeq
+      writeCsv(StatsPipeline.goldenCsv(alphabet.map(r => (r.get(0), r.get(1))),
+        ("letter", "count")), cfg.outDir, "alphabet_count", cls.toString)
       // header `letter;avg_count` per `pyspark_stats.py:98` / `plots.py:55`
       // (the reference's local stats_bckp/stats copy says `letter;count`,
       // but that copy is stale — its own plots.py would KeyError on it)
-      writeStat(StatsPipeline.alphabetStat(rollup, cfg.names, cls)
-          .select(col("letter"), col("avg_per_image")),
-        ("letter", "avg_count"), cfg.outDir, "alphabet_count_avg", cls.toString)
+      writeCsv(StatsPipeline.goldenCsv(alphabet.map(r => (r.get(0), r.get(2))),
+        ("letter", "avg_count")), cfg.outDir, "alphabet_count_avg", cls.toString)
       writeStat(StatsPipeline.cityAvgStat(rollup, cfg.names, cls),
         ("city", "avg_detections"), cfg.outDir, "avg_obj_per_city", cls.toString)
       // dir name is the reference's literal `dogs_by_name_length`

@@ -22,7 +22,16 @@ object StatsPipeline {
     * (`pyspark_stats.py:73-99`; golden shape `alphabet_count/<cls>.csv`).
     */
   def alphabetStat(rollup: DataFrame, names: DataFrame, cls: Int): DataFrame =
-    ImagePipeline.alphabetStat(rollup, names, cls)
+    rollup.join(broadcast(names), "landmark_id")
+      .select(
+        upper(substring(col("name"), 1, 1)).as("letter"),
+        classCount(cls).as("cnt"),
+        col("image_count"))
+      .groupBy("letter")
+      .agg(sum(col("cnt")).as("count"),
+        safeDiv(sum(col("cnt")).cast("double"),
+          sum(col("image_count")).cast("double")).as("avg_per_image"))
+      .orderBy("letter")
 
   /** Stat 2 — average objects per "city" (name-contains bucket) for one
     * class (`pyspark_stats.py:101-123`; golden `avg_obj_per_city/<cls>.csv`,
@@ -130,14 +139,42 @@ object StatsPipeline {
     * (`write_results`, `pyspark_stats.py:40-52`). Driver-side — these are
     * ≤26-row results, the one place collect() is legitimate.
     */
-  def toGoldenCsv(stat: DataFrame, headers: (String, String)): String = {
-    val rows = stat.collect().map { r =>
-      val v = r.get(1) match {
-        case d: Double if d == d.toLong => d.toLong.toString + ".0"
-        case other => other.toString
+  def toGoldenCsv(stat: DataFrame, headers: (String, String)): String =
+    goldenCsv(stat.collect().toSeq.map(r => (r.get(0), r.get(1))), headers)
+
+  /** [[toGoldenCsv]] over rows already on the driver. Doubles are spelled
+    * as the reference's Python `repr` spells them ([[pythonRepr]]).
+    */
+  def goldenCsv(rows: Seq[(Any, Any)], headers: (String, String)): String =
+    (s"${headers._1};${headers._2}" +: rows.map {
+      case (k, d: Double) => s"$k;${pythonRepr(d)}"
+      case (k, v) => s"$k;$v"
+    }).mkString("", "\n", "\n")
+
+  /** A double as Python's `repr` writes it: the shortest round-trip
+    * digits, positional for 1e-4 ≤ |v| < 1e16 (integral values keep
+    * `N.0`), `<digits>e±XX` otherwise (`1e-05`, `1.5e+16`). The digits
+    * are `Double.toString`'s; on JDK 17 those are not always the shortest
+    * (2e23 prints as `1.9999999999999998E23`, where Python writes
+    * `2e+23`), so such magnitudes keep JDK 17's longer digits.
+    */
+  def pythonRepr(d: Double): String =
+    if (d.isNaN) "nan"
+    else if (d.isInfinite) if (d > 0) "inf" else "-inf"
+    else if (d == 0.0) if (1.0 / d < 0) "-0.0" else "0.0"
+    else {
+      val bd = new java.math.BigDecimal(java.lang.Double.toString(d)).stripTrailingZeros()
+      val digits = bd.unscaledValue().abs().toString
+      // decimal exponent of the leading digit: |d| = 0.d1d2… × 10^(exp + 1)
+      val exp = digits.length - 1 - bd.scale()
+      val sign = if (d < 0) "-" else ""
+      if (exp >= -4 && exp < 16) {
+        val plain = bd.abs().toPlainString
+        sign + (if (plain.contains('.')) plain else plain + ".0")
+      } else {
+        val mantissa =
+          if (digits.length == 1) digits else s"${digits.head}.${digits.tail}"
+        f"$sign${mantissa}e${if (exp < 0) "-" else "+"}${math.abs(exp)}%02d"
       }
-      s"${r.get(0)};$v"
     }
-    (s"${headers._1};${headers._2}" +: rows).mkString("", "\n", "\n")
-  }
 }

@@ -1,12 +1,10 @@
 package graft.sources
 
-import graft.{Graft, GraftQuery}
-import graft.images.ImageOps
-import graft.multimodal.TiffCodec
+import graft.GraftQuery
+import graft.dedup.Dedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Paths}
-import SourceQueries.{workDir, mediaScale, scaledTag}
+import SourceQueries.keepLargest
 import AudioSourceQueries.ensureFlacTree
 import AudioContainerQueries.{ensureOggTree, ensureMkvTree}
 
@@ -104,57 +102,24 @@ object AudioDedupQueries {
         |FROM fp ORDER BY kind, asset_idx""".stripMargin)
   }
 
-  /** Audio near-duplicate detection — banded join over the energy
-    * contours, same shape as `q_image_neardup`: 4 8-bit bands bucket
-    * candidates (pigeonhole recall for Hamming < 4), exact Hamming ≤ 4
-    * keeps true near-dups. The `a` and `k` trees share their PCM
-    * formula with different lengths, so genuine cross-CONTAINER
-    * near-dups exist for the join to find; the oracle replays the same
-    * banding + Hamming semantics from the closed forms.
+  /** Audio near-duplicate detection — the banded Hamming join
+    * ([[Dedup.hammingClassJoin]]) over the energy contours: 4 8-bit bands
+    * bucket candidates (pigeonhole recall for Hamming < 4), exact
+    * Hamming ≤ 4 keeps true near-dups. The exact-class collapse keeps
+    * 8-bit band occupancy from growing with corpus size (the ×1/×10
+    * audit's one wrong-direction curve). The `a` and `k` trees share
+    * their PCM formula with different lengths, so genuine
+    * cross-CONTAINER near-dups exist for the join to find; the oracle
+    * replays the same banding + Hamming semantics from the closed forms.
     */
   object AudioNearDup extends GraftQuery {
     val name = "q_audio_neardup"
-    def run(spark: SparkSession, sfDir: String): DataFrame = {
-      // round 10: exact-class collapse ahead of the banded join (see
-      // ImageNearDup) — the ×1/×10 audit's one wrong-direction curve
-      // (2.0 → 2.65 shuffled rows per output pair) was 8-bit band
-      // occupancy growing with corpus size; the join now sees one row
-      // per DISTINCT contour, and within-class dist-0 pairs come from
-      // an O(members) expansion. Output set and oracle are unchanged.
-      val ids = audioFpRows(spark, sfDir)
-        .select(concat(col("kind"), lpad(col("asset_idx").cast("string"), 3, "0")).as("id"),
-          col("fp"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val classes = ids.groupBy("fp").agg(min(col("id")).as("rep"))
-      val bands = classes.select(col("rep"), col("fp"),
-        posexplode(array(
-          col("fp").bitwiseAND(lit(255L)),
-          shiftright(col("fp"), 8).bitwiseAND(lit(255L)),
-          shiftright(col("fp"), 16).bitwiseAND(lit(255L)),
-          shiftright(col("fp"), 24).bitwiseAND(lit(255L)))))
-        .withColumnRenamed("pos", "band_idx")
-        .withColumnRenamed("col", "band_val")
-      val a = bands.select(col("band_idx"), col("band_val"),
-        col("rep").as("rep_a"), col("fp").as("fp_a"))
-      val b = bands.select(col("band_idx"), col("band_val"),
-        col("rep").as("rep_b"), col("fp").as("fp_b"))
-      val clsPairs = a.join(b, Seq("band_idx", "band_val"))
-        .where(col("rep_a") < col("rep_b"))
-        .select(col("fp_a"), col("fp_b"),
-          expr("bit_count(fp_a ^ fp_b)").cast("long").as("dist"))
-        .distinct()
-        .where(col("dist") <= 4)
-      val cross = clsPairs
-        .join(ids.select(col("fp").as("fp_a"), col("id").as("ida")), Seq("fp_a"))
-        .join(ids.select(col("fp").as("fp_b"), col("id").as("idb")), Seq("fp_b"))
-        .select(least(col("ida"), col("idb")).as("id_a"),
-          greatest(col("ida"), col("idb")).as("id_b"), col("dist"))
-      val within = ids.as("x")
-        .join(ids.as("y"), col("x.fp") === col("y.fp") && col("x.id") < col("y.id"))
-        .select(col("x.id").as("id_a"), col("y.id").as("id_b"),
-          lit(0L).as("dist"))
-      cross.unionByName(within).orderBy("id_a", "id_b")
-    }
+    def run(spark: SparkSession, sfDir: String): DataFrame =
+      Dedup.hammingClassJoin(audioFpRows(spark, sfDir)
+          .select(concat(col("kind"), lpad(col("asset_idx").cast("string"), 3, "0")).as("id"),
+            col("fp")),
+          bandBits = 8, maxDist = 4, clusters = false)
+        .orderBy("id_a", "id_b")
     val oracle = Some(
       s"""WITH $audioFpOracleCte,
         |ids AS (
@@ -175,59 +140,25 @@ object AudioDedupQueries {
   }
 
   /** Audio dedup taken END-TO-END, the audio twin of
-    * [[ImageDedupCluster]]: the banded energy-contour pair graph
-    * (`q_audio_neardup`, numeric ids) contracted to connected
-    * components, keep policy = the LONGEST clip per cluster (most
-    * samples; ties → smaller id — a podcast pipeline keeps the
-    * unclipped master). Cross-CONTAINER clusters are the point: the
-    * `a` (bare FLAC) and `k` (Matroska) trees share PCM formulas, so a
-    * green row proves the cluster step unifies duplicates across
-    * carriages. Same recursive-CTE oracle shape as the image twin.
+    * [[ImageDedupQueries.ImageDedupCluster]]: the banded energy-contour
+    * pair graph (`q_audio_neardup`, numeric ids) contracted to connected
+    * components, keep policy ([[SourceQueries.keepLargest]]) = the
+    * LONGEST clip per cluster (most samples; ties → smaller id — a
+    * podcast pipeline keeps the unclipped master). Cross-CONTAINER
+    * clusters are the point: the `a` (bare FLAC) and `k` (Matroska)
+    * trees share PCM formulas, so a green row proves the cluster step
+    * unifies duplicates across carriages. Same recursive-CTE oracle
+    * shape as the image twin.
     */
   object AudioDedupCluster extends GraftQuery {
     val name = "q_audio_dedup_cluster"
-    def run(spark: SparkSession, sfDir: String): DataFrame = {
-      val ids = audioFpRows(spark, sfDir)
-        .select((when(col("kind") === "a", 0L).when(col("kind") === "o", 1L)
-          .otherwise(2L) * 1000L + col("asset_idx")).as("nid"),
-          col("fp"), col("n_samples"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // round 10: exact-class collapse (see ImageDedupCluster) — band
-      // join and CC fixpoint run on one node per DISTINCT contour; an
-      // edge-less size≥2 class is already a cluster and keeps its own
-      // min id as label, exactly as the member-level graph produced.
-      val classes = ids.groupBy("fp")
-        .agg(min(col("nid")).as("rep"), count(lit(1)).as("cls_size"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val bands = classes.select(col("rep"), col("fp"),
-        posexplode(array(
-          col("fp").bitwiseAND(lit(255L)),
-          shiftright(col("fp"), 8).bitwiseAND(lit(255L)),
-          shiftright(col("fp"), 16).bitwiseAND(lit(255L)),
-          shiftright(col("fp"), 24).bitwiseAND(lit(255L)))))
-        .withColumnRenamed("pos", "band_idx")
-        .withColumnRenamed("col", "band_val")
-      val a = bands.select(col("band_idx"), col("band_val"),
-        col("rep").as("doc_a"), col("fp").as("fp_a"))
-      val b = bands.select(col("band_idx"), col("band_val"),
-        col("rep").as("doc_b"), col("fp").as("fp_b"))
-      val clsEdges = a.join(b, Seq("band_idx", "band_val"))
-        .where(col("doc_a") < col("doc_b"))
-        .where(expr("bit_count(fp_a ^ fp_b)") <= 4)
-        .select("doc_a", "doc_b").distinct()
-      val ccLabels = graft.dedup.Dedup.connectedComponents(clsEdges)
-        .withColumnRenamed("id", "rep")
-      val clsLabeled = classes.join(ccLabels, Seq("rep"), "left")
-        .where(col("label").isNotNull || col("cls_size") >= 2)
-        .select(col("fp"), coalesce(col("label"), col("rep")).as("label"))
-      ids.join(clsLabeled, Seq("fp"))
-        .groupBy(col("label").as("cluster_id"))
-        .agg(count(lit(1)).as("cluster_size"),
-          max_by(col("nid"), col("n_samples") * 100000L - col("nid"))
-            .as("representative"),
-          countDistinct(expr("nid div 1000")).as("n_containers"))
-        .orderBy("cluster_id")
-    }
+    def run(spark: SparkSession, sfDir: String): DataFrame =
+      keepLargest(Dedup.hammingClassJoin(audioFpRows(spark, sfDir)
+          .select((when(col("kind") === "a", 0L).when(col("kind") === "o", 1L)
+            .otherwise(2L) * 1000L + col("asset_idx")).as("id"),
+            col("fp"), col("n_samples")),
+          bandBits = 8, maxDist = 4, clusters = true),
+        size = "n_samples", kinds = "n_containers")
     val oracle = Some(
       s"""WITH RECURSIVE $audioFpOracleCte,
         |ids AS (

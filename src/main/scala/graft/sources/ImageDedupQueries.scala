@@ -1,12 +1,11 @@
 package graft.sources
 
-import graft.{Graft, GraftQuery}
+import graft.GraftQuery
+import graft.dedup.Dedup
 import graft.images.ImageOps
-import graft.multimodal.TiffCodec
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Paths}
-import SourceQueries.{workDir, mediaScale, scaledTag}
+import SourceQueries.keepLargest
 import ImageSourceQueries.{ensureImageTree, ensureTwoToneTree, ensureQoiTree}
 
 /** Image perceptual dedup: aHash fingerprints, banded near-dup join,
@@ -145,70 +144,30 @@ object ImageDedupQueries {
         |ORDER BY h.kind, h.asset_idx""".stripMargin)
   }
 
+  /** The aHash as one 64-bit fingerprint: its 16-bit bands and its
+    * popcount are bit-identical to the (hash_hi, hash_lo) pair's.
+    */
+  private def aHashFp = shiftleft(col("hash_hi"), 32).bitwiseOR(col("hash_lo")).as("fp")
+
   /** Image near-duplicate detection — the multimodal twin of the MinHash
     * band join: 16-bit bands of each aHash bucket the candidates (a
     * pair collides iff it shares ≥ 1 of 4 bands — pigeonhole guarantees
     * recall for Hamming < 4; the standard LSH recall trade beyond), an
     * equi-join on (band index, band value) generates candidates WITHOUT
     * any all-pairs scan, and the exact Hamming ≤ 10 filter keeps true
-    * near-dups.
-    *
-    * Round 10: EXACT-CLASS COLLAPSE ahead of the banded join (the
-    * pattern `q_embed_neardup_lsh_adaptive` proved for embeddings, and
-    * the round-9 ×1/×10 audit demanded for media — the solid-PNG tree
-    * is ONE identical-hash class, quadratic in the band buckets). The
-    * join now sees one row per DISTINCT fingerprint, so bucket
-    * occupancy tracks distinct hashes, not corpus size; within-class
-    * (dist-0) pairs are regenerated by an O(members) expansion join and
-    * cross-class candidates by two member joins on the hash key. The
-    * output set — and therefore the oracle — is unchanged. At 100 TB
-    * this is the plan you'd run: exact duplicates (the fat head of any
-    * crawl) never enter the candidate join at all.
+    * near-dups. Runs through [[Dedup.hammingClassJoin]]'s exact-class
+    * collapse: exact duplicates (the fat head of any crawl) never enter
+    * the candidate join. The output set — and the oracle, which joins
+    * members directly — is the member-level join's.
     */
   object ImageNearDup extends GraftQuery {
     val name = "q_image_neardup"
-    def run(spark: SparkSession, sfDir: String): DataFrame = {
-      val ids = aHashRows(spark, sfDir)
-        .select(concat(col("kind"), lpad(col("asset_idx").cast("string"), 3, "0")).as("id"),
-          col("hash_hi"), col("hash_lo"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // one node per distinct fingerprint; rep = lexicographic min id
-      val classes = ids.groupBy("hash_hi", "hash_lo").agg(min(col("id")).as("rep"))
-      val bands = classes.select(col("rep"), col("hash_hi"), col("hash_lo"),
-        posexplode(array(
-          col("hash_lo").bitwiseAND(lit(65535L)),
-          shiftright(col("hash_lo"), 16).bitwiseAND(lit(65535L)),
-          col("hash_hi").bitwiseAND(lit(65535L)),
-          shiftright(col("hash_hi"), 16).bitwiseAND(lit(65535L)))))
-        .withColumnRenamed("pos", "band_idx")
-        .withColumnRenamed("col", "band_val")
-      val a = bands.select(col("band_idx"), col("band_val"),
-        col("rep").as("rep_a"), col("hash_hi").as("hi_a"), col("hash_lo").as("lo_a"))
-      val b = bands.select(col("band_idx"), col("band_val"),
-        col("rep").as("rep_b"), col("hash_hi").as("hi_b"), col("hash_lo").as("lo_b"))
-      val clsPairs = a.join(b, Seq("band_idx", "band_val"))
-        .where(col("rep_a") < col("rep_b"))
-        .select(col("hi_a"), col("lo_a"), col("hi_b"), col("lo_b"),
-          (expr("bit_count(hi_a ^ hi_b)") + expr("bit_count(lo_a ^ lo_b)"))
-            .cast("long").as("dist"))
-        .distinct()
-        .where(col("dist") <= 10)
-      // cross-class pairs: expand each surviving class pair to its members
-      val cross = clsPairs
-        .join(ids.select(col("hash_hi").as("hi_a"), col("hash_lo").as("lo_a"),
-          col("id").as("ida")), Seq("hi_a", "lo_a"))
-        .join(ids.select(col("hash_hi").as("hi_b"), col("hash_lo").as("lo_b"),
-          col("id").as("idb")), Seq("hi_b", "lo_b"))
-        .select(least(col("ida"), col("idb")).as("id_a"),
-          greatest(col("ida"), col("idb")).as("id_b"), col("dist"))
-      // within-class pairs are exact duplicates: dist 0 by construction
-      val within = ids.as("x")
-        .join(ids.as("y"), col("x.hash_hi") === col("y.hash_hi")
-          && col("x.hash_lo") === col("y.hash_lo") && col("x.id") < col("y.id"))
-        .select(col("x.id").as("id_a"), col("y.id").as("id_b"),
-          lit(0L).as("dist"))
-      cross.unionByName(within).orderBy("id_a", "id_b")
-    }
+    def run(spark: SparkSession, sfDir: String): DataFrame =
+      Dedup.hammingClassJoin(aHashRows(spark, sfDir)
+          .select(concat(col("kind"), lpad(col("asset_idx").cast("string"), 3, "0")).as("id"),
+            aHashFp),
+          bandBits = 16, maxDist = 10, clusters = false)
+        .orderBy("id_a", "id_b")
     val oracle = Some(
       s"""WITH $aHashOracleCte,
         |ids AS (
@@ -237,65 +196,27 @@ object ImageDedupQueries {
   /** Image dedup taken END-TO-END: the near-dup PAIR graph
     * (`q_image_neardup`'s banded aHash join, here on numeric ids:
     * kind-code·1000 + asset index) contracted to connected components
-    * ([[graft.dedup.Dedup.connectedComponents]] — the same log-round
-    * machinery the text tier uses) with the production keep policy:
-    * each cluster's representative is its LARGEST member by byte size
-    * (keep the best-resolution copy; ties → smaller id, encoded as one
-    * integer argmax key since ids are < 10⁵). This is what a real
-    * pipeline does with near-dup pairs — pairs are evidence, clusters
-    * are the dedup decision. The oracle replays the hashes closed-form,
-    * the banding + Hamming gate, the components as a recursive CTE, and
-    * the same max_by policy; cluster membership at corpus scale is
-    * orders of magnitude smaller than the corpus, so everything after
-    * the band join is bounded by the dedup output.
+    * ([[Dedup.hammingClassJoin]] with `clusters = true` — the same
+    * component machinery the text tier uses) with the production keep
+    * policy ([[SourceQueries.keepLargest]]): each cluster's
+    * representative is its LARGEST member by byte size (keep the
+    * best-resolution copy). This is what a real pipeline does with
+    * near-dup pairs — pairs are evidence, clusters are the dedup
+    * decision. The oracle replays the hashes closed-form, the banding +
+    * Hamming gate, the components as a recursive CTE, and the same
+    * max_by policy; cluster membership at corpus scale is orders of
+    * magnitude smaller than the corpus, so everything after the band
+    * join is bounded by the dedup output.
     */
   object ImageDedupCluster extends GraftQuery {
     val name = "q_image_dedup_cluster"
-    def run(spark: SparkSession, sfDir: String): DataFrame = {
-      val ids = aHashRows(spark, sfDir)
-        .select((when(col("kind") === "s", 0L).when(col("kind") === "t", 1L)
-          .otherwise(2L) * 1000L + col("asset_idx")).as("nid"),
-          col("hash_hi"), col("hash_lo"), col("n_bytes"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // round 10: exact-class collapse (see ImageNearDup) — the banded
-      // join and the CC fixpoint both run on one node per DISTINCT
-      // fingerprint; members rejoin by hash afterwards. An exact class
-      // is a cluster already, so a size≥2 class with no cross-class
-      // edge still surfaces (labelled by its own min id), exactly as
-      // the member-level pair graph produced before.
-      val classes = ids.groupBy("hash_hi", "hash_lo")
-        .agg(min(col("nid")).as("rep"), count(lit(1)).as("cls_size"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val bands = classes.select(col("rep"), col("hash_hi"), col("hash_lo"),
-        posexplode(array(
-          col("hash_lo").bitwiseAND(lit(65535L)),
-          shiftright(col("hash_lo"), 16).bitwiseAND(lit(65535L)),
-          col("hash_hi").bitwiseAND(lit(65535L)),
-          shiftright(col("hash_hi"), 16).bitwiseAND(lit(65535L)))))
-        .withColumnRenamed("pos", "band_idx")
-        .withColumnRenamed("col", "band_val")
-      val a = bands.select(col("band_idx"), col("band_val"),
-        col("rep").as("doc_a"), col("hash_hi").as("hi_a"), col("hash_lo").as("lo_a"))
-      val b = bands.select(col("band_idx"), col("band_val"),
-        col("rep").as("doc_b"), col("hash_hi").as("hi_b"), col("hash_lo").as("lo_b"))
-      val clsEdges = a.join(b, Seq("band_idx", "band_val"))
-        .where(col("doc_a") < col("doc_b"))
-        .where(expr("bit_count(hi_a ^ hi_b) + bit_count(lo_a ^ lo_b)") <= 10)
-        .select("doc_a", "doc_b").distinct()
-      val ccLabels = graft.dedup.Dedup.connectedComponents(clsEdges)
-        .withColumnRenamed("id", "rep")
-      val clsLabeled = classes.join(ccLabels, Seq("rep"), "left")
-        .where(col("label").isNotNull || col("cls_size") >= 2)
-        .select(col("hash_hi"), col("hash_lo"),
-          coalesce(col("label"), col("rep")).as("label"))
-      ids.join(clsLabeled, Seq("hash_hi", "hash_lo"))
-        .groupBy(col("label").as("cluster_id"))
-        .agg(count(lit(1)).as("cluster_size"),
-          max_by(col("nid"), col("n_bytes") * 100000L - col("nid"))
-            .as("representative"),
-          countDistinct(expr("nid div 1000")).as("n_kinds"))
-        .orderBy("cluster_id")
-    }
+    def run(spark: SparkSession, sfDir: String): DataFrame =
+      keepLargest(Dedup.hammingClassJoin(aHashRows(spark, sfDir)
+          .select((when(col("kind") === "s", 0L).when(col("kind") === "t", 1L)
+            .otherwise(2L) * 1000L + col("asset_idx")).as("id"),
+            aHashFp, col("n_bytes")),
+          bandBits = 16, maxDist = 10, clusters = true),
+        size = "n_bytes", kinds = "n_kinds")
     val oracle = Some(
       s"""WITH RECURSIVE $aHashOracleCte,
         |b0 AS (

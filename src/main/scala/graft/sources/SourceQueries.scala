@@ -1,8 +1,6 @@
 package graft.sources
 
-import graft.{Graft, GraftQuery}
-import graft.images.ImageOps
-import graft.multimodal.TiffCodec
+import graft.GraftQuery
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
@@ -43,6 +41,21 @@ object SourceQueries {
     val s = mediaScale
     if (s == 1) tag else s"${tag}_x$s"
   }
+
+  /** The keep-largest summary of the three media dedup-cluster queries:
+    * cluster members `(id, label, <size>)` → one row per cluster with
+    * its size, its representative (the LARGEST member by `size`; ties →
+    * smaller id, encoded as one integer argmax key since ids are < 10⁵)
+    * and the number of distinct kinds among its members (`kinds`; the
+    * kind code is `id div 1000`, see [[mediaScale]]).
+    */
+  private[sources] def keepLargest(members: DataFrame, size: String,
+      kinds: String): DataFrame =
+    members.groupBy(col("label").as("cluster_id"))
+      .agg(count(lit(1)).as("cluster_size"),
+        max_by(col("id"), col(size) * 100000L - col("id")).as("representative"),
+        countDistinct(expr("id div 1000")).as(kinds))
+      .orderBy("cluster_id")
 
 
   /** Registration order preserved from the pre-split single file (round

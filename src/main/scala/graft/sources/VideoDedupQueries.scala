@@ -1,12 +1,11 @@
 package graft.sources
 
-import graft.{Graft, GraftQuery}
+import graft.GraftQuery
+import graft.dedup.Dedup
 import graft.images.ImageOps
-import graft.multimodal.TiffCodec
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Paths}
-import SourceQueries.{workDir, mediaScale, scaledTag}
+import SourceQueries.keepLargest
 import VideoSourceQueries.{ensureZmbvTree, ensureMkvVfwTree}
 
 /** Video perceptual dedup: per-frame fingerprints, shot-set near-dup,
@@ -139,32 +138,38 @@ object VideoDedupQueries {
         |FROM vh ORDER BY kind, asset_idx, frame_idx""".stripMargin)
   }
 
+  /** Clip pairs sharing ≥ 2 distinct frame fingerprints — the
+    * shot-based video near-dup join shared by both video-dedup queries.
+    * Input rows `(id, hash_hi, hash_lo)`, one per frame. The equi-join on
+    * the frame hash IS the candidate generator (no all-pairs over clips,
+    * no temporal alignment cost — the same inverted-index shape as
+    * `q_minhash_bands`). Returns unordered `(id_a, id_b, n_shared)`.
+    */
+  private def sharedFramePairs(frames: DataFrame): DataFrame = {
+    val fs = frames.distinct()
+    fs.select(col("id").as("id_a"), col("hash_hi"), col("hash_lo"))
+      .join(fs.select(col("id").as("id_b"), col("hash_hi"), col("hash_lo")),
+        Seq("hash_hi", "hash_lo"))
+      .where(col("id_a") < col("id_b"))
+      .groupBy("id_a", "id_b")
+      .agg(count(lit(1)).as("n_shared"))
+      .where(col("n_shared") >= 2)
+  }
+
   /** Video near-duplicate detection — shot-based: a clip is its SET of
     * distinct frame fingerprints, and two clips are near-dups when they
-    * share frames. The equi-join on the frame hash IS the candidate
-    * generator (no all-pairs over clips, no temporal alignment cost —
-    * the same inverted-index shape as `q_minhash_bands`), and the
-    * shared-distinct-frame count ≥ 2 keeps true overlaps. The scrolling
+    * share at least 2 frames ([[sharedFramePairs]]). The scrolling
     * fixtures plant real overlaps (a clip's frames revisit earlier
     * phases of the 256-periodic pattern); the oracle replays the exact
     * set semantics from the closed-form hashes.
     */
   object VideoNearDup extends GraftQuery {
     val name = "q_video_neardup"
-    def run(spark: SparkSession, sfDir: String): DataFrame = {
-      val frames = videoFpRows(spark, sfDir)
-        .select(concat(col("kind"), lpad(col("asset_idx").cast("string"), 3, "0")).as("id"),
-          col("hash_hi"), col("hash_lo"))
-        .distinct()
-      val a = frames.select(col("id").as("id_a"), col("hash_hi"), col("hash_lo"))
-      val b = frames.select(col("id").as("id_b"), col("hash_hi"), col("hash_lo"))
-      a.join(b, Seq("hash_hi", "hash_lo"))
-        .where(col("id_a") < col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(count(lit(1)).as("n_shared"))
-        .where(col("n_shared") >= 2)
+    def run(spark: SparkSession, sfDir: String): DataFrame =
+      sharedFramePairs(videoFpRows(spark, sfDir)
+          .select(concat(col("kind"), lpad(col("asset_idx").cast("string"), 3, "0")).as("id"),
+            col("hash_hi"), col("hash_lo")))
         .orderBy("id_a", "id_b")
-    }
     val oracle = Some(
       s"""WITH $videoFpOracleCte,
         |fs AS (
@@ -184,44 +189,30 @@ object VideoDedupQueries {
   }
 
   /** Video dedup taken END-TO-END, completing the cluster tier across
-    * all three media modalities ([[ImageDedupCluster]] /
-    * [[AudioDedupCluster]]): clip pairs sharing ≥ 2 exact frame hashes
-    * (`q_video_neardup`'s inverted-index join, numeric ids) contracted
-    * to connected components, keep policy = the clip with the MOST
-    * FRAMES per cluster (the longest cut; ties → smaller id).
-    * `n_carriages` counts container families per cluster — the AVI and
-    * Matroska trees carry the same ZMBV content families, so clusters
-    * spanning carriages prove container-independent video dedup. Same
-    * recursive-CTE oracle + union-find differential as the twins.
+    * all three media modalities ([[ImageDedupQueries.ImageDedupCluster]] /
+    * [[AudioDedupQueries.AudioDedupCluster]]): clip pairs sharing ≥ 2
+    * exact frame hashes ([[sharedFramePairs]], numeric ids) contracted
+    * to connected components, keep policy ([[SourceQueries.keepLargest]])
+    * = the clip with the MOST FRAMES per cluster (the longest cut; ties →
+    * smaller id). `n_carriages` counts container families per cluster —
+    * the AVI and Matroska trees carry the same ZMBV content families, so
+    * clusters spanning carriages prove container-independent video
+    * dedup. Same recursive-CTE oracle + union-find differential as the
+    * twins.
     */
   object VideoDedupCluster extends GraftQuery {
     val name = "q_video_dedup_cluster"
     def run(spark: SparkSession, sfDir: String): DataFrame = {
       val rows = videoFpRows(spark, sfDir)
         .select((when(col("kind") === "v", 0L).otherwise(1L) * 1000L
-          + col("asset_idx")).as("nid"),
-          col("frame_idx"), col("hash_hi"), col("hash_lo"))
+          + col("asset_idx")).as("id"),
+          col("hash_hi"), col("hash_lo"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val nframes = rows.groupBy(col("nid").as("id"))
-        .agg(count(lit(1)).as("n_frames"))
-      val frames = rows.select(col("nid"), col("hash_hi"), col("hash_lo"))
-        .distinct()
-      val a = frames.select(col("nid").as("doc_a"), col("hash_hi"), col("hash_lo"))
-      val b = frames.select(col("nid").as("doc_b"), col("hash_hi"), col("hash_lo"))
-      val pairs = a.join(b, Seq("hash_hi", "hash_lo"))
-        .where(col("doc_a") < col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(count(lit(1)).as("n_shared"))
-        .where(col("n_shared") >= 2)
-        .select("doc_a", "doc_b")
-      graft.dedup.Dedup.connectedComponents(pairs)
-        .join(nframes, Seq("id"))
-        .groupBy(col("label").as("cluster_id"))
-        .agg(count(lit(1)).as("cluster_size"),
-          max_by(col("id"), col("n_frames") * 100000L - col("id"))
-            .as("representative"),
-          countDistinct(expr("id div 1000")).as("n_carriages"))
-        .orderBy("cluster_id")
+      val nframes = rows.groupBy("id").agg(count(lit(1)).as("n_frames"))
+      val pairs = sharedFramePairs(rows)
+        .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"))
+      keepLargest(Dedup.connectedComponents(pairs).join(nframes, Seq("id")),
+        size = "n_frames", kinds = "n_carriages")
     }
     val oracle = Some(
       s"""WITH RECURSIVE $videoFpOracleCte,

@@ -60,7 +60,7 @@ class ImagePipelineSpec extends SparkSpec {
     val byLm = rollup.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(byLm == Map("L1" -> 8L, "L2" -> 4L))
     val names = Seq(("L1", "Alpha"), ("L2", "Beta")).toDF("landmark_id", "name")
-    val stat = ImagePipeline.alphabetStat(rollup, names, cls = 2)
+    val stat = StatsPipeline.alphabetStat(rollup, names, cls = 2)
     val rows = stat.collect().map(r => (r.getString(0), r.getLong(1))).toMap
     // every red image yields one cls-2 box (g=0 → n=1), L1 only
     assert(rows("A") == 8L && rows("B") == 0L)

@@ -33,10 +33,26 @@ class StatsPipelineSpec extends SparkSpec {
   }
 
   test("alphabetStat golden format: letter;count header + rows") {
-    val stat = ImagePipeline.alphabetStat(rollup, names, cls = 0)
+    val stat = StatsPipeline.alphabetStat(rollup, names, cls = 0)
       .select(col("letter"), col("count"))
     val csv = StatsPipeline.toGoldenCsv(stat, ("letter", "count"))
     assert(csv == "letter;count\nA;8\nB;1\nN;2\n")
+  }
+
+  test("golden CSV spells doubles as the reference's Python repr does") {
+    import spark.implicits._
+    // expected strings are python3's repr() of the same values
+    val cases = Seq(
+      0.0005 -> "0.0005", 0.00015 -> "0.00015", 12345678.5 -> "12345678.5",
+      1e-5 -> "1e-05", 0.0001 -> "0.0001", 2.0 -> "2.0", -0.25 -> "-0.25",
+      1.0 / 12 -> "0.08333333333333333", 1e16 -> "1e+16", 1.5e16 -> "1.5e+16",
+      9999999999999998.0 -> "9999999999999998.0", 1e22 -> "1e+22",
+      1.2345e-7 -> "1.2345e-07", -3e-10 -> "-3e-10", 0.0 -> "0.0",
+      123456789012.0 -> "123456789012.0")
+    val stat = cases.zipWithIndex.map { case ((v, _), i) => (s"k$i", v) }.toDF("key", "value")
+    val csv = StatsPipeline.toGoldenCsv(stat, ("key", "value"))
+    assert(csv == cases.zipWithIndex
+      .map { case ((_, r), i) => s"k$i;$r" }.mkString("key;value\n", "\n", "\n"))
   }
 
   test("cityAvgStat: containment theta-join, reference city list") {
