@@ -13,13 +13,7 @@ object Bench {
     // shape).
     val shufflePartitions =
       sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.session(s"local[$cpus]", shufflePartitions.toInt)
     // warm up codegen/JIT + datasource init so the first measured query
     // doesn't carry ~5s of one-time session cost. The warmup exercises the
     // operator machinery the suite leans on (window functions, explode,

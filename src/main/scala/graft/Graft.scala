@@ -12,8 +12,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Graft {
 
-  /** Build a local session tuned for the test harness. On a real cluster the
-    * caller owns the builder; only the confs below are engine-relevant.
+  /** The one local session builder: `Bench`, `Verify`, the dev tools and
+    * the test suites all start here. On a real cluster the caller owns the
+    * builder; only the confs below are engine-relevant. Managed tables
+    * (`saveAsTable`) land under `java.io.tmpdir`, never in the working
+    * directory. Called inside an existing session (`getOrCreate`), only
+    * the runtime SQL confs take effect.
     */
   def session(master: String = "local[*]", shufflePartitions: Int = 32): SparkSession = {
     val spark = SparkSession
@@ -25,6 +29,8 @@ object Graft {
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.warehouse.dir", java.nio.file.Paths.get(
+        System.getProperty("java.io.tmpdir"), "graft-warehouse").toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

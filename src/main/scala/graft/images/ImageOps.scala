@@ -126,16 +126,35 @@ object ImageOps {
     * `[int(c) for c in avg]`, `pyspark_dominant.py:50`).
     */
   def averageColor(img: Image): (Int, Int, Int) = {
-    var r = 0L; var g = 0L; var b = 0L
-    var i = 0
-    while (i < img.pixels.length) {
-      val p = img.pixels(i)
-      r += (p >> 16) & 0xFF; g += (p >> 8) & 0xFF; b += p & 0xFF
-      i += 1
-    }
+    val (r, g, b) = channelSums(img.pixels)
     val n = math.max(img.pixels.length, 1)
     ((r / n).toInt, (g / n).toInt, (b / n).toInt)
   }
+
+  /** Exact per-channel sums (r, g, b) of packed 0xRRGGBB pixels; the top
+    * byte (alpha) is ignored. The integer reduction the codec scans
+    * report and [[averageColor]] divides.
+    */
+  def channelSums(pixels: Array[Int]): (Long, Long, Long) = {
+    var sr = 0L; var sg = 0L; var sb = 0L
+    var i = 0
+    while (i < pixels.length) {
+      val p = pixels(i)
+      sr += (p >> 16) & 0xFF; sg += (p >> 8) & 0xFF; sb += p & 0xFF
+      i += 1
+    }
+    (sr, sg, sb)
+  }
+
+  /** [[channelSums]] of a w×h frame read through an (x, y) → (r, g, b)
+    * accessor with 8-bit channels (the decoded video frames).
+    */
+  def channelSums(w: Int, h: Int,
+      rgb: (Int, Int) => (Int, Int, Int)): (Long, Long, Long) =
+    channelSums(Array.tabulate(w * h) { o =>
+      val (r, g, b) = rgb(o % w, o / w)
+      (r << 16) | (g << 8) | b
+    })
 
   /** 64-bit average-hash perceptual fingerprint (the classic aHash the
     * image-dedup literature builds on): partition the image into an 8×8

@@ -2,6 +2,7 @@ package graft.images
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.Sources
 
 /** The Spark-side image pipeline (SURVEY §3.1–§3.2 re-expressed):
   * binaryFile scan → per-partition inference / color analytics → relational
@@ -36,10 +37,7 @@ object ImagePipeline {
     */
   def scanImages(spark: SparkSession, dir: String, glob: String = "*.{jpg,jpeg,png}"): Dataset[ImageRow] = {
     import spark.implicits._
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", glob)
-      .option("recursiveFileLookup", "true")
-      .load(dir)
+    Sources.binaryTree(spark, dir, glob)
       .select(col("path"),
         regexp_extract(col("path"), "([^/]+)\\.[A-Za-z]+$", 1).as("id"),
         col("content"))

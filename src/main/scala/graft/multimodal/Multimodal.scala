@@ -265,17 +265,7 @@ object Multimodal {
         .collect { case (f, i) if i % stride == 0 => f -> i }
         .take(MaxFrames)
         .map { case ((w, h, rgb), i) =>
-          var sr = 0L; var sg = 0L; var sb = 0L
-          var y = 0
-          while (y < h) {
-            var x = 0
-            while (x < w) {
-              val (r, g, b) = rgb(x, y)
-              sr += r; sg += g; sb += b
-              x += 1
-            }
-            y += 1
-          }
+          val (sr, sg, sb) = ImageOps.channelSums(w, h, rgb)
           val n = (w.toLong * h).toFloat
           MediaFeatures(assetId, "video", i, w, h,
             Array(sr / n / 255f, sg / n / 255f, sb / n / 255f,
@@ -320,8 +310,7 @@ object Multimodal {
   def scanMedia(spark: SparkSession, dir: String): Dataset[MediaRow] = {
     import spark.implicits._
     val ext = lower(regexp_extract(col("path"), "\\.([A-Za-z0-9]+)$", 1))
-    spark.read.format("binaryFile")
-      .option("recursiveFileLookup", "true").load(dir)
+    graft.sources.Sources.binaryTree(spark, dir, "*")
       .select(
         regexp_extract(col("path"), "([^/]+)$", 1).as("asset_id"),
         when(ext.isin("jpg", "jpeg", "png", "bmp", "gif", "qoi", "tif",

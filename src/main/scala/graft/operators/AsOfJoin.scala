@@ -54,14 +54,16 @@ object AsOfJoin {
 
   /** The same join through the native operator
     * ([[graft.plans.AsOfJoinPlan]]): one sorted merge pass instead of
-    * union+window+re-join. Requires [[graft.plans.GraftExtensions.register]]
-    * (or builder extensions) so the planner knows the strategy.
+    * union+window+re-join. Installs the planner strategy on the session
+    * if it is not there yet
+    * ([[graft.plans.GraftExtensions.installAsOfStrategy]]).
     */
   def asofBackwardNative(left: DataFrame, right: DataFrame,
       key: String, time: String, tiebreak: String,
       payloadCol: String): DataFrame = {
     import org.apache.spark.sql.catalyst.expressions.AttributeReference
     import org.apache.spark.sql.graftglue.Bridge
+    graft.plans.GraftExtensions.installAsOfStrategy(left.sparkSession)
     // both sides often derive from the same source and then SHARE exprIds;
     // the analyzer's DeduplicateRelations re-aliases the right child of a
     // custom node but cannot rewrite the node's own expressions — so mint
@@ -93,7 +95,6 @@ object AsOfJoin {
       val clicks = ev.filter(col("event_type") === "click")
       // run through the native single-pass operator (the composed form is
       // differentially spec'd identical and remains the fallback)
-      graft.plans.GraftExtensions.register(spark)
       val attributed = asofBackwardNative(purchases, clicks,
         key = "user_id", time = "ts", tiebreak = "event_id",
         payloadCol = "event_id")

@@ -120,16 +120,23 @@ object GraftExtensions {
       }))
 
   /** Same registrations on an already-built session (builder extensions
-    * only bind at session construction). `experimental.extraStrategies` is
-    * the public runtime hook for planner strategies.
+    * only bind at session construction).
     */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
     builders.foreach { case (name, _, builder) =>
       reg.createOrReplaceTempFunction(name, builder, "built-in")
     }
+    installAsOfStrategy(spark)
+  }
+
+  /** Add the as-of join planner strategy to an already-built session,
+    * once: `experimental.extraStrategies` is the public runtime hook for
+    * planner strategies, and a session that already holds it is left
+    * unchanged.
+    */
+  def installAsOfStrategy(spark: org.apache.spark.sql.SparkSession): Unit =
     if (!spark.experimental.extraStrategies.contains(AsOfJoinPlan.AsOfStrategy))
       spark.experimental.extraStrategies =
         spark.experimental.extraStrategies :+ AsOfJoinPlan.AsOfStrategy
-  }
 }

@@ -3,8 +3,7 @@ package graft.sources
 import graft.GraftQuery
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Paths}
-import SourceQueries.{workDir, mediaScale, scaledTag}
+import SourceQueries.{fixtureTree, mediaScale, scaledTag}
 
 /** Archive/crawl ingestion tier (rounds 10–11): the container formats a
   * 100 TB training-data ingest actually walks — POSIX tar, ZIP
@@ -175,28 +174,23 @@ object ArchiveQueries {
       case _ => None
     }
 
-  /** Create (once per scale factor) the TAR fixture tree: 24 archives,
-    * asset i holding 2 + i%4 entries; entry j is 50 + 37i + 11j bytes
-    * with byte k = (13i + 5j + 7k) mod 128 — every field a pure
+  /** Build (atomically, once per scale factor) the TAR fixture tree: 24
+    * archives, asset i holding 2 + i%4 entries; entry j is 50 + 37i + 11j
+    * bytes with byte k = (13i + 5j + 7k) mod 128 — every field a pure
     * function of (i, j, k), replayed closed-form by the oracle.
     */
-  private[sources] def ensureTarTree(sfDir: String): String = {
-    val root = workDir(scaledTag("tar"), sfDir)
-    if (!Files.exists(Paths.get(root, "0"))) {
+  private[sources] def ensureTarTree(sfDir: String): String =
+    fixtureTree(scaledTag("tar"), sfDir) {
       import graft.multimodal.TarCodec
-      for (i <- 0 until 24 * mediaScale) {
-        val dir = Paths.get(root, s"${i % 2}")
-        Files.createDirectories(dir)
+      (0 until 24 * mediaScale).iterator.map { i =>
         val files = (0 until 2 + i % 4).map { j =>
           (s"e$j.dat",
             Array.tabulate(50 + 37 * i + 11 * j)(k =>
               ((13 * i + 5 * j + 7 * k) % 128).toByte))
         }
-        Files.write(dir.resolve(f"t$i%03d.tar"), TarCodec.build(files))
+        (f"${i % 2}/t$i%03d.tar", TarCodec.build(files))
       }
     }
-    root
-  }
 
   /** TAR enumeration under the hash gate: strict ustar walk (checksum
     * validated on every header, block tiling, two-zero-block
@@ -215,10 +209,7 @@ object ArchiveQueries {
       import spark.implicits._
       val root = ensureTarTree(sfDir)
       val idRe = "t(\\d+)\\.tar".r
-      spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.tar")
-        .option("recursiveFileLookup", "true")
-        .load(root)
+      Sources.binaryTree(spark, root, "*.tar")
         .select(col("path"), col("length"))
         .as[(String, Long)]
         .flatMap { case (path, fileLen) =>
@@ -239,7 +230,7 @@ object ArchiveQueries {
                 (m.group(1).toLong, rows.length.toLong,
                   rows.map(_._1).sum, rows.map(_._1).max,
                   rows.map(_._2).sum, fileLen,
-                  head.map(b => f"$b%02X").mkString)
+                  Sources.headHex(head))
               }
             } finally in.close()
           }
@@ -279,28 +270,23 @@ object ArchiveQueries {
         |ORDER BY a.asset_idx""".stripMargin)
   }
 
-  /** Create (once per scale factor) the ZIP fixture tree: asset i holds
-    * 2 + i%3 members, member j stored when (i+j) is odd and DEFLATEd
+  /** Build (atomically, once per scale factor) the ZIP fixture tree: asset i
+    * holds 2 + i%3 members, member j stored when (i+j) is odd and DEFLATEd
     * when even, 40 + 29i + 13j bytes with byte k = (11i+3j+5k) mod 128.
     */
-  private[sources] def ensureZipTree(sfDir: String): String = {
-    val root = workDir(scaledTag("zip"), sfDir)
-    if (!Files.exists(Paths.get(root, "0"))) {
+  private[sources] def ensureZipTree(sfDir: String): String =
+    fixtureTree(scaledTag("zip"), sfDir) {
       import graft.multimodal.ZipCodec
-      for (i <- 0 until 24 * mediaScale) {
-        val dir = Paths.get(root, s"${i % 2}")
-        Files.createDirectories(dir)
+      (0 until 24 * mediaScale).iterator.map { i =>
         val files = (0 until 2 + i % 3).map { j =>
           (s"f$j",
             Array.tabulate(40 + 29 * i + 13 * j)(k =>
               ((11 * i + 3 * j + 5 * k) % 128).toByte),
             (i + j) % 2 == 0)
         }
-        Files.write(dir.resolve(f"z$i%03d.zip"), ZipCodec.build(files))
+        (f"${i % 2}/z$i%03d.zip", ZipCodec.build(files))
       }
     }
-    root
-  }
 
   /** ZIP enumeration + extraction under the hash gate: central-directory
     * walk, local-header cross-validation, stored and from-spec-DEFLATE
@@ -320,10 +306,7 @@ object ArchiveQueries {
       import spark.implicits._
       val root = ensureZipTree(sfDir)
       val idRe = "z(\\d+)\\.zip".r
-      spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.zip")
-        .option("recursiveFileLookup", "true")
-        .load(root)
+      Sources.binaryTree(spark, root, "*.zip")
         .select(col("path"), col("length"))
         .as[(String, Long)]
         .flatMap { case (path, fileLen) =>
@@ -337,7 +320,7 @@ object ArchiveQueries {
                 (m.group(1).toLong, rows.length.toLong,
                   rows.count(_._1 == 8).toLong,
                   rows.map(_._2).sum, rows.map(_._3).sum, fileLen,
-                  head.map(b => f"$b%02X").mkString)
+                  Sources.headHex(head))
               }
             } finally closer.close()
           }
@@ -378,19 +361,16 @@ object ArchiveQueries {
         |ORDER BY a.asset_idx""".stripMargin)
   }
 
-  /** Create (once per scale factor) the `.warc.gz` fixture tree in the
-    * Common Crawl carriage — asset i = 2 + i%3 records, EACH its own
+  /** Build (atomically, once per scale factor) the `.warc.gz` fixture tree in
+    * the Common Crawl carriage — asset i = 2 + i%3 records, EACH its own
     * gzip member; record 0 is the warcinfo, the rest alternate
     * response/request with per-record target URIs; payload j is
     * 30 + 17i + 9j bytes with byte k = (7i + 3j + 5k) mod 128.
     */
-  private[graft] def ensureWarcTree(sfDir: String): String = {
-    val root = workDir(scaledTag("warc"), sfDir)
-    if (!Files.exists(Paths.get(root, "0"))) {
+  private[graft] def ensureWarcTree(sfDir: String): String =
+    fixtureTree(scaledTag("warc"), sfDir) {
       import graft.multimodal.{GzipCodec, WarcCodec}
-      for (i <- 0 until 24 * mediaScale) {
-        val dir = Paths.get(root, s"${i % 2}")
-        Files.createDirectories(dir)
+      (0 until 24 * mediaScale).iterator.map { i =>
         val members = (0 until 2 + i % 3).map { j =>
           val payload = Array.tabulate(30 + 17 * i + 9 * j)(k =>
             ((7 * i + 3 * j + 5 * k) % 128).toByte)
@@ -402,12 +382,10 @@ object ArchiveQueries {
           GzipCodec.buildMember(WarcCodec.buildRecord(
             tpe, s"<urn:uuid:$i-$j>", "2026-01-01T00:00:00Z", uri, payload))
         }
-        Files.write(dir.resolve(f"w$i%03d.warc.gz"),
+        (f"${i % 2}/w$i%03d.warc.gz",
           members.reduce(_ ++ _))
       }
     }
-    root
-  }
 
   /** WARC-in-gzip ingestion under the hash gate — the Common Crawl
     * read path end-to-end: strict multi-member gzip walk (CRC-32 +
@@ -430,10 +408,7 @@ object ArchiveQueries {
       import spark.implicits._
       val root = ensureWarcTree(sfDir)
       val idRe = "w(\\d+)\\.warc\\.gz".r
-      spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.warc.gz")
-        .option("recursiveFileLookup", "true")
-        .load(root)
+      Sources.binaryTree(spark, root, "*.warc.gz")
         .select(col("path"), col("length"))
         .as[(String, Long)]
         .flatMap { case (path, fileLen) =>
@@ -457,7 +432,7 @@ object ArchiveQueries {
                   a.clen + recs.map(_.contentLength.toLong).sum,
                   a.bsum + recs.map(
                     _.payload.map(_ & 0xFF).map(_.toLong).sum).sum)
-              }.map(a => (a, head.map(b => f"$b%02X").mkString)).toSeq
+              }.map(a => (a, Sources.headHex(head))).toSeq
             } finally in.close()
             // the .warc.gz contract: exactly one record per member
             if acc._1.r == acc._1.m
@@ -532,9 +507,9 @@ object ArchiveQueries {
     out.toByteArray
   }
 
-  /** Create (once per scale factor) the HTML-payload `.warc.gz` tree —
-    * round-11 shape: response records carry the RAW HTTP MESSAGE (status
-    * line + headers + body), the way real WARC `response` records do
+  /** Build (atomically, once per scale factor) the HTML-payload `.warc.gz`
+    * tree — round-11 shape: response records carry the RAW HTTP MESSAGE
+    * (status line + headers + body), the way real WARC `response` records do
     * (ISO 28500 §6.3), so the reader must split the message and sniff
     * the charset before any text extraction. Record 0 is the warcinfo;
     * records j ≥ 1 are responses whose bodies are deterministic HTML:
@@ -571,14 +546,11 @@ object ArchiveQueries {
     * in the wrong order), ingests a non-200, or lets a br-coded
     * record through cannot reproduce the counts.
     */
-  private[sources] def ensureWarcHtmlTree(sfDir: String): String = {
-    val root = workDir(scaledTag("warch5"), sfDir)
-    if (!Files.exists(Paths.get(root, "0"))) {
+  private[sources] def ensureWarcHtmlTree(sfDir: String): String =
+    fixtureTree(scaledTag("warch5"), sfDir) {
       import graft.multimodal.{GzipCodec, WarcCodec}
       val iso = java.nio.charset.StandardCharsets.ISO_8859_1
-      for (i <- 0 until 24 * mediaScale) {
-        val dir = Paths.get(root, s"${i % 2}")
-        Files.createDirectories(dir)
+      (0 until 24 * mediaScale).iterator.map { i =>
         val members = (0 until 2 + i % 3).map { j =>
           val (tpe, uri, payload) =
             if (j == 0)
@@ -654,12 +626,10 @@ object ArchiveQueries {
             (s"<html><body><h1>h$i é</h1><p>w1 &amp; w1 &#66; &#x62; " +
               "a&nbsp;b</p></body></html>").getBytes(
               java.nio.charset.StandardCharsets.UTF_8)))
-        Files.write(dir.resolve(f"h$i%03d.warc.gz"),
+        (f"${i % 2}/h$i%03d.warc.gz",
           (members :+ notFound :+ redirect :+ brClaim).reduce(_ ++ _))
       }
     }
-    root
-  }
 
   /** Crawl text extraction under the hash gate: `.warc.gz` members →
     * WARC responses → HTTP parse ([[graft.text.HtmlOps.httpParse]]:
@@ -684,10 +654,7 @@ object ArchiveQueries {
       import spark.implicits._
       val root = ensureWarcHtmlTree(sfDir)
       val idRe = "h(\\d+)\\.warc\\.gz".r
-      val docs = spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.warc.gz")
-        .option("recursiveFileLookup", "true")
-        .load(root)
+      val docs = Sources.binaryTree(spark, root, "*.warc.gz")
         .select(col("path"))
         .as[String]
         .flatMap { path =>
@@ -746,29 +713,24 @@ object ArchiveQueries {
         |FROM per GROUP BY 1 ORDER BY 1""".stripMargin)
   }
 
-  /** Create (once per scale factor) the `.tar.gz` fixture tree — the
-    * dataset-tarball shape (one gzip member wrapping one tar): asset i
+  /** Build (atomically, once per scale factor) the `.tar.gz` fixture tree —
+    * the dataset-tarball shape (one gzip member wrapping one tar): asset i
     * holds 2 + i%3 entries, entry j is 60 + 23i + 9j bytes with byte
     * k = (17i + 7j + 3k) mod 128.
     */
-  private[sources] def ensureTgzTree(sfDir: String): String = {
-    val root = workDir(scaledTag("tgz"), sfDir)
-    if (!Files.exists(Paths.get(root, "0"))) {
+  private[sources] def ensureTgzTree(sfDir: String): String =
+    fixtureTree(scaledTag("tgz"), sfDir) {
       import graft.multimodal.{GzipCodec, TarCodec}
-      for (i <- 0 until 24 * mediaScale) {
-        val dir = Paths.get(root, s"${i % 2}")
-        Files.createDirectories(dir)
+      (0 until 24 * mediaScale).iterator.map { i =>
         val files = (0 until 2 + i % 3).map { j =>
           (s"d/e$j.txt",
             Array.tabulate(60 + 23 * i + 9 * j)(k =>
               ((17 * i + 7 * j + 3 * k) % 128).toByte))
         }
-        Files.write(dir.resolve(f"g$i%03d.tar.gz"),
+        (f"${i % 2}/g$i%03d.tar.gz",
           GzipCodec.buildMember(TarCodec.build(files), Some(f"g$i%03d.tar")))
       }
     }
-    root
-  }
 
   /** Compressed-tarball enumeration under the hash gate — the two
     * walkers COMPOSED (gzip member → tar entries), which is how every
@@ -788,10 +750,7 @@ object ArchiveQueries {
       import spark.implicits._
       val root = ensureTgzTree(sfDir)
       val idRe = "g(\\d+)\\.tar\\.gz".r
-      spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.tar.gz")
-        .option("recursiveFileLookup", "true")
-        .load(root)
+      Sources.binaryTree(spark, root, "*.tar.gz")
         .select(col("path"), col("length"))
         .as[(String, Long)]
         .flatMap { case (path, fileLen) =>
@@ -853,8 +812,8 @@ object ArchiveQueries {
         |ORDER BY a.asset_idx""".stripMargin)
   }
 
-  /** Create (once per scale factor) the link-graph `.warc.gz` tree:
-    * response page (i, j) carries 1 + (i+j)%3 anchors, anchor l
+  /** Build (atomically, once per scale factor) the link-graph `.warc.gz`
+    * tree: response page (i, j) carries 1 + (i+j)%3 anchors, anchor l
     * pointing at `http://s((i+l)%8).example/p((j+l)%5)` — a planted
     * cross-page web graph whose in-link distribution is a pure function
     * of (i, j, l). Round-12 shape: pages are stored as RAW HTTP
@@ -863,14 +822,11 @@ object ArchiveQueries {
     * anchors would skew the in-link counts of s0/p0 if a status-blind
     * reader ingested it.
     */
-  private[sources] def ensureWarcLinkTree(sfDir: String): String = {
-    val root = workDir(scaledTag("whlink2"), sfDir)
-    if (!Files.exists(Paths.get(root, "0"))) {
+  private[sources] def ensureWarcLinkTree(sfDir: String): String =
+    fixtureTree(scaledTag("whlink2"), sfDir) {
       import graft.multimodal.{GzipCodec, WarcCodec}
       val iso = java.nio.charset.StandardCharsets.ISO_8859_1
-      for (i <- 0 until 24 * mediaScale) {
-        val dir = Paths.get(root, s"${i % 2}")
-        Files.createDirectories(dir)
+      (0 until 24 * mediaScale).iterator.map { i =>
         val members = (0 until 1 + (2 + i % 3)).map { j =>
           val (tpe, uri, payload) =
             if (j == 0)
@@ -902,12 +858,10 @@ object ArchiveQueries {
             """<html><body><a href="http://s0.example/p0">x</a>""" +
             """<a href="http://s0.example/p0">x</a></body></html>""")
             .getBytes(iso)))
-        Files.write(dir.resolve(f"l$i%03d.warc.gz"),
+        (f"${i % 2}/l$i%03d.warc.gz",
           (members :+ notFound).reduce(_ ++ _))
       }
     }
-    root
-  }
 
   /** Shared scan for the link-tree consumers ([[HtmlLinkGraph]],
     * [[CrawlPageRank]], [[RobotsFrontier]]'s page side): streamed WARC
@@ -917,10 +871,7 @@ object ArchiveQueries {
   private def linkPages(spark: SparkSession, root: String,
       idRe: scala.util.matching.Regex): DataFrame = {
     import spark.implicits._
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.warc.gz")
-      .option("recursiveFileLookup", "true")
-      .load(root)
+    Sources.binaryTree(spark, root, "*.warc.gz")
       .select(col("path"))
       .as[String]
       .flatMap { path =>
@@ -985,9 +936,9 @@ object ArchiveQueries {
         |FROM links GROUP BY 1 ORDER BY 1""".stripMargin)
   }
 
-  /** Create (once per scale factor) the crawl-corpus `.warc.gz` tree —
-    * the capstone fixture: 24 hosts, each with 3 + i%2 HTTP-framed HTML
-    * responses PLANTED to exercise every curation stage:
+  /** Build (atomically, once per scale factor) the crawl-corpus `.warc.gz`
+    * tree — the capstone fixture: 24 hosts, each with 3 + i%2 HTTP-framed
+    * HTML responses PLANTED to exercise every curation stage:
     *   j=1  boilerplate ("menu login signup", 3 tokens) — the token
     *        gate kills it;
     *   j=2  an exact duplicate shared verbatim by the 6 hosts of group
@@ -1006,15 +957,12 @@ object ArchiveQueries {
     * exact corpus and replays every stage including the md5
     * fingerprints and the full MinHash math.
     */
-  private[sources] def ensureCrawlTree(sfDir: String): String = {
-    val root = workDir(scaledTag("crawl2"), sfDir)
-    if (!Files.exists(Paths.get(root, "0"))) {
+  private[sources] def ensureCrawlTree(sfDir: String): String =
+    fixtureTree(scaledTag("crawl2"), sfDir) {
       import graft.multimodal.{GzipCodec, WarcCodec}
       val iso = java.nio.charset.StandardCharsets.ISO_8859_1
       val utf8 = java.nio.charset.StandardCharsets.UTF_8
-      for (i <- 0 until 24 * mediaScale) {
-        val dir = Paths.get(root, s"${i % 2}")
-        Files.createDirectories(dir)
+      (0 until 24 * mediaScale).iterator.map { i =>
         val members = (0 to 3 + i % 2).map { j =>
           val (tpe, uri, payload) =
             if (j == 0)
@@ -1064,12 +1012,10 @@ object ArchiveQueries {
             s"http://h$i.example/p1\r\nContent-Type: text/html\r\n\r\n" +
             "<html><body><p>the document has moved to a new home " +
             "for the data</p></body></html>").getBytes(iso)))
-        Files.write(dir.resolve(f"c$i%03d.warc.gz"),
+        (f"${i % 2}/c$i%03d.warc.gz",
           (members :+ notFound :+ redirect).reduce(_ ++ _))
       }
     }
-    root
-  }
 
   /** The crawl→corpus capstone (rounds 11–12): the END-TO-END path a
     * web-scale pretraining ingest runs, composed entirely from this
@@ -1103,10 +1049,7 @@ object ArchiveQueries {
       import graft.text.{HtmlOps, TextOps, TextPipeline}
       val root = ensureCrawlTree(sfDir)
       val idRe = "c(\\d+)\\.warc\\.gz".r
-      val pages = spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.warc.gz")
-        .option("recursiveFileLookup", "true")
-        .load(root)
+      val pages = Sources.binaryTree(spark, root, "*.warc.gz")
         .select(col("path"))
         .as[String]
         .flatMap { path =>
@@ -1285,8 +1228,8 @@ object ArchiveQueries {
     }
   }
 
-  /** Create (once per scale factor) the robots-frontier `.warc.gz` tree:
-    * the planted web-graph page/anchor formulas (now with DEEP targets:
+  /** Build (atomically, once per scale factor) the robots-frontier `.warc.gz`
+    * tree: the planted web-graph page/anchor formulas (now with DEEP targets:
     * anchor l points at `/p<(j+l)%5>` when l is even and at
     * `/p<(j+l)%5>/x<(i+j)%3>` when l is odd — wildcard rules need path
     * structure to discriminate) PLUS, for i < 8, one WARC `resource`
@@ -1331,14 +1274,11 @@ object ArchiveQueries {
     * reach a body, so per §2.3.1.2 h5 is "unavailable" → allow-all
     * (its old rules are gone and every h5 count shifts).
     */
-  private[sources] def ensureRobotsTree(sfDir: String): String = {
-    val root = workDir(scaledTag("robots4"), sfDir)
-    if (!Files.exists(Paths.get(root, "0"))) {
+  private[sources] def ensureRobotsTree(sfDir: String): String =
+    fixtureTree(scaledTag("robots4"), sfDir) {
       import graft.multimodal.{GzipCodec, WarcCodec}
       val iso = java.nio.charset.StandardCharsets.ISO_8859_1
-      for (i <- 0 until 24 * mediaScale) {
-        val dir = Paths.get(root, s"${i % 2}")
-        Files.createDirectories(dir)
+      (0 until 24 * mediaScale).iterator.map { i =>
         val pageMembers = (0 until 1 + (2 + i % 3)).map { j =>
           val (tpe, uri, payload) =
             if (j == 0)
@@ -1425,12 +1365,10 @@ object ArchiveQueries {
                 http("500 Internal Server Error", "err".getBytes(utf8))))
             }
           } else Seq.empty
-        Files.write(dir.resolve(f"r$i%03d.warc.gz"),
+        (f"${i % 2}/r$i%03d.warc.gz",
           (pageMembers ++ Seq(notFound) ++ robotsMember).reduce(_ ++ _))
       }
     }
-    root
-  }
 
   /** Crawl-frontier robots filtering (RFC 9309), composed: the link
     * edges the crawl extracts (200-gated, streamed WARC walk), gated by
@@ -1467,10 +1405,7 @@ object ArchiveQueries {
       val root = ensureRobotsTree(sfDir)
       // one decoded pass over the tree: link rows (kind 0) + parsed
       // rule rows (kind 1), persisted — two consumers below
-      val recs = spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.warc.gz")
-        .option("recursiveFileLookup", "true")
-        .load(root)
+      val recs = Sources.binaryTree(spark, root, "*.warc.gz")
         .select(col("path"))
         .as[String]
         .flatMap { path =>
@@ -1655,8 +1590,8 @@ object ArchiveQueries {
         |FROM dec GROUP BY h ORDER BY host""".stripMargin)
   }
 
-  /** Create (once per scale factor) the main-content HTML tree: plain
-    * `.html` files (the post-WARC landing shape), page i carrying a nav
+  /** Build (atomically, once per scale factor) the main-content HTML tree:
+    * plain `.html` files (the post-WARC landing shape), page i carrying a nav
     * block (pure links), 5 + i%7 content paragraphs of 8 deterministic
     * words — every other word a stopword, the density real prose has
     * and boilerplate lacks (even paragraphs embed one 1-token inline
@@ -1666,13 +1601,10 @@ object ArchiveQueries {
     * stopwords — the block the anchor-density test alone cannot catch),
     * and a footer mixing two links with two plain tokens.
     */
-  private[sources] def ensureMainContentTree(sfDir: String): String = {
-    val root = workDir(scaledTag("mainc2"), sfDir)
-    if (!Files.exists(Paths.get(root, "0"))) {
+  private[sources] def ensureMainContentTree(sfDir: String): String =
+    fixtureTree(scaledTag("mainc2"), sfDir) {
       val stop = graft.text.TextOps.stopwords
-      for (i <- 0 until 24 * mediaScale) {
-        val dir = Paths.get(root, s"${i % 2}")
-        Files.createDirectories(dir)
+      (0 until 24 * mediaScale).iterator.map { i =>
         val nw = 5 + i % 7
         val paras = (0 until nw).map { k =>
           val words = (0 until 8).map { m =>
@@ -1690,12 +1622,10 @@ object ArchiveQueries {
           """<script>var x = "<p>trap trap trap trap trap</p>";</script>""" +
           """<footer><a href="/ab">about</a> <a href="/c">contact</a>""" +
           " copy site</footer></body></html>"
-        Files.write(dir.resolve(f"m$i%03d.html"),
+        (f"${i % 2}/m$i%03d.html",
           html.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       }
     }
-    root
-  }
 
   /** Main-content extraction (rounds 11–12) — the boilerplate-BLOCK
     * removal step between markup stripping and the curation gates (the
@@ -1724,10 +1654,7 @@ object ArchiveQueries {
       import spark.implicits._
       val root = ensureMainContentTree(sfDir)
       val idRe = "m(\\d+)\\.html".r
-      val pages = spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.html")
-        .option("recursiveFileLookup", "true")
-        .load(root)
+      val pages = Sources.binaryTree(spark, root, "*.html")
         .select(col("path"), col("content"))
         .as[(String, Array[Byte])]
         .flatMap { case (path, content) =>
@@ -1782,7 +1709,7 @@ object ArchiveQueries {
         |FROM specs ORDER BY asset_idx""".stripMargin)
   }
 
-  /** Create (once per scale factor) the MIME-routing tree: 24
+  /** Build (atomically, once per scale factor) the MIME-routing tree: 24
     * `.warc.gz` files, file i holding 4 + i%4 response records at
     * `/m{i}/{j}` whose (declared Content-Type, actual bytes) pairs
     * exercise the sniff matrix:
@@ -1798,17 +1725,14 @@ object ArchiveQueries {
     *  - j=6 (i%4 = 3): `application/octet-stream` over ZIP magic (the
     *    sniff REFINES an honest-but-vague declaration).
     */
-  private[graft] def ensureMimeTree(sfDir: String): String = {
-    val root = workDir(scaledTag("mime1"), sfDir)
-    if (!Files.exists(Paths.get(root, "0"))) {
+  private[graft] def ensureMimeTree(sfDir: String): String =
+    fixtureTree(scaledTag("mime1"), sfDir) {
       import graft.multimodal.{GzipCodec, WarcCodec}
       val utf8 = java.nio.charset.StandardCharsets.UTF_8
       val iso = java.nio.charset.StandardCharsets.ISO_8859_1
       val pngSig = Array[Int](0x89, 'P', 'N', 'G', 0x0D, 0x0A, 0x1A, 0x0A)
         .map(_.toByte)
-      for (i <- 0 until 24 * mediaScale) {
-        val dir = Paths.get(root, s"${i % 2}")
-        Files.createDirectories(dir)
+      (0 until 24 * mediaScale).iterator.map { i =>
         def rec(j: Int, ct: Option[String], body: Array[Byte]) =
           GzipCodec.buildMember(WarcCodec.buildRecord(
             "response", s"<urn:uuid:mm$i-$j>", "2026-01-01T00:00:00Z",
@@ -1838,12 +1762,10 @@ object ArchiveQueries {
             Array[Byte]('P', 'K', 0x03, 0x04) ++
               Array.tabulate(4)(k => (k + i).toByte))
         }
-        Files.write(dir.resolve(f"m$i%03d.warc.gz"),
+        (f"${i % 2}/m$i%03d.warc.gz",
           (info +: recs).reduce(_ ++ _))
       }
     }
-    root
-  }
 
   /** MIME routing matrix (round-13 third wave) — the first decision a
     * multimodal corpus pipeline makes per fetched payload: which
@@ -1864,10 +1786,7 @@ object ArchiveQueries {
     def run(spark: SparkSession, sfDir: String): DataFrame = {
       import spark.implicits._
       val root = ensureMimeTree(sfDir)
-      spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.warc.gz")
-        .option("recursiveFileLookup", "true")
-        .load(root)
+      Sources.binaryTree(spark, root, "*.warc.gz")
         .select(col("path"))
         .as[String]
         .flatMap { file =>

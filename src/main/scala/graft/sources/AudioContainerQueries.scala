@@ -5,8 +5,7 @@ import graft.images.ImageOps
 import graft.multimodal.TiffCodec
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Paths}
-import SourceQueries.{workDir, mediaScale, scaledTag}
+import SourceQueries.{fixtureTree, mediaScale, scaledTag}
 
 /** FLAC-carrying container fixture trees and scans (MP4, Ogg, Matroska).
   * Split from SourceQueries.scala (round 10) - mechanical move, no
@@ -14,8 +13,8 @@ import SourceQueries.{workDir, mediaScale, scaledTag}
   */
 object AudioContainerQueries {
 
-  /** Create (once per scale factor) the FLAC-in-MP4 fixture tree: 24
-    * .m4a files whose PCM is a pure function of the asset index —
+  /** Build (atomically, once per scale factor) the FLAC-in-MP4 fixture tree:
+    * 24 .m4a files whose PCM is a pure function of the asset index —
     * s(i, t) = ((23·i + 7·t) mod 65536) − 32768, n = 4500 + 137·i
     * samples at rate 16000 + 50·i — FLAC-encoded by
     * [[graft.multimodal.FlacCodec]] and wrapped in ISO-BMFF by
@@ -23,22 +22,17 @@ object AudioContainerQueries {
     * one MP4 sample per FLAC frame). n is always > 4096 and never a
     * multiple, so every file has ≥ 2 samples with a short last frame.
     */
-  private[sources] def ensureMp4Tree(sfDir: String): String = {
-    val root = workDir("mp4", sfDir)
-    if (!Files.exists(Paths.get(root, "0"))) {
-      for (i <- 0 until 24) {
-        val dir = Paths.get(root, s"${i % 2}", s"${i % 3}")
-        Files.createDirectories(dir)
+  private[sources] def ensureMp4Tree(sfDir: String): String =
+    fixtureTree("mp4", sfDir) {
+      (0 until 24).iterator.map { i =>
         val n = 4500 + 137 * i
         val pcm = Array.tabulate(n)(t => ((i * 23 + t * 7) % 65536) - 32768)
         val flac = graft.multimodal.FlacCodec.encode(16000 + 50 * i, Array(pcm))
-        Files.write(dir.resolve(f"m$i%03d.m4a"),
+        (f"${i % 2}/${i % 3}/m$i%03d.m4a",
           graft.multimodal.Mp4Codec.muxFlac(flac)
             .getOrElse(sys.error(s"muxFlac refused asset $i")))
       }
     }
-    root
-  }
 
   /** Container-format decode under the hash gate: binary scan of the
     * FLAC-in-MP4 fixture tree, demuxed by the pure-JVM
@@ -60,10 +54,7 @@ object AudioContainerQueries {
       import spark.implicits._
       val root = ensureMp4Tree(sfDir)
       val idRe = "m(\\d+)\\.m4a".r
-      spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.m4a")
-        .option("recursiveFileLookup", "true")
-        .load(root)
+      Sources.binaryTree(spark, root, "*.m4a")
         .select(col("path"), col("content"))
         .as[(String, Array[Byte])]
         .flatMap { case (path, content) =>
@@ -79,11 +70,10 @@ object AudioContainerQueries {
             var mn = Int.MaxValue
             var mx = Int.MinValue
             s.foreach { v => sum += v; if (v < mn) mn = v; if (v > mx) mx = v }
-            val idx = idRe.findFirstMatchIn(path)
-              .map(_.group(1).toLong).getOrElse(-1L)
+            val idx = Sources.assetIdx(path, idRe)
             (idx, t.sampleRate.toLong, t.samples.length.toLong, s.length.toLong,
               sum, mn.toLong, mx.toLong, content.length.toLong,
-              content.take(8).map(b => f"$b%02X").mkString)
+              Sources.headHex(content))
           }
         }
         .toDF("asset_idx", "sample_rate", "n_frames", "n_samples",
@@ -119,8 +109,8 @@ object AudioContainerQueries {
         |ORDER BY s.asset_idx""".stripMargin)
   }
 
-  /** Create (once per scale factor) the FLAC-in-Ogg fixture tree: 24
-    * .ogg files whose PCM is a pure function of the asset index —
+  /** Build (atomically, once per scale factor) the FLAC-in-Ogg fixture tree:
+    * 24 .ogg files whose PCM is a pure function of the asset index —
     * s(i, t) = ((41·i + 17·t) mod 65536) − 32768, n = 6000 + 131·i
     * samples at rate 11025 + 111·i — FLAC-encoded by
     * [[graft.multimodal.FlacCodec]] and paged into Ogg by
@@ -130,22 +120,17 @@ object AudioContainerQueries {
     * short last frame, and frames (~8 KB) always span multiple lacing
     * values.
     */
-  private[sources] def ensureOggTree(sfDir: String): String = {
-    val root = workDir(scaledTag("ogg"), sfDir)
-    if (!Files.exists(Paths.get(root, "0"))) {
-      for (i <- 0 until 24 * mediaScale) {
-        val dir = Paths.get(root, s"${i % 2}", s"${i % 3}")
-        Files.createDirectories(dir)
+  private[sources] def ensureOggTree(sfDir: String): String =
+    fixtureTree(scaledTag("ogg"), sfDir) {
+      (0 until 24 * mediaScale).iterator.map { i =>
         val n = 6000 + 131 * i
         val pcm = Array.tabulate(n)(t => ((i * 41 + t * 17) % 65536) - 32768)
         val flac = graft.multimodal.FlacCodec.encode(11025 + 111 * i, Array(pcm))
-        Files.write(dir.resolve(f"o$i%03d.ogg"),
+        (f"${i % 2}/${i % 3}/o$i%03d.ogg",
           graft.multimodal.OggCodec.muxFlac(flac)
             .getOrElse(sys.error(s"muxFlac refused asset $i")))
       }
     }
-    root
-  }
 
   /** Ogg-container decode under the hash gate: binary scan of the
     * FLAC-in-Ogg fixture tree, de-paged by the pure-JVM
@@ -168,10 +153,7 @@ object AudioContainerQueries {
       import spark.implicits._
       val root = ensureOggTree(sfDir)
       val idRe = "o(\\d+)\\.ogg".r
-      spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.ogg")
-        .option("recursiveFileLookup", "true")
-        .load(root)
+      Sources.binaryTree(spark, root, "*.ogg")
         .select(col("path"), col("content"))
         .as[(String, Array[Byte])]
         .flatMap { case (path, content) =>
@@ -186,11 +168,10 @@ object AudioContainerQueries {
             var mn = Int.MaxValue
             var mx = Int.MinValue
             s.foreach { v => sum += v; if (v < mn) mn = v; if (v > mx) mx = v }
-            val idx = idRe.findFirstMatchIn(path)
-              .map(_.group(1).toLong).getOrElse(-1L)
+            val idx = Sources.assetIdx(path, idRe)
             (idx, pcm.sampleRate.toLong, nPackets.toLong, s.length.toLong,
               sum, mn.toLong, mx.toLong, content.length.toLong,
-              content.take(8).map(b => f"$b%02X").mkString)
+              Sources.headHex(content))
           }
         }
         .toDF("asset_idx", "sample_rate", "n_packets", "n_samples",
@@ -227,8 +208,8 @@ object AudioContainerQueries {
         |ORDER BY s.asset_idx""".stripMargin)
   }
 
-  /** Create (once per scale factor) the FLAC-in-Matroska fixture tree:
-    * 24 .mka files whose PCM is a pure function of the asset index —
+  /** Build (atomically, once per scale factor) the FLAC-in-Matroska fixture
+    * tree: 24 .mka files whose PCM is a pure function of the asset index —
     * s(i, t) = ((37·i + 13·t) mod 65536) − 32768, n = 30000 + 1234·i
     * samples at rate 9000 + 77·i — FLAC-encoded by
     * [[graft.multimodal.FlacCodec]] and wrapped into Matroska by
@@ -238,22 +219,17 @@ object AudioContainerQueries {
     * 8–15 frames per file, so every file crosses the cluster boundary
     * path at least via a full first cluster and most have ≥ 2 clusters.
     */
-  private[sources] def ensureMkvTree(sfDir: String): String = {
-    val root = workDir(scaledTag("mkv"), sfDir)
-    if (!Files.exists(Paths.get(root, "0"))) {
-      for (i <- 0 until 24 * mediaScale) {
-        val dir = Paths.get(root, s"${i % 2}", s"${i % 3}")
-        Files.createDirectories(dir)
+  private[sources] def ensureMkvTree(sfDir: String): String =
+    fixtureTree(scaledTag("mkv"), sfDir) {
+      (0 until 24 * mediaScale).iterator.map { i =>
         val n = 30000 + 1234 * i
         val pcm = Array.tabulate(n)(t => ((i * 37 + t * 13) % 65536) - 32768)
         val flac = graft.multimodal.FlacCodec.encode(9000 + 77 * i, Array(pcm))
-        Files.write(dir.resolve(f"k$i%03d.mka"),
+        (f"${i % 2}/${i % 3}/k$i%03d.mka",
           graft.multimodal.MkvCodec.muxFlac(flac)
             .getOrElse(sys.error(s"muxFlac refused asset $i")))
       }
     }
-    root
-  }
 
   /** Matroska-container decode under the hash gate: binary scan of the
     * FLAC-in-MKV fixture tree, demuxed by the pure-JVM
@@ -277,10 +253,7 @@ object AudioContainerQueries {
       import spark.implicits._
       val root = ensureMkvTree(sfDir)
       val idRe = "k(\\d+)\\.mka".r
-      spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.mka")
-        .option("recursiveFileLookup", "true")
-        .load(root)
+      Sources.binaryTree(spark, root, "*.mka")
         .select(col("path"), col("content"))
         .as[(String, Array[Byte])]
         .flatMap { case (path, content) =>
@@ -296,11 +269,10 @@ object AudioContainerQueries {
             var mn = Int.MaxValue
             var mx = Int.MinValue
             s.foreach { v => sum += v; if (v < mn) mn = v; if (v > mx) mx = v }
-            val idx = idRe.findFirstMatchIn(path)
-              .map(_.group(1).toLong).getOrElse(-1L)
+            val idx = Sources.assetIdx(path, idRe)
             (idx, t.sampleRate.toLong, t.frames.length.toLong, s.length.toLong,
               sum, mn.toLong, mx.toLong, content.length.toLong,
-              content.take(8).map(b => f"$b%02X").mkString)
+              Sources.headHex(content))
           }
         }
         .toDF("asset_idx", "sample_rate", "n_frames", "n_samples",

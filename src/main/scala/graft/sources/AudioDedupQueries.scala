@@ -27,10 +27,7 @@ object AudioDedupQueries {
     def scan(root: String, glob: String, kind: String, re: String,
         toFlac: Array[Byte] => Option[Array[Byte]]): DataFrame = {
       val rex = re.r
-      spark.read.format("binaryFile")
-        .option("pathGlobFilter", glob)
-        .option("recursiveFileLookup", "true")
-        .load(root)
+      Sources.binaryTree(spark, root, glob)
         .select(col("path"), col("content"))
         .as[(String, Array[Byte])]
         .flatMap { case (path, content) =>

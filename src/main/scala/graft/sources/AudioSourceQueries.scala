@@ -5,8 +5,7 @@ import graft.images.ImageOps
 import graft.multimodal.TiffCodec
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Paths}
-import SourceQueries.{workDir, mediaScale, scaledTag}
+import SourceQueries.{fixtureTree, mediaScale, scaledTag}
 
 /** Audio-family fixture trees and decode-under-hash-gate scans
   * (FLAC, IMA ADPCM, G.711, AIFF, MP3 frame-walk metadata).
@@ -15,28 +14,23 @@ import SourceQueries.{workDir, mediaScale, scaledTag}
   */
 object AudioSourceQueries {
 
-  /** Create (once per scale factor) the FLAC fixture tree: 24 mono 16-bit
-    * clips whose PCM is a pure function of the asset index —
+  /** Build (atomically, once per scale factor) the FLAC fixture tree: 24 mono
+    * 16-bit clips whose PCM is a pure function of the asset index —
     * s(i, t) = ((37·i + 13·t) mod 65536) − 32768, n = 5000 + 171·i samples
     * at rate 8000 + 100·i — encoded by [[graft.multimodal.FlacCodec]]
     * (deterministic subset encoder: fixed predictors, Rice residuals,
     * real CRC-8/16 framing). Multi-block with a short 16-bit-coded last
     * block on every asset (n is never a multiple of 4096).
     */
-  private[sources] def ensureFlacTree(sfDir: String): String = {
-    val root = workDir(scaledTag("flac"), sfDir)
-    if (!Files.exists(Paths.get(root, "0"))) {
-      for (i <- 0 until 24 * mediaScale) {
-        val dir = Paths.get(root, s"${i % 2}", s"${i % 3}", s"${i % 4}")
-        Files.createDirectories(dir)
+  private[sources] def ensureFlacTree(sfDir: String): String =
+    fixtureTree(scaledTag("flac"), sfDir) {
+      (0 until 24 * mediaScale).iterator.map { i =>
         val n = 5000 + 171 * i
         val pcm = Array.tabulate(n)(t => ((i * 37 + t * 13) % 65536) - 32768)
-        Files.write(dir.resolve(f"a$i%03d.flac"),
+        (f"${i % 2}/${i % 3}/${i % 4}/a$i%03d.flac",
           graft.multimodal.FlacCodec.encode(8000 + 100 * i, Array(pcm)))
       }
     }
-    root
-  }
 
   /** Compressed-audio decode under the hash gate: binary scan of the FLAC
     * fixture tree, decoded by the pure-JVM [[graft.multimodal.FlacCodec]]
@@ -57,10 +51,7 @@ object AudioSourceQueries {
       import spark.implicits._
       val root = ensureFlacTree(sfDir)
       val idRe = "a(\\d+)\\.flac".r
-      spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.flac")
-        .option("recursiveFileLookup", "true")
-        .load(root)
+      Sources.binaryTree(spark, root, "*.flac")
         .select(col("path"), col("content"))
         .as[(String, Array[Byte])]
         .mapPartitions { it =>
@@ -71,11 +62,10 @@ object AudioSourceQueries {
               var mn = Int.MaxValue
               var mx = Int.MinValue
               s.foreach { v => sum += v; if (v < mn) mn = v; if (v > mx) mx = v }
-              val idx = idRe.findFirstMatchIn(path)
-                .map(_.group(1).toLong).getOrElse(-1L)
+              val idx = Sources.assetIdx(path, idRe)
               (idx, pcm.sampleRate.toLong, s.length.toLong, sum,
                 mn.toLong, mx.toLong, content.length.toLong,
-                content.take(8).map(b => f"$b%02X").mkString)
+                Sources.headHex(content))
             }
           }
         }
@@ -111,30 +101,25 @@ object AudioSourceQueries {
         |ORDER BY s.asset_idx""".stripMargin)
   }
 
-  /** Create (once per scale factor) the IMA ADPCM fixture tree: 24 mono
-    * WAV files (format tag 0x11, blockAlign 256 ⇒ 505 samples/block, step
-    * index carried across blocks, `fact` chunk with the exact count) whose
-    * input PCM is a pure function of the asset index —
+  /** Build (atomically, once per scale factor) the IMA ADPCM fixture tree: 24
+    * mono WAV files (format tag 0x11, blockAlign 256 ⇒ 505 samples/block,
+    * step index carried across blocks, `fact` chunk with the exact count)
+    * whose input PCM is a pure function of the asset index —
     * s(i, t) = ((31·i + 7·t²) mod 8192) − 4096, n = 1200 + 37·i samples at
     * rate 8000 + 25·i — encoded by [[graft.multimodal.AdpcmCodec]]. Every
     * file spans ≥ 3 blocks with a short last block (n is never ≡ 0 mod
     * 505), so header re-sync, index carry, and the odd-nibble tail are all
     * exercised.
     */
-  private[sources] def ensureAdpcmTree(sfDir: String): String = {
-    val root = workDir("adpcm", sfDir)
-    if (!Files.exists(Paths.get(root, "0"))) {
-      for (i <- 0 until 24) {
-        val dir = Paths.get(root, s"${i % 2}", s"${i % 3}")
-        Files.createDirectories(dir)
+  private[sources] def ensureAdpcmTree(sfDir: String): String =
+    fixtureTree("adpcm", sfDir) {
+      (0 until 24).iterator.map { i =>
         val n = 1200 + 37 * i
         val pcm = Array.tabulate(n)(t => ((i * 31 + 7 * t * t) % 8192) - 4096)
-        Files.write(dir.resolve(f"p$i%03d.wav"),
+        (f"${i % 2}/${i % 3}/p$i%03d.wav",
           graft.multimodal.AdpcmCodec.encodeImaWav(8000 + 25 * i, pcm))
       }
     }
-    root
-  }
 
   /** Adaptive-codec decode under the hash gate: binary scan of the IMA
     * ADPCM fixture tree, decoded by the pure-JVM
@@ -158,10 +143,7 @@ object AudioSourceQueries {
       import spark.implicits._
       val root = ensureAdpcmTree(sfDir)
       val idRe = "p(\\d+)\\.wav".r
-      spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.wav")
-        .option("recursiveFileLookup", "true")
-        .load(root)
+      Sources.binaryTree(spark, root, "*.wav")
         .select(col("path"), col("content"))
         .as[(String, Array[Byte])]
         .mapPartitions { it =>
@@ -172,11 +154,10 @@ object AudioSourceQueries {
               var mn = Int.MaxValue
               var mx = Int.MinValue
               s.foreach { v => sum += v; if (v < mn) mn = v; if (v > mx) mx = v }
-              val idx = idRe.findFirstMatchIn(path)
-                .map(_.group(1).toLong).getOrElse(-1L)
+              val idx = Sources.assetIdx(path, idRe)
               (idx, pcm.sampleRate.toLong, s.length.toLong, sum,
                 mn.toLong, mx.toLong, content.length.toLong,
-                content.take(8).map(b => f"$b%02X").mkString)
+                Sources.headHex(content))
             }
           }
         }
@@ -270,26 +251,21 @@ object AudioSourceQueries {
         |ORDER BY s.asset_idx""".stripMargin)
   }
 
-  /** Create (once per scale factor) the G.711 fixture tree: 24 mono 8 kHz
-    * WAV files — even assets µ-law (tag 7), odd assets A-law (tag 6) —
-    * whose input PCM sweeps the full 16-bit range,
+  /** Build (atomically, once per scale factor) the G.711 fixture tree: 24
+    * mono 8 kHz WAV files — even assets µ-law (tag 7), odd assets A-law (tag
+    * 6) — whose input PCM sweeps the full 16-bit range,
     * s(i, t) = ((97·i + 511·t) mod 65536) − 32768, n = 800 + 29·i samples,
     * encoded by [[graft.multimodal.AdpcmCodec]].
     */
-  private[sources] def ensureG711Tree(sfDir: String): String = {
-    val root = workDir("g711", sfDir)
-    if (!Files.exists(Paths.get(root, "0"))) {
-      for (i <- 0 until 24) {
-        val dir = Paths.get(root, s"${i % 2}", s"${i % 3}")
-        Files.createDirectories(dir)
+  private[sources] def ensureG711Tree(sfDir: String): String =
+    fixtureTree("g711", sfDir) {
+      (0 until 24).iterator.map { i =>
         val n = 800 + 29 * i
         val pcm = Array.tabulate(n)(t => ((i * 97 + t * 511) % 65536) - 32768)
-        Files.write(dir.resolve(f"g$i%03d.wav"),
+        (f"${i % 2}/${i % 3}/g$i%03d.wav",
           graft.multimodal.AdpcmCodec.encodeG711Wav(8000, pcm, mu = i % 2 == 0))
       }
     }
-    root
-  }
 
   /** Companded-telephony decode under the hash gate: binary scan of the
     * G.711 fixture tree, decoded by [[graft.multimodal.AdpcmCodec]]
@@ -308,10 +284,7 @@ object AudioSourceQueries {
       import spark.implicits._
       val root = ensureG711Tree(sfDir)
       val idRe = "g(\\d+)\\.wav".r
-      spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.wav")
-        .option("recursiveFileLookup", "true")
-        .load(root)
+      Sources.binaryTree(spark, root, "*.wav")
         .select(col("path"), col("content"))
         .as[(String, Array[Byte])]
         .mapPartitions { it =>
@@ -322,11 +295,10 @@ object AudioSourceQueries {
               var mn = Int.MaxValue
               var mx = Int.MinValue
               s.foreach { v => sum += v; if (v < mn) mn = v; if (v > mx) mx = v }
-              val idx = idRe.findFirstMatchIn(path)
-                .map(_.group(1).toLong).getOrElse(-1L)
+              val idx = Sources.assetIdx(path, idRe)
               (idx, pcm.codec, pcm.sampleRate.toLong, s.length.toLong, sum,
                 mn.toLong, mx.toLong, content.length.toLong,
-                content.take(8).map(b => f"$b%02X").mkString)
+                Sources.headHex(content))
             }
           }
         }
@@ -408,29 +380,24 @@ object AudioSourceQueries {
         |ORDER BY s.asset_idx""".stripMargin)
   }
 
-  /** Create (once per scale factor) the AIFF fixture tree: 24 .aif files,
-    * alternating mono/stereo, n = 1000 + 37i frames at 8000 + 25i Hz;
+  /** Build (atomically, once per scale factor) the AIFF fixture tree: 24 .aif
+    * files, alternating mono/stereo, n = 1000 + 37i frames at 8000 + 25i Hz;
     * sample (c, t) of asset i is ((31i + 7t + 13ct + 5c) mod 4096) − 2048.
     * Written by the engine's own deterministic [[graft.multimodal.AiffCodec]]
     * writer (FORM/AIFF, COMM with 80-bit extended rate, SSND big-endian
     * int16).
     */
-  private[sources] def ensureAiffTree(sfDir: String): String = {
-    val root = workDir("aiff", sfDir)
-    if (!Files.exists(Paths.get(root, "0"))) {
-      for (i <- 0 until 24) {
-        val dir = Paths.get(root, s"${i % 2}", s"${i % 3}")
-        Files.createDirectories(dir)
+  private[sources] def ensureAiffTree(sfDir: String): String =
+    fixtureTree("aiff", sfDir) {
+      (0 until 24).iterator.map { i =>
         val n = 1000 + 37 * i
         val nCh = 1 + i % 2
         val chans = Array.tabulate(nCh)(c => Array.tabulate(n)(t =>
           ((31 * i + 7 * t + 13 * c * t + 5 * c) % 4096) - 2048))
-        Files.write(dir.resolve(f"a$i%03d.aif"),
+        (f"${i % 2}/${i % 3}/a$i%03d.aif",
           graft.multimodal.AiffCodec.encode(8000 + 25 * i, chans))
       }
     }
-    root
-  }
 
   /** AIFF decode under the hash gate: binary scan of the AIFF fixture
     * tree, decoded by the from-spec [[graft.multimodal.AiffCodec]] —
@@ -445,15 +412,11 @@ object AudioSourceQueries {
       import spark.implicits._
       val root = ensureAiffTree(sfDir)
       val idRe = "a(\\d+)\\.aif".r
-      spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.aif")
-        .option("recursiveFileLookup", "true")
-        .load(root)
+      Sources.binaryTree(spark, root, "*.aif")
         .select(col("path"), col("content"))
         .as[(String, Array[Byte])]
         .flatMap { case (path, content) =>
-          val idx = idRe.findFirstMatchIn(path)
-            .map(_.group(1).toLong).getOrElse(-1L)
+          val idx = Sources.assetIdx(path, idRe)
           for (a <- graft.multimodal.AiffCodec.decode(content).toSeq) yield {
             var sum = 0L; var mn = Int.MaxValue; var mx = Int.MinValue
             a.channels.foreach(_.foreach { v =>
@@ -461,8 +424,7 @@ object AudioSourceQueries {
             })
             (idx, a.sampleRate.toLong, a.channels.length.toLong,
               a.channels(0).length.toLong, sum, mn.toLong, mx.toLong,
-              content.length.toLong,
-              content.take(8).map(b => f"$b%02X").mkString)
+              content.length.toLong, Sources.headHex(content))
           }
         }
         .toDF("asset_idx", "sample_rate", "n_channels", "n_frames",
@@ -500,8 +462,8 @@ object AudioSourceQueries {
         |ORDER BY s.asset_idx""".stripMargin)
   }
 
-  /** Create (once per scale factor) the MPEG-audio fixture tree: the
-    * round-9 base tier (24 MPEG-1 Layer III streams covering CBR and
+  /** Build (atomically, once per scale factor) the MPEG-audio fixture tree:
+    * the round-9 base tier (24 MPEG-1 Layer III streams covering CBR and
     * VBR (+Xing), all three sampling rates, mono and stereo, padding
     * cadences, ID3v2 prefixes and ID3v1 trailers) plus the round-10
     * `v2/` tier (ids 1000+, 24 streams sweeping the version × layer
@@ -509,19 +471,16 @@ object AudioSourceQueries {
     * headers real crawls contain). Every field is a pure function of
     * the asset index (the oracle replays all of it closed-form).
     */
-  private[sources] def ensureMp3Tree(sfDir: String): String = {
-    val root = workDir(scaledTag("mp3"), sfDir)
-    if (!Files.exists(Paths.get(root, "0"))) {
+  private[sources] def ensureMp3Tree(sfDir: String): String =
+    fixtureTree(scaledTag("mp3"), sfDir) {
       import graft.multimodal.Mp3Codec
-      for (i <- 0 until 24 * mediaScale) {
-        val dir = Paths.get(root, s"${i % 2}", s"${i % 3}")
-        Files.createDirectories(dir)
+      val base = (0 until 24 * mediaScale).iterator.map { i =>
         val nf = 8 + i
         val vbr = i % 3 == 0
         val bis =
           if (vbr) (0 until nf).map(f => 1 + ((i + f) % 14))
           else Seq.fill(nf)(1 + (i % 14))
-        Files.write(dir.resolve(f"m$i%03d.mp3"),
+        (f"${i % 2}/${i % 3}/m$i%03d.mp3",
           Mp3Codec.build(bis, sampleRateIdx = i % 3,
             mode = if (i % 2 == 0) 3 else 0, seed = i,
             id3v2PayloadLen = if (i % 4 == 0) 100 + i else 0,
@@ -529,16 +488,10 @@ object AudioSourceQueries {
             paddingEvery = if (i % 6 == 0) 3 else 0,
             xing = vbr))
       }
-    }
-    // round-10 tier (own marker: the v2/ subtree — a round-9 tree on
-    // disk regenerates just this part): the version × layer matrix real
-    // crawls contain — MPEG-2 (13818-3), MPEG-2.5, Layers I/II/III.
-    // Ids start at 1000 (the base tier tops out at 983 at max scale).
-    if (!Files.exists(Paths.get(root, "v2"))) {
-      import graft.multimodal.Mp3Codec
-      for (i <- 0 until 24 * mediaScale) {
-        val dir = Paths.get(root, "v2", s"${i % 3}")
-        Files.createDirectories(dir)
+      // round-10 tier under v2/: the version × layer matrix real crawls
+      // contain — MPEG-2 (13818-3), MPEG-2.5, Layers I/II/III. Ids start
+      // at 1000 (the base tier tops out at 983 at max scale).
+      val v2 = (0 until 24 * mediaScale).iterator.map { i =>
         val verRaw = (i % 3) match { case 0 => 2; case 1 => 0; case _ => 3 }
         val layerRaw = ((i / 3) % 3) match { case 0 => 3; case 1 => 2; case _ => 1 }
         val nf = 6 + i
@@ -546,7 +499,7 @@ object AudioSourceQueries {
         val bis =
           if (vbr) (0 until nf).map(f => 1 + ((i + f) % 14))
           else Seq.fill(nf)(1 + (i % 14))
-        Files.write(dir.resolve(f"m${1000 + i}%04d.mp3"),
+        (f"v2/${i % 3}/m${1000 + i}%04d.mp3",
           Mp3Codec.build(bis, sampleRateIdx = (i / 9) % 3,
             mode = if (i % 2 == 0) 3 else 0, seed = 100 + i,
             id3v2PayloadLen = if (i % 5 == 0) 80 + i else 0,
@@ -555,9 +508,8 @@ object AudioSourceQueries {
             xing = vbr && layerRaw == 1,
             verRaw = verRaw, layerRaw = layerRaw))
       }
+      base ++ v2
     }
-    root
-  }
 
   /** MP3 ingest metadata under the hash gate: binary scan of the MP3
     * fixture tree through [[graft.multimodal.Mp3Codec.parse]] — the
@@ -580,10 +532,7 @@ object AudioSourceQueries {
       import spark.implicits._
       val root = ensureMp3Tree(sfDir)
       val idRe = "m(\\d+)\\.mp3".r
-      spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.mp3")
-        .option("recursiveFileLookup", "true")
-        .load(root)
+      Sources.binaryTree(spark, root, "*.mp3")
         .select(col("path"), col("content"))
         .as[(String, Array[Byte])]
         .flatMap { case (path, content) =>

@@ -3,8 +3,7 @@ package graft.sources
 import graft.GraftQuery
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Paths}
-import SourceQueries.{workDir, mediaScale, scaledTag}
+import SourceQueries.{fixtureTree, workDir, mediaScale, scaledTag}
 import ArchiveQueries.warcRows
 
 /** Crawl-frontier scheduling tier (rounds 11–12): the discovery side of
@@ -31,7 +30,7 @@ object FrontierQueries {
     */
   private[sources] val SitemapTreeTag = "sitemap5"
 
-  /** Create (once per scale factor) the sitemap crawl tree: 24
+  /** Build (atomically, once per scale factor) the sitemap crawl tree: 24
     * `.warc.gz` files over 8 hosts (3 per host). File i carries a
     * warcinfo, host s(i%8)'s sitemap documents — a plain urlset, or
     * for hosts h%4==3 a `<sitemapindex>` plus its two child urlsets
@@ -76,7 +75,7 @@ object FrontierQueries {
     *    h%3==1 hosts the `Disallow: /p{(h+1)%9}` rule must NOT match
     *    it), each fresh (lastmod 2026-02-01) at priorities 0.5/0.5/0.6.
     */
-  private[sources] def ensureSitemapTree(sfDir: String): String = {
+  private[sources] def ensureSitemapTree(sfDir: String): String =
     // sitemap4 -> sitemap5 (third wave): h1's robots.txt is now a 301
     // whose Location is the PROTOCOL-RELATIVE `//cdn.example/r/s1/
     // robots.txt` with the rules body captured 200 at that (cross-host,
@@ -84,15 +83,12 @@ object FrontierQueries {
     // followed and h1's rules/delay/Sitemap-declaration are UNCHANGED
     // for a following reader, while a non-following reader loses all
     // three and every h1 count shifts
-    val root = workDir(scaledTag(SitemapTreeTag), sfDir)
-    if (!Files.exists(Paths.get(root, "0"))) {
+    fixtureTree(scaledTag(SitemapTreeTag), sfDir) {
       import graft.multimodal.{GzipCodec, WarcCodec}
       val utf8 = java.nio.charset.StandardCharsets.UTF_8
       val iso = java.nio.charset.StandardCharsets.ISO_8859_1
-      for (i <- 0 until 24 * mediaScale) {
+      (0 until 24 * mediaScale).iterator.map { i =>
         val h = i % 8
-        val dir = Paths.get(root, s"${i % 2}")
-        Files.createDirectories(dir)
         def recBytes(tpe: String, id: String, uri: String,
             body: Array[Byte]) =
           GzipCodec.buildMember(WarcCodec.buildRecord(
@@ -225,12 +221,10 @@ object FrontierQueries {
           } else
             Seq(smRec(s"map$i", s"http://s$h.example/sitemap.xml",
               urlset(entries.map(_._2))))
-        Files.write(dir.resolve(f"s$i%03d.warc.gz"),
+        (f"${i % 2}/s$i%03d.warc.gz",
           (Seq(info) ++ robots ++ maps).reduce(_ ++ _))
       }
     }
-    root
-  }
 
   private val Agent = "graftbot"
 
@@ -263,10 +257,7 @@ object FrontierQueries {
   private def sitemapRows(spark: SparkSession, root: String): DataFrame = {
     import spark.implicits._
     import graft.text.UrlOps.frontierCanonicalStr
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.warc.gz")
-      .option("recursiveFileLookup", "true")
-      .load(root)
+    Sources.binaryTree(spark, root, "*.warc.gz")
       .select(col("path"))
       .as[String]
       .flatMap { file =>
@@ -620,7 +611,7 @@ object FrontierQueries {
         |ORDER BY host""".stripMargin)
   }
 
-  /** Create (once per scale factor) the two-snapshot recrawl tree:
+  /** Build (atomically, once per scale factor) the two-snapshot recrawl tree:
     * `old/` and `new/` subtrees of 24 `.warc.gz` files each (host
     * h = i%8). Old file i carries pages j ∈ [0, 4+i%3) at body version
     * v1; new file i carries j ∈ [1, 4+i%3] with even-j bodies bumped
@@ -628,15 +619,15 @@ object FrontierQueries {
     * (j = 4+i%3), even common pages changed, odd common pages
     * unchanged, all closed-form replayable from (i, j).
     */
-  private[sources] def ensureDeltaTree(sfDir: String): String = {
-    val root = workDir(scaledTag("crdelta"), sfDir)
-    if (!Files.exists(Paths.get(root, "old"))) {
+  private[sources] def ensureDeltaTree(sfDir: String): String =
+    fixtureTree(scaledTag("crdelta"), sfDir) {
       import graft.multimodal.{GzipCodec, WarcCodec}
       val utf8 = java.nio.charset.StandardCharsets.UTF_8
-      for (snap <- Seq("old", "new"); i <- 0 until 24 * mediaScale) {
+      for {
+        snap <- Seq("old", "new").iterator
+        i <- (0 until 24 * mediaScale).iterator
+      } yield {
         val h = i % 8
-        val dir = Paths.get(root, snap, s"${i % 2}")
-        Files.createDirectories(dir)
         val np = 4 + i % 3
         val js = if (snap == "old") 0 until np else 1 to np
         val info = GzipCodec.buildMember(WarcCodec.buildRecord(
@@ -649,12 +640,10 @@ object FrontierQueries {
             "2026-01-01T00:00:00Z", Some(s"http://s$h.example/d$i/$j"),
             s"<html><body>c $i $j $ver</body></html>".getBytes(utf8)))
         }
-        Files.write(dir.resolve(f"c$i%03d.warc.gz"),
+        (f"$snap/${i % 2}/c$i%03d.warc.gz",
           (info +: pages).reduce(_ ++ _))
       }
     }
-    root
-  }
 
   /** Snapshot-to-snapshot recrawl delta — what changed between two
     * crawls of the same hosts: per host, pages added, removed, changed
@@ -675,10 +664,8 @@ object FrontierQueries {
     def run(spark: SparkSession, sfDir: String): DataFrame = {
       import spark.implicits._
       val root = ensureDeltaTree(sfDir)
-      def snapshot(snap: String): DataFrame = spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.warc.gz")
-        .option("recursiveFileLookup", "true")
-        .load(s"$root/$snap")
+      def snapshot(snap: String): DataFrame =
+        Sources.binaryTree(spark, s"$root/$snap", "*.warc.gz")
         .select(col("path"))
         .as[String]
         .flatMap { file =>
@@ -943,24 +930,21 @@ object FrontierQueries {
         |ORDER BY host""".stripMargin)
   }
 
-  /** Create (once per scale factor) the revisit tree: 24 `.warc.gz`
-    * files (host h = i%8), file i carrying pages j ∈ [0, 3+i%3) of uri
-    * `/r{i}/{j}` with body `"x" * (5 + (i+j)%4)` — only FOUR distinct
+  /** Build (atomically, once per scale factor) the revisit tree: 24
+    * `.warc.gz` files (host h = i%8), file i carrying pages j ∈ [0, 3+i%3) of
+    * uri `/r{i}/{j}` with body `"x" * (5 + (i+j)%4)` — only FOUR distinct
     * bodies globally, so captures repeat constantly, exactly the shape
     * revisit records exist for. Even j → a full `response`; odd j → a
     * `revisit` record (ISO 28500 §6.7): EMPTY block, `WARC-Refers-To`
     * a synthetic original id, `WARC-Payload-Digest` = md5 of the body
     * it did not re-store.
     */
-  private[sources] def ensureRevisitTree(sfDir: String): String = {
-    val root = workDir(scaledTag("revisit"), sfDir)
-    if (!Files.exists(Paths.get(root, "0"))) {
+  private[sources] def ensureRevisitTree(sfDir: String): String =
+    fixtureTree(scaledTag("revisit"), sfDir) {
       import graft.multimodal.{GzipCodec, WarcCodec}
       val utf8 = java.nio.charset.StandardCharsets.UTF_8
-      for (i <- 0 until 24 * mediaScale) {
+      (0 until 24 * mediaScale).iterator.map { i =>
         val h = i % 8
-        val dir = Paths.get(root, s"${i % 2}")
-        Files.createDirectories(dir)
         val info = GzipCodec.buildMember(WarcCodec.buildRecord(
           "warcinfo", s"<urn:uuid:rv$i>", "2026-01-01T00:00:00Z", None,
           s"software: graft $i".getBytes(utf8)))
@@ -979,12 +963,10 @@ object FrontierQueries {
                   graft.functions.PortableHash.md5Hex(body)))
           GzipCodec.buildMember(rec)
         }
-        Files.write(dir.resolve(f"v$i%03d.warc.gz"),
+        (f"${i % 2}/v$i%03d.warc.gz",
           (info +: pages).reduce(_ ++ _))
       }
     }
-    root
-  }
 
   /** Revisit-record dedup accounting (ISO 28500 §6.7 — Common Crawl's
     * identical-payload-digest convention): revisit records store NO
@@ -1008,10 +990,7 @@ object FrontierQueries {
       val root = ensureRevisitTree(sfDir)
       // kind 0 = stored response (digest computed from the payload),
       // kind 1 = revisit (digest read from WARC-Payload-Digest)
-      val recs = spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.warc.gz")
-        .option("recursiveFileLookup", "true")
-        .load(root)
+      val recs = Sources.binaryTree(spark, root, "*.warc.gz")
         .select(col("path"))
         .as[String]
         .flatMap { file =>
@@ -1074,9 +1053,9 @@ object FrontierQueries {
         |FROM pages GROUP BY h ORDER BY host""".stripMargin)
   }
 
-  /** Create (once per scale factor) the redirect tree: 24 `.warc.gz`
-    * files (host h = i%8), each carrying the three redirect shapes a
-    * real recrawl meets:
+  /** Build (atomically, once per scale factor) the redirect tree: 24
+    * `.warc.gz` files (host h = i%8), each carrying the three redirect shapes
+    * a real recrawl meets:
     *  - a CHAIN of L = 1+i%3 edges: `/c{i}/{j}` → `/c{i}/{j+1}` (301 on
     *    even j, 302 on odd), terminating at a real 200 page
     *    `/c{i}/{L}`; edge 0's `Location` is spelled
@@ -1087,24 +1066,22 @@ object FrontierQueries {
     *  - for i%4==0, a 2-cycle LOOP `/loop{i}/a` ⇄ `/loop{i}/b` (302s) —
     *    the follow must CAP, not spin.
     */
-  private[sources] def ensureRedirectTree(sfDir: String): String = {
+  private[sources] def ensureRedirectTree(sfDir: String): String =
     // redir -> redir2: edge j=1's Location went relative after the
-    // first generation (the ensure* guard would serve the stale tree).
+    // first generation (an existing root is served as is, so a content
+    // change needs a new tag).
     // redir2 -> redir3 (third wave): edge j=1's Location is now a
     // RELATIVE-PATH reference with dot segments and edge j=2 is
     // protocol-relative — the two RFC 3986 shapes a "/"-prefix-only
     // resolver mis-handles (it would pass them through as absolute
     // URLs, the chain join keys would never match, and every landed
     // count shifts)
-    val root = workDir(scaledTag("redir3"), sfDir)
-    if (!Files.exists(Paths.get(root, "0"))) {
+    fixtureTree(scaledTag("redir3"), sfDir) {
       import graft.multimodal.{GzipCodec, WarcCodec}
       val utf8 = java.nio.charset.StandardCharsets.UTF_8
       val iso = java.nio.charset.StandardCharsets.ISO_8859_1
-      for (i <- 0 until 24 * mediaScale) {
+      (0 until 24 * mediaScale).iterator.map { i =>
         val h = i % 8
-        val dir = Paths.get(root, s"${i % 2}")
-        Files.createDirectories(dir)
         def resp(id: String, uri: String, status: String,
             extra: String, body: String) =
           GzipCodec.buildMember(WarcCodec.buildRecord(
@@ -1143,12 +1120,10 @@ object FrontierQueries {
             redirect(s"rd$i-lb", s"http://s$h.example/loop$i/b", 302,
               s"http://s$h.example/loop$i/a"))
           else Seq.empty
-        Files.write(dir.resolve(f"d$i%03d.warc.gz"),
+        (f"${i % 2}/d$i%03d.warc.gz",
           ((Seq(info) ++ chain :+ terminal :+ cross) ++ loop).reduce(_ ++ _))
       }
     }
-    root
-  }
 
   /** Redirect targets as frontier edges (round 13) — the stage a real
     * recrawl runs on the 20–30 % of responses that are 3xx: extract
@@ -1183,10 +1158,7 @@ object FrontierQueries {
       import graft.text.UrlOps.frontierCanonicalStr
       val root = ensureRedirectTree(sfDir)
       // kind 0 = a landed 200 page (node), kind 1 = a redirect edge
-      val recs = spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.warc.gz")
-        .option("recursiveFileLookup", "true")
-        .load(root)
+      val recs = Sources.binaryTree(spark, root, "*.warc.gz")
         .select(col("path"))
         .as[String]
         .flatMap { file =>
@@ -1290,8 +1262,8 @@ object FrontierQueries {
         |FROM edges GROUP BY h ORDER BY host""".stripMargin)
   }
 
-  /** Create (once per scale factor) the revalidation tree: `old/` and
-    * `new/` snapshots of 24 `.warc.gz` files (host h = i%8), pages
+  /** Build (atomically, once per scale factor) the revalidation tree: `old/`
+    * and `new/` snapshots of 24 `.warc.gz` files (host h = i%8), pages
     * j ∈ [0, 4+i%3) at uri `/v{i}/{j}` stored as HTTP responses.
     * Old page (i, j): body `"b" × (20 + (3i+5j)%40)`, carrying an
     * `ETag` iff (i+j)%3 ≠ 0 (weak `W/"…"` form when (i+j)%7 == 0,
@@ -1303,16 +1275,16 @@ object FrontierQueries {
     * pages always refetch full at the old length. Every column of the
     * accounting row is a pure function of (i, j).
     */
-  private[sources] def ensureRevalTree(sfDir: String): String = {
-    val root = workDir(scaledTag("reval"), sfDir)
-    if (!Files.exists(Paths.get(root, "old"))) {
+  private[sources] def ensureRevalTree(sfDir: String): String =
+    fixtureTree(scaledTag("reval"), sfDir) {
       import graft.multimodal.{GzipCodec, WarcCodec}
       val utf8 = java.nio.charset.StandardCharsets.UTF_8
       val iso = java.nio.charset.StandardCharsets.ISO_8859_1
-      for (snap <- Seq("old", "new"); i <- 0 until 24 * mediaScale) {
+      for {
+        snap <- Seq("old", "new").iterator
+        i <- (0 until 24 * mediaScale).iterator
+      } yield {
         val h = i % 8
-        val dir = Paths.get(root, snap, s"${i % 2}")
-        Files.createDirectories(dir)
         val info = GzipCodec.buildMember(WarcCodec.buildRecord(
           "warcinfo", s"<urn:uuid:rv-$snap-$i>", "2026-01-01T00:00:00Z",
           None, s"software: graft $i".getBytes(utf8)))
@@ -1348,12 +1320,10 @@ object FrontierQueries {
             "response", s"<urn:uuid:rv-$snap-$i-$j>",
             "2026-01-01T00:00:00Z", Some(uri), payload))
         }
-        Files.write(dir.resolve(f"v$i%03d.warc.gz"),
+        (f"$snap/${i % 2}/v$i%03d.warc.gz",
           (info +: pages).reduce(_ ++ _))
       }
     }
-    root
-  }
 
   /** Conditional-GET revalidation accounting (RFC 9110 §13 / §8.8) —
     * the fetch-cost primitive between [[CrawlDelta]] (what changed)
@@ -1379,10 +1349,8 @@ object FrontierQueries {
     def run(spark: SparkSession, sfDir: String): DataFrame = {
       import spark.implicits._
       val root = ensureRevalTree(sfDir)
-      def snapshot(snap: String): DataFrame = spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.warc.gz")
-        .option("recursiveFileLookup", "true")
-        .load(s"$root/$snap")
+      def snapshot(snap: String): DataFrame =
+        Sources.binaryTree(spark, s"$root/$snap", "*.warc.gz")
         .select(col("path"))
         .as[String]
         .flatMap { file =>
@@ -1461,7 +1429,7 @@ object FrontierQueries {
         |FROM acct GROUP BY h ORDER BY host""".stripMargin)
   }
 
-  /** Create (once per scale factor) the canonical-alias tree: 24
+  /** Build (atomically, once per scale factor) the canonical-alias tree: 24
     * `.warc.gz` files over 8 hosts, file i carrying np = 3 + i%3 pages
     * at `/a{i}/{j}` as 200 HTTP responses whose canonical declarations
     * exercise every extraction branch:
@@ -1487,17 +1455,14 @@ object FrontierQueries {
     *  - every file adds a 404 page carrying a declaration that must be
     *    ignored whole (status gate).
     */
-  private[sources] def ensureCanonicalTree(sfDir: String): String = {
+  private[sources] def ensureCanonicalTree(sfDir: String): String =
     // canon1 -> canon2: j=1 gained the <base href> element
-    val root = workDir(scaledTag("canon2"), sfDir)
-    if (!Files.exists(Paths.get(root, "0"))) {
+    fixtureTree(scaledTag("canon2"), sfDir) {
       import graft.multimodal.{GzipCodec, WarcCodec}
       val utf8 = java.nio.charset.StandardCharsets.UTF_8
       val iso = java.nio.charset.StandardCharsets.ISO_8859_1
-      for (i <- 0 until 24 * mediaScale) {
+      (0 until 24 * mediaScale).iterator.map { i =>
         val h = i % 8
-        val dir = Paths.get(root, s"${i % 2}")
-        Files.createDirectories(dir)
         def resp(id: String, uri: String, status: String, extra: String,
             body: String) =
           GzipCodec.buildMember(WarcCodec.buildRecord(
@@ -1533,12 +1498,10 @@ object FrontierQueries {
         val gone = resp(s"ca$i-g", s"http://s$h.example/gone$i",
           "404 Not Found", "",
           s"""<html><head><link rel="canonical" href="/a$i/0"></head><body>gone</body></html>""")
-        Files.write(dir.resolve(f"c$i%03d.warc.gz"),
+        (f"${i % 2}/c$i%03d.warc.gz",
           ((Seq(info) ++ pages ++ cross) :+ gone).reduce(_ ++ _))
       }
     }
-    root
-  }
 
   /** `rel=canonical` alias extraction (round-13 third wave) — the
     * OTHER alias signal a dedup pass reads next to redirect chains
@@ -1568,10 +1531,7 @@ object FrontierQueries {
       import spark.implicits._
       import graft.text.UrlOps.frontierCanonicalStr
       val root = ensureCanonicalTree(sfDir)
-      val pages = spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.warc.gz")
-        .option("recursiveFileLookup", "true")
-        .load(root)
+      val pages = Sources.binaryTree(spark, root, "*.warc.gz")
         .select(col("path"))
         .as[String]
         .flatMap { file =>
@@ -1675,10 +1635,10 @@ object FrontierQueries {
         |GROUP BY p.h ORDER BY host""".stripMargin)
   }
 
-  /** Create (once per scale factor) the throttle tree: 24 `.warc.gz`
-    * files over 8 hosts, file i holding 5 + i%3 fetches at `/b{i}/{j}`,
-    * every response carrying `Date: Thu, 01 Jan 2026 00:00:00 GMT` (the
-    * RFC 9110 §10.2.3 anchor). By j%5:
+  /** Build (atomically, once per scale factor) the throttle tree: 24
+    * `.warc.gz` files over 8 hosts, file i holding 5 + i%3 fetches at
+    * `/b{i}/{j}`, every response carrying `Date: Thu, 01 Jan 2026 00:00:00
+    * GMT` (the RFC 9110 §10.2.3 anchor). By j%5:
     *  - 0 → 200 OK (no throttle);
     *  - 1 → 429 with DELTA-form `Retry-After: (3i+7j)%50`;
     *  - 2 → 503 with HTTP-DATE-form `Retry-After` at Date +
@@ -1688,16 +1648,13 @@ object FrontierQueries {
     *  - 4 → 429 with the junk value `soon` (unparseable → same class
     *    as absent, fail open to the default).
     */
-  private[sources] def ensureBackoffTree(sfDir: String): String = {
-    val root = workDir(scaledTag("backoff1"), sfDir)
-    if (!Files.exists(Paths.get(root, "0"))) {
+  private[sources] def ensureBackoffTree(sfDir: String): String =
+    fixtureTree(scaledTag("backoff1"), sfDir) {
       import graft.multimodal.{GzipCodec, WarcCodec}
       val utf8 = java.nio.charset.StandardCharsets.UTF_8
       val iso = java.nio.charset.StandardCharsets.ISO_8859_1
-      for (i <- 0 until 24 * mediaScale) {
+      (0 until 24 * mediaScale).iterator.map { i =>
         val h = i % 8
-        val dir = Paths.get(root, s"${i % 2}")
-        Files.createDirectories(dir)
         def resp(j: Int, status: String, extra: String) =
           GzipCodec.buildMember(WarcCodec.buildRecord(
             "response", s"<urn:uuid:bo$i-$j>", "2026-01-01T00:00:00Z",
@@ -1723,12 +1680,10 @@ object FrontierQueries {
               "\r\nRetry-After: soon")
           }
         }
-        Files.write(dir.resolve(f"b$i%03d.warc.gz"),
+        (f"${i % 2}/b$i%03d.warc.gz",
           (info +: recs).reduce(_ ++ _))
       }
     }
-    root
-  }
 
   /** Throttle/backoff accounting (round-13 third wave) — the input a
     * politeness scheduler reads from the LAST crawl before planning the
@@ -1752,10 +1707,7 @@ object FrontierQueries {
     def run(spark: SparkSession, sfDir: String): DataFrame = {
       import spark.implicits._
       val root = ensureBackoffTree(sfDir)
-      spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.warc.gz")
-        .option("recursiveFileLookup", "true")
-        .load(root)
+      Sources.binaryTree(spark, root, "*.warc.gz")
         .select(col("path"))
         .as[String]
         .flatMap { file =>
@@ -1826,8 +1778,8 @@ object FrontierQueries {
         |FROM fetches GROUP BY h ORDER BY host""".stripMargin)
   }
 
-  /** Create (once per scale factor) the hreflang tree: 24 `.warc.gz`
-    * files over 8 hosts, file i publishing one language CLUSTER of
+  /** Build (atomically, once per scale factor) the hreflang tree: 24
+    * `.warc.gz` files over 8 hosts, file i publishing one language CLUSTER of
     * L = 2 + i%3 editions at `/{lang}/c{i}` (langs en/fr/de/es), each
     * edition declaring the FULL set (self included — the protocol's
     * prescription) as `<link rel="alternate" hreflang href>`. Edition
@@ -1847,17 +1799,14 @@ object FrontierQueries {
     * neighbor)` group id splits {a,b},{c}; only a true connected
     * components finds the single 3-edition group.
     */
-  private[sources] def ensureHreflangTree(sfDir: String): String = {
-    val root = workDir(scaledTag("href2"), sfDir)
-    if (!Files.exists(Paths.get(root, "0"))) {
+  private[sources] def ensureHreflangTree(sfDir: String): String =
+    fixtureTree(scaledTag("href2"), sfDir) {
       import graft.multimodal.{GzipCodec, WarcCodec}
       val utf8 = java.nio.charset.StandardCharsets.UTF_8
       val iso = java.nio.charset.StandardCharsets.ISO_8859_1
       val langs = Seq("en", "fr", "de", "es")
-      for (i <- 0 until 24 * mediaScale) {
+      (0 until 24 * mediaScale).iterator.map { i =>
         val h = i % 8
-        val dir = Paths.get(root, s"${i % 2}")
-        Files.createDirectories(dir)
         def resp(id: String, uri: String, status: String, body: String) =
           GzipCodec.buildMember(WarcCodec.buildRecord(
             "response", s"<urn:uuid:$id>", "2026-01-01T00:00:00Z",
@@ -1900,12 +1849,10 @@ object FrontierQueries {
         val info = GzipCodec.buildMember(WarcCodec.buildRecord(
           "warcinfo", s"<urn:uuid:hi$i>", "2026-01-01T00:00:00Z", None,
           s"software: graft $i".getBytes(utf8)))
-        Files.write(dir.resolve(f"h$i%03d.warc.gz"),
+        (f"${i % 2}/h$i%03d.warc.gz",
           ((info +: cluster) ++ chain ++ Seq(solo, gone)).reduce(_ ++ _))
       }
     }
-    root
-  }
 
   /** hreflang edition-cluster audit (round-13 third wave) — the
     * multilingual grouping signal a corpus pipeline uses for
@@ -1939,10 +1886,7 @@ object FrontierQueries {
       import spark.implicits._
       import graft.text.UrlOps.frontierCanonicalStr
       val root = ensureHreflangTree(sfDir)
-      val recs = spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.warc.gz")
-        .option("recursiveFileLookup", "true")
-        .load(root)
+      val recs = Sources.binaryTree(spark, root, "*.warc.gz")
         .select(col("path"))
         .as[String]
         .flatMap { file =>

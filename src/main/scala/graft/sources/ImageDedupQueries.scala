@@ -28,10 +28,7 @@ object ImageDedupQueries {
     def scan(root: String, glob: String, kind: String, re: String,
         viaQoi: Boolean): DataFrame = {
       val rex = re.r
-      spark.read.format("binaryFile")
-        .option("pathGlobFilter", glob)
-        .option("recursiveFileLookup", "true")
-        .load(root)
+      Sources.binaryTree(spark, root, glob)
         .select(col("path"), col("content"))
         .as[(String, Array[Byte])]
         .flatMap { case (path, content) =>

@@ -5,8 +5,7 @@ import graft.images.ImageOps
 import graft.multimodal.TiffCodec
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Paths}
-import SourceQueries.{workDir, mediaScale, scaledTag}
+import SourceQueries.{fixtureTree, mediaScale, scaledTag}
 
 /** Image-family fixture trees and decode-under-hash-gate scans
   * (PNG, animated GIF, BMP, JPEG, QOI, TIFF).
@@ -15,26 +14,21 @@ import SourceQueries.{workDir, mediaScale, scaledTag}
   */
 object ImageSourceQueries {
 
-  /** Create (once per scale factor) the deterministic 4-level PNG shard
-    * tree both binary-source queries scan. Returns the tree root.
+  /** Build (atomically, once per scale factor) the deterministic 4-level PNG
+    * shard tree both binary-source queries scan. Returns the tree root.
     */
-  private[sources] def ensureImageTree(sfDir: String): String = {
-    val root = workDir(scaledTag("img"), sfDir)
-    if (!Files.exists(Paths.get(root, "0"))) {
-      for (i <- 0 until 24 * mediaScale) {
-        val dir = Paths.get(root, s"${i % 2}", s"${i % 3}", s"${i % 4}")
-        Files.createDirectories(dir)
+  private[sources] def ensureImageTree(sfDir: String): String =
+    fixtureTree(scaledTag("img"), sfDir) {
+      (0 until 24 * mediaScale).iterator.map { i =>
         // floorMod: identity for i < 24 (byte-identical base tree), keeps
         // channels in range for the scaled indices
         val r = Math.floorMod(i * 10, 256)
         val g = Math.floorMod(255 - i * 10, 256)
         val img = ImageOps.Image(16, 16,
           Array.fill(256)((r << 16) | (g << 8) | (i % 256)))
-        Files.write(dir.resolve(f"img$i%03d.png"), ImageOps.encodePng(img))
+        (f"${i % 2}/${i % 3}/${i % 4}/img$i%03d.png", ImageOps.encodePng(img))
       }
     }
-    root
-  }
 
   /** S1 — binary scan over a deterministic synthetic image tree (4-level
     * sharding like the reference's landmark layout), decoded and reduced to
@@ -60,10 +54,7 @@ object ImageSourceQueries {
       import spark.implicits._
       val root = ensureImageTree(sfDir)
       val idRe = "img(\\d+)\\.png".r
-      spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.png")
-        .option("recursiveFileLookup", "true")
-        .load(root)
+      Sources.binaryTree(spark, root, "*.png")
         .select(col("path"), col("content"))
         .as[(String, Array[Byte])]
         .mapPartitions { it =>
@@ -72,11 +63,9 @@ object ImageSourceQueries {
               val avg = ImageOps.averageColor(img)
               val dom = ImageOps.dominantColor(img)
               val cp = ImageOps.closestPrimary(dom, ImageOps.Primaries)
-              val id = idRe.findFirstMatchIn(path)
-                .map(_.group(1).toLong).getOrElse(-1L)
+              val id = Sources.assetIdx(path, idRe)
               (id, avg._1.toLong, avg._2.toLong, avg._3.toLong, cp.toLong,
-                content.length.toLong,
-                content.take(8).map(b => f"$b%02X").mkString)
+                content.length.toLong, Sources.headHex(content))
             }
           }
         }
@@ -113,30 +102,25 @@ object ImageSourceQueries {
         |FROM d ORDER BY img_id""".stripMargin)
   }
 
-  /** Create (once per scale factor) the TWO-TONE PNG tree: 16×16 images
-    * whose left 10 columns are color A(i) = (10i, 255−10i, i) and right 6
-    * columns are B(i) = (5i, 100, 200−5i) — an asymmetric split, so
+  /** Build (atomically, once per scale factor) the TWO-TONE PNG tree: 16×16
+    * images whose left 10 columns are color A(i) = (10i, 255−10i, i) and
+    * right 6 columns are B(i) = (5i, 100, 200−5i) — an asymmetric split, so
     * average (the 160:96 pixel-weighted mix) differs from dominant (the
     * larger region, exactly A). Same 4-level sharding as [[ensureImageTree]].
     */
-  private[sources] def ensureTwoToneTree(sfDir: String): String = {
-    val root = workDir(scaledTag("img2"), sfDir)
-    if (!Files.exists(Paths.get(root, "0"))) {
-      for (i <- 0 until 24 * mediaScale) {
-        val dir = Paths.get(root, s"${i % 2}", s"${i % 3}", s"${i % 4}")
-        Files.createDirectories(dir)
+  private[sources] def ensureTwoToneTree(sfDir: String): String =
+    fixtureTree(scaledTag("img2"), sfDir) {
+      (0 until 24 * mediaScale).iterator.map { i =>
         // floorMod: identity for i < 24 (see ensureImageTree)
         val a = (Math.floorMod(i * 10, 256) << 16) |
           (Math.floorMod(255 - i * 10, 256) << 8) | (i % 256)
         val b = (Math.floorMod(i * 5, 256) << 16) | (100 << 8) |
           Math.floorMod(200 - i * 5, 256)
         val px = Array.tabulate(256)(p => if (p % 16 < 10) a else b)
-        Files.write(dir.resolve(f"img$i%03d.png"),
+        (f"${i % 2}/${i % 3}/${i % 4}/img$i%03d.png",
           ImageOps.encodePng(ImageOps.Image(16, 16, px)))
       }
     }
-    root
-  }
 
   /** The decode oracle beyond solid fills (VERDICT r6 item 5): two-tone
     * fixtures where average ≠ dominant, so the hash gate now verifies the
@@ -158,10 +142,7 @@ object ImageSourceQueries {
       import spark.implicits._
       val root = ensureTwoToneTree(sfDir)
       val idRe = "img(\\d+)\\.png".r
-      spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.png")
-        .option("recursiveFileLookup", "true")
-        .load(root)
+      Sources.binaryTree(spark, root, "*.png")
         .select(col("path"), col("content"))
         .as[(String, Array[Byte])]
         .mapPartitions { it =>
@@ -169,8 +150,7 @@ object ImageSourceQueries {
             ImageOps.decode(content).map { img =>
               val avg = ImageOps.averageColor(img)
               val dom = ImageOps.dominantColor(img)
-              val id = idRe.findFirstMatchIn(path)
-                .map(_.group(1).toLong).getOrElse(-1L)
+              val id = Sources.assetIdx(path, idRe)
               (id, avg._1.toLong, avg._2.toLong, avg._3.toLong,
                 dom._1.toLong, dom._2.toLong, dom._3.toLong,
                 ImageOps.closestPrimary(avg, ImageOps.Primaries).toLong,
@@ -246,10 +226,7 @@ object ImageSourceQueries {
     val name = "q_image_dims"
     def run(spark: SparkSession, sfDir: String): DataFrame = {
       val root = ensureImageTree(sfDir)
-      spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.png")
-        .option("recursiveFileLookup", "true")
-        .load(root)
+      Sources.binaryTree(spark, root, "*.png")
         .select(
           regexp_extract(col("path"), "img(\\d+)\\.png", 1).cast("long").as("img_id"),
           conv(hex(expr("substring(content, 17, 4)")), 16, 10).cast("long").as("width"),
@@ -267,21 +244,18 @@ object ImageSourceQueries {
         |ORDER BY img_id""".stripMargin)
   }
 
-  /** Create (once per scale factor) the animated-GIF fixture tree: 24
-    * .gif files of 18×11 8-bit frames (dims not multiples of 8, so all
+  /** Build (atomically, once per scale factor) the animated-GIF fixture tree:
+    * 24 .gif files of 18×11 8-bit frames (dims not multiples of 8, so all
     * four interlace passes are partial), 3 + (i mod 3) frames per clip
     * with odd frames written INTERLACED by the encoder. Pixels and
     * palette are pure functions of the asset index:
     * px(x, y, f) = (7i + 3x + 5y + 11f) mod 256, palette channel forms
     * r = (2j + i) mod 256, g = (j + 3i) mod 256, b = (5j + 7i) mod 256.
     */
-  private[sources] def ensureGifTree(sfDir: String): String = {
-    val root = workDir("gif", sfDir)
-    if (!Files.exists(Paths.get(root, "0"))) {
+  private[sources] def ensureGifTree(sfDir: String): String =
+    fixtureTree("gif", sfDir) {
       val w = 18; val h = 11
-      for (i <- 0 until 24) {
-        val dir = Paths.get(root, s"${i % 2}", s"${i % 3}")
-        Files.createDirectories(dir)
+      (0 until 24).iterator.map { i =>
         val pal = new Array[Byte](768)
         for (j <- 0 until 256) {
           pal(3 * j) = ((2 * j + i) % 256).toByte
@@ -292,12 +266,10 @@ object ImageSourceQueries {
           Array.tabulate(w * h)(o =>
             ((7 * i + 3 * (o % w) + 5 * (o / w) + 11 * f) % 256).toByte)
         }
-        Files.write(dir.resolve(f"n$i%03d.gif"),
+        (f"${i % 2}/${i % 3}/n$i%03d.gif",
           graft.multimodal.GifCodec.encode(w, h, pal, frames))
       }
     }
-    root
-  }
 
   /** Animated-GIF decode under the hash gate: binary scan of the GIF
     * fixture tree, decoded by the pure-JVM from-spec
@@ -319,25 +291,18 @@ object ImageSourceQueries {
       import spark.implicits._
       val root = ensureGifTree(sfDir)
       val idRe = "n(\\d+)\\.gif".r
-      spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.gif")
-        .option("recursiveFileLookup", "true")
-        .load(root)
+      Sources.binaryTree(spark, root, "*.gif")
         .select(col("path"), col("content"))
         .as[(String, Array[Byte])]
         .flatMap { case (path, content) =>
           import graft.multimodal.GifCodec
-          val idx = idRe.findFirstMatchIn(path)
-            .map(_.group(1).toLong).getOrElse(-1L)
-          val headHex = content.take(8).map(b => f"$b%02X").mkString
+          val idx = Sources.assetIdx(path, idRe)
+          val headHex = Sources.headHex(content)
           for {
             frames <- GifCodec.decode(content).toSeq
             (frame, fi) <- frames.zipWithIndex
           } yield {
-            var sr = 0L; var sg = 0L; var sb = 0L
-            frame.pixels.foreach { p =>
-              sr += (p >> 16) & 0xFF; sg += (p >> 8) & 0xFF; sb += p & 0xFF
-            }
+            val (sr, sg, sb) = ImageOps.channelSums(frame.pixels)
             (idx, fi.toLong, frame.width.toLong * frame.height, sr, sg, sb,
               content.length.toLong, headHex)
           }
@@ -375,31 +340,26 @@ object ImageSourceQueries {
         |ORDER BY fr.asset_idx, fr.frame_idx""".stripMargin)
   }
 
-  /** Create (once per scale factor) the BMP fixture tree: 24 .bmp files
-    * of 15×9 24-bit pixels (odd width exercises the 4-byte row pad):
+  /** Build (atomically, once per scale factor) the BMP fixture tree: 24 .bmp
+    * files of 15×9 24-bit pixels (odd width exercises the 4-byte row pad):
     * channel c of pixel (x, y) in asset i is r = (9i + 2x + 4y) mod 256,
     * g = (4i + 5x + y) mod 256, b = (6i + x + 3y) mod 256. Written by
     * the engine's own deterministic [[graft.multimodal.BmpCodec]]
     * writer (plain BI_RGB, bottom-up).
     */
-  private[sources] def ensureBmpTree(sfDir: String): String = {
-    val root = workDir("bmp", sfDir)
-    if (!Files.exists(Paths.get(root, "0"))) {
+  private[sources] def ensureBmpTree(sfDir: String): String =
+    fixtureTree("bmp", sfDir) {
       val w = 15; val h = 9
-      for (i <- 0 until 24) {
-        val dir = Paths.get(root, s"${i % 2}", s"${i % 3}")
-        Files.createDirectories(dir)
+      (0 until 24).iterator.map { i =>
         val px = Array.tabulate(w * h) { o =>
           val x = o % w; val y = o / w
           (((9 * i + 2 * x + 4 * y) % 256) << 16) |
             (((4 * i + 5 * x + y) % 256) << 8) | ((6 * i + x + 3 * y) % 256)
         }
-        Files.write(dir.resolve(f"b$i%03d.bmp"),
+        (f"${i % 2}/${i % 3}/b$i%03d.bmp",
           graft.multimodal.BmpCodec.encode(ImageOps.Image(w, h, px)))
       }
     }
-    root
-  }
 
   /** BMP decode under the hash gate: binary scan of the BMP fixture
     * tree, decoded by the from-spec [[graft.multimodal.BmpCodec]]
@@ -415,22 +375,15 @@ object ImageSourceQueries {
       import spark.implicits._
       val root = ensureBmpTree(sfDir)
       val idRe = "b(\\d+)\\.bmp".r
-      spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.bmp")
-        .option("recursiveFileLookup", "true")
-        .load(root)
+      Sources.binaryTree(spark, root, "*.bmp")
         .select(col("path"), col("content"))
         .as[(String, Array[Byte])]
         .flatMap { case (path, content) =>
-          val idx = idRe.findFirstMatchIn(path)
-            .map(_.group(1).toLong).getOrElse(-1L)
+          val idx = Sources.assetIdx(path, idRe)
           for (img <- graft.multimodal.BmpCodec.decode(content).toSeq) yield {
-            var sr = 0L; var sg = 0L; var sb = 0L
-            img.pixels.foreach { p =>
-              sr += (p >> 16) & 0xFF; sg += (p >> 8) & 0xFF; sb += p & 0xFF
-            }
+            val (sr, sg, sb) = ImageOps.channelSums(img.pixels)
             (idx, img.width.toLong * img.height, sr, sg, sb,
-              content.length.toLong, content.take(8).map(b => f"$b%02X").mkString)
+              content.length.toLong, Sources.headHex(content))
           }
         }
         .toDF("asset_idx", "n_pixels", "sum_r", "sum_g", "sum_b",
@@ -458,8 +411,8 @@ object ImageSourceQueries {
         |ORDER BY f.asset_idx""".stripMargin)
   }
 
-  /** Create (once per scale factor) the JPEG fixture tree: 24 .jpg files
-    * of 32×16 pixels, two-tone at the block-aligned split x=16 between
+  /** Build (atomically, once per scale factor) the JPEG fixture tree: 24 .jpg
+    * files of 32×16 pixels, two-tone at the block-aligned split x=16 between
     * two EVEN grays a = (2·(17i+30)) mod 256 and b = (2·(41i+90)) mod
     * 256. This sits exactly on [[graft.multimodal.JpegCodec]]'s
     * exactness corner: block-constant even grays survive the lossy
@@ -468,25 +421,20 @@ object ImageSourceQueries {
     * reconstructs constants exactly), so even a JPEG tree is closed-form
     * replayable. Written by the engine's own deterministic encoder.
     */
-  private[sources] def ensureJpegTree(sfDir: String): String = {
-    val root = workDir("jpeg", sfDir)
-    if (!Files.exists(Paths.get(root, "0"))) {
+  private[sources] def ensureJpegTree(sfDir: String): String =
+    fixtureTree("jpeg", sfDir) {
       val w = 32; val h = 16
-      for (i <- 0 until 24) {
-        val dir = Paths.get(root, s"${i % 2}", s"${i % 3}")
-        Files.createDirectories(dir)
+      (0 until 24).iterator.map { i =>
         val a = (2 * (17 * i + 30)) % 256
         val b = (2 * (41 * i + 90)) % 256
         val px = Array.tabulate(w * h) { o =>
           val v = if (o % w < 16) a else b
           (v << 16) | (v << 8) | v
         }
-        Files.write(dir.resolve(f"j$i%03d.jpg"),
+        (f"${i % 2}/${i % 3}/j$i%03d.jpg",
           graft.multimodal.JpegCodec.encode(ImageOps.Image(w, h, px)))
       }
     }
-    root
-  }
 
   /** Baseline JPEG decode under the hash gate: binary scan of the JPEG
     * fixture tree, decoded by the from-spec [[graft.multimodal.JpegCodec]]
@@ -504,24 +452,16 @@ object ImageSourceQueries {
       import spark.implicits._
       val root = ensureJpegTree(sfDir)
       val idRe = "j(\\d+)\\.jpg".r
-      spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.jpg")
-        .option("recursiveFileLookup", "true")
-        .load(root)
+      Sources.binaryTree(spark, root, "*.jpg")
         .select(col("path"), col("content"))
         .as[(String, Array[Byte])]
         .flatMap { case (path, content) =>
-          val idx = idRe.findFirstMatchIn(path)
-            .map(_.group(1).toLong).getOrElse(-1L)
+          val idx = Sources.assetIdx(path, idRe)
           for (img <- graft.multimodal.JpegCodec.decode(content).toSeq) yield {
-            var sr = 0L; var sg = 0L; var sb = 0L
-            img.pixels.foreach { p =>
-              sr += (p >> 16) & 0xFF; sg += (p >> 8) & 0xFF; sb += p & 0xFF
-            }
+            val (sr, sg, sb) = ImageOps.channelSums(img.pixels)
             (idx, img.width.toLong, img.height.toLong,
               img.width.toLong * img.height, sr, sg, sb,
-              content.length.toLong,
-              content.take(8).map(b => f"$b%02X").mkString)
+              content.length.toLong, Sources.headHex(content))
           }
         }
         .toDF("asset_idx", "width", "height", "n_pixels", "sum_r", "sum_g",
@@ -553,21 +493,18 @@ object ImageSourceQueries {
         |ORDER BY f.asset_idx""".stripMargin)
   }
 
-  /** Create (once per scale factor) the QOI fixture tree: 24 .qoi images
-    * (20×14, 3-channel) whose pixels tile in 5×3 plateaus — runs inside
-    * rows, small inter-tile deltas (DIFF/LUMA ops), repeated colors
-    * (INDEX hits): channel c of pixel (x, y) in asset i is
+  /** Build (atomically, once per scale factor) the QOI fixture tree: 24
+    * .qoi images (20×14, 3-channel) whose pixels tile in 5×3 plateaus —
+    * runs inside rows, small inter-tile deltas (DIFF/LUMA ops), repeated
+    * colors (INDEX hits): channel c of pixel (x, y) in asset i is
     * r = (5i + 3⌊x/5⌋ + 7⌊y/3⌋) mod 256, g = (3i + 2⌊x/5⌋ + 5⌊y/3⌋)
     * mod 256, b = (7i + ⌊x/5⌋ + ⌊y/3⌋) mod 256. Encoded by
     * [[graft.multimodal.QoiCodec]].
     */
-  private[sources] def ensureQoiTree(sfDir: String): String = {
-    val root = workDir(scaledTag("qoi"), sfDir)
-    if (!Files.exists(Paths.get(root, "0"))) {
+  private[sources] def ensureQoiTree(sfDir: String): String =
+    fixtureTree(scaledTag("qoi"), sfDir) {
       val w = 20; val h = 14
-      for (i <- 0 until 24 * mediaScale) {
-        val dir = Paths.get(root, s"${i % 2}", s"${i % 3}")
-        Files.createDirectories(dir)
+      (0 until 24 * mediaScale).iterator.map { i =>
         val px = Array.tabulate(w * h) { o =>
           val tx = (o % w) / 5; val ty = (o / w) / 3
           val r = (i * 5 + 3 * tx + 7 * ty) % 256
@@ -575,12 +512,10 @@ object ImageSourceQueries {
           val b = (i * 7 + tx + ty) % 256
           (r << 16) | (g << 8) | b
         }
-        Files.write(dir.resolve(f"q$i%03d.qoi"),
+        (f"${i % 2}/${i % 3}/q$i%03d.qoi",
           graft.multimodal.QoiCodec.encode(w, h, px))
       }
     }
-    root
-  }
 
   /** From-spec image decode under the hash gate: binary scan of the QOI
     * fixture tree, decoded by the pure-JVM [[graft.multimodal.QoiCodec]]
@@ -598,27 +533,18 @@ object ImageSourceQueries {
       import spark.implicits._
       val root = ensureQoiTree(sfDir)
       val idRe = "q(\\d+)\\.qoi".r
-      spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.qoi")
-        .option("recursiveFileLookup", "true")
-        .load(root)
+      Sources.binaryTree(spark, root, "*.qoi")
         .select(col("path"), col("content"))
         .as[(String, Array[Byte])]
         .mapPartitions { it =>
           it.flatMap { case (path, content) =>
             graft.multimodal.QoiCodec.decode(content).map { q =>
-              var sr = 0L; var sg = 0L; var sb = 0L
-              var k = 0
-              while (k < q.width * q.height) {
-                sr += q.r(k) & 0xFF; sg += q.g(k) & 0xFF; sb += q.b(k) & 0xFF
-                k += 1
-              }
-              val idx = idRe.findFirstMatchIn(path)
-                .map(_.group(1).toLong).getOrElse(-1L)
+              val px = graft.multimodal.QoiCodec.toImage(q).pixels
+              val (sr, sg, sb) = ImageOps.channelSums(px)
+              val idx = Sources.assetIdx(path, idRe)
               (idx, q.width.toLong, q.height.toLong,
                 q.width.toLong * q.height, sr, sg, sb,
-                content.length.toLong,
-                content.take(8).map(b => f"$b%02X").mkString)
+                content.length.toLong, Sources.headHex(content))
             }
           }
         }
@@ -655,8 +581,8 @@ object ImageSourceQueries {
         |ORDER BY f.asset_idx""".stripMargin)
   }
 
-  /** Create (once per scale factor) the WebP fixture tree: 24 .webp
-    * files of 20×14 pixels cycling through eight VP8L feature classes
+  /** Build (atomically, once per scale factor) the WebP fixture tree: 24
+    * .webp files of 20×14 pixels cycling through eight VP8L feature classes
     * (i mod 8) that jointly cover the lossless decoder: plain literals
     * with normal prefix codes (0), two-color simple codes (1), color
     * cache (2), LZ77 backward refs over row-periodic pixels (3),
@@ -678,14 +604,11 @@ object ImageSourceQueries {
     * [[graft.multimodal.WebpCodec]] writer (lossless — decode must
     * replay every pixel bit-exactly).
     */
-  private[sources] def ensureWebpTree(sfDir: String): String = {
-    val root = workDir(scaledTag("webp"), sfDir)
-    if (!Files.exists(Paths.get(root, "0"))) {
+  private[sources] def ensureWebpTree(sfDir: String): String =
+    fixtureTree(scaledTag("webp"), sfDir) {
       import graft.multimodal.WebpCodec
       val w = 20; val h = 14
-      for (i <- 0 until 24 * mediaScale) {
-        val dir = Paths.get(root, s"${i % 2}", s"${i % 3}")
-        Files.createDirectories(dir)
+      (0 until 24 * mediaScale).iterator.map { i =>
         def m(v: Int) = ((v % 256) + 256) % 256
         val px = Array.tabulate(w * h) { o =>
           val x = o % w; val y = o / w
@@ -725,12 +648,10 @@ object ImageSourceQueries {
           case 6            => WebpCodec.Layout(colorBits = 3)
           case _            => WebpCodec.Layout(metaBits = 4)
         }
-        Files.write(dir.resolve(f"w$i%03d.webp"),
+        (f"${i % 2}/${i % 3}/w$i%03d.webp",
           WebpCodec.encode(w, h, px, layout))
       }
     }
-    root
-  }
 
   /** From-spec WebP (VP8L lossless) decode under the hash gate: binary
     * scan of the WebP fixture tree, decoded by the pure-JVM
@@ -751,29 +672,17 @@ object ImageSourceQueries {
       import spark.implicits._
       val root = ensureWebpTree(sfDir)
       val idRe = "w(\\d+)\\.webp".r
-      spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.webp")
-        .option("recursiveFileLookup", "true")
-        .load(root)
+      Sources.binaryTree(spark, root, "*.webp")
         .select(col("path"), col("content"))
         .as[(String, Array[Byte])]
         .mapPartitions { it =>
           it.flatMap { case (path, content) =>
             graft.multimodal.WebpCodec.decode(content).map { d =>
-              var sr = 0L; var sg = 0L; var sb = 0L
-              var k = 0
-              while (k < d.argb.length) {
-                val p = d.argb(k)
-                sr += (p >>> 16) & 0xFF; sg += (p >>> 8) & 0xFF
-                sb += p & 0xFF
-                k += 1
-              }
-              val idx = idRe.findFirstMatchIn(path)
-                .map(_.group(1).toLong).getOrElse(-1L)
+              val (sr, sg, sb) = ImageOps.channelSums(d.argb)
+              val idx = Sources.assetIdx(path, idRe)
               (idx, d.width.toLong, d.height.toLong,
                 d.width.toLong * d.height, sr, sg, sb,
-                content.length.toLong,
-                content.take(8).map(b => f"$b%02X").mkString)
+                content.length.toLong, Sources.headHex(content))
             }
           }
         }
@@ -842,8 +751,8 @@ object ImageSourceQueries {
         |ORDER BY f.asset_idx""".stripMargin)
   }
 
-  /** Create (once per scale factor) the TIFF fixture tree: 24 .tif files
-    * of 15×9 pixels cycling through six layout classes (i mod 6) that
+  /** Build (atomically, once per scale factor) the TIFF fixture tree: 24 .tif
+    * files of 15×9 pixels cycling through six layout classes (i mod 6) that
     * jointly cover the baseline decoder: RGB uncompressed II (0), RGB
     * PackBits II (1), RGB LZW II (2), RGB LZW + horizontal predictor MM
     * (3), 8-bit grayscale LZW + predictor II (4), 8-bit palette
@@ -854,13 +763,10 @@ object ImageSourceQueries {
     * palette entry r = (3j+i), g = (5j+2i), b = (7j+4i). Written by the
     * engine's own deterministic [[graft.multimodal.TiffCodec]] writer.
     */
-  private[sources] def ensureTiffTree(sfDir: String): String = {
-    val root = workDir("tiff", sfDir)
-    if (!Files.exists(Paths.get(root, "0"))) {
+  private[sources] def ensureTiffTree(sfDir: String): String =
+    fixtureTree("tiff", sfDir) {
       val w = 15; val h = 9
-      for (i <- 0 until 24) {
-        val dir = Paths.get(root, s"${i % 2}", s"${i % 3}")
-        Files.createDirectories(dir)
+      (0 until 24).iterator.map { i =>
         val layout = (i % 6) match {
           case 0 => TiffCodec.Layout(1, 1, bigEndian = false, 4)
           case 1 => TiffCodec.Layout(32773, 1, bigEndian = false, 4)
@@ -893,11 +799,9 @@ object ImageSourceQueries {
             }
             TiffCodec.encodeRgb(ImageOps.Image(w, h, px), layout)
         }
-        Files.write(dir.resolve(f"t$i%03d.tif"), bytes)
+        (f"${i % 2}/${i % 3}/t$i%03d.tif", bytes)
       }
     }
-    root
-  }
 
   /** TIFF decode under the hash gate: binary scan of the TIFF fixture
     * tree, decoded by the from-spec [[graft.multimodal.TiffCodec]] —
@@ -912,22 +816,15 @@ object ImageSourceQueries {
       import spark.implicits._
       val root = ensureTiffTree(sfDir)
       val idRe = "t(\\d+)\\.tif".r
-      spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.tif")
-        .option("recursiveFileLookup", "true")
-        .load(root)
+      Sources.binaryTree(spark, root, "*.tif")
         .select(col("path"), col("content"))
         .as[(String, Array[Byte])]
         .flatMap { case (path, content) =>
-          val idx = idRe.findFirstMatchIn(path)
-            .map(_.group(1).toLong).getOrElse(-1L)
+          val idx = Sources.assetIdx(path, idRe)
           for (img <- TiffCodec.decode(content).toSeq) yield {
-            var sr = 0L; var sg = 0L; var sb = 0L
-            img.pixels.foreach { p =>
-              sr += (p >> 16) & 0xFF; sg += (p >> 8) & 0xFF; sb += p & 0xFF
-            }
+            val (sr, sg, sb) = ImageOps.channelSums(img.pixels)
             (idx, img.width.toLong * img.height, sr, sg, sb,
-              content.length.toLong, content.take(8).map(b => f"$b%02X").mkString)
+              content.length.toLong, Sources.headHex(content))
           }
         }
         .toDF("asset_idx", "n_pixels", "sum_r", "sum_g", "sum_b",
@@ -970,19 +867,16 @@ object ImageSourceQueries {
         |FROM f JOIN a USING (asset_idx)
         |ORDER BY f.asset_idx""".stripMargin)
   }
-  /** Create (once per scale factor) the Netpbm fixture tree: 24 files
-    * cycling all six variants (P1..P6 — ASCII/binary bitmap, graymap,
+  /** Build (atomically, once per scale factor) the Netpbm fixture tree: 24
+    * files cycling all six variants (P1..P6 — ASCII/binary bitmap, graymap,
     * pixmap), two maxvals (255 and 200, so the v·255 div maxval sample
     * scaling is actually exercised), header comments on every third
     * asset, every sample a pure function of (i, x, y).
     */
-  private[sources] def ensurePnmTree(sfDir: String): String = {
-    val root = workDir(scaledTag("pnm"), sfDir)
-    if (!Files.exists(Paths.get(root, "0"))) {
+  private[sources] def ensurePnmTree(sfDir: String): String =
+    fixtureTree(scaledTag("pnm"), sfDir) {
       import graft.multimodal.PnmCodec
-      for (i <- 0 until 24 * mediaScale) {
-        val dir = Paths.get(root, s"${i % 2}")
-        Files.createDirectories(dir)
+      (0 until 24 * mediaScale).iterator.map { i =>
         val kind = 1 + i % 6
         val w = 8 + i % 5
         val h = 6 + i % 4
@@ -1001,12 +895,10 @@ object ImageSourceQueries {
           case 2 | 5 => "pgm"
           case _ => "ppm"
         }
-        Files.write(dir.resolve(f"n$i%03d.$ext%s"),
+        (f"${i % 2}/n$i%03d.$ext%s",
           PnmCodec.build(kind, w, h, maxval, px, comment = i % 3 == 0))
       }
     }
-    root
-  }
 
   /** Netpbm decode under the hash gate: all six variants through the
     * from-spec [[graft.multimodal.PnmCodec]] (ASCII token grammar with
@@ -1020,10 +912,7 @@ object ImageSourceQueries {
       import spark.implicits._
       val root = ensurePnmTree(sfDir)
       val idRe = "n(\\d+)\\.(pbm|pgm|ppm)".r
-      spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.p?m")
-        .option("recursiveFileLookup", "true")
-        .load(root)
+      Sources.binaryTree(spark, root, "*.p?m")
         .select(col("path"), col("content"))
         .as[(String, Array[Byte])]
         .flatMap { case (path, content) =>

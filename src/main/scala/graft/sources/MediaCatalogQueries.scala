@@ -6,7 +6,7 @@ import graft.multimodal.TiffCodec
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
-import SourceQueries.{workDir, mediaScale, scaledTag}
+import SourceQueries.fixtureTree
 import ImageSourceQueries.{ensureImageTree, ensureTwoToneTree, ensureQoiTree, ensureGifTree, ensureBmpTree, ensureJpegTree, ensureTiffTree}
 import AudioSourceQueries.{ensureFlacTree, ensureAdpcmTree, ensureG711Tree, ensureAiffTree, ensureMp3Tree}
 import AudioContainerQueries.{ensureMp4Tree, ensureOggTree, ensureMkvTree}
@@ -18,24 +18,23 @@ import VideoSourceQueries.{ensureZmbvTree, ensureMkvVfwTree, ensureMsrleTree}
   */
 object MediaCatalogQueries {
 
-  /** Create (once per scale factor) the unified media-catalog tree: every
-    * fixture tree of the multimodal tier copied under one root with
-    * tree-tagged names (both PNG trees reuse `imgNNN.png`, so a flat
+  /** Build (atomically, once per scale factor) the unified media-catalog
+    * tree: every fixture tree of the multimodal tier copied under one root
+    * with tree-tagged names (both PNG trees reuse `imgNNN.png`, so a flat
     * union would collide on asset_id): 24 solid PNGs (`s*.png`), 24
     * two-tone PNGs (`t*.png`), 24 FLAC (`a*.flac`), 24 FLAC-in-MP4
     * (`m*.m4a`), 24 ZMBV AVIs (`v*.avi`), 24 MS-RLE AVIs (`r*.avi`),
     * 24 IMA ADPCM WAVs (`p*.wav`), 24 G.711 WAVs (`g*.wav`), 24 QOI
     * images (`x*.qoi`), 24 FLAC-in-Ogg (`o*.ogg`), 24 FLAC-in-Matroska
     * (`k*.mka`), 24 ZMBV-in-Matroska (`w*.mkv`), 24 animated GIFs
-    * (`n*.gif`), 24 BMPs (`b*.bmp`). The marker
-    * dir is versioned: adding a fixture family bumps it so pre-existing
-    * temp trees rebuild (copies are idempotent, so a rebuild only adds
-    * the new families).
+    * (`n*.gif`), 24 BMPs (`b*.bmp`), 24 TIFFs (`f*.tif`), 24 AIFFs
+    * (`u*.aif`). Written through [[SourceQueries.fixtureTree]], so adding
+    * a fixture family means a new tag.
     */
-  private[sources] def ensureMediaCatalog(sfDir: String): String = {
-    val root = workDir("media", sfDir)
-    if (!Files.exists(Paths.get(root, "done_v10"))) {
-      val sources = Seq(
+  private[sources] def ensureMediaCatalog(sfDir: String): String =
+    fixtureTree("media", sfDir) {
+      import scala.jdk.CollectionConverters._
+      Seq(
         (ensureImageTree(sfDir), ".png", "s"),
         (ensureTwoToneTree(sfDir), ".png", "t"),
         (ensureFlacTree(sfDir), ".flac", "a"),
@@ -51,22 +50,14 @@ object MediaCatalogQueries {
         (ensureGifTree(sfDir), ".gif", "n"),
         (ensureBmpTree(sfDir), ".bmp", "b"),
         (ensureTiffTree(sfDir), ".tif", "f"),
-        (ensureAiffTree(sfDir), ".aif", "u"))
-      sources.foreach { case (src, ext, tag) =>
-        val dir = Paths.get(root, tag)
-        Files.createDirectories(dir)
-        import scala.jdk.CollectionConverters._
-        Files.walk(Paths.get(src)).iterator().asScala
-          .filter(p => p.toString.endsWith(ext))
-          .foreach { p =>
-            val dst = dir.resolve(tag + p.getFileName.toString)
-            if (!Files.exists(dst)) Files.copy(p, dst)
-          }
+        (ensureAiffTree(sfDir), ".aif", "u")).iterator.flatMap {
+        case (src, ext, tag) =>
+          Files.walk(Paths.get(src)).iterator().asScala
+            .filter(p => p.toString.endsWith(ext))
+            .map(p => (s"$tag/$tag${p.getFileName}", Files.readAllBytes(p)))
       }
-      Files.createDirectories(Paths.get(root, "done_v10"))
     }
-    root
-  }
+
 
   /** Capstone of the multimodal tier: ONE scan over every media fixture
     * tree at once through the production ingestion edge —

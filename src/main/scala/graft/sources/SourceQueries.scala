@@ -3,7 +3,9 @@ package graft.sources
 import graft.GraftQuery
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption,
+  StandardOpenOption}
+import scala.jdk.CollectionConverters._
 
 /** Driver-visible queries for the source/sink surface (SURVEY §2.1 S1–S3).
   * The testdata has no CSV or image files, so each query materializes its
@@ -12,11 +14,48 @@ import java.nio.file.{Files, Paths}
   */
 object SourceQueries {
 
-  private[sources] def workDir(tag: String, sfDir: String): String = {
+  private def rootOf(tag: String, sfDir: String): Path = {
     val safe = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    val p = Paths.get(System.getProperty("java.io.tmpdir"), s"graft_${tag}_$safe")
+    Paths.get(System.getProperty("java.io.tmpdir"), s"graft_${tag}_$safe")
+  }
+
+  private[sources] def workDir(tag: String, sfDir: String): String = {
+    val p = rootOf(tag, sfDir)
     Files.createDirectories(p)
     p.toString
+  }
+
+  /** The one fixture-tree protocol: returns the root of the `tag` tree
+    * for `sfDir`, writing it first if it does not exist. `files` yields
+    * (path relative to the root, bytes), each path once, and is only
+    * evaluated when the tree is built. The files go into a hidden staging
+    * sibling that is then renamed onto the root in one atomic move, so an
+    * existing root is always a complete tree: a build that dies half-way
+    * leaves no root, and the next call starts over. If another process
+    * renames its tree into place first, this one's staging copy is
+    * discarded. An existing root is never inspected or changed, so a tree
+    * whose bytes change must get a new tag.
+    */
+  private[sources] def fixtureTree(tag: String, sfDir: String)(
+      files: => Iterator[(String, Array[Byte])]): String = {
+    val root = rootOf(tag, sfDir)
+    if (!Files.exists(root)) {
+      Files.createDirectories(root.getParent)
+      val stage = Files.createTempDirectory(root.getParent,
+        s".${root.getFileName}.stage")
+      try {
+        files.foreach { case (rel, bytes) =>
+          val f = stage.resolve(rel)
+          Files.createDirectories(f.getParent)
+          Files.write(f, bytes, StandardOpenOption.CREATE_NEW)
+        }
+        try Files.move(stage, root, StandardCopyOption.ATOMIC_MOVE)
+        catch { case _: java.io.IOException if Files.exists(root) => () }
+      } finally if (Files.exists(stage))
+        Files.walk(stage).iterator().asScala.toSeq.reverse
+          .foreach(Files.delete)
+    }
+    root.toString
   }
 
   /** Fixture-tree scale knob for the media-dedup SCALING audits (the

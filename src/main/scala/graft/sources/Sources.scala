@@ -1,6 +1,8 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, DataFrameReader, SparkSession}
+import org.apache.spark.sql.execution.datasources.binaryfile.BinaryFileFormat
+import scala.util.matching.Regex
 
 /** Source/sink compatibility layer (SURVEY §2.1).
   *
@@ -10,6 +12,43 @@ import org.apache.spark.sql.{DataFrame, DataFrameReader, SparkSession}
   * keeps the CSV dialect as a compat boundary.
   */
 object Sources {
+
+  /** S1 — the one scan over a tree of binary files: every file under
+    * `root`, at any depth, whose NAME matches `glob`, as `binaryFile` rows
+    * (path, modificationTime, length, content). The reference's
+    * four-level sharded `sc.binaryFiles` jpg glob (`pyspark_yolox.py:123`);
+    * recursive lookup makes the shard depth irrelevant.
+    */
+  def binaryTree(spark: SparkSession, root: String, glob: String): DataFrame =
+    spark.read.format("binaryFile")
+      .option("pathGlobFilter", glob)
+      .option("recursiveFileLookup", "true")
+      .load(root)
+
+  /** [[binaryTree]] as a file-source stream: files landing under `root`
+    * arrive as micro-batches. `binaryFile`'s schema is fixed, so it is
+    * declared here instead of being inferred by a batch listing.
+    */
+  def binaryTreeStream(spark: SparkSession, root: String,
+      glob: String): DataFrame =
+    spark.readStream.format("binaryFile")
+      .schema(BinaryFileFormat.schema)
+      .option("pathGlobFilter", glob)
+      .option("recursiveFileLookup", "true")
+      .load(root)
+
+  /** The asset index a fixture file name carries: group 1 of `re`'s first
+    * match in `path`, or −1 when the path does not match.
+    */
+  def assetIdx(path: String, re: Regex): Long =
+    re.findFirstMatchIn(path).map(_.group(1).toLong).getOrElse(-1L)
+
+  /** The first (up to) 8 bytes of a file as uppercase hex — the
+    * byte-identity pin the fixture scans share with DuckDB's
+    * `substring(hex(content), 1, 16)`.
+    */
+  def headHex(content: Array[Byte]): String =
+    content.take(8).map(b => f"$b%02X").mkString
 
   /** S2 — the reference's CSV dialect: header, `;` separator. */
   def readSemicolonCsv(spark: SparkSession, path: String,
@@ -21,15 +60,6 @@ object Sources {
     */
   def writeSemicolonCsv(df: DataFrame, path: String): Unit =
     df.write.mode("overwrite").option("header", "true").option("sep", ";").csv(path)
-
-  /** S4 — single-file sink: the reference collapsed small summaries to one
-    * file via `coalesce(1)` (`pyspark_stats.py:51-52`). Kept only for tiny
-    * final aggregates — a deliberate anti-pattern at scale, documented as
-    * such.
-    */
-  def writeSingleCsv(df: DataFrame, path: String): Unit =
-    df.coalesce(1).write.mode("overwrite")
-      .option("header", "true").option("sep", ";").csv(path)
 
   /** I4 — Parquet checkpoint between pipeline stages (replaces the
     * reference's `--cached-pred` re-read toggle, `pyspark_yolox.py:115-119`).

@@ -37,10 +37,7 @@ object VideoDedupQueries {
     def scan(root: String, glob: String, kind: String, re: String,
         decode: Array[Byte] => Option[ZmbvCodec.Video]): DataFrame = {
       val rex = re.r
-      spark.read.format("binaryFile")
-        .option("pathGlobFilter", glob)
-        .option("recursiveFileLookup", "true")
-        .load(root)
+      Sources.binaryTree(spark, root, glob)
         .select(col("path"), col("content"))
         .as[(String, Array[Byte])]
         .flatMap { case (path, content) =>

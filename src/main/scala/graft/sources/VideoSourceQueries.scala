@@ -5,8 +5,7 @@ import graft.images.ImageOps
 import graft.multimodal.TiffCodec
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Paths}
-import SourceQueries.{workDir, mediaScale, scaledTag}
+import SourceQueries.{fixtureTree, mediaScale, scaledTag}
 
 /** Video-family fixture trees and decode-under-hash-gate scans
   * (ZMBV in AVI, ZMBV in Matroska VfW, MS-RLE in AVI).
@@ -15,23 +14,20 @@ import SourceQueries.{workDir, mediaScale, scaledTag}
   */
 object VideoSourceQueries {
 
-  /** Create (once per scale factor) the ZMBV fixture tree: 24 .avi clips
-    * (8bpp palette, 24×18 — edge blocks on both axes) whose pixels are a
-    * pure function of the asset index: frame f's palette index at (x, y)
-    * is (i·11 + (x − 3f)·2 + y·5) mod 256 — a 3-px-per-frame horizontal
-    * scroll, so the encoder's motion search finds (−3, 0) and inter
-    * frames genuinely motion-compensate — with palette
-    * (j, (j·3 + i) mod 256, (j·7 + 2i) mod 256). 5–7 frames per clip,
+  /** Build (atomically, once per scale factor) the ZMBV fixture tree: 24
+    * .avi clips (8bpp palette, 24×18 — edge blocks on both axes) whose
+    * pixels are a pure function of the asset index: frame f's palette
+    * index at (x, y) is (i·11 + (x − 3f)·2 + y·5) mod 256 — a
+    * 3-px-per-frame horizontal scroll, so the encoder's motion search
+    * finds (−3, 0) and inter frames genuinely motion-compensate — with
+    * palette (j, (j·3 + i) mod 256, (j·7 + 2i) mod 256). 5–7 frames per clip,
     * keyframe every 4 (a mid-stream zlib reset on every clip), encoded by
     * [[graft.multimodal.ZmbvCodec]].
     */
-  private[sources] def ensureZmbvTree(sfDir: String): String = {
-    val root = workDir(scaledTag("zmbv"), sfDir)
-    if (!Files.exists(Paths.get(root, "0"))) {
+  private[sources] def ensureZmbvTree(sfDir: String): String =
+    fixtureTree(scaledTag("zmbv"), sfDir) {
       val w = 24; val h = 18
-      for (i <- 0 until 24 * mediaScale) {
-        val dir = Paths.get(root, s"${i % 2}", s"${i % 3}")
-        Files.createDirectories(dir)
+      (0 until 24 * mediaScale).iterator.map { i =>
         val pal = new Array[Byte](768)
         for (j <- 0 until 256) {
           pal(3 * j) = j.toByte
@@ -45,13 +41,11 @@ object VideoSourceQueries {
               java.lang.Math.floorMod(i * 11 + (x - 3 * f) * 2 + y * 5, 256).toByte
           (px, pal)
         }
-        Files.write(dir.resolve(f"v$i%03d.avi"),
+        (f"${i % 2}/${i % 3}/v$i%03d.avi",
           graft.multimodal.ZmbvCodec.encodeAvi(w, h,
             graft.multimodal.ZmbvCodec.FmtPal8, frames, keyEvery = 4))
       }
     }
-    root
-  }
 
   /** Inter-frame video decode under the hash gate: binary scan of the
     * ZMBV fixture tree, demuxed by [[graft.multimodal.AviCodec]] (dims +
@@ -74,28 +68,21 @@ object VideoSourceQueries {
       import spark.implicits._
       val root = ensureZmbvTree(sfDir)
       val idRe = "v(\\d+)\\.avi".r
-      spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.avi")
-        .option("recursiveFileLookup", "true")
-        .load(root)
+      Sources.binaryTree(spark, root, "*.avi")
         .select(col("path"), col("content"))
         .as[(String, Array[Byte])]
         .flatMap { case (path, content) =>
           import graft.multimodal.{AviCodec, ZmbvCodec}
-          val idx = idRe.findFirstMatchIn(path)
-            .map(_.group(1).toLong).getOrElse(-1L)
-          val headHex = content.take(8).map(b => f"$b%02X").mkString
+          val idx = Sources.assetIdx(path, idRe)
+          val headHex = Sources.headHex(content)
           for {
             (fcc, w, h) <- AviCodec.videoInfo(content).toSeq if fcc == "ZMBV"
             payloads <- AviCodec.frames(content).toSeq
             video <- ZmbvCodec.decode(w, h, payloads).toSeq
             (frame, fi) <- video.frames.zipWithIndex
           } yield {
-            var sr = 0L; var sg = 0L; var sb = 0L
-            for (y <- 0 until frame.height; x <- 0 until frame.width) {
-              val (r, g, b) = frame.rgb(x, y)
-              sr += r; sg += g; sb += b
-            }
+            val (sr, sg, sb) =
+              ImageOps.channelSums(frame.width, frame.height, frame.rgb)
             (idx, fi.toLong, frame.width.toLong * frame.height, sr, sg, sb,
               content.length.toLong, headHex)
           }
@@ -134,8 +121,8 @@ object VideoSourceQueries {
         |ORDER BY fr.asset_idx, fr.frame_idx""".stripMargin)
   }
 
-  /** Create (once per scale factor) the ZMBV-in-Matroska fixture tree:
-    * 24 .mkv files carrying the engine's ZMBV inter-frame payloads via
+  /** Build (atomically, once per scale factor) the ZMBV-in-Matroska fixture
+    * tree: 24 .mkv files carrying the engine's ZMBV inter-frame payloads via
     * the public `V_MS/VFW/FOURCC` mapping (BITMAPINFOHEADER in
     * CodecPrivate, biCompression = "ZMBV"). Pixels are a pure function
     * of the asset index: 20×14 8-bpp frames, 4 + (i mod 4) per clip,
@@ -145,13 +132,10 @@ object VideoSourceQueries {
     * every 3 frames — so every clip exercises motion compensation AND
     * the mid-stream keyframe path inside the MKV carriage.
     */
-  private[sources] def ensureMkvVfwTree(sfDir: String): String = {
-    val root = workDir(scaledTag("mkvvfw"), sfDir)
-    if (!Files.exists(Paths.get(root, "0"))) {
+  private[sources] def ensureMkvVfwTree(sfDir: String): String =
+    fixtureTree(scaledTag("mkvvfw"), sfDir) {
       val w = 20; val h = 14
-      for (i <- 0 until 24 * mediaScale) {
-        val dir = Paths.get(root, s"${i % 2}", s"${i % 3}")
-        Files.createDirectories(dir)
+      (0 until 24 * mediaScale).iterator.map { i =>
         val pal = new Array[Byte](768)
         for (j <- 0 until 256) {
           pal(3 * j) = j.toByte
@@ -167,12 +151,10 @@ object VideoSourceQueries {
         }
         val payloads = graft.multimodal.ZmbvCodec.encode(w, h,
           graft.multimodal.ZmbvCodec.FmtPal8, frames, keyEvery = 3)
-        Files.write(dir.resolve(f"w$i%03d.mkv"),
+        (f"${i % 2}/${i % 3}/w$i%03d.mkv",
           graft.multimodal.MkvCodec.muxVfw("ZMBV", w, h, 8, payloads))
       }
     }
-    root
-  }
 
   /** Inter-frame video decode inside Matroska under the hash gate:
     * binary scan of the ZMBV-in-MKV fixture tree, demuxed by
@@ -192,17 +174,13 @@ object VideoSourceQueries {
       import spark.implicits._
       val root = ensureMkvVfwTree(sfDir)
       val idRe = "w(\\d+)\\.mkv".r
-      spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.mkv")
-        .option("recursiveFileLookup", "true")
-        .load(root)
+      Sources.binaryTree(spark, root, "*.mkv")
         .select(col("path"), col("content"))
         .as[(String, Array[Byte])]
         .flatMap { case (path, content) =>
           import graft.multimodal.{MkvCodec, ZmbvCodec}
-          val idx = idRe.findFirstMatchIn(path)
-            .map(_.group(1).toLong).getOrElse(-1L)
-          val headHex = content.take(8).map(b => f"$b%02X").mkString
+          val idx = Sources.assetIdx(path, idRe)
+          val headHex = Sources.headHex(content)
           for {
             tracks <- MkvCodec.demux(content).toSeq
             t <- tracks.find(_.codecId == "V_MS/VFW/FOURCC").toSeq
@@ -210,11 +188,8 @@ object VideoSourceQueries {
             video <- ZmbvCodec.decode(w, h, t.frames).toSeq
             (frame, fi) <- video.frames.zipWithIndex
           } yield {
-            var sr = 0L; var sg = 0L; var sb = 0L
-            for (y <- 0 until frame.height; x <- 0 until frame.width) {
-              val (r, g, b) = frame.rgb(x, y)
-              sr += r; sg += g; sb += b
-            }
+            val (sr, sg, sb) =
+              ImageOps.channelSums(frame.width, frame.height, frame.rgb)
             (idx, fi.toLong, frame.width.toLong * frame.height, sr, sg, sb,
               content.length.toLong, headHex)
           }
@@ -253,8 +228,8 @@ object VideoSourceQueries {
         |ORDER BY fr.asset_idx, fr.frame_idx""".stripMargin)
   }
 
-  /** Create (once per scale factor) the MS-RLE fixture tree: 24 .avi
-    * clips (8bpp palette, 16×12), 5 + (i mod 2) frames, keyframe every 4
+  /** Build (atomically, once per scale factor) the MS-RLE fixture tree: 24
+    * .avi clips (8bpp palette, 16×12), 5 + (i mod 2) frames, keyframe every 4
     * (a mid-stream full repaint on 6-frame clips). Frame f is frame f−1
     * with a 4×3 block stamped at (2f, f): pixel (x, y) of frame f shows
     * the LAST stamp f′ ≤ f covering it — value
@@ -266,13 +241,10 @@ object VideoSourceQueries {
     * in the AVI `strf` color table. Encoded by
     * [[graft.multimodal.MsRleCodec]].
     */
-  private[sources] def ensureMsrleTree(sfDir: String): String = {
-    val root = workDir("msrle", sfDir)
-    if (!Files.exists(Paths.get(root, "0"))) {
+  private[sources] def ensureMsrleTree(sfDir: String): String =
+    fixtureTree("msrle", sfDir) {
       val w = 16; val h = 12
-      for (i <- 0 until 24) {
-        val dir = Paths.get(root, s"${i % 2}", s"${i % 3}")
-        Files.createDirectories(dir)
+      (0 until 24).iterator.map { i =>
         val pal = new Array[Byte](768)
         for (j <- 0 until 256) {
           pal(3 * j) = j.toByte
@@ -289,12 +261,10 @@ object VideoSourceQueries {
               ((i * 13 + f * 29 + x * 5 + y * 3 + 100) % 256).toByte
           canvas.clone()
         }
-        Files.write(dir.resolve(f"r$i%03d.avi"),
+        (f"${i % 2}/${i % 3}/r$i%03d.avi",
           graft.multimodal.MsRleCodec.encodeAvi(w, h, pal, frames, keyEvery = 4))
       }
     }
-    root
-  }
 
   /** Run-length video decode under the hash gate: binary scan of the
     * MS-RLE fixture tree, demuxed by [[graft.multimodal.AviCodec]]
@@ -317,17 +287,13 @@ object VideoSourceQueries {
       import spark.implicits._
       val root = ensureMsrleTree(sfDir)
       val idRe = "r(\\d+)\\.avi".r
-      spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.avi")
-        .option("recursiveFileLookup", "true")
-        .load(root)
+      Sources.binaryTree(spark, root, "*.avi")
         .select(col("path"), col("content"))
         .as[(String, Array[Byte])]
         .flatMap { case (path, content) =>
           import graft.multimodal.{AviCodec, MsRleCodec}
-          val idx = idRe.findFirstMatchIn(path)
-            .map(_.group(1).toLong).getOrElse(-1L)
-          val headHex = content.take(8).map(b => f"$b%02X").mkString
+          val idx = Sources.assetIdx(path, idRe)
+          val headHex = Sources.headHex(content)
           for {
             (fcc, w, h) <- AviCodec.videoInfo(content).toSeq if fcc == "MRLE"
             pal <- AviCodec.palette8(content).toSeq
@@ -335,11 +301,8 @@ object VideoSourceQueries {
             video <- MsRleCodec.decode(w, h, pal, payloads).toSeq
             (frame, fi) <- video.frames.zipWithIndex
           } yield {
-            var sr = 0L; var sg = 0L; var sb = 0L
-            for (y <- 0 until frame.height; x <- 0 until frame.width) {
-              val (r, g, b) = frame.rgb(x, y)
-              sr += r; sg += g; sb += b
-            }
+            val (sr, sg, sb) =
+              ImageOps.channelSums(frame.width, frame.height, frame.rgb)
             (idx, fi.toLong, frame.width.toLong * frame.height, sr, sg, sb,
               content.length.toLong, headHex)
           }

@@ -514,15 +514,8 @@ object StreamQueries {
     def run(spark: SparkSession, sfDir: String): DataFrame = {
       import spark.implicits._
       val root = graft.sources.ArchiveQueries.ensureWarcTree(sfDir)
-      // file streams need an explicit schema: binaryFile's is fixed, so
-      // this is one batch-reader footer peek, not an extra data scan
-      val schema = spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.warc.gz").load(root).schema
-      val recs = spark.readStream.format("binaryFile")
-        .schema(schema)
-        .option("pathGlobFilter", "*.warc.gz")
-        .option("recursiveFileLookup", "true")
-        .load(root)
+      val recs = graft.sources.Sources
+        .binaryTreeStream(spark, root, "*.warc.gz")
         .select(col("path")).as[String]
         .flatMap { path =>
           // same streamed member-by-member walk as the batch scans —
@@ -569,13 +562,8 @@ object StreamQueries {
     def run(spark: SparkSession, sfDir: String): DataFrame = {
       import spark.implicits._
       val root = graft.sources.ArchiveQueries.ensureMimeTree(sfDir)
-      val schema = spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.warc.gz").load(root).schema
-      val recs = spark.readStream.format("binaryFile")
-        .schema(schema)
-        .option("pathGlobFilter", "*.warc.gz")
-        .option("recursiveFileLookup", "true")
-        .load(root)
+      val recs = graft.sources.Sources
+        .binaryTreeStream(spark, root, "*.warc.gz")
         .select(col("path")).as[String]
         .flatMap { path =>
           graft.sources.ArchiveQueries.warcRows(path) { (_, r) =>

@@ -90,14 +90,8 @@ object ShuffleAudit {
     // experiments (e.g. 13421772 ≈ 128 MB / 10 for a 10x corpus).
     val maxPartitionBytes =
       sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "134217728")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.files.maxPartitionBytes", maxPartitionBytes)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Graft.session(s"local[$cpus]", shufflePartitions.toInt)
+    spark.conf.set("spark.sql.files.maxPartitionBytes", maxPartitionBytes)
     val listener = new Listener
     spark.sparkContext.addSparkListener(listener)
 

@@ -7,17 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * sequentially in the forked test JVM).
   */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Graft.session("local[4]", 4)
   val sf: String = "/root/testdata/sf0.001"
 }
 

@@ -87,8 +87,8 @@ class ScaleSpec extends SparkSpec {
   }
 
   test("bucketed tables co-locate the join: no Exchange in the plan") {
-    // (warehouse dir is a static conf — tables land in ./spark-warehouse,
-    // dropped in the finally; the dir is gitignored)
+    // (tables land in Graft.session's warehouse under java.io.tmpdir,
+    // dropped in the finally)
     // disable broadcast so the planner would otherwise have to shuffle
     val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")

@@ -18,4 +18,23 @@ class GraftExtensionsSpec extends SparkSpec {
       .head().getLong(0)
     assert(got == 100000L * 300000L + 200000L * 400000L)
   }
+
+  test("the as-of query installs its planner strategy and leaves the " +
+    "registered SQL functions alone") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+    val reg = spark.sessionState.functionRegistry
+    val sentinel: Seq[Expression] => Expression = _ => Literal(1)
+    reg.createOrReplaceTempFunction("count_eq", sentinel, "built-in")
+    spark.experimental.extraStrategies = spark.experimental.extraStrategies
+      .filterNot(_ == AsOfJoinPlan.AsOfStrategy)
+    try {
+      val q = graft.operators.AsOfJoin.PurchaseAttribution.run(spark, sf)
+      assert(q.queryExecution.executedPlan.toString.contains("AsOfJoin"))
+      assert(spark.experimental.extraStrategies
+        .count(_ == AsOfJoinPlan.AsOfStrategy) == 1)
+      assert(reg.lookupFunctionBuilder(FunctionIdentifier("count_eq"))
+        .exists(_ eq sentinel), "count_eq was re-registered")
+    } finally GraftExtensions.register(spark)
+  }
 }

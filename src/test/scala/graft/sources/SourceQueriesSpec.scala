@@ -60,6 +60,54 @@ class SourceQueriesSpec extends SparkSpec {
       assert(parsed.contains((w.toInt, h.toInt, "png")), s"img $id: $parsed")
     }
   }
+  test("fixtureTree: an interrupted build leaves no tree") {
+    import java.nio.file.{Files, Path, Paths}
+    val sfDir = "/spec/fixture_tree" // synthetic key, never generated
+    val tag = "fxspec"
+    val root = Paths.get(System.getProperty("java.io.tmpdir"),
+      s"graft_${tag}_${sfDir.replaceAll("[^A-Za-z0-9.]", "_")}")
+    def rm(p: Path): Unit = if (Files.exists(p))
+      Files.walk(p).iterator().asScala.toSeq.reverse.foreach(Files.delete)
+    def files(under: Path): Map[String, Seq[Byte]] =
+      Files.walk(under).iterator().asScala.filter(Files.isRegularFile(_))
+        .map(p => under.relativize(p).toString -> Files.readAllBytes(p).toSeq)
+        .toMap
+    def file(i: Int) = (s"${i % 2}/${i % 3}/f$i.bin",
+      Array.tabulate(10 + i)(k => (7 * i + k).toByte))
+    var calls = 0
+    def generator(failAt: Int) = {
+      calls += 1
+      (0 until 6).iterator.map { i =>
+        if (i == failAt) throw new IllegalStateException("encoder died")
+        file(i)
+      }
+    }
+    rm(root)
+    try {
+      val e = intercept[IllegalStateException](
+        SourceQueries.fixtureTree(tag, sfDir)(generator(failAt = 3)))
+      assert(e.getMessage == "encoder died")
+      assert(!Files.exists(root), "3 of 6 files passed as a complete tree")
+      assert(!Files.list(root.getParent).iterator().asScala
+        .exists(_.getFileName.toString.startsWith(s".${root.getFileName}")),
+        "the staging directory outlived the failed build")
+      assert(SourceQueries.fixtureTree(tag, sfDir)(generator(-1)) ==
+        root.toString)
+      assert(files(root) ==
+        (0 until 6).map(file).map { case (r, b) => r -> b.toSeq }.toMap)
+      SourceQueries.fixtureTree(tag, sfDir)(generator(-1))
+      assert(calls == 2, "the generator ran again over a complete tree")
+      // a root planted by hand is returned untouched
+      rm(root)
+      Files.createDirectories(root.resolve("x"))
+      Files.write(root.resolve("x/planted.bin"), Array[Byte](1))
+      assert(SourceQueries.fixtureTree(tag, sfDir)(generator(-1)) ==
+        root.toString)
+      assert(calls == 2)
+      assert(files(root) == Map("x/planted.bin" -> Seq[Byte](1)))
+    } finally rm(root)
+  }
+
   test("codec roundtrip: snappy and zstd checksums agree") {
     val out = TabularQueries.CodecRoundtrip.run(spark, sf).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getString(2)))
