@@ -25,12 +25,11 @@ object ImagePipeline {
   /** One scanned image: S1. `id` is the basename sans extension (F1). */
   final case class ImageRow(path: String, id: String, content: Array[Byte])
 
-  /** Per-image detection output: id + {classId → count} histogram (A8). */
-  final case class Predictions(id: String, predictions: Map[Int, Long])
-
-  /** Per-image color output (M2/M4/O1). */
-  final case class Colors(id: String, averageColor: Seq[Int], dominantColor: Seq[Int],
-      closestPrimary: Int)
+  /** Per-image features: the class histogram of detection (A8) and the
+    * color analytics (M2/M4/O1), from one decode of the image.
+    */
+  final case class Features(id: String, predictions: Map[Int, Long],
+      averageColor: Seq[Int], dominantColor: Seq[Int], closestPrimary: Int)
 
   /** S1 — recursive binary scan of an image tree (the reference's 4-level
     * sharded jpg glob via `sc.binaryFiles`, `pyspark_yolox.py:123`).
@@ -44,32 +43,23 @@ object ImagePipeline {
       .as[ImageRow]
   }
 
-  /** Stage 1 — detection: letterbox → detect → NMS → score gate →
-    * per-image class histogram (`pyspark_yolox.py:62-111`). The detector is
-    * built once per partition.
+  /** Stages 1 and 2 over one decode per image: detection (letterbox →
+    * detect → NMS → score gate → class histogram, `pyspark_yolox.py:62-111`)
+    * and color analytics (`pyspark_dominant.py:30-51`). The reference scans
+    * and decodes the tree once per stage; here one `mapPartitions` builds
+    * the detector once per partition and decodes each image once.
+    * Undecodable payloads drop out.
     */
-  def detect(images: Dataset[ImageRow], mkDetector: () => Detection.Detector): Dataset[Predictions] = {
+  def analyze(images: Dataset[ImageRow], mkDetector: () => Detection.Detector): Dataset[Features] = {
     import images.sparkSession.implicits._
     images.mapPartitions { rows =>
       val det = mkDetector()
       rows.flatMap { r =>
         ImageOps.decode(r.content).map { img =>
           val boxes = Detection.nms(det.detect(Detection.letterboxImage(img)))
-          Predictions(r.id, Detection.classHistogram(boxes))
-        }
-      }
-    }
-  }
-
-  /** Stage 2 — color analytics per image (`pyspark_dominant.py:30-51`). */
-  def colors(images: Dataset[ImageRow]): Dataset[Colors] = {
-    import images.sparkSession.implicits._
-    images.mapPartitions { rows =>
-      rows.flatMap { r =>
-        ImageOps.decode(r.content).map { img =>
           val avg = ImageOps.averageColor(img)
           val dom = ImageOps.dominantColor(img)
-          Colors(r.id,
+          Features(r.id, Detection.classHistogram(boxes),
             Seq(avg._1, avg._2, avg._3), Seq(dom._1, dom._2, dom._3),
             ImageOps.closestPrimary(dom, ImageOps.Primaries))
         }

@@ -1,13 +1,15 @@
 package graft.images
 
 import graft.functions.SafeMath._
-import org.apache.spark.sql.DataFrame
+import java.nio.charset.StandardCharsets.UTF_8
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
-/** The reference's `pyspark_stats.py` as four composable DataFrame
-  * functions over the per-landmark rollup (SURVEY §3.3). Each replaces a
-  * driver loop of filter+sum actions (156 / 36 / 4 / 6 Spark jobs) with one
-  * declarative plan — one shuffle each, group enumeration done by `groupBy`.
+/** The reference's `pyspark_stats.py` over the per-landmark rollup
+  * (SURVEY §3.3) as ONE plan: [[statTable]] replaces the reference's driver
+  * loops of filter+sum actions (156 / 36 / 4 / 6 Spark jobs) for every
+  * stat and class with one broadcast join and one grouped aggregate; the
+  * four stats are filters of it.
   *
   * Inputs: `rollup` = [[ImagePipeline.perLandmarkRollup]] output
   * (landmark_id, image_count, predictions_sum, averages); `names` =
@@ -18,132 +20,159 @@ object StatsPipeline {
   private def classCount(cls: Int) =
     coalesce(element_at(col("predictions_sum"), cls), lit(0L))
 
-  /** Stat 1 — per-first-letter count + average for one class
-    * (`pyspark_stats.py:73-99`; golden shape `alphabet_count/<cls>.csv`).
-    */
-  def alphabetStat(rollup: DataFrame, names: DataFrame, cls: Int): DataFrame =
-    rollup.join(broadcast(names), "landmark_id")
-      .select(
-        upper(substring(col("name"), 1, 1)).as("letter"),
-        classCount(cls).as("cnt"),
-        col("image_count"))
-      .groupBy("letter")
-      .agg(sum(col("cnt")).as("count"),
-        safeDiv(sum(col("cnt")).cast("double"),
-          sum(col("image_count")).cast("double")).as("avg_per_image"))
-      .orderBy("letter")
-
-  /** Stat 2 — average objects per "city" (name-contains bucket) for one
-    * class (`pyspark_stats.py:101-123`; golden `avg_obj_per_city/<cls>.csv`,
-    * 6 fixed cities). One containment theta-join against a broadcast city
-    * dim instead of 36 filter+sum jobs.
-    */
   /** The reference's fixed city list (`pyspark_stats.py:102`). */
   val Cities = Seq("New York", "Los Angeles", "Detroit", "Paris", "Berlin", "Warsaw")
 
-  def cityAvgStat(rollup: DataFrame, names: DataFrame, cls: Int,
-      cities: Seq[String] = Cities): DataFrame = {
-    val spark = rollup.sparkSession
-    import spark.implicits._
-    val cityDim = cities.toDF("city")
-    rollup.join(broadcast(names), "landmark_id")
-      .join(broadcast(cityDim), col("name").contains(col("city")))
-      .groupBy("city")
-      .agg(safeDiv(sum(classCount(cls)).cast("double"),
-        sum(col("image_count")).cast("double")).as("avg_per_image"))
-      .orderBy("city")
-  }
-
-  /** Stat 3 — class average over all landmarks vs landmarks whose name
-    * contains a keyword, case-insensitive (`pyspark_stats.py:125-153`;
-    * golden `people_in_places_with_people/0.csv`: rows avg_all /
-    * avg_people_places). Single scan, conditional aggregation.
+  /** Stat 3's rows (`pyspark_stats.py:125-153`): all landmarks, and those
+    * whose name contains "people", case-insensitively.
     */
-  def keywordContrastStat(rollup: DataFrame, names: DataFrame, cls: Int,
-      keyword: String = "people"): DataFrame = {
-    val hit = lower(col("name")).contains(keyword.toLowerCase)
-    rollup.join(broadcast(names), "landmark_id")
-      .agg(
-        sum(classCount(cls)).as("c_all"), sum(col("image_count")).as("n_all"),
-        sum(when(hit, classCount(cls))).as("c_sub"),
-        sum(when(hit, col("image_count"))).as("n_sub"))
-      .select(explode(array(
-        struct(lit("avg_all").as("metric"),
-          safeDiv(col("c_all").cast("double"), col("n_all").cast("double")).as("value")),
-        struct(lit(s"avg_${keyword}_places").as("metric"),
-          safeDiv(coalesce(col("c_sub"), lit(0L)).cast("double"),
-            coalesce(col("n_sub"), lit(0L)).cast("double")).as("value")))).as("r"))
-      .select(col("r.metric").as("metric"), col("r.value").as("value"))
-  }
+  private val KeywordMetrics = Seq("avg_all", "avg_people_places")
 
-  /** Stat 4 — class average by landmark-name-length band
-    * (`pyspark_stats.py:156-200`; golden `dogs_by_name_length/16.csv`:
-    * under_10_chars / between_10_and_20_chars / over_20_chars). One pass
-    * with a CASE band instead of 3 filtered passes.
+  /** Every stat of stage 3 for every class in one plan. Each landmark
+    * (joined to its name) is one entry per (stat, key) it counts under:
+    *  - `letter`: the upper-cased first letter of its name (stat 1,
+    *    `pyspark_stats.py:73-99`);
+    *  - `city`: each of [[Cities]] its name contains (stat 2,
+    *    `pyspark_stats.py:101-123`), a containment theta-join unrolled;
+    *  - `keyword`: `avg_all`, and `avg_people_places` when its name
+    *    contains "people", case-insensitively (stat 3);
+    *  - `band`: its name-length band (stat 4, `pyspark_stats.py:156-200`).
+    * One `groupBy(stat, key)` then sums `image_count` as `images` and, per
+    * class c, the class's detections as `count_c` and their per-image
+    * average as `avg_c` (0.0 on an empty group, the reference's
+    * ZeroDivisionError guard).
     */
-  def nameLengthStat(rollup: DataFrame, names: DataFrame, cls: Int): DataFrame = {
-    val band = when(length(col("name")) < 10, "under_10_chars")
-      .when(length(col("name")) <= 20, "between_10_and_20_chars")
+  def statTable(rollup: DataFrame, names: DataFrame, classes: Seq[Int]): DataFrame = {
+    val name = col("name")
+    val band = when(length(name) < 10, "under_10_chars")
+      .when(length(name) <= 20, "between_10_and_20_chars")
       .otherwise("over_20_chars")
+    def entry(stat: String, key: Column, keep: Column = lit(true)) =
+      struct(lit(stat).as("stat"), key.as("key"), keep.as("keep"))
+    val entries = Seq(
+        entry("letter", upper(substring(name, 1, 1))),
+        entry("band", band),
+        entry("keyword", lit(KeywordMetrics(0))),
+        entry("keyword", lit(KeywordMetrics(1)), lower(name).contains("people"))) ++
+      Cities.map(c => entry("city", lit(c), name.contains(c)))
+    val images = sum(col("image_count"))
     rollup.join(broadcast(names), "landmark_id")
-      .groupBy(band.as("band"))
-      .agg(safeDiv(sum(classCount(cls)).cast("double"),
-        sum(col("image_count")).cast("double")).as("avg_per_image"))
-      .orderBy("band")
+      .select(explode(array(entries: _*)).as("e"), col("image_count"), col("predictions_sum"))
+      .filter(coalesce(col("e.keep"), lit(false)))
+      .groupBy(col("e.stat").as("stat"), col("e.key").as("key"))
+      .agg(images.as("images"), classes.flatMap { cls =>
+        val n = sum(classCount(cls))
+        Seq(n.as(s"count_$cls"),
+          safeDiv(n.cast("double"), images.cast("double")).as(s"avg_$cls"))
+      }: _*)
   }
 
-  /** Stage-2 color stats (`pyspark_dominant.py:74-137`) over the
-    * [[ImagePipeline.colors]] output: dominant-color histogram in one
-    * shuffle (the reference rescanned the collected table once per
-    * distinct color, O(k·N)) and the closest-primary histogram with all
-    * 6 primaries present (zero rows included, as the reference prints).
-    */
-  def colorHistogram(colors: DataFrame): DataFrame =
-    colors.groupBy(col("dominantColor").cast("array<int>").as("dominant_color"))
-      .agg(count(lit(1)).as("n"))
-      .orderBy("dominant_color")
+  /** One stat of [[statTable]] for one class: (key, values…) ordered by key. */
+  private def view(rollup: DataFrame, names: DataFrame, cls: Int, stat: String,
+      key: String, values: (String, String)*): DataFrame =
+    statTable(rollup, names, Seq(cls)).filter(col("stat") === stat)
+      .select(col("key").as(key) +: values.map { case (c, as) => col(s"${c}_$cls").as(as) }: _*)
+      .orderBy(key)
 
-  def closestPrimaryHistogram(colors: DataFrame): DataFrame = {
-    val spark = colors.sparkSession
-    import spark.implicits._
-    val primaries = ImageOps.Primaries.zipWithIndex
-      .map { case ((r, g, b), i) => (i, s"[$r, $g, $b]") }
-      .toDF("closestPrimary", "primary_color")
-    broadcast(primaries)
-      .join(colors.groupBy("closestPrimary").agg(count(lit(1)).as("n")),
-        Seq("closestPrimary"), "left")
-      .select(col("primary_color"), coalesce(col("n"), lit(0L)).as("n"),
-        col("closestPrimary"))
-      .orderBy("closestPrimary")
-      .drop("closestPrimary")
+  /** Stat 1 — per-first-letter count + average for one class. */
+  def alphabetStat(rollup: DataFrame, names: DataFrame, cls: Int): DataFrame =
+    view(rollup, names, cls, "letter", "letter", "count" -> "count", "avg" -> "avg_per_image")
+
+  /** Stat 2 — average objects per city (name-contains bucket). */
+  def cityAvgStat(rollup: DataFrame, names: DataFrame, cls: Int): DataFrame =
+    view(rollup, names, cls, "city", "city", "avg" -> "avg_per_image")
+
+  /** Stat 3 — avg_all vs avg_people_places; 0.0 for a metric no landmark counts under. */
+  def keywordContrastStat(rollup: DataFrame, names: DataFrame, cls: Int): DataFrame = {
+    import rollup.sparkSession.implicits._
+    KeywordMetrics.toDF("metric")
+      .join(view(rollup, names, cls, "keyword", "metric", "avg" -> "value"), Seq("metric"), "left")
+      .select(col("metric"), coalesce(col("value"), lit(0.0)).as("value")).orderBy("metric")
   }
 
-  /** Stage 4's data path (`plots.py:30-40`): assemble the per-class city
-    * stats into the heatmap matrix the dashboard renders — pandas
-    * `merge`-per-class + `transpose` become one join chain producing
-    * city × class columns (the transpose is just which axis becomes
-    * columns; downstream plotting reads either orientation).
+  /** Stat 4 — class average by landmark-name-length band. */
+  def nameLengthStat(rollup: DataFrame, names: DataFrame, cls: Int): DataFrame =
+    view(rollup, names, cls, "band", "band", "avg" -> "avg_per_image")
+
+  /** Stage 4's data path (`plots.py:30-40`): the per-class city stats as
+    * the heatmap matrix the dashboard renders — pandas `merge`-per-class +
+    * `transpose` become one pivot of [[statTable]] with city × class
+    * columns.
     */
   def heatmapMatrix(rollup: DataFrame, names: DataFrame,
       classes: Seq[Int]): DataFrame = {
     require(classes.nonEmpty, "heatmapMatrix needs at least one class column")
-    val perClass = classes.map { cls =>
-      cityAvgStat(rollup, names, cls)
-        .withColumnRenamed("avg_per_image", s"class_$cls")
-    }
-    perClass.reduce(_.join(_, Seq("city"), "inner")).orderBy("city")
+    statTable(rollup, names, classes)
+      .filter(col("stat") === "city")
+      .select(col("key").as("city") +: classes.map(c => col(s"avg_$c").as(s"class_$c")): _*)
+      .orderBy("city")
   }
 
-  /** Render a 2-column stat frame to the reference's golden CSV format:
-    * a `;`-joined header line then `key;value` rows, trailing newline
-    * (`write_results`, `pyspark_stats.py:40-52`). Driver-side — these are
-    * ≤26-row results, the one place collect() is legitimate.
+  /** Spark's `orderBy` order of string keys: UTF-8 bytes compared
+    * unsigned, nulls first.
     */
-  def toGoldenCsv(stat: DataFrame, headers: (String, String)): String =
-    goldenCsv(stat.collect().toSeq.map(r => (r.get(0), r.get(1))), headers)
+  private val KeyOrder: Ordering[Option[String]] = Ordering.Option(
+    Ordering.fromLessThan[String]((a, b) => java.util.Arrays.compareUnsigned(
+      a.getBytes(UTF_8), b.getBytes(UTF_8)) < 0))
 
-  /** [[toGoldenCsv]] over rows already on the driver. Doubles are spelled
-    * as the reference's Python `repr` spells them ([[pythonRepr]]).
+  /** Stage 3's golden files from one collected [[statTable]] over
+    * `classes`, as (stat dir, file name, CSV): per class the alphabet
+    * count and average, the city average and the name-length band
+    * average; for the first class the keyword contrast (both rows, 0.0
+    * when no landmark matches). Rows come in the order a per-stat
+    * `orderBy(key)` gives. Dir names and headers are the reference's
+    * (`pyspark_stats.py:96-98,198`), which `plots.py` reads back.
+    */
+  def goldenFiles(table: Seq[Row], classes: Seq[Int]): Seq[(String, String, String)] = {
+    def rows(stat: String, value: String): Seq[(Any, Any)] =
+      table.filter(_.getAs[String]("stat") == stat)
+        .sortBy(r => Option(r.getAs[String]("key")))(KeyOrder)
+        .map(r => (r.getAs[Any]("key"), r.getAs[Any](value)))
+    val perClass = classes.flatMap { cls =>
+      Seq(
+        ("alphabet_count", rows("letter", s"count_$cls"), ("letter", "count")),
+        // header `letter;avg_count` per `pyspark_stats.py:98` / `plots.py:55`
+        // (the reference's local stats_bckp/stats copy says `letter;count`,
+        // but that copy is stale — its own plots.py would KeyError on it)
+        ("alphabet_count_avg", rows("letter", s"avg_$cls"), ("letter", "avg_count")),
+        ("avg_obj_per_city", rows("city", s"avg_$cls"), ("city", "avg_detections")),
+        // dir name is the reference's literal `dogs_by_name_length`
+        // (`pyspark_stats.py:198`, read back `plots.py:57`) even though the
+        // stat is parameterized over any class here, not just 16=dog
+        ("dogs_by_name_length", rows("band", s"avg_$cls"),
+          ("length_of_landmark_name", "avg_detections"))
+      ).map { case (dir, rs, headers) => (dir, cls.toString, goldenCsv(rs, headers)) }
+    }
+    val first = classes.head
+    val keyword = rows("keyword", s"avg_$first").toMap
+    perClass :+ (("people_in_places_with_people", first.toString,
+      goldenCsv(KeywordMetrics.map(m => (m, keyword.getOrElse(m, 0.0))),
+        ("files considered", "avg_detections"))))
+  }
+
+  /** Stage-2 color stats (`pyspark_dominant.py:74-137`) from one count per
+    * (dominantColor, closestPrimary) — the primary is a function of the
+    * color: the dominant-color histogram (key `[r, g, b]`, in Spark's array
+    * order) and the closest-primary one with all 6 primaries, zero rows
+    * included, as the reference prints.
+    */
+  def colorHistograms(colors: DataFrame): (Seq[(String, Long)], Seq[(String, Long)]) = {
+    import scala.math.Ordering.Implicits.seqOrdering
+    val counts = colors.groupBy("dominantColor", "closestPrimary").count().collect().toSeq
+      .map(r => (r.getSeq[Int](0), r.getInt(1), r.getLong(2)))
+    val byPrimary = counts.groupMapReduce(_._2)(_._3)(_ + _)
+    (counts.sortBy(_._1).map { case (c, _, n) => (c.mkString("[", ", ", "]"), n) },
+      ImageOps.Primaries.zipWithIndex.map { case ((r, g, b), i) =>
+        (s"[$r, $g, $b]", byPrimary.getOrElse(i, 0L))
+      })
+  }
+
+  /** Render collected (key, value) stat rows to the reference's golden CSV
+    * format: a `;`-joined header line then `key;value` rows, trailing
+    * newline (`write_results`, `pyspark_stats.py:40-52`). Driver-side —
+    * these are ≤26-row results, the one place collect() is legitimate.
+    * Doubles are spelled as the reference's Python `repr` spells them
+    * ([[pythonRepr]]).
     */
   def goldenCsv(rows: Seq[(Any, Any)], headers: (String, String)): String =
     (s"${headers._1};${headers._2}" +: rows.map {

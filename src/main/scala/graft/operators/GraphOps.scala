@@ -50,16 +50,17 @@ object GraphOps {
     def pagerankRanks(edges: DataFrame, nodes: DataFrame,
         smallGraphThreshold: Long = 100000L): DataFrame = {
       val spark = edges.sparkSession
-      // N is a driver scalar (one count over the persisted vocab) — the
-      // per-iteration literals derive from it with the same Long division
-      // the oracle's BIGINT `//` performs
-      val n = nodes.count()
-      val base = (15L * Scale) / (100L * n)
-      if (edges.count() <= smallGraphThreshold) {
+      // N is a driver scalar — the per-iteration literals derive from it
+      // with the same Long division the oracle's BIGINT `//` performs. One
+      // bounded collect sizes the graph and, when small, fetches it.
+      val es = edges.select("w1", "w2")
+        .limit(math.min(smallGraphThreshold + 1, Int.MaxValue).toInt).collect()
+        .map(r => (r.getString(0), r.getString(1)))
+      if (es.length <= smallGraphThreshold) {
         import spark.implicits._
-        val es = edges.select("w1", "w2").collect()
-          .map(r => (r.getString(0), r.getString(1)))
         val ns = nodes.select("t").collect().map(_.getString(0))
+        val n = ns.length.toLong
+        val base = (15L * Scale) / (100L * n)
         val deg = es.groupBy(_._1).map { case (k, v) => k -> v.length.toLong }
         var rank = ns.map(_ -> Scale / n).toMap
         for (_ <- 1 to Iters) {
@@ -72,6 +73,8 @@ object GraphOps {
         }
         return ns.map(t => (t, rank(t))).toSeq.toDF("t", "rank")
       }
+      val n = nodes.count()
+      val base = (15L * Scale) / (100L * n)
       val deg = edges.groupBy("w1").agg(count(lit(1)).as("deg"))
       var r = nodes.select(col("t"), lit(Scale / n).as("rank"))
       for (_ <- 1 to Iters) {

@@ -6,7 +6,7 @@ import graft.multimodal.TiffCodec
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
-import SourceQueries.fixtureTree
+import SourceQueries.{fixtureTree, scaledTag}
 import ImageSourceQueries.{ensureImageTree, ensureTwoToneTree, ensureQoiTree, ensureGifTree, ensureBmpTree, ensureJpegTree, ensureTiffTree}
 import AudioSourceQueries.{ensureFlacTree, ensureAdpcmTree, ensureG711Tree, ensureAiffTree, ensureMp3Tree}
 import AudioContainerQueries.{ensureMp4Tree, ensureOggTree, ensureMkvTree}
@@ -18,9 +18,9 @@ import VideoSourceQueries.{ensureZmbvTree, ensureMkvVfwTree, ensureMsrleTree}
   */
 object MediaCatalogQueries {
 
-  /** Build (atomically, once per scale factor) the unified media-catalog
-    * tree: every fixture tree of the multimodal tier copied under one root
-    * with tree-tagged names (both PNG trees reuse `imgNNN.png`, so a flat
+  /** Build (atomically, once per scale factor and media scale) the
+    * unified media-catalog tree: every fixture tree of the multimodal tier
+    * copied under one root with tree-tagged names (both PNG trees reuse `imgNNN.png`, so a flat
     * union would collide on asset_id): 24 solid PNGs (`s*.png`), 24
     * two-tone PNGs (`t*.png`), 24 FLAC (`a*.flac`), 24 FLAC-in-MP4
     * (`m*.m4a`), 24 ZMBV AVIs (`v*.avi`), 24 MS-RLE AVIs (`r*.avi`),
@@ -32,7 +32,7 @@ object MediaCatalogQueries {
     * a fixture family means a new tag.
     */
   private[sources] def ensureMediaCatalog(sfDir: String): String =
-    fixtureTree("media", sfDir) {
+    fixtureTree(scaledTag("media"), sfDir) {
       import scala.jdk.CollectionConverters._
       Seq(
         (ensureImageTree(sfDir), ".png", "s"),

@@ -14,7 +14,7 @@ import scala.jdk.CollectionConverters._
   */
 object SourceQueries {
 
-  private def rootOf(tag: String, sfDir: String): Path = {
+  private[sources] def rootOf(tag: String, sfDir: String): Path = {
     val safe = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
     Paths.get(System.getProperty("java.io.tmpdir"), s"graft_${tag}_$safe")
   }

@@ -63,9 +63,11 @@ object Sources {
 
   /** I4 — Parquet checkpoint between pipeline stages (replaces the
     * reference's `--cached-pred` re-read toggle, `pyspark_yolox.py:115-119`).
+    * Read back with the schema it wrote: a plain `read.parquet` runs a
+    * footer-inference job.
     */
   def checkpoint(df: DataFrame, path: String): DataFrame = {
     df.write.mode("overwrite").parquet(path)
-    df.sparkSession.read.parquet(path)
+    df.sparkSession.read.schema(df.schema).parquet(path)
   }
 }

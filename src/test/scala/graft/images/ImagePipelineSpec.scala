@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 
 /** End-to-end pipeline over a synthetic 4-level-sharded image tree (the
-  * reference's layout, FIXTURES.md B1): scan → detect(stub) → rollup →
-  * alphabet stat, and scan → colors → histograms.
+  * reference's layout, FIXTURES.md B1): scan → analyze(stub detector) →
+  * rollup → alphabet stat, and scan → analyze → color histograms.
   */
 class ImagePipelineSpec extends SparkSpec {
 
@@ -36,13 +36,11 @@ class ImagePipelineSpec extends SparkSpec {
   }
 
   test("color stats: histogram + all-6-primaries golden format") {
-    val colors = ImagePipeline.colors(
-      ImagePipeline.scanImages(spark, tree, "*.png")).toDF()
-    val hist = StatsPipeline.colorHistogram(colors).collect()
-      .map(r => r.getSeq[Int](0) -> r.getLong(1)).toMap
-    assert(hist(Seq(255, 0, 0)) == 8L && hist(Seq(0, 0, 255)) == 4L)
-    val csv = StatsPipeline.toGoldenCsv(
-      StatsPipeline.closestPrimaryHistogram(colors), ("primary_color", "count"))
+    val colors = ImagePipeline.analyze(
+      ImagePipeline.scanImages(spark, tree, "*.png"), () => new Detection.StubDetector).toDF()
+    val (dominant, primaries) = StatsPipeline.colorHistograms(colors)
+    assert(dominant == Seq("[0, 0, 255]" -> 4L, "[255, 0, 0]" -> 8L))
+    val csv = StatsPipeline.goldenCsv(primaries, ("primary_color", "count"))
     assert(csv ==
       "primary_color;count\n[255, 0, 0];8\n[0, 255, 0];0\n[0, 0, 255];4\n" +
         "[0, 255, 255];0\n[255, 255, 0];0\n[255, 0, 255];0\n")
@@ -51,12 +49,13 @@ class ImagePipelineSpec extends SparkSpec {
   test("detect → perLandmarkRollup → alphabetStat (stages 1/3/4)") {
     import spark.implicits._
     val images = ImagePipeline.scanImages(spark, tree, "*.png")
-    val preds = ImagePipeline.detect(images, () => new Detection.StubDetector)
+    val preds = ImagePipeline.analyze(images, () => new Detection.StubDetector)
+      .select("id", "predictions")
     assert(preds.count() == 12)
     // red images (cls 2 via r=255 → 255/86=2) vs blue (cls 0)
     val labels = (0 until 12).map(i => (f"img$i%02d", if (i < 8) "L1" else "L2"))
       .toDF("id", "landmark_id")
-    val rollup = ImagePipeline.perLandmarkRollup(preds.toDF(), labels)
+    val rollup = ImagePipeline.perLandmarkRollup(preds, labels)
     val byLm = rollup.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(byLm == Map("L1" -> 8L, "L2" -> 4L))
     val names = Seq(("L1", "Alpha"), ("L2", "Beta")).toDF("landmark_id", "name")
@@ -68,9 +67,10 @@ class ImagePipelineSpec extends SparkSpec {
 
   test("colors stage: avg/dominant/closest-primary per image (stage 2)") {
     val images = ImagePipeline.scanImages(spark, tree, "*.png")
-    val c = ImagePipeline.colors(images).collect()
+    val c = ImagePipeline.analyze(images, () => new Detection.StubDetector).collect()
     assert(c.length == 12)
     val red = c.find(_.id == "img00").get
+    assert(red.predictions == Map(2 -> 1L)) // one stub box per image (stage 1)
     assert(red.averageColor == Seq(255, 0, 0))
     assert(red.dominantColor == Seq(255, 0, 0))
     assert(red.closestPrimary == 0)

@@ -2,6 +2,12 @@ package graft.images
 
 import graft.SparkSpec
 import java.nio.file.{Files, Paths}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.datasources.binaryfile.BinaryFileFormat
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** End-to-end: the full three-script-equivalent pipeline over a synthetic
   * sharded image tree, checked down to the golden stat files and compat
@@ -9,7 +15,10 @@ import java.nio.file.{Files, Paths}
   */
 class RunPipelineSpec extends SparkSpec {
 
-  test("RunPipeline produces checkpoints, compat CSV, and golden stats") {
+  /** A 12-image tree sharded like the reference's (8 red images of L1, 4
+    * blue of L2), with its labels and names; the config writes to `out`.
+    */
+  private def config(): RunPipeline.Config = {
     import spark.implicits._
     val root = Files.createTempDirectory("graft_e2e").toString
     val imgDir = s"$root/images"
@@ -24,10 +33,13 @@ class RunPipelineSpec extends SparkSpec {
       .toDF("id", "landmark_id")
     val names = Seq(("L1", "Alcatraz"), ("L2", "Berlin Tower"))
       .toDF("landmark_id", "name")
-    val out = s"$root/out"
+    RunPipeline.Config(imgDir, labels, names, s"$root/out", classesOfInterest = Seq(0, 2))
+  }
 
-    RunPipeline.run(spark, RunPipeline.Config(imgDir, labels, names, out,
-      classesOfInterest = Seq(0, 2)))
+  test("RunPipeline produces checkpoints, compat CSV, and golden stats") {
+    val cfg = config()
+    val out = cfg.outDir
+    RunPipeline.run(spark, cfg)
 
     // checkpoints exist and are re-readable parquet
     assert(spark.read.parquet(s"$out/predictions").count() == 12)
@@ -89,6 +101,56 @@ class RunPipelineSpec extends SparkSpec {
     assert(dash.contains("""src="./plots/alphabet_count_avg/person.html""""))
     assert(dash.contains("""src="./plots/closest_primary/results.html""""))
     assert(!dash.contains("dogs_by_name_length/dog.html")) // class 16 not in run
+  }
+
+  test("RunPipeline job budget: at most 20 Spark jobs and one binaryFile scan per run") {
+    val cfg = config()
+    val group = "run-pipeline-budget"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val jobListener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        Option(js.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))) match {
+          case Some(`group`) => jobs.incrementAndGet()
+          case Some("drained") => drained.countDown()
+          case _ =>
+        }
+    }
+    // every binaryFile scan node of an executed plan, the ones inside a
+    // cached relation included; a cached relation's plan is one object
+    // however many plans read it, so a scan is counted as often as it runs
+    val scans = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[SparkPlan, java.lang.Boolean])
+    def collectScans(p: SparkPlan): Unit = p match {
+      case a: AdaptiveSparkPlanExec => collectScans(a.executedPlan)
+      case q: QueryStageExec => collectScans(q.plan)
+      case m: InMemoryTableScanExec => collectScans(m.relation.cachedPlan)
+      case s: FileSourceScanExec if s.relation.fileFormat.isInstanceOf[BinaryFileFormat] =>
+        scans.add(s)
+      case o => (o.children ++ o.subqueries).foreach(collectScans)
+    }
+    val planListener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        scans.synchronized(collectScans(qe.executedPlan))
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(jobListener)
+    spark.listenerManager.register(planListener)
+    try {
+      sc.setJobGroup(group, group)
+      try RunPipeline.run(spark, cfg) finally sc.clearJobGroup()
+      // listener events arrive in order: once this job's start is seen,
+      // every job of the run has been counted
+      sc.setJobGroup("drained", "drained")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally {
+      sc.removeSparkListener(jobListener)
+      spark.listenerManager.unregister(planListener)
+    }
+    assert(jobs.get() <= 20, s"${jobs.get()} jobs")
+    assert(scans.size == 1, s"${scans.size} binaryFile scans")
   }
 
   test("Plots.readStat fails loudly on a header drift (plots.py KeyError parity)") {

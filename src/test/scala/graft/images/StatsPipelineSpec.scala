@@ -1,6 +1,7 @@
 package graft.images
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Golden-file tests: a hand-built fixture in the reference's data model
@@ -22,6 +23,10 @@ class StatsPipelineSpec extends SparkSpec {
     ).toDF("landmark_id", "image_count", "predictions_sum")
   }
 
+  /** A 2-column stat frame in the golden CSV format. */
+  private def toGoldenCsv(stat: DataFrame, headers: (String, String)): String =
+    StatsPipeline.goldenCsv(stat.collect().toSeq.map(r => (r.get(0), r.get(1))), headers)
+
   private lazy val names = {
     import spark.implicits._
     Seq(
@@ -35,7 +40,7 @@ class StatsPipelineSpec extends SparkSpec {
   test("alphabetStat golden format: letter;count header + rows") {
     val stat = StatsPipeline.alphabetStat(rollup, names, cls = 0)
       .select(col("letter"), col("count"))
-    val csv = StatsPipeline.toGoldenCsv(stat, ("letter", "count"))
+    val csv = toGoldenCsv(stat, ("letter", "count"))
     assert(csv == "letter;count\nA;8\nB;1\nN;2\n")
   }
 
@@ -50,28 +55,28 @@ class StatsPipelineSpec extends SparkSpec {
       1.2345e-7 -> "1.2345e-07", -3e-10 -> "-3e-10", 0.0 -> "0.0",
       123456789012.0 -> "123456789012.0")
     val stat = cases.zipWithIndex.map { case ((v, _), i) => (s"k$i", v) }.toDF("key", "value")
-    val csv = StatsPipeline.toGoldenCsv(stat, ("key", "value"))
+    val csv = toGoldenCsv(stat, ("key", "value"))
     assert(csv == cases.zipWithIndex
       .map { case ((_, r), i) => s"k$i;$r" }.mkString("key;value\n", "\n", "\n"))
   }
 
   test("cityAvgStat: containment theta-join, reference city list") {
     val stat = StatsPipeline.cityAvgStat(rollup, names, cls = 0)
-    val csv = StatsPipeline.toGoldenCsv(stat, ("city", "avg_detections"))
+    val csv = toGoldenCsv(stat, ("city", "avg_detections"))
     // Berlin matches L2 (1/2) and L3 (0/10): 1/12; New York matches L4: 2/4
     assert(csv == "city;avg_detections\nBerlin;" + (1.0 / 12) + "\nNew York;0.5\n")
   }
 
   test("keywordContrastStat golden: avg_all vs avg_people_places") {
     val stat = StatsPipeline.keywordContrastStat(rollup, names, cls = 0)
-    val csv = StatsPipeline.toGoldenCsv(stat, ("files considered", "avg_detections"))
+    val csv = toGoldenCsv(stat, ("files considered", "avg_detections"))
     // all: (8+1+0+2)/(4+2+10+4) = 11/20; people: L2 only → 1/2
     assert(csv == "files considered;avg_detections\navg_all;0.55\navg_people_places;0.5\n")
   }
 
   test("nameLengthStat golden bands for the dog class") {
     val stat = StatsPipeline.nameLengthStat(rollup, names, cls = 16)
-    val csv = StatsPipeline.toGoldenCsv(stat, ("length_of_landmark_name", "avg_detections"))
+    val csv = toGoldenCsv(stat, ("length_of_landmark_name", "avg_detections"))
     // under_10: L1 → 2/4; 10–20: L2+L4 → (0+4)/6; over_20: L3 → 5/10
     assert(csv ==
       "length_of_landmark_name;avg_detections\n" +
@@ -96,6 +101,84 @@ class StatsPipelineSpec extends SparkSpec {
     assert(df.count() == 26)
     val a = df.filter(col("letter") === "A").head().getString(1)
     assert(a == "10588") // BASELINE.md's cited value
+  }
+
+  test("statTable golden files ≡ driver recomputation: classes 0/2/16 and an absent 7, " +
+    "null and non-ASCII names, two cities in one name, no keyword match") {
+    import spark.implicits._
+    val classes = Seq(0, 2, 16, 7) // no image holds class 7
+    // landmark, images, {cls -> count}, name
+    val lms = Seq[(String, Long, Map[Int, Long], String)](
+      ("M1", 3L, Map(0 -> 4L, 2 -> 1L), "Alcatraz"),
+      ("M2", 5L, Map(16 -> 2L), null),
+      ("M3", 2L, Map(0 -> 1L, 16 -> 3L), "éclair Tower of Paris"),
+      ("M4", 7L, Map(2 -> 6L), "Paris to Berlin Express"),
+      // U+FF5A sorts after U+1D538 in UTF-16 units, before it in UTF-8
+      ("M5", 1L, Map(0 -> 2L), "ｚone of Detroit"),
+      // 20 code points (the band's bound), 21 UTF-16 units
+      ("M6", 4L, Map(), "\uD835\uDD38 Warsaw New York Ro"),
+      ("M7", 6L, Map(0 -> 3L, 2 -> 2L), "Berlin"),
+      ("M8", 2L, Map(16 -> 1L), "amber Hall"))
+    val rollup = (lms.map(l => (l._1, l._2, l._3)) :+ (("M9", 9L, Map(0 -> 9L))))
+      .toDF("landmark_id", "image_count", "predictions_sum") // M9 has no name row
+    val names = (lms.map(l => (l._1, l._4)) :+ (("M10", "Paris Orphan")))
+      .toDF("landmark_id", "name")                           // M10 has no rollup row
+    assert(!lms.exists(l => l._4 != null && l._4.toLowerCase.contains("people")))
+
+    // recomputation on the driver: the landmarks of the inner join, their
+    // keys per stat, sums per key, keys in Spark's orderBy order
+    def letter(n: String) =
+      if (n == null) null else new String(Character.toChars(n.codePointAt(0))).toUpperCase
+    def band(n: String) = Option(n).map(x => x.codePointCount(0, x.length)) match {
+      case Some(l) if l < 10 => "under_10_chars"
+      case Some(l) if l <= 20 => "between_10_and_20_chars"
+      case _ => "over_20_chars"
+    }
+    def cities(n: String) = StatsPipeline.Cities.filter(c => n != null && n.contains(c))
+    def avg(c: Long, n: Long) = if (n == 0) 0.0 else c.toDouble / n.toDouble
+    def grouped(keys: String => Seq[String], cls: Int): Seq[(String, Long, Long)] =
+      lms.flatMap(l => keys(l._4).map(k => (k, l._3.getOrElse(cls, 0L), l._2)))
+        .groupBy(_._1).toSeq
+        .map { case (k, rs) => (k, rs.map(_._2).sum, rs.map(_._3).sum) }
+        .sortBy(r => Option(r._1).map(_.getBytes("UTF-8").toSeq.map(_ & 0xFF)))(
+          Ordering.Option(scala.math.Ordering.Implicits.seqOrdering[Seq, Int]))
+    def csv(rows: Seq[(Any, Any)], h: (String, String)) = StatsPipeline.goldenCsv(rows, h)
+    val want = classes.flatMap { cls =>
+      val letters = grouped(n => Seq(letter(n)), cls)
+      Seq(
+        ("alphabet_count", cls.toString) ->
+          csv(letters.map(r => (r._1, r._2)), ("letter", "count")),
+        ("alphabet_count_avg", cls.toString) ->
+          csv(letters.map(r => (r._1, avg(r._2, r._3))), ("letter", "avg_count")),
+        ("avg_obj_per_city", cls.toString) ->
+          csv(grouped(cities, cls).map(r => (r._1, avg(r._2, r._3))), ("city", "avg_detections")),
+        ("dogs_by_name_length", cls.toString) ->
+          csv(grouped(n => Seq(band(n)), cls).map(r => (r._1, avg(r._2, r._3))),
+            ("length_of_landmark_name", "avg_detections")))
+    } :+ (("people_in_places_with_people", "0") -> csv(Seq(
+      "avg_all" -> avg(lms.map(_._3.getOrElse(0, 0L)).sum, lms.map(_._2).sum),
+      "avg_people_places" -> 0.0), ("files considered", "avg_detections")))
+
+    val table = StatsPipeline.statTable(rollup, names, classes).collect().toSeq
+    val got = StatsPipeline.goldenFiles(table, classes)
+      .map { case (dir, name, text) => (dir, name) -> text }
+    assert(got.size == 4 * classes.size + 1)
+    assert(got.toMap == want.toMap)
+    // the orders the recomputation pins: null first, then UTF-8 bytes
+    assert(grouped(n => Seq(letter(n)), 0).map(_._1) ==
+      Seq(null, "A", "B", "P", "É", "\uFF3A", "\uD835\uDD38"))
+    assert(band("\uD835\uDD38 Warsaw New York Ro") == "between_10_and_20_chars")
+    assert(grouped(cities, 0).map(_._1) ==
+      Seq("Berlin", "Detroit", "New York", "Paris", "Warsaw"))
+    assert(want.toMap.apply(("avg_obj_per_city", "7")) ==
+      "city;avg_detections\nBerlin;0.0\nDetroit;0.0\nNew York;0.0\nParis;0.0\nWarsaw;0.0\n")
+    // the per-stat views are filters of the same table and sort in Spark
+    assert(toGoldenCsv(
+      StatsPipeline.alphabetStat(rollup, names, 0).select("letter", "count"),
+      ("letter", "count")) == want.toMap.apply(("alphabet_count", "0")))
+    assert(toGoldenCsv(StatsPipeline.keywordContrastStat(rollup, names, 0),
+      ("files considered", "avg_detections")) ==
+      want.toMap.apply(("people_in_places_with_people", "0")))
   }
 
   test("empty-group safe divide: class absent everywhere → 0.0 rows, not NaN") {

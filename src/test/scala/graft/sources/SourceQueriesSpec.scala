@@ -108,6 +108,11 @@ class SourceQueriesSpec extends SparkSpec {
     } finally rm(root)
   }
 
+  test("media catalog root carries the media scale of the trees it copies") {
+    assert(MediaCatalogQueries.ensureMediaCatalog(sf) ==
+      SourceQueries.rootOf(SourceQueries.scaledTag("media"), sf).toString)
+  }
+
   test("codec roundtrip: snappy and zstd checksums agree") {
     val out = TabularQueries.CodecRoundtrip.run(spark, sf).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getString(2)))
