@@ -22,17 +22,20 @@ object ImageOps {
       ((pixels(i) >> 16) & 0xFF, (pixels(i) >> 8) & 0xFF, pixels(i) & 0xFF)
   }
 
-  /** M1 — decode JPEG/PNG bytes (reference: `cv2.imdecode`,
+  /** M1 — decode image bytes (reference: `cv2.imdecode`,
     * `pyspark_dominant.py:35`). Returns None on undecodable bytes rather
     * than throwing — corrupt files are data, not crashes, at 100 TB.
     *
-    * Every format decodes through the engine's own from-spec codecs:
-    * PNG via [[graft.multimodal.PngCodec]] (its zlib layer and CRCs are
-    * the JDK's `java.util.zip`), GIF via
-    * [[graft.multimodal.GifCodec]], BMP via
+    * Every format decodes through the engine's own from-spec codecs,
+    * tried in this order: PNG via [[graft.multimodal.PngCodec]] (its
+    * zlib layer and CRCs are the JDK's `java.util.zip`), GIF (first
+    * frame) via [[graft.multimodal.GifCodec]], BMP via
     * [[graft.multimodal.BmpCodec]], baseline JPEG via
-    * [[graft.multimodal.JpegCodec]] (each differentially proven against
-    * ImageIO pixel-for-pixel — PngCodecSpec / GifCodecSpec /
+    * [[graft.multimodal.JpegCodec]], TIFF via
+    * [[graft.multimodal.TiffCodec]], lossless WebP via
+    * [[graft.multimodal.WebpCodec]] and QOI via
+    * [[graft.multimodal.QoiCodec]] (the first four differentially
+    * proven against ImageIO pixel-for-pixel — PngCodecSpec / GifCodecSpec /
     * BmpCodecSpec / JpegCodecSpec, the JPEG one BIT-identical through
     * the shared islow/fancy-upsample fixed-point formulation, baseline
     * and progressive alike; 16-bit PNG and RLE8 BMP decode from spec
@@ -48,6 +51,8 @@ object ImageOps {
       .orElse(graft.multimodal.TiffCodec.decode(bytes))
       .orElse(graft.multimodal.WebpCodec.decode(bytes)
         .map(graft.multimodal.WebpCodec.toImage))
+      .orElse(graft.multimodal.QoiCodec.decode(bytes)
+        .map(graft.multimodal.QoiCodec.toImage))
       .orElse(decodeImageIO(bytes))
 
   /** The library path: ImageIO for JPEG/BMP/GIF and PNG shapes outside
@@ -230,33 +235,6 @@ object ImageOps {
       ty += 1
     }
     Image(tw, th, out)
-  }
-
-  /** Perceptual difference hash (dHash-64): area-resize to 9×8, integer
-    * BT.601 luminance (77/150/29 fixed-point, >>8), bit (y,x) set iff
-    * gray(x,y) > gray(x+1,y). Near-identical pixels (recompression, light
-    * noise, small crops) agree within a few bits, so Hamming distance on
-    * the hash is the standard image near-dup predicate — the PIXEL-level
-    * sibling of the text SimHash. Integer-only end to end: bit-identical
-    * on every JVM, so the hash can serve as a shuffle/join key.
-    */
-  def dHash(img: Image): Long = {
-    val s = resizeArea(img, 9, 8)
-    def gray(x: Int, y: Int): Int = {
-      val p = s.pixels(y * 9 + x)
-      (77 * ((p >> 16) & 0xFF) + 150 * ((p >> 8) & 0xFF) + 29 * (p & 0xFF)) >> 8
-    }
-    var h = 0L
-    var y = 0
-    while (y < 8) {
-      var x = 0
-      while (x < 8) {
-        h = (h << 1) | (if (gray(x, y) > gray(x + 1, y)) 1L else 0L)
-        x += 1
-      }
-      y += 1
-    }
-    h
   }
 
   /** Bilinear resize, the semantics of `cv2.INTER_LINEAR` — the

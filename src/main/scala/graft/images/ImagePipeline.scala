@@ -67,27 +67,6 @@ object ImagePipeline {
     }
   }
 
-  /** Image near-duplicate pairs by perceptual hash — the MULTIMODAL dedup
-    * path (the pixel sibling of the text MinHash/SimHash chains): dHash
-    * per image, then the banded Hamming join
-    * ([[graft.dedup.Dedup.hammingJoin]], 4×16-bit bands), so candidates
-    * come from an equi-join, never an all-pairs comparison. Input:
-    * (img_id long, content binary); decode-failed payloads drop out
-    * (corrupt files are data). The only bytes that ever shuffle are
-    * (id, 64-bit hash) pairs.
-    */
-  def imageNearDupPairs(images: DataFrame, maxHamming: Int = 3): DataFrame = {
-    require(maxHamming <= 3, "4-block bucketing guarantees recall only to 3")
-    val dhashUdf = udf((bytes: Array[Byte]) =>
-      ImageOps.decode(bytes).map(ImageOps.dHash))
-    val hashed = images
-      .select(col("img_id").as("id"), dhashUdf(col("content")).as("fp"))
-      .filter(col("fp").isNotNull)
-    graft.dedup.Dedup.hammingJoin(hashed, bandBits = 16, maxHamming)
-      .select(col("id_a"), col("id_b"), col("hamming").cast("long").as("hamming"))
-      .orderBy("id_a", "id_b")
-  }
-
   /** Stage 3 — per-landmark rollup (J2/A4/A5, `pyspark_yolox.py:151-176`):
     * join the image→landmark dim, explode histograms, one grouped aggregate,
     * re-assemble sorted-entry maps. Replaces the reference's

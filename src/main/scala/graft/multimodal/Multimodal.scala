@@ -81,11 +81,7 @@ object Multimodal {
 
     def features(row: MediaRow): Seq[MediaFeatures] = row.modality match {
       case "image" =>
-        // ImageIO formats (PNG/JPEG/BMP/GIF) first; QOI via the engine's
-        // own from-spec codec ([[QoiCodec]]) — same packed-RGB shape
-        ImageOps.decode(row.content)
-          .orElse(QoiCodec.decode(row.content).map(QoiCodec.toImage))
-          .toSeq.map { img =>
+        ImageOps.decode(row.content).toSeq.map { img =>
           val (r, g, b) = ImageOps.averageColor(img)
           MediaFeatures(row.asset_id, "image", 0, img.width, img.height,
             Array(r / 255f, g / 255f, b / 255f, img.width.toFloat, img.height.toFloat),

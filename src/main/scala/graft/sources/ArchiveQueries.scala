@@ -3,7 +3,7 @@ package graft.sources
 import graft.GraftQuery
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import SourceQueries.{fixtureTree, mediaScale, scaledTag}
+import SourceQueries.{Fixture, mediaScale}
 
 /** Archive/crawl ingestion tier (rounds 10–11): the container formats a
   * 100 TB training-data ingest actually walks — POSIX tar, ZIP
@@ -174,13 +174,15 @@ object ArchiveQueries {
       case _ => None
     }
 
+  private[sources] val TarTree = Fixture("tar", "t", "tar", scales = true)
+
   /** Build (atomically, once per scale factor) the TAR fixture tree: 24
     * archives, asset i holding 2 + i%4 entries; entry j is 50 + 37i + 11j
     * bytes with byte k = (13i + 5j + 7k) mod 128 — every field a pure
     * function of (i, j, k), replayed closed-form by the oracle.
     */
   private[sources] def ensureTarTree(sfDir: String): String =
-    fixtureTree(scaledTag("tar"), sfDir) {
+    TarTree.tree(sfDir) {
       import graft.multimodal.TarCodec
       (0 until 24 * mediaScale).iterator.map { i =>
         val files = (0 until 2 + i % 4).map { j =>
@@ -188,7 +190,7 @@ object ArchiveQueries {
             Array.tabulate(50 + 37 * i + 11 * j)(k =>
               ((13 * i + 5 * j + 7 * k) % 128).toByte))
         }
-        (f"${i % 2}/t$i%03d.tar", TarCodec.build(files))
+        (s"${i % 2}/${TarTree.file(i)}", TarCodec.build(files))
       }
     }
 
@@ -208,8 +210,8 @@ object ArchiveQueries {
     def run(spark: SparkSession, sfDir: String): DataFrame = {
       import spark.implicits._
       val root = ensureTarTree(sfDir)
-      val idRe = "t(\\d+)\\.tar".r
-      Sources.binaryTree(spark, root, "*.tar")
+      val idRe = TarTree.idPattern.r
+      TarTree.scan(spark, root)
         .select(col("path"), col("length"))
         .as[(String, Long)]
         .flatMap { case (path, fileLen) =>
@@ -258,24 +260,21 @@ object ArchiveQueries {
         |         CAST(sum(sz) AS BIGINT) AS total_size,
         |         CAST(max(sz) AS BIGINT) AS max_entry
         |  FROM ent GROUP BY 1),
-        |b AS (
-        |  SELECT CAST(regexp_extract(filename, 't(\\d+)\\.tar', 1) AS BIGINT)
-        |           AS asset_idx,
-        |         CAST(octet_length(content) AS BIGINT) AS n_bytes,
-        |         substring(hex(content), 1, 8) AS head_hex
-        |  FROM read_blob('${System.getProperty("java.io.tmpdir")}/graft_tar__root_testdata_sf0.01/**/*.tar'))
+        |b AS (${TarTree.blobRows(4)})
         |SELECT a.asset_idx, a.n_entries, a.total_size, a.max_entry,
         |       pb.sb AS sum_bytes, b.n_bytes, b.head_hex
         |FROM agg a JOIN pb USING (asset_idx) JOIN b USING (asset_idx)
         |ORDER BY a.asset_idx""".stripMargin)
   }
 
+  private[sources] val ZipTree = Fixture("zip", "z", "zip", scales = true)
+
   /** Build (atomically, once per scale factor) the ZIP fixture tree: asset i
     * holds 2 + i%3 members, member j stored when (i+j) is odd and DEFLATEd
     * when even, 40 + 29i + 13j bytes with byte k = (11i+3j+5k) mod 128.
     */
   private[sources] def ensureZipTree(sfDir: String): String =
-    fixtureTree(scaledTag("zip"), sfDir) {
+    ZipTree.tree(sfDir) {
       import graft.multimodal.ZipCodec
       (0 until 24 * mediaScale).iterator.map { i =>
         val files = (0 until 2 + i % 3).map { j =>
@@ -284,7 +283,7 @@ object ArchiveQueries {
               ((11 * i + 3 * j + 5 * k) % 128).toByte),
             (i + j) % 2 == 0)
         }
-        (f"${i % 2}/z$i%03d.zip", ZipCodec.build(files))
+        (s"${i % 2}/${ZipTree.file(i)}", ZipCodec.build(files))
       }
     }
 
@@ -305,8 +304,8 @@ object ArchiveQueries {
     def run(spark: SparkSession, sfDir: String): DataFrame = {
       import spark.implicits._
       val root = ensureZipTree(sfDir)
-      val idRe = "z(\\d+)\\.zip".r
-      Sources.binaryTree(spark, root, "*.zip")
+      val idRe = ZipTree.idPattern.r
+      ZipTree.scan(spark, root)
         .select(col("path"), col("length"))
         .as[(String, Long)]
         .flatMap { case (path, fileLen) =>
@@ -349,17 +348,14 @@ object ArchiveQueries {
         |         CAST(sum(defl) AS BIGINT) AS n_deflated,
         |         CAST(sum(sz) AS BIGINT) AS total_uncompressed
         |  FROM mem GROUP BY 1),
-        |b AS (
-        |  SELECT CAST(regexp_extract(filename, 'z(\\d+)\\.zip', 1) AS BIGINT)
-        |           AS asset_idx,
-        |         CAST(octet_length(content) AS BIGINT) AS n_bytes,
-        |         substring(hex(content), 1, 8) AS head_hex
-        |  FROM read_blob('${System.getProperty("java.io.tmpdir")}/graft_zip__root_testdata_sf0.01/**/*.zip'))
+        |b AS (${ZipTree.blobRows(4)})
         |SELECT a.asset_idx, a.n_members, a.n_deflated, a.total_uncompressed,
         |       pb.sb AS sum_bytes, b.n_bytes, b.head_hex
         |FROM agg a JOIN pb USING (asset_idx) JOIN b USING (asset_idx)
         |ORDER BY a.asset_idx""".stripMargin)
   }
+
+  private[sources] val WarcTree = Fixture("warc", "w", "warc.gz", scales = true)
 
   /** Build (atomically, once per scale factor) the `.warc.gz` fixture tree in
     * the Common Crawl carriage — asset i = 2 + i%3 records, EACH its own
@@ -368,7 +364,7 @@ object ArchiveQueries {
     * 30 + 17i + 9j bytes with byte k = (7i + 3j + 5k) mod 128.
     */
   private[graft] def ensureWarcTree(sfDir: String): String =
-    fixtureTree(scaledTag("warc"), sfDir) {
+    WarcTree.tree(sfDir) {
       import graft.multimodal.{GzipCodec, WarcCodec}
       (0 until 24 * mediaScale).iterator.map { i =>
         val members = (0 until 2 + i % 3).map { j =>
@@ -382,7 +378,7 @@ object ArchiveQueries {
           GzipCodec.buildMember(WarcCodec.buildRecord(
             tpe, s"<urn:uuid:$i-$j>", "2026-01-01T00:00:00Z", uri, payload))
         }
-        (f"${i % 2}/w$i%03d.warc.gz",
+        (s"${i % 2}/${WarcTree.file(i)}",
           members.reduce(_ ++ _))
       }
     }
@@ -407,8 +403,8 @@ object ArchiveQueries {
     def run(spark: SparkSession, sfDir: String): DataFrame = {
       import spark.implicits._
       val root = ensureWarcTree(sfDir)
-      val idRe = "w(\\d+)\\.warc\\.gz".r
-      Sources.binaryTree(spark, root, "*.warc.gz")
+      val idRe = WarcTree.idPattern.r
+      WarcTree.scan(spark, root)
         .select(col("path"), col("length"))
         .as[(String, Long)]
         .flatMap { case (path, fileLen) =>
@@ -470,12 +466,7 @@ object ArchiveQueries {
         |              AS BIGINT) AS n_uris,
         |         CAST(sum(sz) AS BIGINT) AS total_content_length
         |  FROM rec GROUP BY 1),
-        |b AS (
-        |  SELECT CAST(regexp_extract(filename, 'w(\\d+)\\.warc\\.gz', 1)
-        |              AS BIGINT) AS asset_idx,
-        |         CAST(octet_length(content) AS BIGINT) AS n_bytes,
-        |         substring(hex(content), 1, 8) AS head_hex
-        |  FROM read_blob('${System.getProperty("java.io.tmpdir")}/graft_warc__root_testdata_sf0.01/**/*.warc.gz'))
+        |b AS (${WarcTree.blobRows(4)})
         |SELECT a.asset_idx, a.n_records, a.n_response, a.n_request, a.n_uris,
         |       a.total_content_length, pb.sb AS sum_bytes, b.n_bytes,
         |       b.head_hex
@@ -506,6 +497,9 @@ object ArchiveQueries {
     out.write("0\r\n\r\n".getBytes(iso))
     out.toByteArray
   }
+
+  private[sources] val WarcHtmlTree = Fixture("warch5", "h", "warc.gz",
+    scales = true)
 
   /** Build (atomically, once per scale factor) the HTML-payload `.warc.gz`
     * tree — round-11 shape: response records carry the RAW HTTP MESSAGE
@@ -547,7 +541,7 @@ object ArchiveQueries {
     * record through cannot reproduce the counts.
     */
   private[sources] def ensureWarcHtmlTree(sfDir: String): String =
-    fixtureTree(scaledTag("warch5"), sfDir) {
+    WarcHtmlTree.tree(sfDir) {
       import graft.multimodal.{GzipCodec, WarcCodec}
       val iso = java.nio.charset.StandardCharsets.ISO_8859_1
       (0 until 24 * mediaScale).iterator.map { i =>
@@ -626,7 +620,7 @@ object ArchiveQueries {
             (s"<html><body><h1>h$i é</h1><p>w1 &amp; w1 &#66; &#x62; " +
               "a&nbsp;b</p></body></html>").getBytes(
               java.nio.charset.StandardCharsets.UTF_8)))
-        (f"${i % 2}/h$i%03d.warc.gz",
+        (s"${i % 2}/${WarcHtmlTree.file(i)}",
           (members :+ notFound :+ redirect :+ brClaim).reduce(_ ++ _))
       }
     }
@@ -653,8 +647,8 @@ object ArchiveQueries {
     def run(spark: SparkSession, sfDir: String): DataFrame = {
       import spark.implicits._
       val root = ensureWarcHtmlTree(sfDir)
-      val idRe = "h(\\d+)\\.warc\\.gz".r
-      val docs = Sources.binaryTree(spark, root, "*.warc.gz")
+      val idRe = WarcHtmlTree.idPattern.r
+      val docs = WarcHtmlTree.scan(spark, root)
         .select(col("path"))
         .as[String]
         .flatMap { path =>
@@ -713,13 +707,15 @@ object ArchiveQueries {
         |FROM per GROUP BY 1 ORDER BY 1""".stripMargin)
   }
 
+  private[sources] val TgzTree = Fixture("tgz", "g", "tar.gz", scales = true)
+
   /** Build (atomically, once per scale factor) the `.tar.gz` fixture tree —
     * the dataset-tarball shape (one gzip member wrapping one tar): asset i
     * holds 2 + i%3 entries, entry j is 60 + 23i + 9j bytes with byte
     * k = (17i + 7j + 3k) mod 128.
     */
   private[sources] def ensureTgzTree(sfDir: String): String =
-    fixtureTree(scaledTag("tgz"), sfDir) {
+    TgzTree.tree(sfDir) {
       import graft.multimodal.{GzipCodec, TarCodec}
       (0 until 24 * mediaScale).iterator.map { i =>
         val files = (0 until 2 + i % 3).map { j =>
@@ -727,8 +723,9 @@ object ArchiveQueries {
             Array.tabulate(60 + 23 * i + 9 * j)(k =>
               ((17 * i + 7 * j + 3 * k) % 128).toByte))
         }
-        (f"${i % 2}/g$i%03d.tar.gz",
-          GzipCodec.buildMember(TarCodec.build(files), Some(f"g$i%03d.tar")))
+        (s"${i % 2}/${TgzTree.file(i)}",
+          GzipCodec.buildMember(TarCodec.build(files),
+            Some(TgzTree.file(i, "tar"))))
       }
     }
 
@@ -749,8 +746,8 @@ object ArchiveQueries {
     def run(spark: SparkSession, sfDir: String): DataFrame = {
       import spark.implicits._
       val root = ensureTgzTree(sfDir)
-      val idRe = "g(\\d+)\\.tar\\.gz".r
-      Sources.binaryTree(spark, root, "*.tar.gz")
+      val idRe = TgzTree.idPattern.r
+      TgzTree.scan(spark, root)
         .select(col("path"), col("length"))
         .as[(String, Long)]
         .flatMap { case (path, fileLen) =>
@@ -801,16 +798,15 @@ object ArchiveQueries {
         |         CAST(sum(512 + 512 * ((sz + 511) // 512)) + 1024 AS BIGINT)
         |           AS tar_bytes
         |  FROM ent GROUP BY 1),
-        |b AS (
-        |  SELECT CAST(regexp_extract(filename, 'g(\\d+)\\.tar\\.gz', 1)
-        |              AS BIGINT) AS asset_idx,
-        |         CAST(octet_length(content) AS BIGINT) AS n_bytes
-        |  FROM read_blob('${System.getProperty("java.io.tmpdir")}/graft_tgz__root_testdata_sf0.01/**/*.tar.gz'))
+        |b AS (${TgzTree.blobRows()})
         |SELECT a.asset_idx, a.n_entries, a.total_size, pb.sb AS sum_bytes,
         |       a.tar_bytes, b.n_bytes
         |FROM agg a JOIN pb USING (asset_idx) JOIN b USING (asset_idx)
         |ORDER BY a.asset_idx""".stripMargin)
   }
+
+  private[sources] val WarcLinkTree = Fixture("whlink2", "l", "warc.gz",
+    scales = true)
 
   /** Build (atomically, once per scale factor) the link-graph `.warc.gz`
     * tree: response page (i, j) carries 1 + (i+j)%3 anchors, anchor l
@@ -823,7 +819,7 @@ object ArchiveQueries {
     * reader ingested it.
     */
   private[sources] def ensureWarcLinkTree(sfDir: String): String =
-    fixtureTree(scaledTag("whlink2"), sfDir) {
+    WarcLinkTree.tree(sfDir) {
       import graft.multimodal.{GzipCodec, WarcCodec}
       val iso = java.nio.charset.StandardCharsets.ISO_8859_1
       (0 until 24 * mediaScale).iterator.map { i =>
@@ -858,7 +854,7 @@ object ArchiveQueries {
             """<html><body><a href="http://s0.example/p0">x</a>""" +
             """<a href="http://s0.example/p0">x</a></body></html>""")
             .getBytes(iso)))
-        (f"${i % 2}/l$i%03d.warc.gz",
+        (s"${i % 2}/${WarcLinkTree.file(i)}",
           (members :+ notFound).reduce(_ ++ _))
       }
     }
@@ -868,23 +864,20 @@ object ArchiveQueries {
     * walk → HTTP parse → 200-only gate → (page uri, html) rows. Only
     * the gated pages' text leaves the scan.
     */
-  private def linkPages(spark: SparkSession, root: String,
-      idRe: scala.util.matching.Regex): DataFrame = {
+  private def linkPages(spark: SparkSession, root: String): DataFrame = {
     import spark.implicits._
-    Sources.binaryTree(spark, root, "*.warc.gz")
+    WarcLinkTree.scan(spark, root)
       .select(col("path"))
       .as[String]
       .flatMap { path =>
-        idRe.findFirstMatchIn(path).toSeq.flatMap { _ =>
-          warcRows(path) { (_, r) =>
-            for {
-              uri <- r.targetUri.toSeq
-              if r.warcType == "response"
-              msg <- graft.text.HtmlOps.httpParse(r.payload).toSeq
-              if msg.status == 200
-            } yield (uri, new String(msg.body,
-              java.nio.charset.StandardCharsets.UTF_8))
-          }
+        warcRows(path) { (_, r) =>
+          for {
+            uri <- r.targetUri.toSeq
+            if r.warcType == "response"
+            msg <- graft.text.HtmlOps.httpParse(r.payload).toSeq
+            if msg.status == 200
+          } yield (uri, new String(msg.body,
+            java.nio.charset.StandardCharsets.UTF_8))
         }
       }
       .toDF("page", "html")
@@ -904,9 +897,7 @@ object ArchiveQueries {
     val name = "q_html_link_graph"
     def run(spark: SparkSession, sfDir: String): DataFrame = {
       import spark.implicits._
-      val root = ensureWarcLinkTree(sfDir)
-      val idRe = "l(\\d+)\\.warc\\.gz".r
-      val pages = linkPages(spark, root, idRe)
+      val pages = linkPages(spark, ensureWarcLinkTree(sfDir))
       pages
         .select(col("page"), explode(expr(
           """regexp_extract_all(html, '<a href="([^"]+)"', 1)""")).as("href"))
@@ -936,6 +927,9 @@ object ArchiveQueries {
         |FROM links GROUP BY 1 ORDER BY 1""".stripMargin)
   }
 
+  private[sources] val CrawlTree = Fixture("crawl2", "c", "warc.gz",
+    scales = true)
+
   /** Build (atomically, once per scale factor) the crawl-corpus `.warc.gz`
     * tree — the capstone fixture: 24 hosts, each with 3 + i%2 HTTP-framed
     * HTML responses PLANTED to exercise every curation stage:
@@ -958,7 +952,7 @@ object ArchiveQueries {
     * fingerprints and the full MinHash math.
     */
   private[sources] def ensureCrawlTree(sfDir: String): String =
-    fixtureTree(scaledTag("crawl2"), sfDir) {
+    CrawlTree.tree(sfDir) {
       import graft.multimodal.{GzipCodec, WarcCodec}
       val iso = java.nio.charset.StandardCharsets.ISO_8859_1
       val utf8 = java.nio.charset.StandardCharsets.UTF_8
@@ -1012,7 +1006,7 @@ object ArchiveQueries {
             s"http://h$i.example/p1\r\nContent-Type: text/html\r\n\r\n" +
             "<html><body><p>the document has moved to a new home " +
             "for the data</p></body></html>").getBytes(iso)))
-        (f"${i % 2}/c$i%03d.warc.gz",
+        (s"${i % 2}/${CrawlTree.file(i)}",
           (members :+ notFound :+ redirect).reduce(_ ++ _))
       }
     }
@@ -1048,8 +1042,8 @@ object ArchiveQueries {
       import spark.implicits._
       import graft.text.{HtmlOps, TextOps, TextPipeline}
       val root = ensureCrawlTree(sfDir)
-      val idRe = "c(\\d+)\\.warc\\.gz".r
-      val pages = Sources.binaryTree(spark, root, "*.warc.gz")
+      val idRe = CrawlTree.idPattern.r
+      val pages = CrawlTree.scan(spark, root)
         .select(col("path"))
         .as[String]
         .flatMap { path =>
@@ -1168,9 +1162,7 @@ object ArchiveQueries {
     val name = "q_crawl_pagerank"
     def run(spark: SparkSession, sfDir: String): DataFrame = {
       import spark.implicits._
-      val root = ensureWarcLinkTree(sfDir)
-      val idRe = "l(\\d+)\\.warc\\.gz".r
-      val pages = linkPages(spark, root, idRe)
+      val pages = linkPages(spark, ensureWarcLinkTree(sfDir))
       val edges = pages
         .select(col("page").as("w1"), explode(expr(
           """regexp_extract_all(html, '<a href="([^"]+)"', 1)""")).as("w2"))
@@ -1228,6 +1220,9 @@ object ArchiveQueries {
     }
   }
 
+  private[sources] val RobotsTree = Fixture("robots4", "r", "warc.gz",
+    scales = true)
+
   /** Build (atomically, once per scale factor) the robots-frontier `.warc.gz`
     * tree: the planted web-graph page/anchor formulas (now with DEEP targets:
     * anchor l points at `/p<(j+l)%5>` when l is even and at
@@ -1275,7 +1270,7 @@ object ArchiveQueries {
     * (its old rules are gone and every h5 count shifts).
     */
   private[sources] def ensureRobotsTree(sfDir: String): String =
-    fixtureTree(scaledTag("robots4"), sfDir) {
+    RobotsTree.tree(sfDir) {
       import graft.multimodal.{GzipCodec, WarcCodec}
       val iso = java.nio.charset.StandardCharsets.ISO_8859_1
       (0 until 24 * mediaScale).iterator.map { i =>
@@ -1365,7 +1360,7 @@ object ArchiveQueries {
                 http("500 Internal Server Error", "err".getBytes(utf8))))
             }
           } else Seq.empty
-        (f"${i % 2}/r$i%03d.warc.gz",
+        (s"${i % 2}/${RobotsTree.file(i)}",
           (pageMembers ++ Seq(notFound) ++ robotsMember).reduce(_ ++ _))
       }
     }
@@ -1405,7 +1400,7 @@ object ArchiveQueries {
       val root = ensureRobotsTree(sfDir)
       // one decoded pass over the tree: link rows (kind 0) + parsed
       // rule rows (kind 1), persisted — two consumers below
-      val recs = Sources.binaryTree(spark, root, "*.warc.gz")
+      val recs = RobotsTree.scan(spark, root)
         .select(col("path"))
         .as[String]
         .flatMap { path =>
@@ -1590,6 +1585,9 @@ object ArchiveQueries {
         |FROM dec GROUP BY h ORDER BY host""".stripMargin)
   }
 
+  private[sources] val MainContentTree = Fixture("mainc2", "m", "html",
+    scales = true)
+
   /** Build (atomically, once per scale factor) the main-content HTML tree:
     * plain `.html` files (the post-WARC landing shape), page i carrying a nav
     * block (pure links), 5 + i%7 content paragraphs of 8 deterministic
@@ -1602,7 +1600,7 @@ object ArchiveQueries {
     * and a footer mixing two links with two plain tokens.
     */
   private[sources] def ensureMainContentTree(sfDir: String): String =
-    fixtureTree(scaledTag("mainc2"), sfDir) {
+    MainContentTree.tree(sfDir) {
       val stop = graft.text.TextOps.stopwords
       (0 until 24 * mediaScale).iterator.map { i =>
         val nw = 5 + i % 7
@@ -1622,7 +1620,7 @@ object ArchiveQueries {
           """<script>var x = "<p>trap trap trap trap trap</p>";</script>""" +
           """<footer><a href="/ab">about</a> <a href="/c">contact</a>""" +
           " copy site</footer></body></html>"
-        (f"${i % 2}/m$i%03d.html",
+        (s"${i % 2}/${MainContentTree.file(i)}",
           html.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       }
     }
@@ -1652,14 +1650,9 @@ object ArchiveQueries {
     val name = "q_main_content"
     def run(spark: SparkSession, sfDir: String): DataFrame = {
       import spark.implicits._
-      val root = ensureMainContentTree(sfDir)
-      val idRe = "m(\\d+)\\.html".r
-      val pages = Sources.binaryTree(spark, root, "*.html")
-        .select(col("path"), col("content"))
-        .as[(String, Array[Byte])]
-        .flatMap { case (path, content) =>
-          idRe.findFirstMatchIn(path).toSeq.map(m => (m.group(1).toLong,
-            new String(content, java.nio.charset.StandardCharsets.UTF_8)))
+      val pages = MainContentTree.assets(spark, ensureMainContentTree(sfDir))
+        .map { case (idx, content) =>
+          (idx, new String(content, java.nio.charset.StandardCharsets.UTF_8))
         }
         .toDF("asset_idx", "html")
       val segmented = pages
@@ -1709,6 +1702,9 @@ object ArchiveQueries {
         |FROM specs ORDER BY asset_idx""".stripMargin)
   }
 
+  private[sources] val MimeTree = Fixture("mime1", "m", "warc.gz",
+    scales = true)
+
   /** Build (atomically, once per scale factor) the MIME-routing tree: 24
     * `.warc.gz` files, file i holding 4 + i%4 response records at
     * `/m{i}/{j}` whose (declared Content-Type, actual bytes) pairs
@@ -1726,7 +1722,7 @@ object ArchiveQueries {
     *    sniff REFINES an honest-but-vague declaration).
     */
   private[graft] def ensureMimeTree(sfDir: String): String =
-    fixtureTree(scaledTag("mime1"), sfDir) {
+    MimeTree.tree(sfDir) {
       import graft.multimodal.{GzipCodec, WarcCodec}
       val utf8 = java.nio.charset.StandardCharsets.UTF_8
       val iso = java.nio.charset.StandardCharsets.ISO_8859_1
@@ -1762,7 +1758,7 @@ object ArchiveQueries {
             Array[Byte]('P', 'K', 0x03, 0x04) ++
               Array.tabulate(4)(k => (k + i).toByte))
         }
-        (f"${i % 2}/m$i%03d.warc.gz",
+        (s"${i % 2}/${MimeTree.file(i)}",
           (info +: recs).reduce(_ ++ _))
       }
     }
@@ -1786,7 +1782,7 @@ object ArchiveQueries {
     def run(spark: SparkSession, sfDir: String): DataFrame = {
       import spark.implicits._
       val root = ensureMimeTree(sfDir)
-      Sources.binaryTree(spark, root, "*.warc.gz")
+      MimeTree.scan(spark, root)
         .select(col("path"))
         .as[String]
         .flatMap { file =>

@@ -5,13 +5,15 @@ import graft.images.ImageOps
 import graft.multimodal.TiffCodec
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import SourceQueries.{fixtureTree, mediaScale, scaledTag}
+import SourceQueries.{Fixture, mediaScale}
 
 /** FLAC-carrying container fixture trees and scans (MP4, Ogg, Matroska).
   * Split from SourceQueries.scala (round 10) - mechanical move, no
   * behavior change; fixture dirs and oracle SQL are byte-identical.
   */
 object AudioContainerQueries {
+
+  private[sources] val Mp4Tree = Fixture("mp4", "m", "m4a", scales = false)
 
   /** Build (atomically, once per scale factor) the FLAC-in-MP4 fixture tree:
     * 24 .m4a files whose PCM is a pure function of the asset index —
@@ -23,12 +25,12 @@ object AudioContainerQueries {
     * multiple, so every file has ≥ 2 samples with a short last frame.
     */
   private[sources] def ensureMp4Tree(sfDir: String): String =
-    fixtureTree("mp4", sfDir) {
+    Mp4Tree.tree(sfDir) {
       (0 until 24).iterator.map { i =>
         val n = 4500 + 137 * i
         val pcm = Array.tabulate(n)(t => ((i * 23 + t * 7) % 65536) - 32768)
         val flac = graft.multimodal.FlacCodec.encode(16000 + 50 * i, Array(pcm))
-        (f"${i % 2}/${i % 3}/m$i%03d.m4a",
+        (s"${i % 2}/${i % 3}/${Mp4Tree.file(i)}",
           graft.multimodal.Mp4Codec.muxFlac(flac)
             .getOrElse(sys.error(s"muxFlac refused asset $i")))
       }
@@ -52,12 +54,8 @@ object AudioContainerQueries {
     val name = "q_mp4_scan"
     def run(spark: SparkSession, sfDir: String): DataFrame = {
       import spark.implicits._
-      val root = ensureMp4Tree(sfDir)
-      val idRe = "m(\\d+)\\.m4a".r
-      Sources.binaryTree(spark, root, "*.m4a")
-        .select(col("path"), col("content"))
-        .as[(String, Array[Byte])]
-        .flatMap { case (path, content) =>
+      Mp4Tree.assets(spark, ensureMp4Tree(sfDir))
+        .flatMap { case (idx, content) =>
           import graft.multimodal.{FlacCodec, Mp4Codec}
           for {
             tracks <- Mp4Codec.demux(content).toSeq
@@ -70,7 +68,6 @@ object AudioContainerQueries {
             var mn = Int.MaxValue
             var mx = Int.MinValue
             s.foreach { v => sum += v; if (v < mn) mn = v; if (v > mx) mx = v }
-            val idx = Sources.assetIdx(path, idRe)
             (idx, t.sampleRate.toLong, t.samples.length.toLong, s.length.toLong,
               sum, mn.toLong, mx.toLong, content.length.toLong,
               Sources.headHex(content))
@@ -80,15 +77,8 @@ object AudioContainerQueries {
           "sum_samples", "min_sample", "max_sample", "n_bytes", "head_hex")
         .orderBy("asset_idx")
     }
-    // Same pinned-glob stance as q_flac_scan/q_zmbv_scan: static oracle
-    // text, correctness gate at sf0.01 only.
     val oracle = Some(
-      """WITH f AS (
-        |  SELECT CAST(regexp_extract(filename, 'm(\d+)\.m4a', 1) AS BIGINT)
-        |           AS asset_idx,
-        |         CAST(octet_length(content) AS BIGINT) AS n_bytes,
-        |         substring(hex(content), 1, 16) AS head_hex
-        |  FROM read_blob('/tmp/graft_mp4__root_testdata_sf0.01/**/*.m4a')),
+      s"""WITH f AS (${Mp4Tree.blobRows(8)}),
         |s AS (
         |  SELECT asset_idx, n_bytes, head_hex,
         |         16000 + 50 * asset_idx AS sample_rate,
@@ -109,6 +99,8 @@ object AudioContainerQueries {
         |ORDER BY s.asset_idx""".stripMargin)
   }
 
+  private[sources] val OggTree = Fixture("ogg", "o", "ogg", scales = true)
+
   /** Build (atomically, once per scale factor) the FLAC-in-Ogg fixture tree:
     * 24 .ogg files whose PCM is a pure function of the asset index —
     * s(i, t) = ((41·i + 17·t) mod 65536) − 32768, n = 6000 + 131·i
@@ -121,12 +113,12 @@ object AudioContainerQueries {
     * values.
     */
   private[sources] def ensureOggTree(sfDir: String): String =
-    fixtureTree(scaledTag("ogg"), sfDir) {
+    OggTree.tree(sfDir) {
       (0 until 24 * mediaScale).iterator.map { i =>
         val n = 6000 + 131 * i
         val pcm = Array.tabulate(n)(t => ((i * 41 + t * 17) % 65536) - 32768)
         val flac = graft.multimodal.FlacCodec.encode(11025 + 111 * i, Array(pcm))
-        (f"${i % 2}/${i % 3}/o$i%03d.ogg",
+        (s"${i % 2}/${i % 3}/${OggTree.file(i)}",
           graft.multimodal.OggCodec.muxFlac(flac)
             .getOrElse(sys.error(s"muxFlac refused asset $i")))
       }
@@ -151,12 +143,8 @@ object AudioContainerQueries {
     val name = "q_ogg_scan"
     def run(spark: SparkSession, sfDir: String): DataFrame = {
       import spark.implicits._
-      val root = ensureOggTree(sfDir)
-      val idRe = "o(\\d+)\\.ogg".r
-      Sources.binaryTree(spark, root, "*.ogg")
-        .select(col("path"), col("content"))
-        .as[(String, Array[Byte])]
-        .flatMap { case (path, content) =>
+      OggTree.assets(spark, ensureOggTree(sfDir))
+        .flatMap { case (idx, content) =>
           import graft.multimodal.{FlacCodec, OggCodec}
           for {
             nPackets <- OggCodec.packets(content).map(_.length).toSeq
@@ -168,7 +156,6 @@ object AudioContainerQueries {
             var mn = Int.MaxValue
             var mx = Int.MinValue
             s.foreach { v => sum += v; if (v < mn) mn = v; if (v > mx) mx = v }
-            val idx = Sources.assetIdx(path, idRe)
             (idx, pcm.sampleRate.toLong, nPackets.toLong, s.length.toLong,
               sum, mn.toLong, mx.toLong, content.length.toLong,
               Sources.headHex(content))
@@ -178,15 +165,8 @@ object AudioContainerQueries {
           "sum_samples", "min_sample", "max_sample", "n_bytes", "head_hex")
         .orderBy("asset_idx")
     }
-    // Same pinned-glob stance as q_flac_scan/q_mp4_scan: static oracle
-    // text, correctness gate at sf0.01 only.
     val oracle = Some(
-      """WITH f AS (
-        |  SELECT CAST(regexp_extract(filename, 'o(\d+)\.ogg', 1) AS BIGINT)
-        |           AS asset_idx,
-        |         CAST(octet_length(content) AS BIGINT) AS n_bytes,
-        |         substring(hex(content), 1, 16) AS head_hex
-        |  FROM read_blob('/tmp/graft_ogg__root_testdata_sf0.01/**/*.ogg')),
+      s"""WITH f AS (${OggTree.blobRows(8)}),
         |s AS (
         |  SELECT asset_idx, n_bytes, head_hex,
         |         11025 + 111 * asset_idx AS sample_rate,
@@ -208,6 +188,8 @@ object AudioContainerQueries {
         |ORDER BY s.asset_idx""".stripMargin)
   }
 
+  private[sources] val MkvTree = Fixture("mkv", "k", "mka", scales = true)
+
   /** Build (atomically, once per scale factor) the FLAC-in-Matroska fixture
     * tree: 24 .mka files whose PCM is a pure function of the asset index —
     * s(i, t) = ((37·i + 13·t) mod 65536) − 32768, n = 30000 + 1234·i
@@ -220,12 +202,12 @@ object AudioContainerQueries {
     * path at least via a full first cluster and most have ≥ 2 clusters.
     */
   private[sources] def ensureMkvTree(sfDir: String): String =
-    fixtureTree(scaledTag("mkv"), sfDir) {
+    MkvTree.tree(sfDir) {
       (0 until 24 * mediaScale).iterator.map { i =>
         val n = 30000 + 1234 * i
         val pcm = Array.tabulate(n)(t => ((i * 37 + t * 13) % 65536) - 32768)
         val flac = graft.multimodal.FlacCodec.encode(9000 + 77 * i, Array(pcm))
-        (f"${i % 2}/${i % 3}/k$i%03d.mka",
+        (s"${i % 2}/${i % 3}/${MkvTree.file(i)}",
           graft.multimodal.MkvCodec.muxFlac(flac)
             .getOrElse(sys.error(s"muxFlac refused asset $i")))
       }
@@ -251,12 +233,8 @@ object AudioContainerQueries {
     val name = "q_mkv_scan"
     def run(spark: SparkSession, sfDir: String): DataFrame = {
       import spark.implicits._
-      val root = ensureMkvTree(sfDir)
-      val idRe = "k(\\d+)\\.mka".r
-      Sources.binaryTree(spark, root, "*.mka")
-        .select(col("path"), col("content"))
-        .as[(String, Array[Byte])]
-        .flatMap { case (path, content) =>
+      MkvTree.assets(spark, ensureMkvTree(sfDir))
+        .flatMap { case (idx, content) =>
           import graft.multimodal.{FlacCodec, MkvCodec}
           for {
             tracks <- MkvCodec.demux(content).toSeq
@@ -269,7 +247,6 @@ object AudioContainerQueries {
             var mn = Int.MaxValue
             var mx = Int.MinValue
             s.foreach { v => sum += v; if (v < mn) mn = v; if (v > mx) mx = v }
-            val idx = Sources.assetIdx(path, idRe)
             (idx, t.sampleRate.toLong, t.frames.length.toLong, s.length.toLong,
               sum, mn.toLong, mx.toLong, content.length.toLong,
               Sources.headHex(content))
@@ -279,15 +256,8 @@ object AudioContainerQueries {
           "sum_samples", "min_sample", "max_sample", "n_bytes", "head_hex")
         .orderBy("asset_idx")
     }
-    // Same pinned-glob stance as q_flac_scan/q_mp4_scan/q_ogg_scan:
-    // static oracle text, correctness gate at sf0.01 only.
     val oracle = Some(
-      """WITH f AS (
-        |  SELECT CAST(regexp_extract(filename, 'k(\d+)\.mka', 1) AS BIGINT)
-        |           AS asset_idx,
-        |         CAST(octet_length(content) AS BIGINT) AS n_bytes,
-        |         substring(hex(content), 1, 16) AS head_hex
-        |  FROM read_blob('/tmp/graft_mkv__root_testdata_sf0.01/**/*.mka')),
+      s"""WITH f AS (${MkvTree.blobRows(8)}),
         |s AS (
         |  SELECT asset_idx, n_bytes, head_hex,
         |         9000 + 77 * asset_idx AS sample_rate,

@@ -4,9 +4,9 @@ import graft.GraftQuery
 import graft.dedup.Dedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import SourceQueries.keepLargest
-import AudioSourceQueries.ensureFlacTree
-import AudioContainerQueries.{ensureOggTree, ensureMkvTree}
+import SourceQueries.{Fixture, keepLargest}
+import AudioSourceQueries.{FlacTree, ensureFlacTree}
+import AudioContainerQueries.{MkvTree, OggTree, ensureOggTree, ensureMkvTree}
 
 /** Audio perceptual dedup: energy-contour fingerprints, banded near-dup
   * join, end-to-end cluster + representative tier.
@@ -24,27 +24,22 @@ object AudioDedupQueries {
   private[sources] def audioFpRows(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     import graft.multimodal.{AudioFingerprint, FlacCodec, MkvCodec, OggCodec}
-    def scan(root: String, glob: String, kind: String, re: String,
-        toFlac: Array[Byte] => Option[Array[Byte]]): DataFrame = {
-      val rex = re.r
-      Sources.binaryTree(spark, root, glob)
-        .select(col("path"), col("content"))
-        .as[(String, Array[Byte])]
-        .flatMap { case (path, content) =>
+    def scan(tree: Fixture, root: String, kind: String,
+        toFlac: Array[Byte] => Option[Array[Byte]]): DataFrame =
+      tree.assets(spark, root)
+        .flatMap { case (idx, content) =>
           for {
             stream <- toFlac(content).toSeq
             pcm <- FlacCodec.decode(stream).toSeq
-            m <- rex.findFirstMatchIn(path).toSeq
-          } yield (kind, m.group(1).toLong,
+          } yield (kind, idx,
             AudioFingerprint.energyContour(pcm.channels(0)),
             pcm.channels(0).length.toLong)
         }
         .toDF("kind", "asset_idx", "fp", "n_samples")
-    }
-    scan(ensureFlacTree(sfDir), "*.flac", "a", "a(\\d+)\\.flac", bs => Some(bs))
-      .unionByName(scan(ensureOggTree(sfDir), "*.ogg", "o", "o(\\d+)\\.ogg",
+    scan(FlacTree, ensureFlacTree(sfDir), "a", bs => Some(bs))
+      .unionByName(scan(OggTree, ensureOggTree(sfDir), "o",
         OggCodec.flacStream))
-      .unionByName(scan(ensureMkvTree(sfDir), "*.mka", "k", "k(\\d+)\\.mka",
+      .unionByName(scan(MkvTree, ensureMkvTree(sfDir), "k",
         bs => MkvCodec.demux(bs).flatMap(_.find(_.codecId == "A_FLAC"))
           .flatMap(MkvCodec.flacStream)))
   }

@@ -5,7 +5,7 @@ import graft.images.ImageOps
 import graft.multimodal.TiffCodec
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import SourceQueries.{fixtureTree, mediaScale, scaledTag}
+import SourceQueries.{Fixture, mediaScale}
 
 /** Audio-family fixture trees and decode-under-hash-gate scans
   * (FLAC, IMA ADPCM, G.711, AIFF, MP3 frame-walk metadata).
@@ -13,6 +13,8 @@ import SourceQueries.{fixtureTree, mediaScale, scaledTag}
   * behavior change; fixture dirs and oracle SQL are byte-identical.
   */
 object AudioSourceQueries {
+
+  private[sources] val FlacTree = Fixture("flac", "a", "flac", scales = true)
 
   /** Build (atomically, once per scale factor) the FLAC fixture tree: 24 mono
     * 16-bit clips whose PCM is a pure function of the asset index —
@@ -23,11 +25,11 @@ object AudioSourceQueries {
     * block on every asset (n is never a multiple of 4096).
     */
   private[sources] def ensureFlacTree(sfDir: String): String =
-    fixtureTree(scaledTag("flac"), sfDir) {
+    FlacTree.tree(sfDir) {
       (0 until 24 * mediaScale).iterator.map { i =>
         val n = 5000 + 171 * i
         val pcm = Array.tabulate(n)(t => ((i * 37 + t * 13) % 65536) - 32768)
-        (f"${i % 2}/${i % 3}/${i % 4}/a$i%03d.flac",
+        (s"${i % 2}/${i % 3}/${i % 4}/${FlacTree.file(i)}",
           graft.multimodal.FlacCodec.encode(8000 + 100 * i, Array(pcm)))
       }
     }
@@ -49,20 +51,15 @@ object AudioSourceQueries {
     val name = "q_flac_scan"
     def run(spark: SparkSession, sfDir: String): DataFrame = {
       import spark.implicits._
-      val root = ensureFlacTree(sfDir)
-      val idRe = "a(\\d+)\\.flac".r
-      Sources.binaryTree(spark, root, "*.flac")
-        .select(col("path"), col("content"))
-        .as[(String, Array[Byte])]
+      FlacTree.assets(spark, ensureFlacTree(sfDir))
         .mapPartitions { it =>
-          it.flatMap { case (path, content) =>
+          it.flatMap { case (idx, content) =>
             graft.multimodal.FlacCodec.decode(content).map { pcm =>
               val s = pcm.channels(0)
               var sum = 0L
               var mn = Int.MaxValue
               var mx = Int.MinValue
               s.foreach { v => sum += v; if (v < mn) mn = v; if (v > mx) mx = v }
-              val idx = Sources.assetIdx(path, idRe)
               (idx, pcm.sampleRate.toLong, s.length.toLong, sum,
                 mn.toLong, mx.toLong, content.length.toLong,
                 Sources.headHex(content))
@@ -73,15 +70,8 @@ object AudioSourceQueries {
           "min_sample", "max_sample", "n_bytes", "head_hex")
         .orderBy("asset_idx")
     }
-    // Same pinned-glob stance as q_binary_twotone: oracle SQL is static
-    // text and the correctness gate runs at sf0.01 only.
     val oracle = Some(
-      """WITH f AS (
-        |  SELECT CAST(regexp_extract(filename, 'a(\d+)\.flac', 1) AS BIGINT)
-        |           AS asset_idx,
-        |         CAST(octet_length(content) AS BIGINT) AS n_bytes,
-        |         substring(hex(content), 1, 16) AS head_hex
-        |  FROM read_blob('/tmp/graft_flac__root_testdata_sf0.01/**/*.flac')),
+      s"""WITH f AS (${FlacTree.blobRows(8)}),
         |s AS (
         |  SELECT asset_idx, n_bytes, head_hex,
         |         8000 + 100 * asset_idx AS sample_rate,
@@ -101,6 +91,8 @@ object AudioSourceQueries {
         |ORDER BY s.asset_idx""".stripMargin)
   }
 
+  private[sources] val AdpcmTree = Fixture("adpcm", "p", "wav", scales = false)
+
   /** Build (atomically, once per scale factor) the IMA ADPCM fixture tree: 24
     * mono WAV files (format tag 0x11, blockAlign 256 ⇒ 505 samples/block,
     * step index carried across blocks, `fact` chunk with the exact count)
@@ -112,11 +104,11 @@ object AudioSourceQueries {
     * exercised.
     */
   private[sources] def ensureAdpcmTree(sfDir: String): String =
-    fixtureTree("adpcm", sfDir) {
+    AdpcmTree.tree(sfDir) {
       (0 until 24).iterator.map { i =>
         val n = 1200 + 37 * i
         val pcm = Array.tabulate(n)(t => ((i * 31 + 7 * t * t) % 8192) - 4096)
-        (f"${i % 2}/${i % 3}/p$i%03d.wav",
+        (s"${i % 2}/${i % 3}/${AdpcmTree.file(i)}",
           graft.multimodal.AdpcmCodec.encodeImaWav(8000 + 25 * i, pcm))
       }
     }
@@ -141,20 +133,15 @@ object AudioSourceQueries {
     val name = "q_adpcm_scan"
     def run(spark: SparkSession, sfDir: String): DataFrame = {
       import spark.implicits._
-      val root = ensureAdpcmTree(sfDir)
-      val idRe = "p(\\d+)\\.wav".r
-      Sources.binaryTree(spark, root, "*.wav")
-        .select(col("path"), col("content"))
-        .as[(String, Array[Byte])]
+      AdpcmTree.assets(spark, ensureAdpcmTree(sfDir))
         .mapPartitions { it =>
-          it.flatMap { case (path, content) =>
+          it.flatMap { case (idx, content) =>
             graft.multimodal.AdpcmCodec.decodePcm(content).map { pcm =>
               val s = pcm.samples
               var sum = 0L
               var mn = Int.MaxValue
               var mx = Int.MinValue
               s.foreach { v => sum += v; if (v < mn) mn = v; if (v > mx) mx = v }
-              val idx = Sources.assetIdx(path, idRe)
               (idx, pcm.sampleRate.toLong, s.length.toLong, sum,
                 mn.toLong, mx.toLong, content.length.toLong,
                 Sources.headHex(content))
@@ -165,17 +152,11 @@ object AudioSourceQueries {
           "min_sample", "max_sample", "n_bytes", "head_hex")
         .orderBy("asset_idx")
     }
-    // Same pinned-glob stance as q_flac_scan: static oracle text, gate at
-    // sf0.01 only. The recursive CTE carries (predictor, stepIndex) per
+    // The recursive CTE carries (predictor, stepIndex) per
     // asset exactly as the IMA spec does; sample t = 0 mod 505 is a block
     // header (verbatim sample, index carried).
     val oracle = Some(
-      """WITH RECURSIVE f AS (
-        |  SELECT CAST(regexp_extract(filename, 'p(\d+)\.wav', 1) AS BIGINT)
-        |           AS asset_idx,
-        |         CAST(octet_length(content) AS BIGINT) AS n_bytes,
-        |         substring(hex(content), 1, 16) AS head_hex
-        |  FROM read_blob('/tmp/graft_adpcm__root_testdata_sf0.01/**/*.wav')),
+      s"""WITH RECURSIVE f AS (${AdpcmTree.blobRows(8)}),
         |s AS (
         |  SELECT asset_idx, n_bytes, head_hex,
         |         8000 + 25 * asset_idx AS sample_rate,
@@ -251,6 +232,8 @@ object AudioSourceQueries {
         |ORDER BY s.asset_idx""".stripMargin)
   }
 
+  private[sources] val G711Tree = Fixture("g711", "g", "wav", scales = false)
+
   /** Build (atomically, once per scale factor) the G.711 fixture tree: 24
     * mono 8 kHz WAV files — even assets µ-law (tag 7), odd assets A-law (tag
     * 6) — whose input PCM sweeps the full 16-bit range,
@@ -258,11 +241,11 @@ object AudioSourceQueries {
     * encoded by [[graft.multimodal.AdpcmCodec]].
     */
   private[sources] def ensureG711Tree(sfDir: String): String =
-    fixtureTree("g711", sfDir) {
+    G711Tree.tree(sfDir) {
       (0 until 24).iterator.map { i =>
         val n = 800 + 29 * i
         val pcm = Array.tabulate(n)(t => ((i * 97 + t * 511) % 65536) - 32768)
-        (f"${i % 2}/${i % 3}/g$i%03d.wav",
+        (s"${i % 2}/${i % 3}/${G711Tree.file(i)}",
           graft.multimodal.AdpcmCodec.encodeG711Wav(8000, pcm, mu = i % 2 == 0))
       }
     }
@@ -282,20 +265,15 @@ object AudioSourceQueries {
     val name = "q_g711_scan"
     def run(spark: SparkSession, sfDir: String): DataFrame = {
       import spark.implicits._
-      val root = ensureG711Tree(sfDir)
-      val idRe = "g(\\d+)\\.wav".r
-      Sources.binaryTree(spark, root, "*.wav")
-        .select(col("path"), col("content"))
-        .as[(String, Array[Byte])]
+      G711Tree.assets(spark, ensureG711Tree(sfDir))
         .mapPartitions { it =>
-          it.flatMap { case (path, content) =>
+          it.flatMap { case (idx, content) =>
             graft.multimodal.AdpcmCodec.decodePcm(content).map { pcm =>
               val s = pcm.samples
               var sum = 0L
               var mn = Int.MaxValue
               var mx = Int.MinValue
               s.foreach { v => sum += v; if (v < mn) mn = v; if (v > mx) mx = v }
-              val idx = Sources.assetIdx(path, idRe)
               (idx, pcm.codec, pcm.sampleRate.toLong, s.length.toLong, sum,
                 mn.toLong, mx.toLong, content.length.toLong,
                 Sources.headHex(content))
@@ -306,16 +284,10 @@ object AudioSourceQueries {
           "sum_samples", "min_sample", "max_sample", "n_bytes", "head_hex")
         .orderBy("asset_idx")
     }
-    // Static oracle text, gate at sf0.01 only. µ-law: bias 0x84, clip
-    // 32635; A-law: 13-bit magnitude domain, segment boundaries
-    // (0x20 << s) − 1 — both straight from ITU-T G.711.
+    // µ-law: bias 0x84, clip 32635; A-law: 13-bit magnitude domain,
+    // segment boundaries (0x20 << s) − 1 — both straight from ITU-T G.711.
     val oracle = Some(
-      """WITH f AS (
-        |  SELECT CAST(regexp_extract(filename, 'g(\d+)\.wav', 1) AS BIGINT)
-        |           AS asset_idx,
-        |         CAST(octet_length(content) AS BIGINT) AS n_bytes,
-        |         substring(hex(content), 1, 16) AS head_hex
-        |  FROM read_blob('/tmp/graft_g711__root_testdata_sf0.01/**/*.wav')),
+      s"""WITH f AS (${G711Tree.blobRows(8)}),
         |s AS (
         |  SELECT asset_idx, n_bytes, head_hex,
         |         CASE WHEN asset_idx % 2 = 0 THEN 'ulaw' ELSE 'alaw' END
@@ -380,6 +352,8 @@ object AudioSourceQueries {
         |ORDER BY s.asset_idx""".stripMargin)
   }
 
+  private[sources] val AiffTree = Fixture("aiff", "a", "aif", scales = false)
+
   /** Build (atomically, once per scale factor) the AIFF fixture tree: 24 .aif
     * files, alternating mono/stereo, n = 1000 + 37i frames at 8000 + 25i Hz;
     * sample (c, t) of asset i is ((31i + 7t + 13ct + 5c) mod 4096) − 2048.
@@ -388,13 +362,13 @@ object AudioSourceQueries {
     * int16).
     */
   private[sources] def ensureAiffTree(sfDir: String): String =
-    fixtureTree("aiff", sfDir) {
+    AiffTree.tree(sfDir) {
       (0 until 24).iterator.map { i =>
         val n = 1000 + 37 * i
         val nCh = 1 + i % 2
         val chans = Array.tabulate(nCh)(c => Array.tabulate(n)(t =>
           ((31 * i + 7 * t + 13 * c * t + 5 * c) % 4096) - 2048))
-        (f"${i % 2}/${i % 3}/a$i%03d.aif",
+        (s"${i % 2}/${i % 3}/${AiffTree.file(i)}",
           graft.multimodal.AiffCodec.encode(8000 + 25 * i, chans))
       }
     }
@@ -410,13 +384,8 @@ object AudioSourceQueries {
     val name = "q_aiff_scan"
     def run(spark: SparkSession, sfDir: String): DataFrame = {
       import spark.implicits._
-      val root = ensureAiffTree(sfDir)
-      val idRe = "a(\\d+)\\.aif".r
-      Sources.binaryTree(spark, root, "*.aif")
-        .select(col("path"), col("content"))
-        .as[(String, Array[Byte])]
-        .flatMap { case (path, content) =>
-          val idx = Sources.assetIdx(path, idRe)
+      AiffTree.assets(spark, ensureAiffTree(sfDir))
+        .flatMap { case (idx, content) =>
           for (a <- graft.multimodal.AiffCodec.decode(content).toSeq) yield {
             var sum = 0L; var mn = Int.MaxValue; var mx = Int.MinValue
             a.channels.foreach(_.foreach { v =>
@@ -432,12 +401,7 @@ object AudioSourceQueries {
         .orderBy("asset_idx")
     }
     val oracle = Some(
-      """WITH f AS (
-        |  SELECT CAST(regexp_extract(filename, 'a(\d+)\.aif', 1) AS BIGINT)
-        |           AS asset_idx,
-        |         CAST(octet_length(content) AS BIGINT) AS n_bytes,
-        |         substring(hex(content), 1, 16) AS head_hex
-        |  FROM read_blob('/tmp/graft_aiff__root_testdata_sf0.01/**/*.aif')),
+      s"""WITH f AS (${AiffTree.blobRows(8)}),
         |s AS (
         |  SELECT asset_idx, n_bytes, head_hex,
         |         CAST(8000 + 25 * asset_idx AS BIGINT) AS sample_rate,
@@ -462,6 +426,8 @@ object AudioSourceQueries {
         |ORDER BY s.asset_idx""".stripMargin)
   }
 
+  private[sources] val Mp3Tree = Fixture("mp3", "m", "mp3", scales = true)
+
   /** Build (atomically, once per scale factor) the MPEG-audio fixture tree:
     * the round-9 base tier (24 MPEG-1 Layer III streams covering CBR and
     * VBR (+Xing), all three sampling rates, mono and stereo, padding
@@ -472,7 +438,7 @@ object AudioSourceQueries {
     * the asset index (the oracle replays all of it closed-form).
     */
   private[sources] def ensureMp3Tree(sfDir: String): String =
-    fixtureTree(scaledTag("mp3"), sfDir) {
+    Mp3Tree.tree(sfDir) {
       import graft.multimodal.Mp3Codec
       val base = (0 until 24 * mediaScale).iterator.map { i =>
         val nf = 8 + i
@@ -480,7 +446,7 @@ object AudioSourceQueries {
         val bis =
           if (vbr) (0 until nf).map(f => 1 + ((i + f) % 14))
           else Seq.fill(nf)(1 + (i % 14))
-        (f"${i % 2}/${i % 3}/m$i%03d.mp3",
+        (s"${i % 2}/${i % 3}/${Mp3Tree.file(i)}",
           Mp3Codec.build(bis, sampleRateIdx = i % 3,
             mode = if (i % 2 == 0) 3 else 0, seed = i,
             id3v2PayloadLen = if (i % 4 == 0) 100 + i else 0,
@@ -499,7 +465,7 @@ object AudioSourceQueries {
         val bis =
           if (vbr) (0 until nf).map(f => 1 + ((i + f) % 14))
           else Seq.fill(nf)(1 + (i % 14))
-        (f"v2/${i % 3}/m${1000 + i}%04d.mp3",
+        (s"v2/${i % 3}/${Mp3Tree.file(1000 + i)}",
           Mp3Codec.build(bis, sampleRateIdx = (i / 9) % 3,
             mode = if (i % 2 == 0) 3 else 0, seed = 100 + i,
             id3v2PayloadLen = if (i % 5 == 0) 80 + i else 0,
@@ -530,16 +496,10 @@ object AudioSourceQueries {
     val name = "q_mp3_scan"
     def run(spark: SparkSession, sfDir: String): DataFrame = {
       import spark.implicits._
-      val root = ensureMp3Tree(sfDir)
-      val idRe = "m(\\d+)\\.mp3".r
-      Sources.binaryTree(spark, root, "*.mp3")
-        .select(col("path"), col("content"))
-        .as[(String, Array[Byte])]
-        .flatMap { case (path, content) =>
-          for {
-            m <- idRe.findFirstMatchIn(path).toSeq
-            info <- graft.multimodal.Mp3Codec.parse(content).toSeq
-          } yield (m.group(1).toLong, info.nFrames.toLong,
+      Mp3Tree.assets(spark, ensureMp3Tree(sfDir))
+        .flatMap { case (idx, content) =>
+          for (info <- graft.multimodal.Mp3Codec.parse(content).toSeq)
+          yield (idx, info.nFrames.toLong,
             info.versionX10.toLong, info.layer.toLong,
             info.sampleRate.toLong, info.mode.toLong, info.durationMs,
             info.frames.map(_.bitrateKbps).min.toLong,
@@ -548,7 +508,7 @@ object AudioSourceQueries {
             info.xingFrames.map(_.toLong).getOrElse(-1L),
             info.id3v2Bytes.toLong, if (info.id3v1) 1L else 0L,
             content.length.toLong,
-            content.take(4).map(b => f"$b%02X").mkString)
+            Sources.headHex(content.take(4)))
         }
         .toDF("asset_idx", "n_frames", "mpeg_version_x10", "layer",
           "sample_rate", "mode", "duration_ms",
@@ -620,12 +580,7 @@ object AudioSourceQueries {
         |  FROM fr JOIN br ON br.vg = CASE WHEN fr.vx10 = 10 THEN 1 ELSE 2 END
         |                 AND br.lyr = fr.lyr AND br.bi = fr.bi
         |  GROUP BY 1),
-        |b AS (
-        |  SELECT CAST(regexp_extract(filename, 'm(\\d+)\\.mp3', 1) AS BIGINT)
-        |           AS asset_idx,
-        |         CAST(octet_length(content) AS BIGINT) AS n_bytes,
-        |         substring(hex(content), 1, 8) AS head_hex
-        |  FROM read_blob('${System.getProperty("java.io.tmpdir")}/graft_mp3__root_testdata_sf0.01/**/*.mp3'))
+        |b AS (${Mp3Tree.blobRows(4)})
         |SELECT s.asset_idx, CAST(s.nf AS BIGINT) AS n_frames,
         |       CAST(s.vx10 AS BIGINT) AS mpeg_version_x10,
         |       CAST(s.lyr AS BIGINT) AS layer,

@@ -3,7 +3,7 @@ package graft.sources
 import graft.GraftQuery
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import SourceQueries.{fixtureTree, workDir, mediaScale, scaledTag}
+import SourceQueries.{Fixture, workDir, mediaScale, scaledTag}
 import ArchiveQueries.warcRows
 
 /** Crawl-frontier scheduling tier (rounds 11–12): the discovery side of
@@ -24,11 +24,12 @@ import ArchiveQueries.warcRows
   */
 object FrontierQueries {
 
-  /** One tag names BOTH the sitemap fixture tree and (suffixed
-    * `_resolved`) its [[servedFrontier]] checkpoint — bumping the tree
-    * generation invalidates the checkpoint with it.
+  /** The sitemap crawl tree. Its tag also names (suffixed `_resolved`)
+    * the [[servedFrontier]] checkpoint — bumping the tree generation
+    * invalidates the checkpoint with it.
     */
-  private[sources] val SitemapTreeTag = "sitemap5"
+  private[sources] val SitemapTree = Fixture("sitemap5", "s", "warc.gz",
+    scales = true)
 
   /** Build (atomically, once per scale factor) the sitemap crawl tree: 24
     * `.warc.gz` files over 8 hosts (3 per host). File i carries a
@@ -83,7 +84,7 @@ object FrontierQueries {
     // followed and h1's rules/delay/Sitemap-declaration are UNCHANGED
     // for a following reader, while a non-following reader loses all
     // three and every h1 count shifts
-    fixtureTree(scaledTag(SitemapTreeTag), sfDir) {
+    SitemapTree.tree(sfDir) {
       import graft.multimodal.{GzipCodec, WarcCodec}
       val utf8 = java.nio.charset.StandardCharsets.UTF_8
       val iso = java.nio.charset.StandardCharsets.ISO_8859_1
@@ -221,7 +222,7 @@ object FrontierQueries {
           } else
             Seq(smRec(s"map$i", s"http://s$h.example/sitemap.xml",
               urlset(entries.map(_._2))))
-        (f"${i % 2}/s$i%03d.warc.gz",
+        (s"${i % 2}/${SitemapTree.file(i)}",
           (Seq(info) ++ robots ++ maps).reduce(_ ++ _))
       }
     }
@@ -257,7 +258,7 @@ object FrontierQueries {
   private def sitemapRows(spark: SparkSession, root: String): DataFrame = {
     import spark.implicits._
     import graft.text.UrlOps.frontierCanonicalStr
-    Sources.binaryTree(spark, root, "*.warc.gz")
+    SitemapTree.scan(spark, root)
       .select(col("path"))
       .as[String]
       .flatMap { file =>
@@ -438,7 +439,7 @@ object FrontierQueries {
       sfDir: String): DataFrame = {
     val root = ensureSitemapTree(sfDir)
     val dir = java.nio.file.Paths.get(
-      workDir(scaledTag(SitemapTreeTag) + "_resolved", sfDir))
+      workDir(scaledTag(SitemapTree.tag) + "_resolved", sfDir))
     if (!java.nio.file.Files.exists(dir.resolve("_SUCCESS")))
       coldResolvedFrontier(spark, root)
         .write.mode("overwrite").parquet(dir.toString)
@@ -611,6 +612,9 @@ object FrontierQueries {
         |ORDER BY host""".stripMargin)
   }
 
+  private[sources] val DeltaTree = Fixture("crdelta", "c", "warc.gz",
+    scales = true)
+
   /** Build (atomically, once per scale factor) the two-snapshot recrawl tree:
     * `old/` and `new/` subtrees of 24 `.warc.gz` files each (host
     * h = i%8). Old file i carries pages j ∈ [0, 4+i%3) at body version
@@ -620,7 +624,7 @@ object FrontierQueries {
     * unchanged, all closed-form replayable from (i, j).
     */
   private[sources] def ensureDeltaTree(sfDir: String): String =
-    fixtureTree(scaledTag("crdelta"), sfDir) {
+    DeltaTree.tree(sfDir) {
       import graft.multimodal.{GzipCodec, WarcCodec}
       val utf8 = java.nio.charset.StandardCharsets.UTF_8
       for {
@@ -640,7 +644,7 @@ object FrontierQueries {
             "2026-01-01T00:00:00Z", Some(s"http://s$h.example/d$i/$j"),
             s"<html><body>c $i $j $ver</body></html>".getBytes(utf8)))
         }
-        (f"$snap/${i % 2}/c$i%03d.warc.gz",
+        (s"$snap/${i % 2}/${DeltaTree.file(i)}",
           (info +: pages).reduce(_ ++ _))
       }
     }
@@ -665,7 +669,7 @@ object FrontierQueries {
       import spark.implicits._
       val root = ensureDeltaTree(sfDir)
       def snapshot(snap: String): DataFrame =
-        Sources.binaryTree(spark, s"$root/$snap", "*.warc.gz")
+        DeltaTree.scan(spark, s"$root/$snap")
         .select(col("path"))
         .as[String]
         .flatMap { file =>
@@ -930,6 +934,9 @@ object FrontierQueries {
         |ORDER BY host""".stripMargin)
   }
 
+  private[sources] val RevisitTree = Fixture("revisit", "v", "warc.gz",
+    scales = true)
+
   /** Build (atomically, once per scale factor) the revisit tree: 24
     * `.warc.gz` files (host h = i%8), file i carrying pages j ∈ [0, 3+i%3) of
     * uri `/r{i}/{j}` with body `"x" * (5 + (i+j)%4)` — only FOUR distinct
@@ -940,7 +947,7 @@ object FrontierQueries {
     * it did not re-store.
     */
   private[sources] def ensureRevisitTree(sfDir: String): String =
-    fixtureTree(scaledTag("revisit"), sfDir) {
+    RevisitTree.tree(sfDir) {
       import graft.multimodal.{GzipCodec, WarcCodec}
       val utf8 = java.nio.charset.StandardCharsets.UTF_8
       (0 until 24 * mediaScale).iterator.map { i =>
@@ -963,7 +970,7 @@ object FrontierQueries {
                   graft.functions.PortableHash.md5Hex(body)))
           GzipCodec.buildMember(rec)
         }
-        (f"${i % 2}/v$i%03d.warc.gz",
+        (s"${i % 2}/${RevisitTree.file(i)}",
           (info +: pages).reduce(_ ++ _))
       }
     }
@@ -990,7 +997,7 @@ object FrontierQueries {
       val root = ensureRevisitTree(sfDir)
       // kind 0 = stored response (digest computed from the payload),
       // kind 1 = revisit (digest read from WARC-Payload-Digest)
-      val recs = Sources.binaryTree(spark, root, "*.warc.gz")
+      val recs = RevisitTree.scan(spark, root)
         .select(col("path"))
         .as[String]
         .flatMap { file =>
@@ -1053,6 +1060,9 @@ object FrontierQueries {
         |FROM pages GROUP BY h ORDER BY host""".stripMargin)
   }
 
+  private[sources] val RedirectTree = Fixture("redir3", "d", "warc.gz",
+    scales = true)
+
   /** Build (atomically, once per scale factor) the redirect tree: 24
     * `.warc.gz` files (host h = i%8), each carrying the three redirect shapes
     * a real recrawl meets:
@@ -1076,7 +1086,7 @@ object FrontierQueries {
     // resolver mis-handles (it would pass them through as absolute
     // URLs, the chain join keys would never match, and every landed
     // count shifts)
-    fixtureTree(scaledTag("redir3"), sfDir) {
+    RedirectTree.tree(sfDir) {
       import graft.multimodal.{GzipCodec, WarcCodec}
       val utf8 = java.nio.charset.StandardCharsets.UTF_8
       val iso = java.nio.charset.StandardCharsets.ISO_8859_1
@@ -1120,7 +1130,7 @@ object FrontierQueries {
             redirect(s"rd$i-lb", s"http://s$h.example/loop$i/b", 302,
               s"http://s$h.example/loop$i/a"))
           else Seq.empty
-        (f"${i % 2}/d$i%03d.warc.gz",
+        (s"${i % 2}/${RedirectTree.file(i)}",
           ((Seq(info) ++ chain :+ terminal :+ cross) ++ loop).reduce(_ ++ _))
       }
     }
@@ -1158,7 +1168,7 @@ object FrontierQueries {
       import graft.text.UrlOps.frontierCanonicalStr
       val root = ensureRedirectTree(sfDir)
       // kind 0 = a landed 200 page (node), kind 1 = a redirect edge
-      val recs = Sources.binaryTree(spark, root, "*.warc.gz")
+      val recs = RedirectTree.scan(spark, root)
         .select(col("path"))
         .as[String]
         .flatMap { file =>
@@ -1262,6 +1272,9 @@ object FrontierQueries {
         |FROM edges GROUP BY h ORDER BY host""".stripMargin)
   }
 
+  private[sources] val RevalTree = Fixture("reval", "v", "warc.gz",
+    scales = true)
+
   /** Build (atomically, once per scale factor) the revalidation tree: `old/`
     * and `new/` snapshots of 24 `.warc.gz` files (host h = i%8), pages
     * j ∈ [0, 4+i%3) at uri `/v{i}/{j}` stored as HTTP responses.
@@ -1276,7 +1289,7 @@ object FrontierQueries {
     * accounting row is a pure function of (i, j).
     */
   private[sources] def ensureRevalTree(sfDir: String): String =
-    fixtureTree(scaledTag("reval"), sfDir) {
+    RevalTree.tree(sfDir) {
       import graft.multimodal.{GzipCodec, WarcCodec}
       val utf8 = java.nio.charset.StandardCharsets.UTF_8
       val iso = java.nio.charset.StandardCharsets.ISO_8859_1
@@ -1320,7 +1333,7 @@ object FrontierQueries {
             "response", s"<urn:uuid:rv-$snap-$i-$j>",
             "2026-01-01T00:00:00Z", Some(uri), payload))
         }
-        (f"$snap/${i % 2}/v$i%03d.warc.gz",
+        (s"$snap/${i % 2}/${RevalTree.file(i)}",
           (info +: pages).reduce(_ ++ _))
       }
     }
@@ -1350,7 +1363,7 @@ object FrontierQueries {
       import spark.implicits._
       val root = ensureRevalTree(sfDir)
       def snapshot(snap: String): DataFrame =
-        Sources.binaryTree(spark, s"$root/$snap", "*.warc.gz")
+        RevalTree.scan(spark, s"$root/$snap")
         .select(col("path"))
         .as[String]
         .flatMap { file =>
@@ -1429,6 +1442,9 @@ object FrontierQueries {
         |FROM acct GROUP BY h ORDER BY host""".stripMargin)
   }
 
+  private[sources] val CanonicalTree = Fixture("canon2", "c", "warc.gz",
+    scales = true)
+
   /** Build (atomically, once per scale factor) the canonical-alias tree: 24
     * `.warc.gz` files over 8 hosts, file i carrying np = 3 + i%3 pages
     * at `/a{i}/{j}` as 200 HTTP responses whose canonical declarations
@@ -1457,7 +1473,7 @@ object FrontierQueries {
     */
   private[sources] def ensureCanonicalTree(sfDir: String): String =
     // canon1 -> canon2: j=1 gained the <base href> element
-    fixtureTree(scaledTag("canon2"), sfDir) {
+    CanonicalTree.tree(sfDir) {
       import graft.multimodal.{GzipCodec, WarcCodec}
       val utf8 = java.nio.charset.StandardCharsets.UTF_8
       val iso = java.nio.charset.StandardCharsets.ISO_8859_1
@@ -1498,7 +1514,7 @@ object FrontierQueries {
         val gone = resp(s"ca$i-g", s"http://s$h.example/gone$i",
           "404 Not Found", "",
           s"""<html><head><link rel="canonical" href="/a$i/0"></head><body>gone</body></html>""")
-        (f"${i % 2}/c$i%03d.warc.gz",
+        (s"${i % 2}/${CanonicalTree.file(i)}",
           ((Seq(info) ++ pages ++ cross) :+ gone).reduce(_ ++ _))
       }
     }
@@ -1531,7 +1547,7 @@ object FrontierQueries {
       import spark.implicits._
       import graft.text.UrlOps.frontierCanonicalStr
       val root = ensureCanonicalTree(sfDir)
-      val pages = Sources.binaryTree(spark, root, "*.warc.gz")
+      val pages = CanonicalTree.scan(spark, root)
         .select(col("path"))
         .as[String]
         .flatMap { file =>
@@ -1635,6 +1651,9 @@ object FrontierQueries {
         |GROUP BY p.h ORDER BY host""".stripMargin)
   }
 
+  private[sources] val BackoffTree = Fixture("backoff1", "b", "warc.gz",
+    scales = true)
+
   /** Build (atomically, once per scale factor) the throttle tree: 24
     * `.warc.gz` files over 8 hosts, file i holding 5 + i%3 fetches at
     * `/b{i}/{j}`, every response carrying `Date: Thu, 01 Jan 2026 00:00:00
@@ -1649,7 +1668,7 @@ object FrontierQueries {
     *    as absent, fail open to the default).
     */
   private[sources] def ensureBackoffTree(sfDir: String): String =
-    fixtureTree(scaledTag("backoff1"), sfDir) {
+    BackoffTree.tree(sfDir) {
       import graft.multimodal.{GzipCodec, WarcCodec}
       val utf8 = java.nio.charset.StandardCharsets.UTF_8
       val iso = java.nio.charset.StandardCharsets.ISO_8859_1
@@ -1680,7 +1699,7 @@ object FrontierQueries {
               "\r\nRetry-After: soon")
           }
         }
-        (f"${i % 2}/b$i%03d.warc.gz",
+        (s"${i % 2}/${BackoffTree.file(i)}",
           (info +: recs).reduce(_ ++ _))
       }
     }
@@ -1707,7 +1726,7 @@ object FrontierQueries {
     def run(spark: SparkSession, sfDir: String): DataFrame = {
       import spark.implicits._
       val root = ensureBackoffTree(sfDir)
-      Sources.binaryTree(spark, root, "*.warc.gz")
+      BackoffTree.scan(spark, root)
         .select(col("path"))
         .as[String]
         .flatMap { file =>
@@ -1778,6 +1797,9 @@ object FrontierQueries {
         |FROM fetches GROUP BY h ORDER BY host""".stripMargin)
   }
 
+  private[sources] val HreflangTree = Fixture("href2", "h", "warc.gz",
+    scales = true)
+
   /** Build (atomically, once per scale factor) the hreflang tree: 24
     * `.warc.gz` files over 8 hosts, file i publishing one language CLUSTER of
     * L = 2 + i%3 editions at `/{lang}/c{i}` (langs en/fr/de/es), each
@@ -1800,7 +1822,7 @@ object FrontierQueries {
     * components finds the single 3-edition group.
     */
   private[sources] def ensureHreflangTree(sfDir: String): String =
-    fixtureTree(scaledTag("href2"), sfDir) {
+    HreflangTree.tree(sfDir) {
       import graft.multimodal.{GzipCodec, WarcCodec}
       val utf8 = java.nio.charset.StandardCharsets.UTF_8
       val iso = java.nio.charset.StandardCharsets.ISO_8859_1
@@ -1849,7 +1871,7 @@ object FrontierQueries {
         val info = GzipCodec.buildMember(WarcCodec.buildRecord(
           "warcinfo", s"<urn:uuid:hi$i>", "2026-01-01T00:00:00Z", None,
           s"software: graft $i".getBytes(utf8)))
-        (f"${i % 2}/h$i%03d.warc.gz",
+        (s"${i % 2}/${HreflangTree.file(i)}",
           ((info +: cluster) ++ chain ++ Seq(solo, gone)).reduce(_ ++ _))
       }
     }
@@ -1886,7 +1908,7 @@ object FrontierQueries {
       import spark.implicits._
       import graft.text.UrlOps.frontierCanonicalStr
       val root = ensureHreflangTree(sfDir)
-      val recs = Sources.binaryTree(spark, root, "*.warc.gz")
+      val recs = HreflangTree.scan(spark, root)
         .select(col("path"))
         .as[String]
         .flatMap { file =>

@@ -5,8 +5,9 @@ import graft.dedup.Dedup
 import graft.images.ImageOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import SourceQueries.keepLargest
-import ImageSourceQueries.{ensureImageTree, ensureTwoToneTree, ensureQoiTree}
+import SourceQueries.{Fixture, keepLargest}
+import ImageSourceQueries.{ImageTree, TwoToneTree, QoiTree, ensureImageTree,
+  ensureTwoToneTree, ensureQoiTree}
 
 /** Image perceptual dedup: aHash fingerprints, banded near-dup join,
   * end-to-end cluster + representative tier.
@@ -25,29 +26,27 @@ object ImageDedupQueries {
     */
   private[sources] def aHashRows(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    def scan(root: String, glob: String, kind: String, re: String,
-        viaQoi: Boolean): DataFrame = {
-      val rex = re.r
-      Sources.binaryTree(spark, root, glob)
-        .select(col("path"), col("content"))
-        .as[(String, Array[Byte])]
-        .flatMap { case (path, content) =>
-          val img =
-            if (viaQoi) graft.multimodal.QoiCodec.decode(content)
-              .map(graft.multimodal.QoiCodec.toImage)
-            else ImageOps.decode(content)
-          for (im <- img.toSeq; m <- rex.findFirstMatchIn(path).toSeq) yield {
+    def scan(tree: Fixture, root: String, kind: String): DataFrame =
+      tree.assets(spark, root)
+        .flatMap { case (idx, content) =>
+          ImageOps.decode(content).toSeq.map { im =>
             val hsh = ImageOps.aHash64(im)
-            (kind, m.group(1).toLong, hsh >>> 32, hsh & 0xFFFFFFFFL,
-              content.length.toLong)
+            (kind, idx, hsh >>> 32, hsh & 0xFFFFFFFFL, content.length.toLong)
           }
         }
         .toDF("kind", "asset_idx", "hash_hi", "hash_lo", "n_bytes")
-    }
-    scan(ensureImageTree(sfDir), "*.png", "s", "img(\\d+)\\.png", viaQoi = false)
-      .unionByName(scan(ensureTwoToneTree(sfDir), "*.png", "t", "img(\\d+)\\.png", viaQoi = false))
-      .unionByName(scan(ensureQoiTree(sfDir), "*.qoi", "x", "q(\\d+)\\.qoi", viaQoi = true))
+    scan(ImageTree, ensureImageTree(sfDir), "s")
+      .unionByName(scan(TwoToneTree, ensureTwoToneTree(sfDir), "t"))
+      .unionByName(scan(QoiTree, ensureQoiTree(sfDir), "x"))
   }
+
+  /** The oracle twin of [[aHashRows]]' byte sizes: one
+    * (kind, asset_idx, n_bytes) row per file of the three trees.
+    */
+  private val aHashBlobRows =
+    s"""SELECT 's' AS kind, * FROM (${ImageTree.blobRows()})
+       |UNION ALL SELECT 't', * FROM (${TwoToneTree.blobRows()})
+       |UNION ALL SELECT 'x', * FROM (${QoiTree.blobRows()})""".stripMargin
 
   /** Shared closed-form hash replay for the aHash oracles: every bit of
     * every fingerprint from the fixture formulas alone. Solid PNGs hash
@@ -104,9 +103,10 @@ object ImageDedupQueries {
 
   /** Image perceptual fingerprints under the hash gate: one aHash per
     * image across the solid-PNG, two-tone-PNG, and QOI fixture trees,
-    * through the REAL decode paths ([[ImageOps.decode]] / the from-spec
-    * [[graft.multimodal.QoiCodec]]). The oracle replays every bit of
-    * every hash in closed form from the fixture formulas (no reference
+    * through the REAL decode path ([[ImageOps.decode]], whose chain holds
+    * the from-spec [[graft.multimodal.QoiCodec]]). The oracle replays
+    * every bit of every hash in closed form from the fixture formulas
+    * (no reference
     * hash constants — the same cross-multiplied integer compare on both
     * sides) and pins byte identity via `read_blob`. This is the
     * image-tier analogue of `q_doc_fingerprint`: the fingerprint the
@@ -116,26 +116,9 @@ object ImageDedupQueries {
     val name = "q_image_ahash"
     def run(spark: SparkSession, sfDir: String): DataFrame =
       aHashRows(spark, sfDir).orderBy("kind", "asset_idx")
-    // Pinned-glob stance like the other fixture scans: static oracle
-    // text, correctness gate at sf0.01 only.
     val oracle = Some(
       s"""WITH $aHashOracleCte,
-        |b AS (
-        |  SELECT 's' AS kind,
-        |         CAST(regexp_extract(filename, 'img(\\d+)\\.png', 1) AS BIGINT)
-        |           AS asset_idx,
-        |         CAST(octet_length(content) AS BIGINT) AS n_bytes
-        |  FROM read_blob('/tmp/graft_img__root_testdata_sf0.01/**/*.png')
-        |  UNION ALL
-        |  SELECT 't',
-        |         CAST(regexp_extract(filename, 'img(\\d+)\\.png', 1) AS BIGINT),
-        |         CAST(octet_length(content) AS BIGINT)
-        |  FROM read_blob('/tmp/graft_img2__root_testdata_sf0.01/**/*.png')
-        |  UNION ALL
-        |  SELECT 'x',
-        |         CAST(regexp_extract(filename, 'q(\\d+)\\.qoi', 1) AS BIGINT),
-        |         CAST(octet_length(content) AS BIGINT)
-        |  FROM read_blob('/tmp/graft_qoi__root_testdata_sf0.01/**/*.qoi'))
+        |b AS ($aHashBlobRows)
         |SELECT h.kind, h.asset_idx, h.hash_hi, h.hash_lo, b.n_bytes
         |FROM h JOIN b USING (kind, asset_idx)
         |ORDER BY h.kind, h.asset_idx""".stripMargin)
@@ -216,22 +199,7 @@ object ImageDedupQueries {
         size = "n_bytes", kinds = "n_kinds")
     val oracle = Some(
       s"""WITH RECURSIVE $aHashOracleCte,
-        |b0 AS (
-        |  SELECT 's' AS kind,
-        |         CAST(regexp_extract(filename, 'img(\\d+)\\.png', 1) AS BIGINT)
-        |           AS asset_idx,
-        |         CAST(octet_length(content) AS BIGINT) AS n_bytes
-        |  FROM read_blob('/tmp/graft_img__root_testdata_sf0.01/**/*.png')
-        |  UNION ALL
-        |  SELECT 't',
-        |         CAST(regexp_extract(filename, 'img(\\d+)\\.png', 1) AS BIGINT),
-        |         CAST(octet_length(content) AS BIGINT)
-        |  FROM read_blob('/tmp/graft_img2__root_testdata_sf0.01/**/*.png')
-        |  UNION ALL
-        |  SELECT 'x',
-        |         CAST(regexp_extract(filename, 'q(\\d+)\\.qoi', 1) AS BIGINT),
-        |         CAST(octet_length(content) AS BIGINT)
-        |  FROM read_blob('/tmp/graft_qoi__root_testdata_sf0.01/**/*.qoi')),
+        |b0 AS ($aHashBlobRows),
         |ids AS (
         |  SELECT (CASE h.kind WHEN 's' THEN 0 WHEN 't' THEN 1 ELSE 2 END)
         |           * 1000 + h.asset_idx AS nid,

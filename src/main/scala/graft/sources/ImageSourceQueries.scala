@@ -5,7 +5,7 @@ import graft.images.ImageOps
 import graft.multimodal.TiffCodec
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import SourceQueries.{fixtureTree, mediaScale, scaledTag}
+import SourceQueries.{Fixture, mediaScale}
 
 /** Image-family fixture trees and decode-under-hash-gate scans
   * (PNG, animated GIF, BMP, JPEG, QOI, TIFF).
@@ -14,11 +14,13 @@ import SourceQueries.{fixtureTree, mediaScale, scaledTag}
   */
 object ImageSourceQueries {
 
+  private[sources] val ImageTree = Fixture("img", "img", "png", scales = true)
+
   /** Build (atomically, once per scale factor) the deterministic 4-level PNG
     * shard tree both binary-source queries scan. Returns the tree root.
     */
   private[sources] def ensureImageTree(sfDir: String): String =
-    fixtureTree(scaledTag("img"), sfDir) {
+    ImageTree.tree(sfDir) {
       (0 until 24 * mediaScale).iterator.map { i =>
         // floorMod: identity for i < 24 (byte-identical base tree), keeps
         // channels in range for the scaled indices
@@ -26,7 +28,8 @@ object ImageSourceQueries {
         val g = Math.floorMod(255 - i * 10, 256)
         val img = ImageOps.Image(16, 16,
           Array.fill(256)((r << 16) | (g << 8) | (i % 256)))
-        (f"${i % 2}/${i % 3}/${i % 4}/img$i%03d.png", ImageOps.encodePng(img))
+        (s"${i % 2}/${i % 3}/${i % 4}/${ImageTree.file(i)}",
+          ImageOps.encodePng(img))
       }
     }
 
@@ -52,18 +55,13 @@ object ImageSourceQueries {
     val name = "q_binary_scan"
     def run(spark: SparkSession, sfDir: String): DataFrame = {
       import spark.implicits._
-      val root = ensureImageTree(sfDir)
-      val idRe = "img(\\d+)\\.png".r
-      Sources.binaryTree(spark, root, "*.png")
-        .select(col("path"), col("content"))
-        .as[(String, Array[Byte])]
+      ImageTree.assets(spark, ensureImageTree(sfDir))
         .mapPartitions { it =>
-          it.flatMap { case (path, content) =>
+          it.flatMap { case (id, content) =>
             ImageOps.decode(content).map { img =>
               val avg = ImageOps.averageColor(img)
               val dom = ImageOps.dominantColor(img)
               val cp = ImageOps.closestPrimary(dom, ImageOps.Primaries)
-              val id = Sources.assetIdx(path, idRe)
               (id, avg._1.toLong, avg._2.toLong, avg._3.toLong, cp.toLong,
                 content.length.toLong, Sources.headHex(content))
             }
@@ -73,18 +71,11 @@ object ImageSourceQueries {
           "n_bytes", "head_hex")
         .orderBy("img_id")
     }
-    // Same pinned-glob stance as q_image_dims: oracle SQL is static text
-    // and the correctness gate runs at sf0.01 only.
     val oracle = Some(
-      """WITH f AS (
-        |  SELECT CAST(regexp_extract(filename, 'img(\d+)\.png', 1) AS BIGINT)
-        |           AS img_id,
-        |         CAST(octet_length(content) AS BIGINT) AS n_bytes,
-        |         substring(hex(content), 1, 16) AS head_hex
-        |  FROM read_blob('/tmp/graft_img__root_testdata_sf0.01/**/*.png')),
+      s"""WITH f AS (${ImageTree.blobRows(8)}),
         |c AS (
-        |  SELECT img_id, n_bytes, head_hex,
-        |         img_id * 10 AS r, 255 - img_id * 10 AS g, img_id AS b
+        |  SELECT asset_idx AS img_id, n_bytes, head_hex, asset_idx * 10 AS r,
+        |         255 - asset_idx * 10 AS g, asset_idx AS b
         |  FROM f),
         |d AS (
         |  SELECT img_id, r, g, b, n_bytes, head_hex,
@@ -102,6 +93,9 @@ object ImageSourceQueries {
         |FROM d ORDER BY img_id""".stripMargin)
   }
 
+  private[sources] val TwoToneTree =
+    Fixture("img2", "img", "png", scales = true)
+
   /** Build (atomically, once per scale factor) the TWO-TONE PNG tree: 16×16
     * images whose left 10 columns are color A(i) = (10i, 255−10i, i) and
     * right 6 columns are B(i) = (5i, 100, 200−5i) — an asymmetric split, so
@@ -109,7 +103,7 @@ object ImageSourceQueries {
     * larger region, exactly A). Same 4-level sharding as [[ensureImageTree]].
     */
   private[sources] def ensureTwoToneTree(sfDir: String): String =
-    fixtureTree(scaledTag("img2"), sfDir) {
+    TwoToneTree.tree(sfDir) {
       (0 until 24 * mediaScale).iterator.map { i =>
         // floorMod: identity for i < 24 (see ensureImageTree)
         val a = (Math.floorMod(i * 10, 256) << 16) |
@@ -117,7 +111,7 @@ object ImageSourceQueries {
         val b = (Math.floorMod(i * 5, 256) << 16) | (100 << 8) |
           Math.floorMod(200 - i * 5, 256)
         val px = Array.tabulate(256)(p => if (p % 16 < 10) a else b)
-        (f"${i % 2}/${i % 3}/${i % 4}/img$i%03d.png",
+        (s"${i % 2}/${i % 3}/${i % 4}/${TwoToneTree.file(i)}",
           ImageOps.encodePng(ImageOps.Image(16, 16, px)))
       }
     }
@@ -140,17 +134,12 @@ object ImageSourceQueries {
     val name = "q_binary_twotone"
     def run(spark: SparkSession, sfDir: String): DataFrame = {
       import spark.implicits._
-      val root = ensureTwoToneTree(sfDir)
-      val idRe = "img(\\d+)\\.png".r
-      Sources.binaryTree(spark, root, "*.png")
-        .select(col("path"), col("content"))
-        .as[(String, Array[Byte])]
+      TwoToneTree.assets(spark, ensureTwoToneTree(sfDir))
         .mapPartitions { it =>
-          it.flatMap { case (path, content) =>
+          it.flatMap { case (id, content) =>
             ImageOps.decode(content).map { img =>
               val avg = ImageOps.averageColor(img)
               val dom = ImageOps.dominantColor(img)
-              val id = Sources.assetIdx(path, idRe)
               (id, avg._1.toLong, avg._2.toLong, avg._3.toLong,
                 dom._1.toLong, dom._2.toLong, dom._3.toLong,
                 ImageOps.closestPrimary(avg, ImageOps.Primaries).toLong,
@@ -163,15 +152,11 @@ object ImageSourceQueries {
           "dom_c0", "dom_c1", "dom_c2", "cp_avg", "cp_dom", "n_bytes")
         .orderBy("img_id")
     }
-    // Same pinned-glob stance as q_binary_scan: static oracle text, gate
-    // runs at sf0.01 only. dv/da = the six squared primary distances of
-    // the average / dominant color (argmin = first min, like the Scala).
+    // dv/da = the six squared primary distances of the average /
+    // dominant color (argmin = first min, like the Scala).
     val oracle = Some(
-      """WITH f AS (
-        |  SELECT CAST(regexp_extract(filename, 'img(\d+)\.png', 1) AS BIGINT)
-        |           AS i,
-        |         CAST(octet_length(content) AS BIGINT) AS n_bytes
-        |  FROM read_blob('/tmp/graft_img2__root_testdata_sf0.01/**/*.png')),
+      s"""WITH f AS (
+        |  SELECT asset_idx AS i, n_bytes FROM (${TwoToneTree.blobRows()})),
         |c AS (
         |  SELECT i AS img_id, n_bytes,
         |         i * 10 AS ar, 255 - i * 10 AS ag, i AS ab,
@@ -216,33 +201,29 @@ object ImageSourceQueries {
     * binary path at the header level (pixel decoding stays spec-verified:
     * IDAT is zlib territory no SQL engine replays).
     *
-    * The oracle's glob is pinned to the driver's sf0.01 verify dir (oracle
-    * SQL is static text; the correctness gate only runs at sf0.01, and the
-    * Spark side materializes the tree before the oracle reads it). At
-    * corpus scale this is the no-decode metadata pass that sizes/filters
-    * a 100 TB image set without touching pixel data.
+    * At corpus scale this is the no-decode metadata pass that
+    * sizes/filters a 100 TB image set without touching pixel data.
     */
   object ImageDims extends GraftQuery {
     val name = "q_image_dims"
     def run(spark: SparkSession, sfDir: String): DataFrame = {
-      val root = ensureImageTree(sfDir)
-      Sources.binaryTree(spark, root, "*.png")
-        .select(
-          regexp_extract(col("path"), "img(\\d+)\\.png", 1).cast("long").as("img_id"),
+      ImageTree.assets(spark, ensureImageTree(sfDir))
+        .select(col("asset_idx").as("img_id"),
           conv(hex(expr("substring(content, 17, 4)")), 16, 10).cast("long").as("width"),
           conv(hex(expr("substring(content, 21, 4)")), 16, 10).cast("long").as("height"),
           length(col("content")).cast("long").as("n_bytes"))
         .orderBy("img_id")
     }
     val oracle = Some(
-      """SELECT CAST(regexp_extract(filename, 'img(\d+)\.png', 1) AS BIGINT)
-        |         AS img_id,
+      s"""SELECT ${ImageTree.blobIdx} AS img_id,
         |       ('0x' || substring(hex(content), 33, 8))::BIGINT AS width,
         |       ('0x' || substring(hex(content), 41, 8))::BIGINT AS height,
         |       CAST(octet_length(content) AS BIGINT) AS n_bytes
-        |FROM read_blob('/tmp/graft_img__root_testdata_sf0.01/**/*.png')
+        |FROM ${ImageTree.blob}
         |ORDER BY img_id""".stripMargin)
   }
+
+  private[sources] val GifTree = Fixture("gif", "n", "gif", scales = false)
 
   /** Build (atomically, once per scale factor) the animated-GIF fixture tree:
     * 24 .gif files of 18×11 8-bit frames (dims not multiples of 8, so all
@@ -253,7 +234,7 @@ object ImageSourceQueries {
     * r = (2j + i) mod 256, g = (j + 3i) mod 256, b = (5j + 7i) mod 256.
     */
   private[sources] def ensureGifTree(sfDir: String): String =
-    fixtureTree("gif", sfDir) {
+    GifTree.tree(sfDir) {
       val w = 18; val h = 11
       (0 until 24).iterator.map { i =>
         val pal = new Array[Byte](768)
@@ -266,7 +247,7 @@ object ImageSourceQueries {
           Array.tabulate(w * h)(o =>
             ((7 * i + 3 * (o % w) + 5 * (o / w) + 11 * f) % 256).toByte)
         }
-        (f"${i % 2}/${i % 3}/n$i%03d.gif",
+        (s"${i % 2}/${i % 3}/${GifTree.file(i)}",
           graft.multimodal.GifCodec.encode(w, h, pal, frames))
       }
     }
@@ -289,14 +270,9 @@ object ImageSourceQueries {
     val name = "q_gif_scan"
     def run(spark: SparkSession, sfDir: String): DataFrame = {
       import spark.implicits._
-      val root = ensureGifTree(sfDir)
-      val idRe = "n(\\d+)\\.gif".r
-      Sources.binaryTree(spark, root, "*.gif")
-        .select(col("path"), col("content"))
-        .as[(String, Array[Byte])]
-        .flatMap { case (path, content) =>
+      GifTree.assets(spark, ensureGifTree(sfDir))
+        .flatMap { case (idx, content) =>
           import graft.multimodal.GifCodec
-          val idx = Sources.assetIdx(path, idRe)
           val headHex = Sources.headHex(content)
           for {
             frames <- GifCodec.decode(content).toSeq
@@ -311,15 +287,8 @@ object ImageSourceQueries {
           "sum_b", "n_bytes", "head_hex")
         .orderBy("asset_idx", "frame_idx")
     }
-    // Same pinned-glob stance as the other fixture scans: static oracle
-    // text, correctness gate at sf0.01 only.
     val oracle = Some(
-      """WITH f AS (
-        |  SELECT CAST(regexp_extract(filename, 'n(\d+)\.gif', 1) AS BIGINT)
-        |           AS asset_idx,
-        |         CAST(octet_length(content) AS BIGINT) AS n_bytes,
-        |         substring(hex(content), 1, 16) AS head_hex
-        |  FROM read_blob('/tmp/graft_gif__root_testdata_sf0.01/**/*.gif')),
+      s"""WITH f AS (${GifTree.blobRows(8)}),
         |fr AS (
         |  SELECT asset_idx, n_bytes, head_hex, t.f AS frame_idx
         |  FROM f, LATERAL unnest(range(0, 3 + asset_idx % 3)) t(f)),
@@ -340,6 +309,8 @@ object ImageSourceQueries {
         |ORDER BY fr.asset_idx, fr.frame_idx""".stripMargin)
   }
 
+  private[sources] val BmpTree = Fixture("bmp", "b", "bmp", scales = false)
+
   /** Build (atomically, once per scale factor) the BMP fixture tree: 24 .bmp
     * files of 15×9 24-bit pixels (odd width exercises the 4-byte row pad):
     * channel c of pixel (x, y) in asset i is r = (9i + 2x + 4y) mod 256,
@@ -348,7 +319,7 @@ object ImageSourceQueries {
     * writer (plain BI_RGB, bottom-up).
     */
   private[sources] def ensureBmpTree(sfDir: String): String =
-    fixtureTree("bmp", sfDir) {
+    BmpTree.tree(sfDir) {
       val w = 15; val h = 9
       (0 until 24).iterator.map { i =>
         val px = Array.tabulate(w * h) { o =>
@@ -356,7 +327,7 @@ object ImageSourceQueries {
           (((9 * i + 2 * x + 4 * y) % 256) << 16) |
             (((4 * i + 5 * x + y) % 256) << 8) | ((6 * i + x + 3 * y) % 256)
         }
-        (f"${i % 2}/${i % 3}/b$i%03d.bmp",
+        (s"${i % 2}/${i % 3}/${BmpTree.file(i)}",
           graft.multimodal.BmpCodec.encode(ImageOps.Image(w, h, px)))
       }
     }
@@ -373,13 +344,8 @@ object ImageSourceQueries {
     val name = "q_bmp_scan"
     def run(spark: SparkSession, sfDir: String): DataFrame = {
       import spark.implicits._
-      val root = ensureBmpTree(sfDir)
-      val idRe = "b(\\d+)\\.bmp".r
-      Sources.binaryTree(spark, root, "*.bmp")
-        .select(col("path"), col("content"))
-        .as[(String, Array[Byte])]
-        .flatMap { case (path, content) =>
-          val idx = Sources.assetIdx(path, idRe)
+      BmpTree.assets(spark, ensureBmpTree(sfDir))
+        .flatMap { case (idx, content) =>
           for (img <- graft.multimodal.BmpCodec.decode(content).toSeq) yield {
             val (sr, sg, sb) = ImageOps.channelSums(img.pixels)
             (idx, img.width.toLong * img.height, sr, sg, sb,
@@ -391,12 +357,7 @@ object ImageSourceQueries {
         .orderBy("asset_idx")
     }
     val oracle = Some(
-      """WITH f AS (
-        |  SELECT CAST(regexp_extract(filename, 'b(\d+)\.bmp', 1) AS BIGINT)
-        |           AS asset_idx,
-        |         CAST(octet_length(content) AS BIGINT) AS n_bytes,
-        |         substring(hex(content), 1, 16) AS head_hex
-        |  FROM read_blob('/tmp/graft_bmp__root_testdata_sf0.01/**/*.bmp')),
+      s"""WITH f AS (${BmpTree.blobRows(8)}),
         |a AS (
         |  SELECT f.asset_idx, count(*) AS n_pixels,
         |         CAST(sum((9 * f.asset_idx + 2 * x.x + 4 * y.y) % 256) AS BIGINT) AS sum_r,
@@ -411,6 +372,8 @@ object ImageSourceQueries {
         |ORDER BY f.asset_idx""".stripMargin)
   }
 
+  private[sources] val JpegTree = Fixture("jpeg", "j", "jpg", scales = false)
+
   /** Build (atomically, once per scale factor) the JPEG fixture tree: 24 .jpg
     * files of 32×16 pixels, two-tone at the block-aligned split x=16 between
     * two EVEN grays a = (2·(17i+30)) mod 256 and b = (2·(41i+90)) mod
@@ -422,7 +385,7 @@ object ImageSourceQueries {
     * replayable. Written by the engine's own deterministic encoder.
     */
   private[sources] def ensureJpegTree(sfDir: String): String =
-    fixtureTree("jpeg", sfDir) {
+    JpegTree.tree(sfDir) {
       val w = 32; val h = 16
       (0 until 24).iterator.map { i =>
         val a = (2 * (17 * i + 30)) % 256
@@ -431,7 +394,7 @@ object ImageSourceQueries {
           val v = if (o % w < 16) a else b
           (v << 16) | (v << 8) | v
         }
-        (f"${i % 2}/${i % 3}/j$i%03d.jpg",
+        (s"${i % 2}/${i % 3}/${JpegTree.file(i)}",
           graft.multimodal.JpegCodec.encode(ImageOps.Image(w, h, px)))
       }
     }
@@ -450,13 +413,8 @@ object ImageSourceQueries {
     val name = "q_jpeg_scan"
     def run(spark: SparkSession, sfDir: String): DataFrame = {
       import spark.implicits._
-      val root = ensureJpegTree(sfDir)
-      val idRe = "j(\\d+)\\.jpg".r
-      Sources.binaryTree(spark, root, "*.jpg")
-        .select(col("path"), col("content"))
-        .as[(String, Array[Byte])]
-        .flatMap { case (path, content) =>
-          val idx = Sources.assetIdx(path, idRe)
+      JpegTree.assets(spark, ensureJpegTree(sfDir))
+        .flatMap { case (idx, content) =>
           for (img <- graft.multimodal.JpegCodec.decode(content).toSeq) yield {
             val (sr, sg, sb) = ImageOps.channelSums(img.pixels)
             (idx, img.width.toLong, img.height.toLong,
@@ -468,16 +426,10 @@ object ImageSourceQueries {
           "sum_b", "n_bytes", "head_hex")
         .orderBy("asset_idx")
     }
-    // Same pinned-glob stance as the other codec scans: static oracle
-    // text, gate at sf0.01 only. Each half is 16×16 = 256 pixels of one
-    // even gray, so every channel sum is 256·(a+b).
+    // Each half is 16×16 = 256 pixels of one even gray, so every channel
+    // sum is 256·(a+b).
     val oracle = Some(
-      """WITH f AS (
-        |  SELECT CAST(regexp_extract(filename, 'j(\d+)\.jpg', 1) AS BIGINT)
-        |           AS asset_idx,
-        |         CAST(octet_length(content) AS BIGINT) AS n_bytes,
-        |         substring(hex(content), 1, 16) AS head_hex
-        |  FROM read_blob('/tmp/graft_jpeg__root_testdata_sf0.01/**/*.jpg')),
+      s"""WITH f AS (${JpegTree.blobRows(8)}),
         |a AS (
         |  SELECT asset_idx,
         |         (2 * (17 * asset_idx + 30)) % 256 AS ga,
@@ -493,6 +445,8 @@ object ImageSourceQueries {
         |ORDER BY f.asset_idx""".stripMargin)
   }
 
+  private[sources] val QoiTree = Fixture("qoi", "q", "qoi", scales = true)
+
   /** Build (atomically, once per scale factor) the QOI fixture tree: 24
     * .qoi images (20×14, 3-channel) whose pixels tile in 5×3 plateaus —
     * runs inside rows, small inter-tile deltas (DIFF/LUMA ops), repeated
@@ -502,7 +456,7 @@ object ImageSourceQueries {
     * [[graft.multimodal.QoiCodec]].
     */
   private[sources] def ensureQoiTree(sfDir: String): String =
-    fixtureTree(scaledTag("qoi"), sfDir) {
+    QoiTree.tree(sfDir) {
       val w = 20; val h = 14
       (0 until 24 * mediaScale).iterator.map { i =>
         val px = Array.tabulate(w * h) { o =>
@@ -512,7 +466,7 @@ object ImageSourceQueries {
           val b = (i * 7 + tx + ty) % 256
           (r << 16) | (g << 8) | b
         }
-        (f"${i % 2}/${i % 3}/q$i%03d.qoi",
+        (s"${i % 2}/${i % 3}/${QoiTree.file(i)}",
           graft.multimodal.QoiCodec.encode(w, h, px))
       }
     }
@@ -531,17 +485,12 @@ object ImageSourceQueries {
     val name = "q_qoi_scan"
     def run(spark: SparkSession, sfDir: String): DataFrame = {
       import spark.implicits._
-      val root = ensureQoiTree(sfDir)
-      val idRe = "q(\\d+)\\.qoi".r
-      Sources.binaryTree(spark, root, "*.qoi")
-        .select(col("path"), col("content"))
-        .as[(String, Array[Byte])]
+      QoiTree.assets(spark, ensureQoiTree(sfDir))
         .mapPartitions { it =>
-          it.flatMap { case (path, content) =>
+          it.flatMap { case (idx, content) =>
             graft.multimodal.QoiCodec.decode(content).map { q =>
               val px = graft.multimodal.QoiCodec.toImage(q).pixels
               val (sr, sg, sb) = ImageOps.channelSums(px)
-              val idx = Sources.assetIdx(path, idRe)
               (idx, q.width.toLong, q.height.toLong,
                 q.width.toLong * q.height, sr, sg, sb,
                 content.length.toLong, Sources.headHex(content))
@@ -552,15 +501,8 @@ object ImageSourceQueries {
           "sum_b", "n_bytes", "head_hex")
         .orderBy("asset_idx")
     }
-    // Same pinned-glob stance as the other codec scans: static oracle
-    // text, gate at sf0.01 only.
     val oracle = Some(
-      """WITH f AS (
-        |  SELECT CAST(regexp_extract(filename, 'q(\d+)\.qoi', 1) AS BIGINT)
-        |           AS asset_idx,
-        |         CAST(octet_length(content) AS BIGINT) AS n_bytes,
-        |         substring(hex(content), 1, 16) AS head_hex
-        |  FROM read_blob('/tmp/graft_qoi__root_testdata_sf0.01/**/*.qoi')),
+      s"""WITH f AS (${QoiTree.blobRows(8)}),
         |px AS (
         |  SELECT asset_idx,
         |         (asset_idx * 5 + 3 * (x.x // 5) + 7 * (y.y // 3)) % 256 AS r,
@@ -580,6 +522,8 @@ object ImageSourceQueries {
         |FROM f JOIN a USING (asset_idx)
         |ORDER BY f.asset_idx""".stripMargin)
   }
+
+  private[sources] val WebpTree = Fixture("webp", "w", "webp", scales = true)
 
   /** Build (atomically, once per scale factor) the WebP fixture tree: 24
     * .webp files of 20×14 pixels cycling through eight VP8L feature classes
@@ -605,7 +549,7 @@ object ImageSourceQueries {
     * replay every pixel bit-exactly).
     */
   private[sources] def ensureWebpTree(sfDir: String): String =
-    fixtureTree(scaledTag("webp"), sfDir) {
+    WebpTree.tree(sfDir) {
       import graft.multimodal.WebpCodec
       val w = 20; val h = 14
       (0 until 24 * mediaScale).iterator.map { i =>
@@ -648,7 +592,7 @@ object ImageSourceQueries {
           case 6            => WebpCodec.Layout(colorBits = 3)
           case _            => WebpCodec.Layout(metaBits = 4)
         }
-        (f"${i % 2}/${i % 3}/w$i%03d.webp",
+        (s"${i % 2}/${i % 3}/${WebpTree.file(i)}",
           WebpCodec.encode(w, h, px, layout))
       }
     }
@@ -670,16 +614,11 @@ object ImageSourceQueries {
     val name = "q_webp_scan"
     def run(spark: SparkSession, sfDir: String): DataFrame = {
       import spark.implicits._
-      val root = ensureWebpTree(sfDir)
-      val idRe = "w(\\d+)\\.webp".r
-      Sources.binaryTree(spark, root, "*.webp")
-        .select(col("path"), col("content"))
-        .as[(String, Array[Byte])]
+      WebpTree.assets(spark, ensureWebpTree(sfDir))
         .mapPartitions { it =>
-          it.flatMap { case (path, content) =>
+          it.flatMap { case (idx, content) =>
             graft.multimodal.WebpCodec.decode(content).map { d =>
               val (sr, sg, sb) = ImageOps.channelSums(d.argb)
-              val idx = Sources.assetIdx(path, idRe)
               (idx, d.width.toLong, d.height.toLong,
                 d.width.toLong * d.height, sr, sg, sb,
                 content.length.toLong, Sources.headHex(content))
@@ -690,16 +629,9 @@ object ImageSourceQueries {
           "sum_b", "n_bytes", "head_hex")
         .orderBy("asset_idx")
     }
-    // Same pinned-glob stance as the other codec scans: static oracle
-    // text, gate at sf0.01 only. The per-class pixel formulas replay in
-    // one CASE over the (x, y) grid.
+    // The per-class pixel formulas replay in one CASE over the (x, y) grid.
     val oracle = Some(
-      """WITH f AS (
-        |  SELECT CAST(regexp_extract(filename, 'w(\d+)\.webp', 1) AS BIGINT)
-        |           AS asset_idx,
-        |         CAST(octet_length(content) AS BIGINT) AS n_bytes,
-        |         substring(hex(content), 1, 16) AS head_hex
-        |  FROM read_blob('/tmp/graft_webp__root_testdata_sf0.01/**/*.webp')),
+      s"""WITH f AS (${WebpTree.blobRows(8)}),
         |px AS (
         |  SELECT asset_idx, i, x.x AS x, y.y AS y,
         |         CASE i % 8
@@ -751,6 +683,8 @@ object ImageSourceQueries {
         |ORDER BY f.asset_idx""".stripMargin)
   }
 
+  private[sources] val TiffTree = Fixture("tiff", "t", "tif", scales = false)
+
   /** Build (atomically, once per scale factor) the TIFF fixture tree: 24 .tif
     * files of 15×9 pixels cycling through six layout classes (i mod 6) that
     * jointly cover the baseline decoder: RGB uncompressed II (0), RGB
@@ -764,7 +698,7 @@ object ImageSourceQueries {
     * engine's own deterministic [[graft.multimodal.TiffCodec]] writer.
     */
   private[sources] def ensureTiffTree(sfDir: String): String =
-    fixtureTree("tiff", sfDir) {
+    TiffTree.tree(sfDir) {
       val w = 15; val h = 9
       (0 until 24).iterator.map { i =>
         val layout = (i % 6) match {
@@ -799,7 +733,7 @@ object ImageSourceQueries {
             }
             TiffCodec.encodeRgb(ImageOps.Image(w, h, px), layout)
         }
-        (f"${i % 2}/${i % 3}/t$i%03d.tif", bytes)
+        (s"${i % 2}/${i % 3}/${TiffTree.file(i)}", bytes)
       }
     }
 
@@ -814,13 +748,8 @@ object ImageSourceQueries {
     val name = "q_tiff_scan"
     def run(spark: SparkSession, sfDir: String): DataFrame = {
       import spark.implicits._
-      val root = ensureTiffTree(sfDir)
-      val idRe = "t(\\d+)\\.tif".r
-      Sources.binaryTree(spark, root, "*.tif")
-        .select(col("path"), col("content"))
-        .as[(String, Array[Byte])]
-        .flatMap { case (path, content) =>
-          val idx = Sources.assetIdx(path, idRe)
+      TiffTree.assets(spark, ensureTiffTree(sfDir))
+        .flatMap { case (idx, content) =>
           for (img <- TiffCodec.decode(content).toSeq) yield {
             val (sr, sg, sb) = ImageOps.channelSums(img.pixels)
             (idx, img.width.toLong * img.height, sr, sg, sb,
@@ -832,12 +761,7 @@ object ImageSourceQueries {
         .orderBy("asset_idx")
     }
     val oracle = Some(
-      """WITH f AS (
-        |  SELECT CAST(regexp_extract(filename, 't(\d+)\.tif', 1) AS BIGINT)
-        |           AS asset_idx,
-        |         CAST(octet_length(content) AS BIGINT) AS n_bytes,
-        |         substring(hex(content), 1, 16) AS head_hex
-        |  FROM read_blob('/tmp/graft_tiff__root_testdata_sf0.01/**/*.tif')),
+      s"""WITH f AS (${TiffTree.blobRows(8)}),
         |px AS (
         |  SELECT asset_idx, x.x AS x, y.y AS y
         |  FROM f, LATERAL unnest(range(0, 15)) x(x),
@@ -867,6 +791,9 @@ object ImageSourceQueries {
         |FROM f JOIN a USING (asset_idx)
         |ORDER BY f.asset_idx""".stripMargin)
   }
+
+  private[sources] val PnmTree = Fixture("pnm", "n", "p?m", scales = true)
+
   /** Build (atomically, once per scale factor) the Netpbm fixture tree: 24
     * files cycling all six variants (P1..P6 — ASCII/binary bitmap, graymap,
     * pixmap), two maxvals (255 and 200, so the v·255 div maxval sample
@@ -874,7 +801,7 @@ object ImageSourceQueries {
     * asset, every sample a pure function of (i, x, y).
     */
   private[sources] def ensurePnmTree(sfDir: String): String =
-    fixtureTree(scaledTag("pnm"), sfDir) {
+    PnmTree.tree(sfDir) {
       import graft.multimodal.PnmCodec
       (0 until 24 * mediaScale).iterator.map { i =>
         val kind = 1 + i % 6
@@ -895,7 +822,7 @@ object ImageSourceQueries {
           case 2 | 5 => "pgm"
           case _ => "ppm"
         }
-        (f"${i % 2}/n$i%03d.$ext%s",
+        (s"${i % 2}/${PnmTree.file(i, ext)}",
           PnmCodec.build(kind, w, h, maxval, px, comment = i % 3 == 0))
       }
     }
@@ -910,16 +837,10 @@ object ImageSourceQueries {
     val name = "q_pnm_scan"
     def run(spark: SparkSession, sfDir: String): DataFrame = {
       import spark.implicits._
-      val root = ensurePnmTree(sfDir)
-      val idRe = "n(\\d+)\\.(pbm|pgm|ppm)".r
-      Sources.binaryTree(spark, root, "*.p?m")
-        .select(col("path"), col("content"))
-        .as[(String, Array[Byte])]
-        .flatMap { case (path, content) =>
-          for {
-            m <- idRe.findFirstMatchIn(path).toSeq
-            img <- graft.multimodal.PnmCodec.decode(content).toSeq
-          } yield (m.group(1).toLong, img.kind.toLong, img.width.toLong,
+      PnmTree.assets(spark, ensurePnmTree(sfDir))
+        .flatMap { case (idx, content) =>
+          for (img <- graft.multimodal.PnmCodec.decode(content).toSeq)
+          yield (idx, img.kind.toLong, img.width.toLong,
             img.height.toLong, img.maxval.toLong,
             img.rgb.map(p => ((p >> 16) & 0xFF).toLong).sum,
             img.rgb.map(p => ((p >> 8) & 0xFF).toLong).sum,
@@ -967,11 +888,7 @@ object ImageSourceQueries {
         |         CAST(sum(g) AS BIGINT) AS sum_g,
         |         CAST(sum(b) AS BIGINT) AS sum_b
         |  FROM ch GROUP BY 1),
-        |bl AS (
-        |  SELECT CAST(regexp_extract(filename, 'n(\\d+)\\.p.m', 1) AS BIGINT)
-        |           AS asset_idx,
-        |         CAST(octet_length(content) AS BIGINT) AS n_bytes
-        |  FROM read_blob('/tmp/graft_pnm__root_testdata_sf0.01/**/*.p?m'))
+        |bl AS (${PnmTree.blobRows()})
         |SELECT s.asset_idx, CAST(s.kind AS BIGINT) AS kind,
         |       CAST(s.w AS BIGINT) AS width, CAST(s.h AS BIGINT) AS height,
         |       CAST(s.maxval AS BIGINT) AS maxval,

@@ -7,10 +7,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 import SourceQueries.{fixtureTree, scaledTag}
-import ImageSourceQueries.{ensureImageTree, ensureTwoToneTree, ensureQoiTree, ensureGifTree, ensureBmpTree, ensureJpegTree, ensureTiffTree}
-import AudioSourceQueries.{ensureFlacTree, ensureAdpcmTree, ensureG711Tree, ensureAiffTree, ensureMp3Tree}
-import AudioContainerQueries.{ensureMp4Tree, ensureOggTree, ensureMkvTree}
-import VideoSourceQueries.{ensureZmbvTree, ensureMkvVfwTree, ensureMsrleTree}
+import ImageSourceQueries._
+import AudioSourceQueries._
+import AudioContainerQueries._
+import VideoSourceQueries._
 
 /** The unified media-catalog tree and the capstone modality-router scan.
   * Split from SourceQueries.scala (round 10) - mechanical move, no
@@ -35,25 +35,25 @@ object MediaCatalogQueries {
     fixtureTree(scaledTag("media"), sfDir) {
       import scala.jdk.CollectionConverters._
       Seq(
-        (ensureImageTree(sfDir), ".png", "s"),
-        (ensureTwoToneTree(sfDir), ".png", "t"),
-        (ensureFlacTree(sfDir), ".flac", "a"),
-        (ensureMp4Tree(sfDir), ".m4a", "m"),
-        (ensureZmbvTree(sfDir), ".avi", "v"),
-        (ensureMsrleTree(sfDir), ".avi", "r"),
-        (ensureAdpcmTree(sfDir), ".wav", "p"),
-        (ensureG711Tree(sfDir), ".wav", "g"),
-        (ensureQoiTree(sfDir), ".qoi", "x"),
-        (ensureOggTree(sfDir), ".ogg", "o"),
-        (ensureMkvTree(sfDir), ".mka", "k"),
-        (ensureMkvVfwTree(sfDir), ".mkv", "w"),
-        (ensureGifTree(sfDir), ".gif", "n"),
-        (ensureBmpTree(sfDir), ".bmp", "b"),
-        (ensureTiffTree(sfDir), ".tif", "f"),
-        (ensureAiffTree(sfDir), ".aif", "u")).iterator.flatMap {
-        case (src, ext, tag) =>
+        (ensureImageTree(sfDir), ImageTree, "s"),
+        (ensureTwoToneTree(sfDir), TwoToneTree, "t"),
+        (ensureFlacTree(sfDir), FlacTree, "a"),
+        (ensureMp4Tree(sfDir), Mp4Tree, "m"),
+        (ensureZmbvTree(sfDir), ZmbvTree, "v"),
+        (ensureMsrleTree(sfDir), MsrleTree, "r"),
+        (ensureAdpcmTree(sfDir), AdpcmTree, "p"),
+        (ensureG711Tree(sfDir), G711Tree, "g"),
+        (ensureQoiTree(sfDir), QoiTree, "x"),
+        (ensureOggTree(sfDir), OggTree, "o"),
+        (ensureMkvTree(sfDir), MkvTree, "k"),
+        (ensureMkvVfwTree(sfDir), MkvVfwTree, "w"),
+        (ensureGifTree(sfDir), GifTree, "n"),
+        (ensureBmpTree(sfDir), BmpTree, "b"),
+        (ensureTiffTree(sfDir), TiffTree, "f"),
+        (ensureAiffTree(sfDir), AiffTree, "u")).iterator.flatMap {
+        case (src, tree, tag) =>
           Files.walk(Paths.get(src)).iterator().asScala
-            .filter(p => p.toString.endsWith(ext))
+            .filter(p => p.toString.endsWith("." + tree.ext))
             .map(p => (s"$tag/$tag${p.getFileName}", Files.readAllBytes(p)))
       }
     }

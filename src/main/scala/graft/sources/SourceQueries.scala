@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.GraftQuery
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Path, Paths, StandardCopyOption,
   StandardOpenOption}
@@ -56,6 +56,78 @@ object SourceQueries {
           .foreach(Files.delete)
     }
     root.toString
+  }
+
+  /** The scale-factor dir whose fixture trees the DuckDB oracles read:
+    * the correctness gate runs there only.
+    */
+  private[sources] val OracleSfDir = "/root/testdata/sf0.01"
+
+  /** One fixture tree's naming and location, spelled once. Asset `i` is
+    * the file `<prefix><i, 3 digits>.<ext>` (the shard directories above
+    * it are the writer's) under the root of `tag` — of `scaledTag(tag)`
+    * when the tree `scales`, so SPARK_GRAFT_MEDIA_SCALE trees get roots
+    * of their own. The writer's file names, the Spark scan and the
+    * DuckDB oracle's `read_blob` prelude all come from this value, so a
+    * tag bump moves the oracle with the tree.
+    *
+    * Oracle SQL is fixed text: it reads the ×1 tree (the one its closed
+    * forms describe) that the Spark side writes at [[OracleSfDir]] under
+    * this JVM's `java.io.tmpdir` before the oracle runs.
+    */
+  private[sources] final case class Fixture(tag: String, prefix: String,
+      ext: String, scales: Boolean) {
+    private def rootTag = if (scales) scaledTag(tag) else tag
+
+    /** Asset `i`'s file name, with `ext` for a tree of several (PNM). */
+    def file(i: Int, ext: String): String = f"$prefix$i%03d.$ext"
+    def file(i: Int): String = file(i, ext)
+    def glob: String = s"*.$ext"
+
+    /** Group 1 is the asset index; Java regex and DuckDB's RE2 read it
+      * alike. A `?` in `ext` matches any one character, as in [[glob]].
+      */
+    def idPattern: String =
+      prefix + "(\\d+)\\." + ext.replace(".", "\\.").replace("?", ".")
+
+    /** [[SourceQueries.fixtureTree]] for this tree: its root for `sfDir`. */
+    def tree(sfDir: String)(files: => Iterator[(String, Array[Byte])]): String =
+      fixtureTree(rootTag, sfDir)(files)
+
+    /** Every file under `root` named like this tree's assets. */
+    def scan(spark: SparkSession, root: String): DataFrame =
+      Sources.binaryTree(spark, root, glob)
+
+    /** [[scan]] as `(asset_idx, content)` rows. */
+    def assets(spark: SparkSession,
+        root: String): Dataset[(Long, Array[Byte])] = {
+      import spark.implicits._
+      scan(spark, root)
+        .select(regexp_extract(col("path"), idPattern, 1).cast("long")
+          .as("asset_idx"), col("content"))
+        .as[(Long, Array[Byte])]
+    }
+
+    /** The oracle's `read_blob` over every asset of the ×1 tree. */
+    def blob: String = s"read_blob('${rootOf(tag, OracleSfDir)}/**/$glob')"
+
+    /** The oracle's asset index of a `read_blob` row. */
+    def blobIdx: String =
+      s"CAST(regexp_extract(filename, '$idPattern', 1) AS BIGINT)"
+
+    /** The oracle's per-file prelude: `(asset_idx, n_bytes)` from
+      * [[blob]], plus `head_hex` (the first `headBytes` bytes as
+      * uppercase hex, [[Sources.headHex]]'s twin) when `headBytes` > 0.
+      */
+    def blobRows(headBytes: Int = 0): String = {
+      val head =
+        if (headBytes > 0)
+          s",\n       substring(hex(content), 1, ${2 * headBytes}) AS head_hex"
+        else ""
+      s"""SELECT $blobIdx AS asset_idx,
+         |       CAST(octet_length(content) AS BIGINT) AS n_bytes$head
+         |FROM $blob""".stripMargin
+    }
   }
 
   /** Fixture-tree scale knob for the media-dedup SCALING audits (the

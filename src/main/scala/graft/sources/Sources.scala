@@ -2,7 +2,6 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, DataFrameReader, SparkSession}
 import org.apache.spark.sql.execution.datasources.binaryfile.BinaryFileFormat
-import scala.util.matching.Regex
 
 /** Source/sink compatibility layer (SURVEY §2.1).
   *
@@ -36,12 +35,6 @@ object Sources {
       .option("pathGlobFilter", glob)
       .option("recursiveFileLookup", "true")
       .load(root)
-
-  /** The asset index a fixture file name carries: group 1 of `re`'s first
-    * match in `path`, or −1 when the path does not match.
-    */
-  def assetIdx(path: String, re: Regex): Long =
-    re.findFirstMatchIn(path).map(_.group(1).toLong).getOrElse(-1L)
 
   /** The first (up to) 8 bytes of a file as uppercase hex — the
     * byte-identity pin the fixture scans share with DuckDB's

@@ -5,8 +5,9 @@ import graft.dedup.Dedup
 import graft.images.ImageOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import SourceQueries.keepLargest
-import VideoSourceQueries.{ensureZmbvTree, ensureMkvVfwTree}
+import SourceQueries.{Fixture, keepLargest}
+import VideoSourceQueries.{MkvVfwTree, ZmbvTree, ensureZmbvTree,
+  ensureMkvVfwTree}
 
 /** Video perceptual dedup: per-frame fingerprints, shot-set near-dup,
   * end-to-end cluster + representative tier.
@@ -34,28 +35,20 @@ object VideoDedupQueries {
         val h = ImageOps.aHash64(ImageOps.Image(f.width, f.height, px))
         (kind, idx, fi.toLong, h >>> 32, h & 0xFFFFFFFFL)
       }
-    def scan(root: String, glob: String, kind: String, re: String,
-        decode: Array[Byte] => Option[ZmbvCodec.Video]): DataFrame = {
-      val rex = re.r
-      Sources.binaryTree(spark, root, glob)
-        .select(col("path"), col("content"))
-        .as[(String, Array[Byte])]
-        .flatMap { case (path, content) =>
-          for {
-            m <- rex.findFirstMatchIn(path).toSeq
-            video <- decode(content).toSeq
-            row <- hashFrames(kind, m.group(1).toLong, video)
-          } yield row
+    def scan(tree: Fixture, root: String, kind: String,
+        decode: Array[Byte] => Option[ZmbvCodec.Video]): DataFrame =
+      tree.assets(spark, root)
+        .flatMap { case (idx, content) =>
+          decode(content).toSeq.flatMap(hashFrames(kind, idx, _))
         }
         .toDF("kind", "asset_idx", "frame_idx", "hash_hi", "hash_lo")
-    }
-    scan(ensureZmbvTree(sfDir), "*.avi", "v", "v(\\d+)\\.avi",
+    scan(ZmbvTree, ensureZmbvTree(sfDir), "v",
       bs => for {
         (fcc, w, h) <- AviCodec.videoInfo(bs) if fcc == "ZMBV"
         payloads <- AviCodec.frames(bs)
         video <- ZmbvCodec.decode(w, h, payloads)
       } yield video)
-      .unionByName(scan(ensureMkvVfwTree(sfDir), "*.mkv", "w", "w(\\d+)\\.mkv",
+      .unionByName(scan(MkvVfwTree, ensureMkvVfwTree(sfDir), "w",
         bs => for {
           tracks <- MkvCodec.demux(bs)
           t <- tracks.find(_.codecId == "V_MS/VFW/FOURCC")

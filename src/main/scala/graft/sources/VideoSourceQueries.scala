@@ -5,7 +5,7 @@ import graft.images.ImageOps
 import graft.multimodal.TiffCodec
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import SourceQueries.{fixtureTree, mediaScale, scaledTag}
+import SourceQueries.{Fixture, mediaScale}
 
 /** Video-family fixture trees and decode-under-hash-gate scans
   * (ZMBV in AVI, ZMBV in Matroska VfW, MS-RLE in AVI).
@@ -13,6 +13,8 @@ import SourceQueries.{fixtureTree, mediaScale, scaledTag}
   * behavior change; fixture dirs and oracle SQL are byte-identical.
   */
 object VideoSourceQueries {
+
+  private[sources] val ZmbvTree = Fixture("zmbv", "v", "avi", scales = true)
 
   /** Build (atomically, once per scale factor) the ZMBV fixture tree: 24
     * .avi clips (8bpp palette, 24×18 — edge blocks on both axes) whose
@@ -25,7 +27,7 @@ object VideoSourceQueries {
     * [[graft.multimodal.ZmbvCodec]].
     */
   private[sources] def ensureZmbvTree(sfDir: String): String =
-    fixtureTree(scaledTag("zmbv"), sfDir) {
+    ZmbvTree.tree(sfDir) {
       val w = 24; val h = 18
       (0 until 24 * mediaScale).iterator.map { i =>
         val pal = new Array[Byte](768)
@@ -41,7 +43,7 @@ object VideoSourceQueries {
               java.lang.Math.floorMod(i * 11 + (x - 3 * f) * 2 + y * 5, 256).toByte
           (px, pal)
         }
-        (f"${i % 2}/${i % 3}/v$i%03d.avi",
+        (s"${i % 2}/${i % 3}/${ZmbvTree.file(i)}",
           graft.multimodal.ZmbvCodec.encodeAvi(w, h,
             graft.multimodal.ZmbvCodec.FmtPal8, frames, keyEvery = 4))
       }
@@ -66,14 +68,9 @@ object VideoSourceQueries {
     val name = "q_zmbv_scan"
     def run(spark: SparkSession, sfDir: String): DataFrame = {
       import spark.implicits._
-      val root = ensureZmbvTree(sfDir)
-      val idRe = "v(\\d+)\\.avi".r
-      Sources.binaryTree(spark, root, "*.avi")
-        .select(col("path"), col("content"))
-        .as[(String, Array[Byte])]
-        .flatMap { case (path, content) =>
+      ZmbvTree.assets(spark, ensureZmbvTree(sfDir))
+        .flatMap { case (idx, content) =>
           import graft.multimodal.{AviCodec, ZmbvCodec}
-          val idx = Sources.assetIdx(path, idRe)
           val headHex = Sources.headHex(content)
           for {
             (fcc, w, h) <- AviCodec.videoInfo(content).toSeq if fcc == "ZMBV"
@@ -91,15 +88,8 @@ object VideoSourceQueries {
           "sum_b", "n_bytes", "head_hex")
         .orderBy("asset_idx", "frame_idx")
     }
-    // Same pinned-glob stance as q_flac_scan: oracle SQL is static text
-    // and the correctness gate runs at sf0.01 only.
     val oracle = Some(
-      """WITH f AS (
-        |  SELECT CAST(regexp_extract(filename, 'v(\d+)\.avi', 1) AS BIGINT)
-        |           AS asset_idx,
-        |         CAST(octet_length(content) AS BIGINT) AS n_bytes,
-        |         substring(hex(content), 1, 16) AS head_hex
-        |  FROM read_blob('/tmp/graft_zmbv__root_testdata_sf0.01/**/*.avi')),
+      s"""WITH f AS (${ZmbvTree.blobRows(8)}),
         |fr AS (
         |  SELECT asset_idx, n_bytes, head_hex, t.f AS frame_idx
         |  FROM f, LATERAL unnest(range(0, 5 + asset_idx % 3)) t(f)),
@@ -121,6 +111,8 @@ object VideoSourceQueries {
         |ORDER BY fr.asset_idx, fr.frame_idx""".stripMargin)
   }
 
+  private[sources] val MkvVfwTree = Fixture("mkvvfw", "w", "mkv", scales = true)
+
   /** Build (atomically, once per scale factor) the ZMBV-in-Matroska fixture
     * tree: 24 .mkv files carrying the engine's ZMBV inter-frame payloads via
     * the public `V_MS/VFW/FOURCC` mapping (BITMAPINFOHEADER in
@@ -133,7 +125,7 @@ object VideoSourceQueries {
     * the mid-stream keyframe path inside the MKV carriage.
     */
   private[sources] def ensureMkvVfwTree(sfDir: String): String =
-    fixtureTree(scaledTag("mkvvfw"), sfDir) {
+    MkvVfwTree.tree(sfDir) {
       val w = 20; val h = 14
       (0 until 24 * mediaScale).iterator.map { i =>
         val pal = new Array[Byte](768)
@@ -151,7 +143,7 @@ object VideoSourceQueries {
         }
         val payloads = graft.multimodal.ZmbvCodec.encode(w, h,
           graft.multimodal.ZmbvCodec.FmtPal8, frames, keyEvery = 3)
-        (f"${i % 2}/${i % 3}/w$i%03d.mkv",
+        (s"${i % 2}/${i % 3}/${MkvVfwTree.file(i)}",
           graft.multimodal.MkvCodec.muxVfw("ZMBV", w, h, 8, payloads))
       }
     }
@@ -172,14 +164,9 @@ object VideoSourceQueries {
     val name = "q_mkv_vfw_scan"
     def run(spark: SparkSession, sfDir: String): DataFrame = {
       import spark.implicits._
-      val root = ensureMkvVfwTree(sfDir)
-      val idRe = "w(\\d+)\\.mkv".r
-      Sources.binaryTree(spark, root, "*.mkv")
-        .select(col("path"), col("content"))
-        .as[(String, Array[Byte])]
-        .flatMap { case (path, content) =>
+      MkvVfwTree.assets(spark, ensureMkvVfwTree(sfDir))
+        .flatMap { case (idx, content) =>
           import graft.multimodal.{MkvCodec, ZmbvCodec}
-          val idx = Sources.assetIdx(path, idRe)
           val headHex = Sources.headHex(content)
           for {
             tracks <- MkvCodec.demux(content).toSeq
@@ -198,15 +185,8 @@ object VideoSourceQueries {
           "sum_b", "n_bytes", "head_hex")
         .orderBy("asset_idx", "frame_idx")
     }
-    // Same pinned-glob stance as q_zmbv_scan: static oracle text,
-    // correctness gate at sf0.01 only.
     val oracle = Some(
-      """WITH f AS (
-        |  SELECT CAST(regexp_extract(filename, 'w(\d+)\.mkv', 1) AS BIGINT)
-        |           AS asset_idx,
-        |         CAST(octet_length(content) AS BIGINT) AS n_bytes,
-        |         substring(hex(content), 1, 16) AS head_hex
-        |  FROM read_blob('/tmp/graft_mkvvfw__root_testdata_sf0.01/**/*.mkv')),
+      s"""WITH f AS (${MkvVfwTree.blobRows(8)}),
         |fr AS (
         |  SELECT asset_idx, n_bytes, head_hex, t.f AS frame_idx
         |  FROM f, LATERAL unnest(range(0, 4 + asset_idx % 4)) t(f)),
@@ -228,6 +208,8 @@ object VideoSourceQueries {
         |ORDER BY fr.asset_idx, fr.frame_idx""".stripMargin)
   }
 
+  private[sources] val MsrleTree = Fixture("msrle", "r", "avi", scales = false)
+
   /** Build (atomically, once per scale factor) the MS-RLE fixture tree: 24
     * .avi clips (8bpp palette, 16×12), 5 + (i mod 2) frames, keyframe every 4
     * (a mid-stream full repaint on 6-frame clips). Frame f is frame f−1
@@ -242,7 +224,7 @@ object VideoSourceQueries {
     * [[graft.multimodal.MsRleCodec]].
     */
   private[sources] def ensureMsrleTree(sfDir: String): String =
-    fixtureTree("msrle", sfDir) {
+    MsrleTree.tree(sfDir) {
       val w = 16; val h = 12
       (0 until 24).iterator.map { i =>
         val pal = new Array[Byte](768)
@@ -261,7 +243,7 @@ object VideoSourceQueries {
               ((i * 13 + f * 29 + x * 5 + y * 3 + 100) % 256).toByte
           canvas.clone()
         }
-        (f"${i % 2}/${i % 3}/r$i%03d.avi",
+        (s"${i % 2}/${i % 3}/${MsrleTree.file(i)}",
           graft.multimodal.MsRleCodec.encodeAvi(w, h, pal, frames, keyEvery = 4))
       }
     }
@@ -285,14 +267,9 @@ object VideoSourceQueries {
     val name = "q_msrle_scan"
     def run(spark: SparkSession, sfDir: String): DataFrame = {
       import spark.implicits._
-      val root = ensureMsrleTree(sfDir)
-      val idRe = "r(\\d+)\\.avi".r
-      Sources.binaryTree(spark, root, "*.avi")
-        .select(col("path"), col("content"))
-        .as[(String, Array[Byte])]
-        .flatMap { case (path, content) =>
+      MsrleTree.assets(spark, ensureMsrleTree(sfDir))
+        .flatMap { case (idx, content) =>
           import graft.multimodal.{AviCodec, MsRleCodec}
-          val idx = Sources.assetIdx(path, idRe)
           val headHex = Sources.headHex(content)
           for {
             (fcc, w, h) <- AviCodec.videoInfo(content).toSeq if fcc == "MRLE"
@@ -311,19 +288,13 @@ object VideoSourceQueries {
           "sum_b", "n_bytes", "head_hex")
         .orderBy("asset_idx", "frame_idx")
     }
-    // Same pinned-glob stance as q_zmbv_scan: static oracle text, gate at
-    // sf0.01 only. The covering stamps f′ of a pixel form an interval
+    // The covering stamps f′ of a pixel form an interval
     // [max(⌈(x−3)/2⌉, y−2, 0), min(⌊x/2⌋, y, frame_idx)], so the LAST
     // stamp (the paint order the encoder applied) is the interval's
     // upper end when the interval is nonempty — pure arithmetic, no
     // correlated subquery.
     val oracle = Some(
-      """WITH f AS (
-        |  SELECT CAST(regexp_extract(filename, 'r(\d+)\.avi', 1) AS BIGINT)
-        |           AS asset_idx,
-        |         CAST(octet_length(content) AS BIGINT) AS n_bytes,
-        |         substring(hex(content), 1, 16) AS head_hex
-        |  FROM read_blob('/tmp/graft_msrle__root_testdata_sf0.01/**/*.avi')),
+      s"""WITH f AS (${MsrleTree.blobRows(8)}),
         |fr AS (
         |  SELECT asset_idx, n_bytes, head_hex, t.f AS frame_idx
         |  FROM f, LATERAL unnest(range(0, 5 + asset_idx % 2)) t(f)),

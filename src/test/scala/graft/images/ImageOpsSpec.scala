@@ -20,6 +20,22 @@ class ImageOpsSpec extends AnyFunSuite {
     assert(decoded.get.pixels.sameElements(img.pixels))
   }
 
+  test("decode opens QOI bytes like QoiCodec itself") {
+    import graft.multimodal.QoiCodec
+    // plateaus, runs and a wrapping delta: every QOI op kind appears
+    val px = Array.tabulate(20 * 14) { o =>
+      val tx = (o % 20) / 5; val ty = (o / 20) / 3
+      ((5 + 3 * tx + 7 * ty) % 256 << 16) | ((250 + 2 * tx) % 256 << 8) | ty
+    }
+    val bytes = QoiCodec.encode(20, 14, px)
+    val want = QoiCodec.toImage(QoiCodec.decode(bytes).get)
+    val got = decode(bytes)
+    assert(got.isDefined, "decode refused QOI bytes")
+    assert(got.get.width == want.width && got.get.height == want.height)
+    assert(got.get.pixels.sameElements(want.pixels))
+    assert(want.pixels.sameElements(px))
+  }
+
   test("decode returns None on garbage bytes, not an exception") {
     assert(decode(Array[Byte](1, 2, 3, 4)).isEmpty)
     assert(decode(Array.emptyByteArray).isEmpty)

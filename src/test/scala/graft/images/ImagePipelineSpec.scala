@@ -100,40 +100,4 @@ class ImagePipelineSpec extends SparkSpec {
     val back = Sources.checkpoint(df, out)
     assert(back.orderBy("k").collect().map(_.getString(1)).toSeq == Seq("x", "y"))
   }
-
-  test("image near-dup pairs: noise-stable gradient pairs found, reversed " +
-    "gradient excluded, corrupt bytes dropped") {
-    import spark.implicits._
-    // strong horizontal gradient: every dHash comparison is decisive
-    // (step 16 ≫ ±4 noise), so base vs noised is Hamming 0 and the
-    // reversed gradient is the full-distance opposite (all 64 bits)
-    def gradient(step: Int): ImageOps.Image = {
-      val px = Array.tabulate(64 * 64) { i =>
-        val v = math.min(255, (i % 64) / 4 * step)
-        (v << 16) | (v << 8) | v
-      }
-      ImageOps.Image(64, 64, px)
-    }
-    val base = gradient(16)
-    val noised = ImageOps.Image(64, 64, base.pixels.clone())
-    (0 until 40).foreach { k =>
-      val i = k * 97 % (64 * 64)
-      val p = noised.pixels(i)
-      val r = math.min(255, ((p >> 16) & 0xFF) + 4)
-      noised.pixels(i) = (r << 16) | (p & 0xFFFF)
-    }
-    val reversed = ImageOps.Image(64, 64, base.pixels.reverse)
-    assert(ImageOps.dHash(base) == ImageOps.dHash(noised))
-    assert(java.lang.Long.bitCount(
-      ImageOps.dHash(base) ^ ImageOps.dHash(reversed)) > 3)
-    val df = Seq(
-      (1L, ImageOps.encodePng(base)),
-      (2L, ImageOps.encodePng(noised)),
-      (3L, ImageOps.encodePng(reversed)),
-      (4L, Array[Byte](1, 2, 3))) // undecodable → must not crash the op
-      .toDF("img_id", "content")
-    val pairs = ImagePipeline.imageNearDupPairs(df).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    assert(pairs.toSeq == Seq((1L, 2L, 0L)), s"${pairs.toSeq}")
-  }
 }

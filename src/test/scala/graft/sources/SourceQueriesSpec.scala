@@ -108,6 +108,34 @@ class SourceQueriesSpec extends SparkSpec {
     } finally rm(root)
   }
 
+  test("every read_blob oracle reads a tree its query writes under " +
+    "java.io.tmpdir") {
+    import java.nio.file.{FileSystems, Files, Paths}
+    val tmp = Paths.get(System.getProperty("java.io.tmpdir"))
+    val blob = "read_blob\\('([^']+)'\\)".r
+    val blobOracles = graft.SparkEntry.registry
+      .flatMap(q => q.oracle.filter(_.contains("read_blob(")).map(q -> _))
+    assert(blobOracles.nonEmpty)
+    blobOracles.foreach { case (q, sql) =>
+      // run() writes every fixture tree the query scans
+      q.run(spark, SourceQueries.OracleSfDir)
+      val globs = blob.findAllMatchIn(sql).map(_.group(1)).toSeq
+      assert(globs.nonEmpty, s"${q.name}: no read_blob glob")
+      globs.foreach { g =>
+        val root = Paths.get(g.substring(0, g.indexOf("/**/")))
+        assert(root.startsWith(tmp), s"${q.name}: $g is not under $tmp")
+        val names = FileSystems.getDefault
+          .getPathMatcher("glob:" + g.substring(g.lastIndexOf('/') + 1))
+        val walk = Files.walk(root)
+        try assert(walk.iterator().asScala.exists(p =>
+            Files.isRegularFile(p) && names.matches(p.getFileName)),
+          s"${q.name}: $g matches no file")
+        finally walk.close()
+      }
+    }
+    spark.catalog.clearCache()
+  }
+
   test("media catalog root carries the media scale of the trees it copies") {
     assert(MediaCatalogQueries.ensureMediaCatalog(sf) ==
       SourceQueries.rootOf(SourceQueries.scaledTag("media"), sf).toString)
