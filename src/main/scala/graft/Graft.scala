@@ -38,7 +38,8 @@ object Graft {
 
   /** Read one of the star-schema tables under a scale-factor directory.
     * Parquet-first (columnar, pushdown-friendly); see [[graft.sources]] for
-    * the CSV compat source the reference used.
+    * the CSV compat source the reference used. The footer schema comes
+    * from [[SchemaMemo]], so a repeated read runs no inference job.
     *
     * `events.ts` has been written by the generator as both Parquet
     * TIMESTAMP(NANOS) (which Spark reads as a nanos long under
@@ -52,7 +53,7 @@ object Graft {
     */
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = spark.read.parquet(s"$sfDir/$name.parquet")
+    val df = SchemaMemo.read(spark, "parquet", s"$sfDir/$name.parquet")
     if (name == "events") normalizeEventTs(df) else df
   }
 

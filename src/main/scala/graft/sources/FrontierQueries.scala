@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.GraftQuery
+import graft.{GraftQuery, SchemaMemo}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import SourceQueries.{Fixture, workDir, mediaScale, scaledTag}
@@ -443,7 +443,7 @@ object FrontierQueries {
     if (!java.nio.file.Files.exists(dir.resolve("_SUCCESS")))
       coldResolvedFrontier(spark, root)
         .write.mode("overwrite").parquet(dir.toString)
-    spark.read.parquet(dir.toString)
+    SchemaMemo.read(spark, "parquet", dir.toString)
   }
 
   /** Per distinct (host, path): newest-lastmod freshness, max priority,

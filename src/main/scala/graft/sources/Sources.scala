@@ -1,6 +1,7 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, DataFrameReader, SparkSession}
+import graft.SchemaMemo
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.binaryfile.BinaryFileFormat
 
 /** Source/sink compatibility layer (SURVEY §2.1).
@@ -43,10 +44,11 @@ object Sources {
   def headHex(content: Array[Byte]): String =
     content.take(8).map(b => f"$b%02X").mkString
 
-  /** S2 — the reference's CSV dialect: header, `;` separator. */
-  def readSemicolonCsv(spark: SparkSession, path: String,
-      configure: DataFrameReader => DataFrameReader = identity): DataFrame =
-    configure(spark.read.option("header", "true").option("sep", ";")).csv(path)
+  /** S2 — the reference's CSV dialect: header, `;` separator. The header
+    * schema comes from [[SchemaMemo]]: one inference job per file listing.
+    */
+  def readSemicolonCsv(spark: SparkSession, path: String): DataFrame =
+    SchemaMemo.read(spark, "csv", path, Map("header" -> "true", "sep" -> ";"))
 
   /** S3 — CSV sink in the same dialect, overwrite mode
     * (`df.write.csv(mode="overwrite", header=True, sep=";")`).

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.{Graft, GraftQuery}
+import graft.{Graft, GraftQuery, SchemaMemo}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -57,7 +57,7 @@ object StreamQueries {
   /** Streaming read of the events table, normalized to the shape of
     * [[EventStream.batchEvents]] (the file source needs an explicit
     * schema — at 100 TB schema inference is a full extra scan; here it is
-    * one parquet-footer metadata read).
+    * the batch table's footer schema, from [[SchemaMemo]]).
     */
   private def streamEvents(spark: SparkSession, sfDir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -126,7 +126,7 @@ object StreamQueries {
       }
       d.toString
     }
-    val schema = spark.read.parquet(path).schema
+    val schema = SchemaMemo.schema(spark, "parquet", path)
     Graft.normalizeEventTs(spark.readStream.schema(schema).parquet(streamDir))
       .select(col("event_id"), Graft.tsFromNanos("ts").as("ts"),
         col("user_id"), col("event_type"), col("value"))

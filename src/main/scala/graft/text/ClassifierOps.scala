@@ -1,6 +1,6 @@
 package graft.text
 
-import graft.{Graft, GraftQuery}
+import graft.{Graft, GraftQuery, SchemaMemo}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -156,12 +156,12 @@ object ClassifierOps {
     * cold ≡ cached is spec-asserted in ClassifierOpsSpec) and the
     * oracles replay training via CTEs either way.
     */
-  private def servedWeights(spark: SparkSession, sfDir: String): Seq[(Long, Long)] =
-    ModelCache.getOrElseUpdate(s"classifier:$sfDir", {
+  private[text] def servedWeights(spark: SparkSession, sfDir: String): Seq[(Long, Long)] =
+    ModelCache.getOrElseUpdate(spark, "classifier", sfDir) {
       val (_, finalW, feats) = train(spark, sfDir)
       feats.unpersist()
       finalW
-    })
+    }
 
   /** Shared oracle CTE chain: features → three unrolled epochs. Epoch 1
     * scores with w = 0 (every margin is 0 ⇒ everything misclassified), so
@@ -265,7 +265,7 @@ object ClassifierOps {
         .agg(sum(col("c") * coalesce(col("w"), lit(0L))).as("score"))
         .write.mode("overwrite").parquet(dir.toString)
     }
-    spark.read.parquet(dir.toString)
+    SchemaMemo.read(spark, "parquet", dir.toString)
   }
 
   /** Classifier-based selection: score every document with the trained

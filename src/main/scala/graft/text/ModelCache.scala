@@ -1,6 +1,10 @@
 package graft.text
 
-/** Process-level memo for TRAINED tokenizer models, keyed by corpus dir.
+import graft.SchemaMemo
+import org.apache.spark.sql.SparkSession
+
+/** Process-level memo for TRAINED tokenizer models, keyed by corpus dir
+  * and by the content of its `documents.parquet`.
   *
   * A trained vocabulary is a pure function of its (immutable) corpus, so
   * the `*_apply` serving queries — which exist to measure model
@@ -17,12 +21,28 @@ package graft.text
   * Results are identical on hit and miss — training is deterministic —
   * so the DuckDB oracles (which rebuild the model via CTEs every run)
   * replay both paths bit-for-bit.
+  *
+  * An entry holds for one [[SchemaMemo.listing]] of the corpus
+  * (names, sizes, mtimes): a corpus replaced at the same path trains again
+  * and replaces the entry, so a kind holds one model per corpus dir.
   */
 private[text] object ModelCache {
-  private val cache = scala.collection.concurrent.TrieMap.empty[String, AnyRef]
+  private val cache = scala.collection.concurrent.TrieMap
+    .empty[String, (SchemaMemo.Listing, AnyRef)]
 
-  def getOrElseUpdate[T <: AnyRef](key: String, build: => T): T =
-    cache.getOrElseUpdate(key, build).asInstanceOf[T]
+  /** The `kind` model of `sfDir`'s corpus, trained by `build` on a miss. */
+  def getOrElseUpdate[T <: AnyRef](spark: SparkSession, kind: String,
+      sfDir: String)(build: => T): T = {
+    val key = s"$kind:$sfDir"
+    val corpus = SchemaMemo.listing(spark, s"$sfDir/documents.parquet")
+    cache.get(key) match {
+      case Some((`corpus`, model)) => model.asInstanceOf[T]
+      case _ =>
+        val model = build
+        cache.put(key, (corpus, model))
+        model
+    }
+  }
 
   /** Test hook: drop everything (lets a spec measure a cold train). */
   private[text] def clear(): Unit = cache.clear()

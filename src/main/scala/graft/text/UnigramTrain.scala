@@ -499,9 +499,9 @@ object UnigramTrain {
       // trains and collects it, later executions measure application
       // only. Deterministic training → identical rows on hit and miss.
       val model: Seq[(String, Long)] =
-        ModelCache.getOrElseUpdate(s"unigram:$sfDir", {
+        ModelCache.getOrElseUpdate(spark, "unigram", sfDir) {
           localModel(spark, sfDir).seg2.map(s => (s._1, s._4))
-        })
+        }
       val toks = graft.Graft.table(spark, sfDir, "documents")
         .select(col("source"), explode(
           regexp_extract_all(lower(col("text")), lit("[a-z]+"), lit(0)))

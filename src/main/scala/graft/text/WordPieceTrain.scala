@@ -256,7 +256,7 @@ object WordPieceTrain {
       // application cost. The vocab is alphabet + Merges pieces (bounded,
       // bytes) — the documented bounded-collect class.
       val pieces: Seq[String] =
-        ModelCache.getOrElseUpdate(s"wordpiece:$sfDir", {
+        ModelCache.getOrElseUpdate(spark, "wordpiece", sfDir) {
           val merges = train(spark, sfDir)
           val d = BpeTrain.wordDict(spark, sfDir).persist()
           val v = d.select(explode(initialSyms(col("w"))).as("p"))
@@ -264,7 +264,7 @@ object WordPieceTrain {
             .distinct().as[String].collect().toSeq.sorted
           d.unpersist()
           v
-        })
+        }
       val dict = BpeTrain.wordDict(spark, sfDir).persist()
       val mdf = pieces.toDF("p").agg(map_from_arrays(
         collect_list(col("p")), collect_list(lit(1))).as("m"))
