@@ -36,6 +36,22 @@ object Graft {
     spark
   }
 
+  /** Run `body` with the session confs `confs` set, then put each key back
+    * as it was: its previous value, or unset if it was unset, also when
+    * `body` throws. The engine runs its queries one after another in one
+    * session, so a scoped set is race-free.
+    */
+  def withConfs[T](spark: SparkSession, confs: (String, String)*)(body: => T): T = {
+    val set = spark.conf.getAll // the keys set in this session, no defaults
+    val prev = confs.map { case (k, _) => k -> set.get(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   /** Read one of the star-schema tables under a scale-factor directory.
     * Parquet-first (columnar, pushdown-friendly); see [[graft.sources]] for
     * the CSV compat source the reference used. The footer schema comes

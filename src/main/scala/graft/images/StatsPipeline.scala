@@ -8,8 +8,8 @@ import org.apache.spark.sql.functions._
 /** The reference's `pyspark_stats.py` over the per-landmark rollup
   * (SURVEY §3.3) as ONE plan: [[statTable]] replaces the reference's driver
   * loops of filter+sum actions (156 / 36 / 4 / 6 Spark jobs) for every
-  * stat and class with one broadcast join and one grouped aggregate; the
-  * four stats are filters of it.
+  * stat and class with one broadcast join and one grouped aggregate, and
+  * [[goldenFiles]] cuts the four stats from it once it is collected.
   *
   * Inputs: `rollup` = [[ImagePipeline.perLandmarkRollup]] output
   * (landmark_id, image_count, predictions_sum, averages); `names` =
@@ -65,47 +65,6 @@ object StatsPipeline {
         Seq(n.as(s"count_$cls"),
           safeDiv(n.cast("double"), images.cast("double")).as(s"avg_$cls"))
       }: _*)
-  }
-
-  /** One stat of [[statTable]] for one class: (key, values…) ordered by key. */
-  private def view(rollup: DataFrame, names: DataFrame, cls: Int, stat: String,
-      key: String, values: (String, String)*): DataFrame =
-    statTable(rollup, names, Seq(cls)).filter(col("stat") === stat)
-      .select(col("key").as(key) +: values.map { case (c, as) => col(s"${c}_$cls").as(as) }: _*)
-      .orderBy(key)
-
-  /** Stat 1 — per-first-letter count + average for one class. */
-  def alphabetStat(rollup: DataFrame, names: DataFrame, cls: Int): DataFrame =
-    view(rollup, names, cls, "letter", "letter", "count" -> "count", "avg" -> "avg_per_image")
-
-  /** Stat 2 — average objects per city (name-contains bucket). */
-  def cityAvgStat(rollup: DataFrame, names: DataFrame, cls: Int): DataFrame =
-    view(rollup, names, cls, "city", "city", "avg" -> "avg_per_image")
-
-  /** Stat 3 — avg_all vs avg_people_places; 0.0 for a metric no landmark counts under. */
-  def keywordContrastStat(rollup: DataFrame, names: DataFrame, cls: Int): DataFrame = {
-    import rollup.sparkSession.implicits._
-    KeywordMetrics.toDF("metric")
-      .join(view(rollup, names, cls, "keyword", "metric", "avg" -> "value"), Seq("metric"), "left")
-      .select(col("metric"), coalesce(col("value"), lit(0.0)).as("value")).orderBy("metric")
-  }
-
-  /** Stat 4 — class average by landmark-name-length band. */
-  def nameLengthStat(rollup: DataFrame, names: DataFrame, cls: Int): DataFrame =
-    view(rollup, names, cls, "band", "band", "avg" -> "avg_per_image")
-
-  /** Stage 4's data path (`plots.py:30-40`): the per-class city stats as
-    * the heatmap matrix the dashboard renders — pandas `merge`-per-class +
-    * `transpose` become one pivot of [[statTable]] with city × class
-    * columns.
-    */
-  def heatmapMatrix(rollup: DataFrame, names: DataFrame,
-      classes: Seq[Int]): DataFrame = {
-    require(classes.nonEmpty, "heatmapMatrix needs at least one class column")
-    statTable(rollup, names, classes)
-      .filter(col("stat") === "city")
-      .select(col("key").as("city") +: classes.map(c => col(s"avg_$c").as(s"class_$c")): _*)
-      .orderBy("city")
   }
 
   /** Spark's `orderBy` order of string keys: UTF-8 bytes compared

@@ -449,9 +449,7 @@ object LayoutOps {
       c.select(col("c_custkey"), col("c_mktsegment"))
         .write.bucketBy(8, "c_custkey")
         .sortBy("c_custkey").saveAsTable("graft_bjoin_customer")
-      val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      try {
+      Graft.withConfs(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
         spark.table("graft_bjoin_orders")
           .join(spark.table("graft_bjoin_customer"),
             col("o_custkey") === col("c_custkey"))
@@ -462,8 +460,6 @@ object LayoutOps {
           // materialize before the threshold is restored — the plan must
           // bind under the no-broadcast setting
           .localCheckpoint(eager = true)
-      } finally {
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
       }
     }
     val oracle = Some(

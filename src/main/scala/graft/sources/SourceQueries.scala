@@ -5,7 +5,6 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Path, Paths, StandardCopyOption,
   StandardOpenOption}
-import scala.jdk.CollectionConverters._
 
 /** Driver-visible queries for the source/sink surface (SURVEY §2.1 S1–S3).
   * The testdata has no CSV or image files, so each query materializes its
@@ -14,10 +13,21 @@ import scala.jdk.CollectionConverters._
   */
 object SourceQueries {
 
-  private[sources] def rootOf(tag: String, sfDir: String): Path = {
+  /** The one per-sf scratch path: `java.io.tmpdir/graft_<tag>_<sfDir>`,
+    * with every character of `sfDir` but letters, digits and dots made `_`.
+    */
+  private[graft] def rootOf(tag: String, sfDir: String): Path = {
     val safe = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
     Paths.get(System.getProperty("java.io.tmpdir"), s"graft_${tag}_$safe")
   }
+
+  /** Delete the tree at `p`, if there is one. */
+  private[graft] def deleteTree(p: Path): Unit =
+    if (Files.exists(p)) {
+      val walk = Files.walk(p)
+      try walk.sorted(java.util.Comparator.reverseOrder()).forEach(q => Files.delete(q))
+      finally walk.close()
+    }
 
   private[sources] def workDir(tag: String, sfDir: String): String = {
     val p = rootOf(tag, sfDir)
@@ -51,9 +61,7 @@ object SourceQueries {
         }
         try Files.move(stage, root, StandardCopyOption.ATOMIC_MOVE)
         catch { case _: java.io.IOException if Files.exists(root) => () }
-      } finally if (Files.exists(stage))
-        Files.walk(stage).iterator().asScala.toSeq.reverse
-          .foreach(Files.delete)
+      } finally deleteTree(stage)
     }
     root.toString
   }

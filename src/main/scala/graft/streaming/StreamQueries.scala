@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.{Graft, GraftQuery, SchemaMemo}
+import graft.sources.SourceQueries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -37,97 +38,24 @@ object StreamQueries {
     * Every registered readout is partition-count independent (Complete
     * aggregates / append-join match sets / per-key state), so the twins
     * run at a small count; a production deployment sizes this to
-    * throughput (documented knob), not to the session default.
+    * throughput, not to the session default.
     */
-  private val StreamShufflePartitions =
-    sys.env.getOrElse("SPARK_GRAFT_STREAM_SHUFFLE", "4").toInt
+  private val StreamShufflePartitions = "spark.sql.shuffle.partitions" -> "4"
 
-  /** Run `body` with the streaming shuffle-partition override in place,
-    * restoring the session default afterwards (the registrations execute
-    * sequentially in one session — Verify/Bench — so a scoped set/restore
-    * is race-free).
-    */
-  private def withStreamPartitions[T](spark: SparkSession)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, StreamShufflePartitions.toString)
-    try body finally spark.conf.set(key, prev)
-  }
-
-  /** Streaming read of the events table, normalized to the shape of
-    * [[EventStream.batchEvents]] (the file source needs an explicit
-    * schema — at 100 TB schema inference is a full extra scan; here it is
-    * the batch table's footer schema, from [[SchemaMemo]]).
+  /** Streaming read of the events table where it lies, normalized to the
+    * shape of [[EventStream.batchEvents]]. The path is a glob: the file
+    * source then streams whatever it matches, a single file or a
+    * directory of parts, in place (for a plain file path it sets
+    * `basePath` to the path and rejects it as not a directory). The file
+    * source needs an explicit schema — at 100 TB schema inference is a
+    * full extra scan; here it is the batch table's footer schema, from
+    * [[SchemaMemo]].
     */
   private def streamEvents(spark: SparkSession, sfDir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val path = s"$sfDir/events.parquet"
-    // The file streaming source only accepts a DIRECTORY (its listing
-    // model is "files arriving in a dir"); the testdata table is a single
-    // file, so stage it into a per-sf landing dir once via hard link
-    // (instant, no data copy; falls back to copy across filesystems).
-    // This mirrors production: streams consume a landing directory.
-    val src = java.nio.file.Paths.get(path)
-    val streamDir = {
-      val safe = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-      val d = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), s"graft_stream_$safe")
-      java.nio.file.Files.createDirectories(d)
-      val dst = d.resolve("events.parquet")
-      // Refresh when the SOURCE file was replaced since staging: the
-      // testdata generator rewrites events.parquet between rounds with a
-      // new inode, and a stale hard link would silently keep serving the
-      // old bytes (the streaming tier would then diverge from the batch
-      // oracle — the exact failure class of round 4's events.ts drop).
-      // Freshness is INODE IDENTITY (`Files.isSameFile`), not size+mtime:
-      // a generator that restores timestamps (or a coarse-mtime fs) can
-      // replace the source while preserving both, which the old check
-      // silently accepted. Probe whether hard links work between src and
-      // d first; only the cross-filesystem COPY fallback — where no
-      // shared inode can exist — falls back to size+mtime (weaker,
-      // documented as such).
-      val linkable = try {
-        val probe = d.resolve(".linkprobe")
-        java.nio.file.Files.deleteIfExists(probe)
-        java.nio.file.Files.createLink(probe, src)
-        java.nio.file.Files.delete(probe)
-        true
-      } catch { case _: Exception => false }
-      val stale = java.nio.file.Files.exists(dst) && {
-        if (linkable) !java.nio.file.Files.isSameFile(dst, src)
-        else java.nio.file.Files.size(dst) != java.nio.file.Files.size(src) ||
-          java.nio.file.Files.getLastModifiedTime(dst) !=
-            java.nio.file.Files.getLastModifiedTime(src)
-      }
-      if (stale) java.nio.file.Files.delete(dst)
-      if (!java.nio.file.Files.exists(dst)) {
-        if (linkable) {
-          // retry once: if the source is swapped between the link call and
-          // the identity re-check, re-stage against the new inode (the
-          // stat-then-link race the size+mtime version left open)
-          var attempts = 0
-          var done = false
-          while (!done && attempts < 2) {
-            attempts += 1
-            try java.nio.file.Files.createLink(dst, src)
-            catch { case _: java.nio.file.FileAlreadyExistsException => () }
-            done = java.nio.file.Files.isSameFile(dst, src)
-            if (!done) java.nio.file.Files.delete(dst)
-          }
-        }
-        if (!java.nio.file.Files.exists(dst)) {
-          java.nio.file.Files.copy(src, dst,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-          // a copy gets its own mtime; align it so the fallback staleness
-          // check stays meaningful on filesystems without hard links
-          java.nio.file.Files.setLastModifiedTime(dst,
-            java.nio.file.Files.getLastModifiedTime(src))
-        }
-      }
-      d.toString
-    }
-    val schema = SchemaMemo.schema(spark, "parquet", path)
-    Graft.normalizeEventTs(spark.readStream.schema(schema).parquet(streamDir))
+    val schema = SchemaMemo.schema(spark, "parquet", s"$sfDir/events.parquet")
+    Graft.normalizeEventTs(
+        spark.readStream.schema(schema).parquet(s"$sfDir/{events.parquet}"))
       .select(col("event_id"), Graft.tsFromNanos("ts").as("ts"),
         col("user_id"), col("event_type"), col("value"))
   }
@@ -149,43 +77,22 @@ object StreamQueries {
   private def runToMemory(spark: SparkSession, name: String, df: DataFrame,
       mode: String): DataFrame = {
     spark.catalog.dropTempView(name) // re-runs in one session replace it
-    withStreamPartitions(spark) {
-      // The registered memory-sink shapes emit everything in the DATA
-      // batches — Complete-mode aggregates re-emit full state per batch,
-      // and the Append registrations are an eager inner join and
-      // pass-through dedup — so the trailing NO-DATA micro-batch
-      // (watermark advancement + state eviction, one more load/commit
-      // cycle across every state store) changes nothing about the sink
-      // table and is skipped. The landing-path queries ([[runToLanding]])
-      // keep it: their keyed-state operators may flush on
-      // timeout/watermark in that final batch.
-      val key = "spark.sql.streaming.noDataMicroBatches.enabled"
-      val prev = spark.conf.get(key)
-      spark.conf.set(key, "false")
-      try {
-        val q = df.writeStream.format("memory").queryName(name)
-          .outputMode(mode).trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      } finally spark.conf.set(key, prev)
+    // The registered memory-sink shapes emit everything in the DATA
+    // batches — Complete-mode aggregates re-emit full state per batch,
+    // and the Append registrations are an eager inner join and
+    // pass-through dedup — so the trailing NO-DATA micro-batch (watermark
+    // advancement + state eviction, one more load/commit cycle across
+    // every state store) changes nothing about the sink table and is
+    // skipped. The landing-path queries ([[runToLanding]]) keep it: their
+    // keyed-state operators may flush on timeout/watermark in that final
+    // batch.
+    Graft.withConfs(spark, StreamShufflePartitions,
+        "spark.sql.streaming.noDataMicroBatches.enabled" -> "false") {
+      df.writeStream.format("memory").queryName(name)
+        .outputMode(mode).trigger(Trigger.AvailableNow()).start()
+        .awaitTermination()
     }
     spark.table(name)
-  }
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit =
-    if (java.nio.file.Files.exists(p)) {
-      val walk = java.nio.file.Files.walk(p)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(q => java.nio.file.Files.delete(q))
-      finally walk.close()
-    }
-
-  /** Landing dir for a `*_final` registration — fixed per (tag, sf) so
-    * re-runs are deterministic; the caller wipes it before each start.
-    */
-  private[streaming] def landingDir(tag: String, sfDir: String): java.nio.file.Path = {
-    val safe = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft_land_${tag}_$safe")
   }
 
   /** Execute a streaming frame to completion through the PRODUCTION sink —
@@ -198,11 +105,12 @@ object StreamQueries {
     */
   private def runToLanding(spark: SparkSession, tag: String, sfDir: String,
       df: DataFrame, mode: String): DataFrame = {
-    val land = landingDir(tag, sfDir)
+    // fixed per (tag, sf) so re-runs are deterministic
+    val land = SourceQueries.rootOf(s"land_$tag", sfDir)
     val ckpt = java.nio.file.Paths.get(land.toString + "_ckpt")
-    deleteRecursively(land)
-    deleteRecursively(ckpt)
-    withStreamPartitions(spark) {
+    SourceQueries.deleteTree(land)
+    SourceQueries.deleteTree(ckpt)
+    Graft.withConfs(spark, StreamShufflePartitions) {
       val q = df.writeStream
         .outputMode(mode)
         .option("checkpointLocation", ckpt.toString)

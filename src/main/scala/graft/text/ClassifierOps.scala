@@ -240,7 +240,7 @@ object ClassifierOps {
     * each used to re-featurize the corpus from the scan (bigram explode
     * + hash + doc-keyed aggregate — the dominant eval cost). The scores
     * are exact BIGINTs and a pure function of the immutable corpus, so
-    * they are checkpointed to Parquet once per corpus dir
+    * they are checkpointed to Parquet once per corpus, in [[scoresDir]]
     * ([[graft.sources.Sources]]' I4 stage-checkpoint stance — exactly
     * what a production pipeline does between scoring and evaluation
     * jobs; a driver-side ModelCache would NOT be honest here, the table
@@ -251,9 +251,7 @@ object ClassifierOps {
     * scoring from the raw corpus either way.
     */
   private def servedScores(spark: SparkSession, sfDir: String): DataFrame = {
-    val safe = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    val dir = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"), s"graft_clf_scores_${B}_$safe")
+    val dir = scoresDir(spark, sfDir)
     if (!java.nio.file.Files.exists(dir.resolve("_SUCCESS"))) {
       val wDf = {
         import spark.implicits._
@@ -266,6 +264,16 @@ object ClassifierOps {
         .write.mode("overwrite").parquet(dir.toString)
     }
     SchemaMemo.read(spark, "parquet", dir.toString)
+  }
+
+  /** The scored-corpus checkpoint dir of the corpus now at `sfDir`: keyed
+    * by a hash of its file listing (names, sizes, mtimes), so a corpus
+    * replaced at the same path is scored again, never served the scores
+    * of the corpus it replaced.
+    */
+  private[text] def scoresDir(spark: SparkSession, sfDir: String): java.nio.file.Path = {
+    val corpus = SchemaMemo.listing(spark, s"$sfDir/documents.parquet").hashCode
+    graft.sources.SourceQueries.rootOf(f"clf_scores_${B}_$corpus%08x", sfDir)
   }
 
   /** Classifier-based selection: score every document with the trained

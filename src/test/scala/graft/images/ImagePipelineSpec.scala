@@ -59,10 +59,10 @@ class ImagePipelineSpec extends SparkSpec {
     val byLm = rollup.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(byLm == Map("L1" -> 8L, "L2" -> 4L))
     val names = Seq(("L1", "Alpha"), ("L2", "Beta")).toDF("landmark_id", "name")
-    val stat = StatsPipeline.alphabetStat(rollup, names, cls = 2)
-    val rows = stat.collect().map(r => (r.getString(0), r.getLong(1))).toMap
+    val files = StatsPipeline.goldenFiles(
+      StatsPipeline.statTable(rollup, names, Seq(2)).collect().toSeq, Seq(2))
     // every red image yields one cls-2 box (g=0 → n=1), L1 only
-    assert(rows("A") == 8L && rows("B") == 0L)
+    assert(files.contains(("alphabet_count", "2", "letter;count\nA;8\nB;0\n")))
   }
 
   test("colors stage: avg/dominant/closest-primary per image (stage 2)") {

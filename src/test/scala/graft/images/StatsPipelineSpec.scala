@@ -1,7 +1,6 @@
 package graft.images
 
 import graft.SparkSpec
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Golden-file tests: a hand-built fixture in the reference's data model
@@ -23,10 +22,6 @@ class StatsPipelineSpec extends SparkSpec {
     ).toDF("landmark_id", "image_count", "predictions_sum")
   }
 
-  /** A 2-column stat frame in the golden CSV format. */
-  private def toGoldenCsv(stat: DataFrame, headers: (String, String)): String =
-    StatsPipeline.goldenCsv(stat.collect().toSeq.map(r => (r.get(0), r.get(1))), headers)
-
   private lazy val names = {
     import spark.implicits._
     Seq(
@@ -37,15 +32,19 @@ class StatsPipelineSpec extends SparkSpec {
     ).toDF("landmark_id", "name")
   }
 
+  /** The fixture's golden files for `classes`, by (stat dir, class), as
+    * `RunPipeline` renders them: one collected `statTable`.
+    */
+  private def golden(classes: Int*): Map[(String, String), String] =
+    StatsPipeline.goldenFiles(
+      StatsPipeline.statTable(rollup, names, classes).collect().toSeq, classes)
+      .map { case (dir, cls, csv) => (dir, cls) -> csv }.toMap
+
   test("alphabetStat golden format: letter;count header + rows") {
-    val stat = StatsPipeline.alphabetStat(rollup, names, cls = 0)
-      .select(col("letter"), col("count"))
-    val csv = toGoldenCsv(stat, ("letter", "count"))
-    assert(csv == "letter;count\nA;8\nB;1\nN;2\n")
+    assert(golden(0)(("alphabet_count", "0")) == "letter;count\nA;8\nB;1\nN;2\n")
   }
 
   test("golden CSV spells doubles as the reference's Python repr does") {
-    import spark.implicits._
     // expected strings are python3's repr() of the same values
     val cases = Seq(
       0.0005 -> "0.0005", 0.00015 -> "0.00015", 12345678.5 -> "12345678.5",
@@ -54,29 +53,26 @@ class StatsPipelineSpec extends SparkSpec {
       9999999999999998.0 -> "9999999999999998.0", 1e22 -> "1e+22",
       1.2345e-7 -> "1.2345e-07", -3e-10 -> "-3e-10", 0.0 -> "0.0",
       123456789012.0 -> "123456789012.0")
-    val stat = cases.zipWithIndex.map { case ((v, _), i) => (s"k$i", v) }.toDF("key", "value")
-    val csv = toGoldenCsv(stat, ("key", "value"))
+    val csv = StatsPipeline.goldenCsv(
+      cases.zipWithIndex.map { case ((v, _), i) => (s"k$i", v) }, ("key", "value"))
     assert(csv == cases.zipWithIndex
       .map { case ((_, r), i) => s"k$i;$r" }.mkString("key;value\n", "\n", "\n"))
   }
 
   test("cityAvgStat: containment theta-join, reference city list") {
-    val stat = StatsPipeline.cityAvgStat(rollup, names, cls = 0)
-    val csv = toGoldenCsv(stat, ("city", "avg_detections"))
+    val csv = golden(0)(("avg_obj_per_city", "0"))
     // Berlin matches L2 (1/2) and L3 (0/10): 1/12; New York matches L4: 2/4
     assert(csv == "city;avg_detections\nBerlin;" + (1.0 / 12) + "\nNew York;0.5\n")
   }
 
   test("keywordContrastStat golden: avg_all vs avg_people_places") {
-    val stat = StatsPipeline.keywordContrastStat(rollup, names, cls = 0)
-    val csv = toGoldenCsv(stat, ("files considered", "avg_detections"))
+    val csv = golden(0)(("people_in_places_with_people", "0"))
     // all: (8+1+0+2)/(4+2+10+4) = 11/20; people: L2 only → 1/2
     assert(csv == "files considered;avg_detections\navg_all;0.55\navg_people_places;0.5\n")
   }
 
   test("nameLengthStat golden bands for the dog class") {
-    val stat = StatsPipeline.nameLengthStat(rollup, names, cls = 16)
-    val csv = toGoldenCsv(stat, ("length_of_landmark_name", "avg_detections"))
+    val csv = golden(16)(("dogs_by_name_length", "16"))
     // under_10: L1 → 2/4; 10–20: L2+L4 → (0+4)/6; over_20: L3 → 5/10
     assert(csv ==
       "length_of_landmark_name;avg_detections\n" +
@@ -86,11 +82,13 @@ class StatsPipelineSpec extends SparkSpec {
   }
 
   test("heatmapMatrix: per-class join chain = plots.py merge+transpose shape") {
-    val m = StatsPipeline.heatmapMatrix(rollup, names, Seq(0, 16))
-    assert(m.columns.toSeq == Seq("city", "class_0", "class_16"))
-    val rows = m.collect().map(r => r.getString(0) -> (r.getDouble(1), r.getDouble(2))).toMap
-    assert(rows("New York") == ((0.5, 1.0)))   // L4: cls0 2/4, cls16 4/4
-    assert(rows("Berlin")._1 == 1.0 / 12)      // L2+L3
+    // the heatmap's city × class cells are the per-class city files
+    val g = golden(0, 16)
+    // New York: L4, cls0 2/4, cls16 4/4; Berlin: L2+L3, cls0 1/12, cls16 5/12
+    assert(g(("avg_obj_per_city", "0")) ==
+      "city;avg_detections\nBerlin;" + (1.0 / 12) + "\nNew York;0.5\n")
+    assert(g(("avg_obj_per_city", "16")) ==
+      "city;avg_detections\nBerlin;" + (5.0 / 12) + "\nNew York;1.0\n")
   }
 
   test("compat source reads the reference's own golden CSVs byte-compatibly") {
@@ -172,18 +170,11 @@ class StatsPipelineSpec extends SparkSpec {
       Seq("Berlin", "Detroit", "New York", "Paris", "Warsaw"))
     assert(want.toMap.apply(("avg_obj_per_city", "7")) ==
       "city;avg_detections\nBerlin;0.0\nDetroit;0.0\nNew York;0.0\nParis;0.0\nWarsaw;0.0\n")
-    // the per-stat views are filters of the same table and sort in Spark
-    assert(toGoldenCsv(
-      StatsPipeline.alphabetStat(rollup, names, 0).select("letter", "count"),
-      ("letter", "count")) == want.toMap.apply(("alphabet_count", "0")))
-    assert(toGoldenCsv(StatsPipeline.keywordContrastStat(rollup, names, 0),
-      ("files considered", "avg_detections")) ==
-      want.toMap.apply(("people_in_places_with_people", "0")))
   }
 
   test("empty-group safe divide: class absent everywhere → 0.0 rows, not NaN") {
-    val stat = StatsPipeline.nameLengthStat(rollup, names, cls = 7)
-    val vals = stat.collect().map(_.getDouble(1))
-    assert(vals.forall(_ == 0.0))
+    val vals = golden(7)(("dogs_by_name_length", "7")).split("\n").toSeq.tail
+      .map(_.split(";")(1))
+    assert(vals.nonEmpty && vals.forall(_ == "0.0"))
   }
 }

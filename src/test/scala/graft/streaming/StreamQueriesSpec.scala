@@ -15,15 +15,58 @@ class StreamQueriesSpec extends SparkSpec {
   private def rows(df: DataFrame): Seq[Seq[Any]] =
     df.collect().toSeq.map(_.toSeq)
 
-  test("q_stream_tumbling ≡ batch tumbling aggregate") {
+  /** The batch twin of `q_stream_tumbling` over the events at `sfDir`. */
+  private def batchTumbling(sfDir: String): Seq[Seq[Any]] = {
     import org.apache.spark.sql.functions._
-    val streamed = rows(StreamQueries.StreamTumbling.run(spark, sf))
-    val batch = rows(EventStream.windowedCounts(
-        EventStream.batchEvents(spark, sf))
+    rows(EventStream.windowedCounts(EventStream.batchEvents(spark, sfDir))
       .select(date_format(col("win_start"), "yyyy-MM-dd HH:mm:ss").as("win_start"),
         col("event_type"), col("n"), col("total_value"))
       .orderBy("win_start", "event_type"))
-    assert(streamed.nonEmpty && streamed == batch)
+  }
+
+  /** Write `events` as `dir/events.parquet`: a directory of `parts` part
+    * files, as Spark writes a table.
+    */
+  private def writeEvents(dir: String, events: DataFrame, parts: Int): Unit =
+    events.repartition(parts).write.mode("overwrite").parquet(s"$dir/events.parquet")
+
+  private def rawEvents = spark.read.parquet(s"$sf/events.parquet")
+
+  test("q_stream_tumbling ≡ batch tumbling aggregate") {
+    val streamed = rows(StreamQueries.StreamTumbling.run(spark, sf))
+    assert(streamed.nonEmpty && streamed == batchTumbling(sf))
+  }
+
+  test("q_stream_tumbling streams a multi-file events directory in place") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_sf").toString
+    writeEvents(dir, rawEvents, 3)
+    assert(new java.io.File(s"$dir/events.parquet").listFiles()
+      .count(_.getName.endsWith(".parquet")) == 3)
+    val streamed = rows(StreamQueries.StreamTumbling.run(spark, dir))
+    assert(streamed.nonEmpty && streamed == batchTumbling(dir))
+    assert(streamed == batchTumbling(sf))
+  }
+
+  test("a replaced events table streams its new rows on the next run") {
+    import org.apache.spark.sql.functions.col
+    val dir = java.nio.file.Files.createTempDirectory("graft_sf").toString
+    writeEvents(dir, rawEvents, 1)
+    val before = rows(StreamQueries.StreamTumbling.run(spark, dir))
+    writeEvents(dir, rawEvents.filter(col("event_id") % 3 =!= 0), 2)
+    val after = rows(StreamQueries.StreamTumbling.run(spark, dir))
+    assert(after.nonEmpty && after == batchTumbling(dir))
+    assert(after != before)
+  }
+
+  test("a stream run leaves no staged copy of the events table in java.io.tmpdir") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def staged() = tmp.list().filter(_.startsWith("graft_stream_")).toSet
+    val dir = java.nio.file.Files.createTempDirectory("graft_sf").toString
+    writeEvents(dir, rawEvents, 1)
+    val before = staged()
+    StreamQueries.StreamTumbling.run(spark, dir).collect()
+    StreamQueries.StreamFunnelFinal.run(spark, dir).collect()
+    assert(staged() == before)
   }
 
   test("q_stream_sessions ≡ batch session_window aggregate") {
@@ -91,7 +134,7 @@ class StreamQueriesSpec extends SparkSpec {
     val ev = EventStream.batchEvents(spark, sf)
     def memRows(t: String): Long = spark.table(t).count()
     def landRows(tag: String): Long = spark.read.parquet(
-      StreamQueries.landingDir(tag, sf).toString).count()
+      graft.sources.SourceQueries.rootOf(s"land_$tag", sf).toString).count()
     val expected: Map[String, (() => Long, () => Long)] = Map(
       // Complete-mode sinks ARE the aggregate: rows == group count
       "q_stream_tumbling" -> ((() => memRows("graft_stream_tumbling"),

@@ -119,16 +119,8 @@ class ClassifierOpsSpec extends SparkSpec {
   /** Remove the scored-corpus parquet checkpoint so a "cold" run really
     * retrains + rescores from the raw table.
     */
-  private def wipeScoresCheckpoint(): Unit = {
-    val safe = sf.replaceAll("[^A-Za-z0-9.]", "_")
-    val dir = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft_clf_scores_${ClassifierOps.B}_$safe")
-    if (java.nio.file.Files.exists(dir)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(dir).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.delete)
-    }
-  }
+  private def wipeScoresCheckpoint(): Unit =
+    graft.sources.SourceQueries.deleteTree(ClassifierOps.scoresDir(spark, sf))
 
   test("model cache: cold-trained and checkpoint-served eval results are identical") {
     // q_classifier_select / q_classifier_auc serve the scored-corpus

@@ -37,4 +37,30 @@ class ModelCacheSpec extends SparkSpec {
       spark.catalog.clearCache()
     }
   }
+
+  test("a corpus replaced at the same path serves the selection a fresh tmpdir gives") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_models").toString
+    val docs = s"$dir/documents.parquet"
+    val corpus = spark.read.parquet(s"$sf/documents.parquet")
+    def select() = ClassifierOps.ClassifierSelect.run(spark, dir).collect().toSeq
+    val tmpdir = System.getProperty("java.io.tmpdir")
+    try {
+      corpus.write.parquet(docs)
+      val onA = select()
+      corpus.withColumn("text", regexp_replace(col("text"), lit("e"), lit("")))
+        .write.mode("overwrite").parquet(docs)
+      val onB = select()
+      // no scores checkpoint under a fresh tmpdir: B is scored from scratch
+      System.setProperty("java.io.tmpdir",
+        java.nio.file.Files.createTempDirectory("graft_tmpdir").toString)
+      ModelCache.clear()
+      val coldB = select()
+      assert(onB == coldB, "served the scores of the replaced corpus")
+      assert(onA != coldB)
+    } finally {
+      System.setProperty("java.io.tmpdir", tmpdir)
+      ModelCache.clear()
+      spark.catalog.clearCache()
+    }
+  }
 }
