@@ -52,8 +52,11 @@ object MediaCatalogQueries {
         (ensureTiffTree(sfDir), TiffTree, "f"),
         (ensureAiffTree(sfDir), AiffTree, "u")).iterator.flatMap {
         case (src, tree, tag) =>
-          Files.walk(Paths.get(src)).iterator().asScala
-            .filter(p => p.toString.endsWith("." + tree.ext))
+          val walk = Files.walk(Paths.get(src))
+          val files = try walk.iterator().asScala
+            .filter(p => p.toString.endsWith("." + tree.ext)).toList
+          finally walk.close()
+          files.iterator
             .map(p => (s"$tag/$tag${p.getFileName}", Files.readAllBytes(p)))
       }
     }

@@ -69,6 +69,41 @@ class StreamQueriesSpec extends SparkSpec {
     assert(staged() == before)
   }
 
+  test("a second q_stream_enrich run in one session compiles no generated class") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    def once(): Unit = StreamQueries.StreamEnrich.run(spark, sf).collect()
+    once()
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    once()
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before == 0)
+  }
+
+  test("a landing twin's checkpoint holds no Hadoop .crc sidecar") {
+    StreamQueries.StreamFunnelFinal.run(spark, sf).collect()
+    val ckpt = java.nio.file.Paths.get(
+      graft.sources.SourceQueries.rootOf("land_funnel", sf).toString + "_ckpt")
+    val walk = java.nio.file.Files.walk(ckpt)
+    val files = try walk.toArray.map(_.asInstanceOf[java.nio.file.Path])
+      .filter(java.nio.file.Files.isRegularFile(_))
+      .map(_.getFileName.toString).toSeq
+    finally walk.close()
+    // offsets, commits, metadata and the state store's delta files
+    assert(files.contains("metadata") && files.exists(_.endsWith(".delta")))
+    assert(!files.exists(f => f.startsWith(".") && f.endsWith(".crc")), files)
+  }
+
+  test("a twin's stream confs do not outlive its run in the session") {
+    val keys = Seq("spark.sql.artifact.isolation.enabled",
+      "spark.sql.streaming.checkpointFileManagerClass",
+      "spark.sql.shuffle.partitions")
+    def set() = keys.map(spark.conf.getAll.get)
+    val before = set()
+    assert(before.take(2) == Seq(None, None))
+    StreamQueries.StreamTumbling.run(spark, sf).collect()
+    StreamQueries.StreamFunnelFinal.run(spark, sf).collect()
+    assert(set() == before)
+  }
+
   test("q_stream_sessions ≡ batch session_window aggregate") {
     import org.apache.spark.sql.functions._
     val streamed = rows(StreamQueries.StreamSessions.run(spark, sf))
