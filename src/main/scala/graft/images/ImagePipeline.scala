@@ -1,7 +1,8 @@
 package graft.images
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, LongType, MapType}
 import graft.sources.Sources
 
 /** The Spark-side image pipeline (SURVEY §3.1–§3.2 re-expressed):
@@ -68,23 +69,32 @@ object ImagePipeline {
   }
 
   /** Stage 3 — per-landmark rollup (J2/A4/A5, `pyspark_yolox.py:151-176`):
-    * join the image→landmark dim, explode histograms, one grouped aggregate,
-    * re-assemble sorted-entry maps. Replaces the reference's
-    * driver-enumerated inverted join.
+    * one grouped aggregate over the images joined to their landmarks.
+    * `image_count` counts distinct images, empty histograms included; the
+    * histograms are summed key by key (a duplicated image row adds twice)
+    * and re-assembled as sorted-entry maps. A landmark none of whose
+    * images has a detection has no row, nor does a null landmark. Replaces
+    * the reference's driver-enumerated inverted join.
     */
   def perLandmarkRollup(preds: DataFrame, labels: DataFrame): DataFrame = {
-    val joined = preds.join(labels, "id")
-    val fileCounts = joined.groupBy("landmark_id")
-      .agg(countDistinct(col("id")).as("image_count"))
-    val sums = joined
-      .select(col("landmark_id"), explode(col("predictions")).as(Seq("cls", "cnt")))
-      .groupBy("landmark_id", "cls").agg(sum(col("cnt")).as("total"))
-    sums.join(fileCounts, "landmark_id")
-      .groupBy(col("landmark_id"), col("image_count"))
+    def sorted(m: Column) = map_from_entries(array_sort(map_entries(m)))
+    // the rollup's schema: non-null maps whose values may be null, as a
+    // per-class `sum` over exploded histograms types them
+    def nonNull(m: Column, values: DataType) = {
+      val t = MapType(IntegerType, values)
+      coalesce(m.cast(t), map().cast(t))
+    }
+    preds.join(labels.filter(col("landmark_id").isNotNull), "id")
+      .groupBy("landmark_id")
       .agg(
-        map_from_entries(array_sort(
-          collect_list(struct(col("cls"), col("total"))))).as("predictions_sum"),
-        map_from_entries(array_sort(collect_list(struct(col("cls"),
-          col("total").cast("double") / col("image_count").cast("double"))))).as("averages"))
+        size(collect_set(col("id"))).cast("long").as("image_count"),
+        sorted(aggregate(collect_list(col("predictions")), map().cast("map<int,bigint>"),
+          (acc, m) => map_zip_with(acc, m, (_, a, b) => coalesce(a, lit(0L)) + coalesce(b, lit(0L)))
+        )).as("predictions_sum"))
+      .filter(size(col("predictions_sum")) > 0)
+      .select(col("landmark_id"), col("image_count"),
+        nonNull(col("predictions_sum"), LongType).as("predictions_sum"),
+        nonNull(transform_values(col("predictions_sum"),
+          (_, v) => v.cast("double") / col("image_count").cast("double")), DoubleType).as("averages"))
   }
 }

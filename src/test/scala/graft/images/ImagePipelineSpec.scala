@@ -2,6 +2,7 @@ package graft.images
 
 import graft.SparkSpec
 import graft.sources.Sources
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 
@@ -63,6 +64,63 @@ class ImagePipelineSpec extends SparkSpec {
       StatsPipeline.statTable(rollup, names, Seq(2)).collect().toSeq, Seq(2))
     // every red image yields one cls-2 box (g=0 → n=1), L1 only
     assert(files.contains(("alphabet_count", "2", "letter;count\nA;8\nB;0\n")))
+  }
+
+  /** The rollup as an explode, a per-(landmark, class) sum, a distinct
+    * image count and a join of the two: the reference's inverted join
+    * re-expressed, and the formula [[ImagePipeline.perLandmarkRollup]]
+    * must agree with row for row and type for type.
+    */
+  private def referenceRollup(preds: DataFrame, labels: DataFrame): DataFrame = {
+    val joined = preds.join(labels, "id")
+    val fileCounts = joined.groupBy("landmark_id")
+      .agg(countDistinct(col("id")).as("image_count"))
+    val sums = joined
+      .select(col("landmark_id"), explode(col("predictions")).as(Seq("cls", "cnt")))
+      .groupBy("landmark_id", "cls").agg(sum(col("cnt")).as("total"))
+    sums.join(fileCounts, "landmark_id")
+      .groupBy(col("landmark_id"), col("image_count"))
+      .agg(
+        map_from_entries(array_sort(
+          collect_list(struct(col("cls"), col("total"))))).as("predictions_sum"),
+        map_from_entries(array_sort(collect_list(struct(col("cls"),
+          col("total").cast("double") / col("image_count").cast("double"))))).as("averages"))
+  }
+
+  test("perLandmarkRollup equals the explode-sum-join formula in rows and schema") {
+    import spark.implicits._
+    // checkpoint both sides so the inputs carry the schema a pipeline run
+    // reads back: non-null map values, nullable columns
+    val dir = Files.createTempDirectory("graft_rollup").toString
+    val preds = Sources.checkpoint(Seq(
+        "a" -> Map(16 -> 1L, 2 -> 3L, 0 -> 2L), // unsorted class keys
+        "a" -> Map(2 -> 1L),                    // the same image twice: summed
+        "b" -> Map.empty[Int, Long],            // counted, adds no class
+        "c" -> Map(0 -> 5L),
+        "d" -> Map.empty[Int, Long],            // L3's only images
+        "e" -> Map.empty[Int, Long],
+        "f" -> Map(1 -> 7L))
+      .toDF("id", "predictions"), s"$dir/preds")
+    val labels = Sources.checkpoint(Seq[(String, String)](
+        "a" -> "L1", "b" -> "L1", "c" -> "L1",
+        "c" -> "L2",                            // one image, two landmarks
+        "d" -> "L3", "e" -> "L3",
+        "f" -> null)                            // dropped, as by an inner join
+      .toDF("id", "landmark_id"), s"$dir/labels")
+    val got = ImagePipeline.perLandmarkRollup(preds, labels)
+    val want = referenceRollup(preds, labels)
+    assert(got.schema == want.schema, s"${got.schema.treeString} vs ${want.schema.treeString}")
+    def rows(df: DataFrame) = df.collect().map(r =>
+      (r.getString(0), r.getLong(1), r.getMap[Int, Long](2).toSeq, r.getMap[Int, Double](3).toSeq))
+      .sortBy(_._1).toSeq
+    assert(rows(got) == rows(want))
+    assert(rows(got) == Seq(
+      ("L1", 3L, Seq(0 -> 7L, 2 -> 4L, 16 -> 1L), Seq(0 -> 7 / 3.0, 2 -> 4 / 3.0, 16 -> 1 / 3.0)),
+      ("L2", 1L, Seq(0 -> 5L), Seq(0 -> 5.0))))
+    // and as a plain Parquet read sees the written files
+    got.write.parquet(s"$dir/got")
+    want.write.parquet(s"$dir/want")
+    assert(spark.read.parquet(s"$dir/got").schema == spark.read.parquet(s"$dir/want").schema)
   }
 
   test("colors stage: avg/dominant/closest-primary per image (stage 2)") {

@@ -8,6 +8,7 @@ import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStag
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.datasources.binaryfile.BinaryFileFormat
 import org.apache.spark.sql.util.QueryExecutionListener
+import scala.jdk.CollectionConverters._
 
 /** End-to-end: the full three-script-equivalent pipeline over a synthetic
   * sharded image tree, checked down to the golden stat files and compat
@@ -103,16 +104,24 @@ class RunPipelineSpec extends SparkSpec {
     assert(!dash.contains("dogs_by_name_length/dog.html")) // class 16 not in run
   }
 
-  test("RunPipeline job budget: at most 20 Spark jobs and one binaryFile scan per run") {
+  test("RunPipeline job budget: at most 15 Spark jobs, all in the caller's job group, " +
+      "and one binaryFile scan per run") {
     val cfg = config()
     val group = "run-pipeline-budget"
     val jobs = new java.util.concurrent.atomic.AtomicInteger
+    // groups of the jobs that start inside the run but outside its group
+    val strays = new java.util.concurrent.ConcurrentLinkedQueue[String]
     val drained = new java.util.concurrent.CountDownLatch(1)
     val jobListener = new SparkListener {
+      // events arrive in order on one thread: only jobs between the
+      // "started" and the "drained" marker jobs are the run's
+      private var inRun = false
       override def onJobStart(js: SparkListenerJobStart): Unit =
         Option(js.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))) match {
-          case Some(`group`) => jobs.incrementAndGet()
-          case Some("drained") => drained.countDown()
+          case Some("started") => inRun = true
+          case Some("drained") => inRun = false; drained.countDown()
+          case Some(`group`) if inRun => jobs.incrementAndGet()
+          case other if inRun => strays.add(other.getOrElse("<none>"))
           case _ =>
         }
     }
@@ -135,22 +144,62 @@ class RunPipelineSpec extends SparkSpec {
       override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
     }
     val sc = spark.sparkContext
+    def inGroup(g: String)(body: => Unit): Unit = {
+      sc.setJobGroup(g, g)
+      try body finally sc.clearJobGroup()
+    }
     sc.addSparkListener(jobListener)
     spark.listenerManager.register(planListener)
     try {
-      sc.setJobGroup(group, group)
-      try RunPipeline.run(spark, cfg) finally sc.clearJobGroup()
-      // listener events arrive in order: once this job's start is seen,
-      // every job of the run has been counted
-      sc.setJobGroup("drained", "drained")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      inGroup("started")(sc.parallelize(Seq(1), 1).count())
+      inGroup(group)(RunPipeline.run(spark, cfg))
+      // once the drained marker's start is seen, every job of the run has
+      // been counted
+      inGroup("drained")(sc.parallelize(Seq(1), 1).count())
       assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
     } finally {
       sc.removeSparkListener(jobListener)
       spark.listenerManager.unregister(planListener)
     }
-    assert(jobs.get() <= 20, s"${jobs.get()} jobs")
+    // the run's tasks carry the caller's local properties: a job without
+    // the group is one they lost, and would be missing from the count
+    assert(strays.isEmpty, s"jobs outside the caller's group: $strays")
+    assert(jobs.get() > 0 && jobs.get() <= 15, s"${jobs.get()} jobs")
     assert(scans.size == 1, s"${scans.size} binaryFile scans")
+  }
+
+  test("a failing output fails the run with its own exception and leaves nothing behind") {
+    val healthy = config()
+    RunPipeline.run(spark, healthy)
+    // one green image more, on which the detector throws
+    Files.write(Paths.get(healthy.imageDir, "0", "green.png"),
+      ImageOps.encodePng(ImageOps.Image(40, 40, Array.fill(1600)(0x00FF00))))
+    val failing = healthy.copy(outDir = s"${healthy.outDir}_failed",
+      mkDetector = () => new RunPipelineSpec.FailingDetector)
+    val e = intercept[Exception](RunPipeline.run(spark, failing))
+    assert(!e.isInstanceOf[java.util.concurrent.CompletionException], e)
+    assert(e.isInstanceOf[org.apache.spark.SparkException], e)
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[RunPipelineSpec.DetectorFailure]), e)
+    val left = Thread.getAllStackTraces.keySet.asScala.map(_.getName)
+      .filter(_.startsWith("graft-pipeline"))
+    assert(left.isEmpty, left)
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+
+    // a healthy run in the same session writes the same stat files again
+    Files.delete(Paths.get(healthy.imageDir, "0", "green.png"))
+    val again = healthy.copy(outDir = s"${healthy.outDir}_again")
+    RunPipeline.run(spark, again)
+    def statFiles(out: String) = {
+      val root = Paths.get(out, "stats")
+      val walk = Files.walk(root)
+      try walk.iterator.asScala.filter(Files.isRegularFile(_)).map(p =>
+        root.relativize(p).toString -> Files.readString(p)).toMap
+      finally walk.close()
+    }
+    val want = statFiles(healthy.outDir)
+    assert(want.nonEmpty)
+    assert(statFiles(again.outDir) == want)
   }
 
   test("Plots.readStat fails loudly on a header drift (plots.py KeyError parity)") {
@@ -160,6 +209,20 @@ class RunPipelineSpec extends SparkSpec {
     assert(Plots.readStat(f, "letter", "count") == Seq(("A", 1.0)))
     intercept[IllegalArgumentException] {
       Plots.readStat(f, "letter", "avg_count") // the stale-golden-header bug
+    }
+  }
+}
+
+object RunPipelineSpec {
+  final class DetectorFailure extends RuntimeException("detector failed on a green image")
+
+  /** The stub detector, except that it throws on a green image. */
+  final class FailingDetector extends Detection.Detector {
+    private val stub = new Detection.StubDetector
+    def detect(img: ImageOps.Image): Seq[Detection.Box] = {
+      val (r, g, b) = ImageOps.averageColor(img)
+      if (g > r && g > b) throw new DetectorFailure
+      stub.detect(img)
     }
   }
 }
