@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -87,23 +86,14 @@ object Bench {
     // so the timing would flatter queries whose cost IS those columns. A
     // noop write requires every output column of every row, like a real
     // sink, while writing nothing.
-    // Optional comma-separated query filter for targeted perf iteration
-    // (e.g. SPARK_GRAFT_ONLY=q_dedup_clusters,q_contamination). Absent in
-    // driver runs, so the full registry is always what gets judged.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    // Optional exclusion filter — the A/B twin of ONLY: drop a few named
-    // rows from an otherwise-full run (e.g. the media collapse rows) so
-    // their JVM-wide side effects (persists, cache pressure) can be
-    // adjudicated against untouched rows under the SAME warmth protocol
-    // (isolated ONLY-runs are 15-30% slower from lost JIT warmth and
-    // cannot answer that question). Absent in driver runs.
-    val skip = sys.env.get("SPARK_GRAFT_SKIP")
-      .map(_.split(",").map(_.trim).toSet).getOrElse(Set.empty[String])
-    val selected: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)] =
-      SparkEntry.registry
-        .filter(q => only.forall(_(q.name)) && !skip(q.name))
-        .map(q => q.name -> ((s: SparkSession, d: String) => q.run(s, d)))
+    // SPARK_GRAFT_ONLY (e.g. q_dedup_clusters,q_contamination) narrows the
+    // run for targeted perf iteration; SPARK_GRAFT_SKIP, its A/B twin, drops
+    // a few named rows from an otherwise-full run so their JVM-wide side
+    // effects (persists, cache pressure) can be adjudicated against
+    // untouched rows under the SAME warmth protocol (isolated ONLY-runs are
+    // 15-30% slower from lost JIT warmth). Driver runs set neither, so the
+    // full registry is always what gets judged.
+    val selected = SparkEntry.selected()
     // Noise-robust protocol: N interleaved repetitions (A,B,C,A,B,C — not
     // A,A,A, so a host-contention burst contaminates at most one rep of
     // each query), reported time = per-query MIN across reps. A fixed
@@ -136,28 +126,21 @@ object Bench {
     probe() // warmup run, discarded (codegen + JIT for the probe itself)
     for (_ <- 1 to math.max(reps, 1)) {
       probeTimes += probe()
-      selected.foreach { case (name, fn) =>
-        if (!failed(name)) { // a failure is deterministic; don't re-throw it N times
-          val t0 = System.nanoTime()
-          try { fn(spark, sfDir).write.format("noop").mode("overwrite").save() }
-          catch { case e: Throwable =>
-            failed += name
-            System.err.println(s"[bench] $name FAILED: ${e.getClass.getSimpleName}: " +
-              String.valueOf(e.getMessage).take(200))
-          }
-          val dt = (System.nanoTime() - t0) / 1e9
-          // the dedup/pipeline queries persist intermediate frames (their
-          // self-joins need the barrier); release them OUTSIDE the timed
-          // region so entries don't accumulate across the 60+ query run and
-          // shrink execution memory for later queries. clearCache alone is
-          // non-blocking — follow with a blocking unpersist of any remaining
-          // cached RDDs so the removal can't bleed into the next query's
-          // timed window
-          spark.catalog.clearCache()
-          spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = true))
-          if (best.get(name).forall(dt < _)) best(name) = dt
-        }
+      // a failure is deterministic; don't re-throw it N times. The sweep
+      // releases the frames the dedup/pipeline queries persist after each
+      // query, OUTSIDE the timed region
+      val rep = SparkEntry.sweep(spark, selected.filterNot(q => failed(q.name))) { q =>
+        val t0 = System.nanoTime()
+        q.run(spark, sfDir).write.format("noop").mode("overwrite").save()
+        (System.nanoTime() - t0) / 1e9
+      }
+      rep.failed.foreach { case (name, e) =>
+        failed += name
+        System.err.println(s"[bench] $name FAILED: ${e.getClass.getSimpleName}: " +
+          String.valueOf(e.getMessage).take(200))
+      }
+      rep.results.foreach { case (name, dt) =>
+        if (best.get(name).forall(dt < _)) best(name) = dt
       }
     }
     val results = best

@@ -66,4 +66,43 @@ object SparkEntry {
     */
   def oracleSql: Map[String, String] =
     registry.flatMap(q => q.oracle.map(q.name -> _)).toMap
+
+  /** The queries a harness main runs: `queries` less any not named in the
+    * comma list `SPARK_GRAFT_ONLY` (when set) and any named in
+    * `SPARK_GRAFT_SKIP`. Each listed name is trimmed. Driver runs set
+    * neither, so they judge the full registry.
+    */
+  def selected(queries: Seq[GraftQuery] = registry,
+      env: Map[String, String] = sys.env): Seq[GraftQuery] = {
+    def names(key: String) = env.get(key).map(_.split(",").map(_.trim).toSet)
+    val only = names("SPARK_GRAFT_ONLY")
+    val skip = names("SPARK_GRAFT_SKIP").getOrElse(Set.empty[String])
+    queries.filter(q => only.forall(_(q.name)) && !skip(q.name))
+  }
+
+  /** What [[sweep]] gives back, in query order: `use`'s value for each
+    * query that completed, and the exception of each query that threw.
+    */
+  final case class Swept[A](results: Seq[(String, A)], failed: Seq[(String, Throwable)])
+
+  /** The one walk over queries: runs `use` on each query in order. A query
+    * that throws is recorded by name and the walk goes on — one broken
+    * query must not hide the rest. After every query the session's cached
+    * state is released, blocking (`clearCache` alone is asynchronous), so
+    * frames a query persists neither shrink a later query's memory nor
+    * bleed their removal into its time.
+    */
+  def sweep[A](spark: SparkSession, queries: Seq[GraftQuery])(use: GraftQuery => A): Swept[A] = {
+    val results = Seq.newBuilder[(String, A)]
+    val failed = Seq.newBuilder[(String, Throwable)]
+    queries.foreach { q =>
+      try results += q.name -> use(q)
+      catch { case e: Throwable => failed += q.name -> e }
+      finally {
+        spark.catalog.clearCache()
+        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+      }
+    }
+    Swept(results.result(), failed.result())
+  }
 }

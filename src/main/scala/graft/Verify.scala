@@ -1,6 +1,6 @@
 package graft
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
+/** Driver-run correctness dump: each selected query's result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
@@ -8,21 +8,13 @@ object Verify {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = Graft.session(s"local[$cpus]", cpus.toInt)
     new java.io.File(outDir).mkdirs()
-    // Optional local-iteration filter: SPARK_GRAFT_ONLY=q_a,q_b dumps just
-    // those queries (the driver never sets it, so its runs stay complete).
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val failed = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        failed += name -> String.valueOf(e.getMessage).take(300)
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      // release the persisted barriers some queries create (see Bench)
-      spark.catalog.clearCache()
+    // SPARK_GRAFT_ONLY/SKIP narrow a local run (the driver sets neither)
+    val failed = SparkEntry.sweep(spark, SparkEntry.selected()) { q =>
+      q.run(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/${q.name}")
+    }.failed.map { case (name, e) =>
+      System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      name -> String.valueOf(e.getMessage).take(300)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -34,38 +34,12 @@ object CdcOps {
 
   /** Boundary positions (1-based, ascending, always ending at len(text)):
     * the native one-pass kernel ([[graft.plans.CdcExpression]] — codegen
-    * callable, O(chars) per document). Semantics proven ≡ [[boundariesFold]]
-    * and an independent sequential chunker in CdcOpsSpec.
+    * callable, O(chars) per document). CdcOpsSpec proves its semantics ≡ an
+    * interpreted `aggregate` fold (the formulation the DuckDB oracle
+    * replays) and an independent sequential chunker.
     */
   private[dedup] def boundaries(text: Column): Column =
     graft.plans.CdcExpression.cdc_bounds(text, Gear, Mod, MaskPlus1, MinLen)
-
-  /** The composed-operator formulation of [[boundaries]] (interpreted
-    * `aggregate` fold, one struct per character, quadratic substr walk) —
-    * retained as the differential reference the spec checks the native
-    * kernel against, and as documentation of the exact semantics the
-    * DuckDB oracle replays.
-    */
-  private[dedup] def boundariesFold(text: Column): Column = {
-    val folded = aggregate(
-      sequence(lit(1), length(text)),
-      struct(lit(0L).as("h"), lit(0).as("last"), lit(0).as("j"),
-        array().cast("array<int>").as("bs")),
-      (st: Column, _: Column) => {
-        val j = st.getField("j") + 1
-        val g = (ascii(text.substr(j, lit(1))) * lit(Gear)) % lit(Mod)
-        val h = (st.getField("h") * 2 + g) % lit(Mod)
-        val isB = (j - st.getField("last") >= MinLen) && (h % MaskPlus1 === 0)
-        struct(h.as("h"),
-          when(isB, j).otherwise(st.getField("last")).as("last"),
-          j.as("j"),
-          when(isB, concat(st.getField("bs"), array(j)))
-            .otherwise(st.getField("bs")).as("bs"))
-      })
-    val bs = folded.getField("bs")
-    when(size(bs) === 0 || element_at(bs, size(bs)) =!= length(text),
-      concat(bs, array(length(text)))).otherwise(bs)
-  }
 
   /** One row per chunk: (doc_id, chunk, chunk_len). */
   private[dedup] def chunks(docs: DataFrame): DataFrame =

@@ -19,8 +19,6 @@ object EventStream {
   final case class Event(event_id: Long, ts: java.sql.Timestamp, user_id: Long,
       event_type: String, value: Double)
 
-  final case class SessionSummary(user_id: Long, n_events: Long, total_value: Double)
-
   /** Hourly windowed count+sum per event type with a watermark: late data
     * beyond 2 hours is dropped deterministically instead of growing state
     * forever — the knob that keeps state bounded on an unbounded stream.
@@ -73,25 +71,6 @@ object EventStream {
       .select(col("w.start").as("bar_start"), col("event_type"),
         col("o.cents").as("open"), col("high"), col("low"),
         col("c.cents").as("close"), col("n"))
-
-  /** Custom state: per-user running session summary via
-    * `flatMapGroupsWithState` — the engine's template for arbitrary
-    * keyed-state operators (counts here; dedup-seen-sets or rate limits in
-    * production). ProcessingTimeTimeout + explicit state so memory is
-    * bounded per key.
-    */
-  def userSessions(events: Dataset[Event]): Dataset[SessionSummary] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[SessionSummary, SessionSummary](
-        OutputMode.Update, GroupStateTimeout.ProcessingTimeTimeout) {
-        (userId: Long, batch: Iterator[Event], state: GroupState[SessionSummary]) =>
-          var s = state.getOption.getOrElse(SessionSummary(userId, 0L, 0.0))
-          batch.foreach(e => s = SessionSummary(userId, s.n_events + 1, s.total_value + e.value))
-          state.update(s)
-          Iterator.single(s)
-      }
-  }
 
   /** Per-user funnel progress state: epoch-second entry times per stage,
     * -1 = stage not reached.

@@ -1,7 +1,7 @@
 package graft.text
 
 import graft.GraftQuery
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Unigram-LM tokenizer TRAINER — the third member of the tokenizer-trainer
@@ -36,15 +36,9 @@ import org.apache.spark.sql.functions._
   * Scale shape: like its two siblings the trainer runs on the capped
   * word-frequency DICTIONARY (top [[BpeTrain.MaxWords]] words), not the
   * corpus — the corpus contributes through the one token-count aggregate.
-  * The seed inventory is a scan-side substring emit over the dictionary
-  * followed by one bounded TakeOrdered (top [[SeedMulti]] multi-char pieces
-  * + every single character, so the DP is total by construction); the piece
-  * model is a <~400-entry map broadcast onto the dictionary scan via the
-  * documented `crossJoin(broadcast(1-row))` idiom; the Viterbi DP itself is
-  * a scan-side `aggregate` fold (no shuffle, no driver loop — unlike
-  * BPE/WordPiece there is no per-round collect at all); usage re-estimation
-  * is one piece-keyed aggregate. Two EM rounds are unrolled, matching the
-  * oracle's CTE unrolling.
+  * The seed inventory is the top [[SeedMulti]] multi-char pieces + every
+  * single character, so the DP is total by construction. Two EM rounds are
+  * unrolled, matching the oracle's CTE unrolling.
   */
 object UnigramTrain {
 
@@ -57,118 +51,16 @@ object UnigramTrain {
   /** Multi-char pieces surviving the prune (by round-1 Viterbi usage). */
   private[text] val KeepMulti = 150
 
-  /** Frequency-weighted substring counts over the dictionary: every
-    * occurrence of every substring of length 1..[[MaxPieceLen]], weighted by
-    * the word's corpus count. Scan-side nested transform + one piece-keyed
-    * aggregate (the `q_vocab` shuffle shape at corpus scale).
-    */
-  private[text] def substringCounts(dict: DataFrame): DataFrame =
-    dict
-      .select(col("n"), explode(flatten(transform(
-        sequence(lit(1), length(col("w"))), i =>
-          transform(
-            sequence(lit(1), least(lit(MaxPieceLen), length(col("w")) - i + 1)),
-            t => col("w").substr(i, t))))).as("p"))
-      .groupBy("p").agg(sum(col("n")).as("cnt"))
-
-  /** The seed inventory: all single characters (DP totality) plus the top
-    * [[SeedMulti]] multi-char substrings by (cnt desc, piece asc) — a
-    * bounded distributed TakeOrdered, the same cap stance as the BPE
-    * dictionary.
-    */
-  private[text] def seed(dict: DataFrame): DataFrame = {
-    val subs = substringCounts(dict)
-    subs.filter(length(col("p")) === 1).unionAll(
-      subs.filter(length(col("p")) >= 2)
-        .orderBy(col("cnt").desc, col("p").asc).limit(SeedMulti))
-  }
-
-  /** Attach the integer bit-cost to each piece of a (p, cnt) inventory:
-    * bits = floor(log2(T div cnt)) with T the inventory's total mass. T is
-    * a broadcast scalar (1-row crossJoin).
-    */
-  private[text] def withBitCosts(inv: DataFrame): DataFrame =
-    inv.crossJoin(broadcast(inv.agg(sum(col("cnt")).as("t"))))
-      .select(col("p"), col("cnt"),
-        expr("CAST(length(bin(t div cnt)) - 1 AS BIGINT)").as("bits"))
-
-  /** Fold a (p, cnt, bits) cost table into a 1-row broadcastable map frame. */
-  private[text] def costMap(costs: DataFrame): DataFrame =
-    costs.agg(map_from_arrays(
-      collect_list(col("p")), collect_list(col("bits"))).as("m"))
-
-  /** Viterbi-segment every dictionary word under a broadcast piece-cost map:
-    * dp[j] = min over t in 1..min(L, j) of dp[j-t] + bits(w[j-t+1..j]),
-    * minimizing (total_bits, n_pieces, piece string) — the unique-winner
-    * total order the oracle replays. Entirely scan-side: one `aggregate`
-    * fold over the word's positions, candidates enumerated with `transform`,
-    * the argmin taken by `array_min`'s struct ordering (field order =
-    * tie-break order). Unreachable states cannot occur — the seed contains
-    * every single character of every dictionary word.
-    */
-  private[text] def segment(dict: DataFrame, mapDf: DataFrame): DataFrame = {
-    val dpl = aggregate(
-      sequence(lit(1), length(col("w"))),
-      array(struct(lit(0L).as("bits"), lit(0L).as("np"), lit("").as("seq"))),
-      (acc: Column, j: Column) => concat(acc, array(
-        array_min(filter(
-          transform(sequence(lit(1), least(lit(MaxPieceLen), j)), t => {
-            val start = j - t + 1
-            val piece = col("w").substr(start, t)
-            val pb = element_at(col("m"), piece)
-            val prev = element_at(acc, start)
-            when(pb.isNotNull, struct(
-              (prev.getField("bits") + pb).as("bits"),
-              (prev.getField("np") + lit(1L)).as("np"),
-              when(prev.getField("seq") === "", piece)
-                .otherwise(concat(prev.getField("seq"), lit("/"), piece))
-                .as("seq")))
-          }),
-          c => c.isNotNull)))))
-    dict.crossJoin(broadcast(mapDf))
-      .withColumn("dpl", dpl)
-      .select(col("w"), col("n"),
-        element_at(col("dpl"), length(col("w")) + 1).getField("bits")
-          .as("total_bits"),
-        element_at(col("dpl"), length(col("w")) + 1).getField("np")
-          .as("n_pieces"),
-        element_at(col("dpl"), length(col("w")) + 1).getField("seq")
-          .as("pieces"))
-  }
-
-  /** Hard-EM piece usage: frequency-weighted occurrence counts of each piece
-    * across the winning segmentations (one piece-keyed aggregate).
-    */
-  private[text] def usage(seg: DataFrame): DataFrame =
-    seg.select(col("n"), explode(split(col("pieces"), "/")).as("p"))
-      .groupBy("p").agg(sum(col("n")).as("usage"))
-
-  /** The pruned + re-estimated round-2 inventory: every single character
-    * (add-one smoothed — chars a round-1 winner never used keep cnt 1) plus
-    * the top [[KeepMulti]] multi-char pieces by (usage desc, piece asc);
-    * cnt2 = usage + 1, the M-step re-estimate.
-    */
-  private[text] def prunedInventory(seedInv: DataFrame, use1: DataFrame): DataFrame = {
-    val chars = seedInv.filter(length(col("p")) === 1).select(col("p"))
-      .join(use1, Seq("p"), "left")
-      .select(col("p"), (coalesce(col("usage"), lit(0L)) + 1).as("cnt"))
-    val multi = use1.filter(length(col("p")) >= 2)
-      .orderBy(col("usage").desc, col("p").asc).limit(KeepMulti)
-      .select(col("p"), (col("usage") + 1).as("cnt"))
-    chars.unionAll(multi)
-  }
-
   // ---------------------------------------------------------------------
   // Shared oracle CTEs (DuckDB). Every stage is MATERIALIZED for the same
   // reason as the BPE oracle: the DP and usage levels each reference their
   // predecessor several times and must not inline exponentially.
   // ---------------------------------------------------------------------
 
-  /** The DuckDB twin of [[segment]]: the identical DP as a list_reduce fold
-    * — acc is the dp table (a struct list), one dummy element per position
-    * triggers one DP step, candidates and tie-break order match the Spark
-    * fold term for term (struct field order IS the comparison order in both
-    * engines).
+  /** The DuckDB Viterbi DP as a list_reduce fold — acc is the dp table
+    * (a struct list), one dummy element per position triggers one DP step,
+    * candidates and tie-break order match [[localTrain]]'s `viterbi` term
+    * for term (struct field order IS the comparison order).
     */
   private def segSql(name: String, mapCte: String): String =
     s"""$name AS MATERIALIZED (
@@ -264,36 +156,17 @@ object UnigramTrain {
   private def seedCtes: String = ctePair._1
   private[text] def trainerCtes: String = ctePair._2
 
-  /** The trained model: (round-2 inventory with bit-costs, round-2
-    * Viterbi segmentation of every dictionary word). `q_unigram_vocab`
-    * reads both; `q_unigram_apply` broadcasts the segmentation onto the
-    * corpus token stream. Persists its bounded upstream frames (the
-    * k-means-tier lifecycle convention; harness clearCache releases).
-    *
-    * Kept as the INDEPENDENT DataFrame implementation the spec
-    * differentials [[localTrain]] against (the registered queries serve
-    * from the driver-side trainer — see there).
-    */
-  private[text] def trainedModel(spark: SparkSession,
-      sfDir: String): (DataFrame, DataFrame) = {
-    val dict = BpeTrain.wordDict(spark, sfDir).persist()
-    val seedInv = seed(dict).persist()
-    val seg1 = segment(dict, costMap(withBitCosts(seedInv)))
-    val cost2 = withBitCosts(prunedInventory(seedInv, usage(seg1))).persist()
-    (cost2, segment(dict, costMap(cost2)))
-  }
-
   // ---------------------------------------------------------------------
   // Driver-side trainer (the BpeTrain/WordPieceTrain restructuring): the
   // corpus-scale dictionary build stays distributed, the bounded trainer
   // (2000 words, ≤ ~450 pieces, pure integer/ASCII math) runs in plain
-  // Scala. Each DataFrame stage above paid full Spark job cycles over
+  // Scala. As DataFrame stages each step paid full Spark job cycles over
   // those bounded rows — and the Viterbi DP ran as an interpreted
   // aggregate fold, the costliest expression in the tier. Equivalence is
   // spec-gated: UnigramTrainSpec differentials every readout against
-  // independent implementations AND localTrain against the retained
-  // DataFrame trainer term for term; the unrolled-CTE oracles gate it
-  // against DuckDB at verify time.
+  // independent implementations AND localTrain against the DataFrame
+  // trainer (kept in the tests) term for term; the unrolled-CTE oracles
+  // gate it against DuckDB at verify time.
   // ---------------------------------------------------------------------
 
   private[text] final case class LocalModel(
@@ -312,7 +185,7 @@ object UnigramTrain {
   private[text] def localTrain(dict: Array[(String, Long)]): LocalModel = {
     import scala.collection.mutable
     def utf8Lt(a: String, b: String) = BpeTrain.utf8Lt(a, b)
-    // substring counts (the substringCounts shape)
+    // frequency-weighted substring counts, lengths 1..MaxPieceLen
     val subCnt = mutable.HashMap.empty[String, Long]
     dict.foreach { case (w, n) =>
       var i = 0
@@ -343,8 +216,8 @@ object UnigramTrain {
     val cost1 = costsOf(seedInv)
     def viterbi(w: String, n: Long, m: Map[String, Long])
         : (String, Long, Long, Long, String) = {
-      // dp(j) = min over candidates of (bits, np, seq) — the segment()
-      // fold's array_min over struct(bits, np, seq), field order = order
+      // dp(j) = min over candidates of (bits, np, seq), compared in that
+      // field order
       val dp = new Array[(Long, Long, String)](w.length + 1)
       dp(0) = (0L, 0L, "")
       var j = 1
@@ -383,7 +256,7 @@ object UnigramTrain {
       u.toMap
     }
     val use1 = usageOf(seg1)
-    // prune + add-one re-estimate (the prunedInventory shape)
+    // prune + add-one re-estimate: every single char, top KeepMulti multi
     val keptSingles = seedInv.filter(_._1.length == 1)
       .map { case (p, _) => (p, use1.getOrElse(p, 0L) + 1L) }
     val keptMulti = use1.iterator.filter(_._1.length >= 2).toSeq

@@ -213,11 +213,11 @@ object WordPieceTrain {
     val name = "q_wordpiece_apply"
     private val MaxScan = 12 // longest raw match scanned (pieces cap at 9)
 
-    /** Test hook: the raw fold state for synthetic vocab cases. */
-    private[text] def applyForTest(w: Column, m: Column): Column =
-      applyExpr(w, m)
-
-    private def applyExpr(w: Column, m: Column): Column =
+    /** The greedy longest-match fold over one word `w` under the piece
+      * set `m`: struct(cur, bad, np, seq), with seq "[UNK]" when a
+      * position fails.
+      */
+    private[text] def applyExpr(w: Column, m: Column): Column =
       aggregate(
         sequence(lit(1), length(w)),
         struct(lit(1).as("cur"), lit(false).as("bad"), lit(0L).as("np"),

@@ -7,10 +7,14 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val spark = graft.Graft.session("local[8]", 8)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val names = if (args.nonEmpty) args.toSeq else SparkEntry.registry.map(_.name)
-    names.foreach { n =>
-      println(s"\n========== $n ==========")
-      SparkEntry.queries(n)(spark, sfDir).explain("formatted")
+    val queries = SparkEntry.selected().filter(q => args.isEmpty || args.contains(q.name))
+    args.diff(queries.map(_.name)).foreach(n => System.err.println(s"[explain] $n: not selected"))
+    SparkEntry.sweep(spark, queries) { q =>
+      println(s"\n========== ${q.name} ==========")
+      q.run(spark, sfDir).explain("formatted")
+    }.failed.foreach { case (name, e) =>
+      System.err.println(s"[explain] $name FAILED: ${e.getClass.getSimpleName}: " +
+        String.valueOf(e.getMessage).take(200))
     }
     spark.stop()
   }

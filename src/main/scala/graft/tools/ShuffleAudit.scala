@@ -5,6 +5,7 @@ import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 
 import graft.SparkEntry
+import org.apache.spark.sql.graftglue.Bridge
 
 /** Shuffle-volume audit: runs the batch registry once and reports, per
   * query, the BYTES the plan actually moved — shuffle write/read, spill
@@ -83,41 +84,23 @@ object ShuffleAudit {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val shufflePartitions =
       sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    // On a real cluster map-task count scales with input splits, so
-    // keys-per-task (and with them the map-side combine ratio) stay
-    // constant as the corpus grows. local mode caps splits well below
-    // that; this knob restores split-proportionality for scaling
-    // experiments (e.g. 13421772 ≈ 128 MB / 10 for a 10x corpus).
-    val maxPartitionBytes =
-      sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "134217728")
     val spark = graft.Graft.session(s"local[$cpus]", shufflePartitions.toInt)
-    spark.conf.set("spark.sql.files.maxPartitionBytes", maxPartitionBytes)
     val listener = new Listener
     spark.sparkContext.addSparkListener(listener)
 
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    val selected = SparkEntry.registry
-      .filterNot(_.name.startsWith("q_stream_"))
-      .filter(q => only.forall(_(q.name)))
-
-    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
-    selected.foreach { q =>
+    val selected = SparkEntry.selected().filterNot(_.name.startsWith("q_stream_"))
+    val failed = SparkEntry.sweep(spark, selected) { q =>
       spark.sparkContext.setJobGroup(q.name, q.name, interruptOnCancel = false)
       try q.run(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
-        failed += q.name
-        System.err.println(s"[audit] ${q.name} FAILED: ${e.getClass.getSimpleName}: " +
-          String.valueOf(e.getMessage).take(200))
-      } finally spark.sparkContext.clearJobGroup()
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
+      finally spark.sparkContext.clearJobGroup()
+    }.failed.map { case (name, e) =>
+      System.err.println(s"[audit] $name FAILED: ${e.getClass.getSimpleName}: " +
+        String.valueOf(e.getMessage).take(200))
+      name
     }
-    // the listener bus is asynchronous; give the tail of stage events
-    // time to land before snapshotting (bytes, not timings — a missed
-    // event would show as an implausible zero, not a subtle skew)
-    Thread.sleep(3000)
+    // the listener bus is asynchronous: let it deliver the tail of stage
+    // events before snapshotting
+    Bridge.drainListeners(spark.sparkContext)
 
     import scala.jdk.CollectionConverters._
     val entries = listener.agg.asScala.toSeq.sortBy(_._1).map { case (name, a) =>

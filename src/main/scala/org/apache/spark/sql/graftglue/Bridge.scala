@@ -22,4 +22,10 @@ object Bridge {
       p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], p)
+
+  /** Block until the listener bus has delivered every event posted so far
+    * (Spark's own bound: 10 s), so a listener's totals are complete.
+    */
+  def drainListeners(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }

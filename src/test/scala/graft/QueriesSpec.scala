@@ -47,26 +47,6 @@ class QueriesSpec extends SparkSpec {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
-  test("every registered query runs and returns rows at sf0.001") {
-    // Force EVERY output column through a noop sink (count() lets Catalyst
-    // prune a broken computed column), and sweep the whole registry before
-    // failing so one regression doesn't mask the other 34 (round 4 broke 35
-    // queries with a single testdata type change).
-    val failures = SparkEntry.registry.flatMap { q =>
-      try {
-        val df = q.run(spark, sf)
-        df.write.format("noop").mode("overwrite").save()
-        if (df.count() > 0) None else Some(s"${q.name}: 0 rows")
-      } catch {
-        case e: Throwable =>
-          Some(s"${q.name}: ${e.getClass.getSimpleName} " +
-            String.valueOf(e.getMessage).linesIterator.take(2).mkString(" "))
-      } finally spark.catalog.clearCache()
-    }
-    assert(failures.isEmpty,
-      s"\n${failures.size} queries failed:\n${failures.mkString("\n")}")
-  }
-
   test("KMV distinct estimate within ~3 rsd of exact (k=256 ⇒ rsd ≈ 6%)") {
     val rows = operators.AnalyticOps.ApproxDistinct.run(spark, sf).collect()
     rows.foreach { r =>

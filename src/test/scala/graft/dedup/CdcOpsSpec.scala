@@ -1,6 +1,7 @@
 package graft.dedup
 
 import graft.SparkSpec
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Differential proof for content-defined chunking: an independent
@@ -12,6 +13,33 @@ import org.apache.spark.sql.functions._
 class CdcOpsSpec extends SparkSpec {
 
   private val M = 1L << 31
+
+  /** The composed-operator formulation of [[CdcOps.boundaries]]
+    * (interpreted `aggregate` fold, one struct per character, quadratic
+    * substr walk): the exact semantics the DuckDB oracle replays, and the
+    * reference the native kernel is checked against.
+    */
+  private def boundariesFold(text: Column): Column = {
+    import CdcOps.{Gear, MaskPlus1, MinLen, Mod}
+    val folded = aggregate(
+      sequence(lit(1), length(text)),
+      struct(lit(0L).as("h"), lit(0).as("last"), lit(0).as("j"),
+        array().cast("array<int>").as("bs")),
+      (st: Column, _: Column) => {
+        val j = st.getField("j") + 1
+        val g = (ascii(text.substr(j, lit(1))) * lit(Gear)) % lit(Mod)
+        val h = (st.getField("h") * 2 + g) % lit(Mod)
+        val isB = (j - st.getField("last") >= MinLen) && (h % MaskPlus1 === 0)
+        struct(h.as("h"),
+          when(isB, j).otherwise(st.getField("last")).as("last"),
+          j.as("j"),
+          when(isB, concat(st.getField("bs"), array(j)))
+            .otherwise(st.getField("bs")).as("bs"))
+      })
+    val bs = folded.getField("bs")
+    when(size(bs) === 0 || element_at(bs, size(bs)) =!= length(text),
+      concat(bs, array(length(text)))).otherwise(bs)
+  }
 
   private def refChunks(t: String): Seq[String] = {
     var h = 0L; var last = 0
@@ -53,7 +81,7 @@ class CdcOpsSpec extends SparkSpec {
     val docs = graft.Graft.table(spark, sf, "documents")
     val rows = docs.select(col("doc_id"),
       CdcOps.boundaries(col("text")).as("native"),
-      CdcOps.boundariesFold(col("text")).as("fold")).collect()
+      boundariesFold(col("text")).as("fold")).collect()
     assert(rows.nonEmpty)
     for (r <- rows)
       assert(r.getSeq[Int](1) == r.getSeq[Int](2),

@@ -175,25 +175,4 @@ class ScaleSpec extends SparkSpec {
         s"$name reads pruned-away column '$mustNotRead':\n${scans.mkString("\n")}")
     }
   }
-
-  test("no partitionless Window in any registered query's plan") {
-    // A Window with an EMPTY partitionSpec funnels the whole frame into a
-    // single task silently. Policy: data-sized frames use the distributed
-    // two-phase decompositions ([[Dist]], bucket prefix sums); provably
-    // bounded frames (bucket offsets, top-K heads, replica counts) mark
-    // the audited single partition EXPLICITLY with Dist.boundedOne. This
-    // walks every registered query's OPTIMIZED plan — a foldable marker
-    // like lit(0) is stripped by the optimizer and would fail here, which
-    // is the point: only markers that survive to execution count.
-    import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
-    val offenders = graft.SparkEntry.registry.flatMap { q =>
-      val plan = try q.run(spark, sf).queryExecution.optimizedPlan
-      catch { case e: Throwable => fail(s"${q.name} failed analysis: $e") }
-      val bad = plan.collect { case w: LWindow if w.partitionSpec.isEmpty => w }
-      spark.catalog.clearCache()
-      if (bad.nonEmpty) Some(q.name) else None
-    }
-    assert(offenders.isEmpty,
-      s"partitionless Window in: ${offenders.mkString(", ")}")
-  }
 }

@@ -184,26 +184,6 @@ class EventStreamSpec extends SparkSpec {
     assert(out.toSeq == Seq((7L, 100L, 1.0)))
   }
 
-  test("userSessions keyed state accumulates per user") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val stream = MemoryStream[EventStream.Event]
-    val t = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
-    stream.addData(Seq(
-      EventStream.Event(1, t, 7L, "click", 1.0),
-      EventStream.Event(2, t, 7L, "click", 2.0),
-      EventStream.Event(3, t, 9L, "view", 5.0)))
-    val q = EventStream.userSessions(stream.toDS())
-      .writeStream.format("memory").queryName("sess_out")
-      .outputMode("update").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(60000)
-    q.stop()
-    val out = spark.table("sess_out")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    assert(out.contains((7L, 2L, 3.0)))
-    assert(out.contains((9L, 1L, 5.0)))
-  }
-
   test("streaming funnel stages match the batch funnel counts") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext

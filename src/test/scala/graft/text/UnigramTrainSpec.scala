@@ -204,29 +204,29 @@ class UnigramTrainSpec extends SparkSpec {
   }
 
   test("driver-side localTrain ≡ retained DataFrame trainer, term for term") {
-    import org.apache.spark.sql.functions._
+    import UnigramDataFrameTrainer._
     val dictDf = BpeTrain.wordDict(spark, sf).persist()
     val dict = dictDf.collect().map(r => (r.getString(0), r.getLong(1)))
     val local = UnigramTrain.localTrain(dict)
     // round-1: seed inventory with costs, and the round-1 segmentation
-    val c1 = UnigramTrain.withBitCosts(UnigramTrain.seed(dictDf).persist())
+    val c1 = withBitCosts(seed(dictDf).persist())
       .persist()
     val dfCost1 = c1.collect().map(r => (r.getString(0), r.getLong(1),
       r.getLong(2))).toSet
     assert(local.cost1.toSet == dfCost1)
-    val seg1 = UnigramTrain.segment(dictDf, UnigramTrain.costMap(c1))
+    val seg1 = segment(dictDf, costMap(c1))
     val dfSeg1 = seg1.collect().map(r => (r.getString(0), r.getLong(1),
       r.getLong(2), r.getLong(3), r.getString(4))).toSet
     assert(local.seg1.toSet == dfSeg1)
     // round-2: pruned inventory + final segmentation + usage
-    val (cost2, seg2) = UnigramTrain.trainedModel(spark, sf)
+    val (cost2, seg2) = trainedModel(spark, sf)
     val dfCost2 = cost2.collect().map(r => (r.getString(0), r.getLong(1),
       r.getLong(2))).toSet
     assert(local.cost2.toSet == dfCost2)
     val dfSeg2 = seg2.collect().map(r => (r.getString(0), r.getLong(1),
       r.getLong(2), r.getLong(3), r.getString(4))).toSet
     assert(local.seg2.toSet == dfSeg2)
-    val dfUse2 = UnigramTrain.usage(seg2).collect()
+    val dfUse2 = usage(seg2).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(local.use2 == dfUse2)
     spark.catalog.clearCache()

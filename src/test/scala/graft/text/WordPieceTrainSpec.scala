@@ -158,7 +158,7 @@ class WordPieceTrainSpec extends SparkSpec {
     val words = Seq(("az", 1L), ("aa", 1L), ("a", 1L)).toDF("w", "n")
     val got = words.crossJoin(broadcast(vocab))
       .select(col("w"),
-        graft.text.WordPieceTrain.WordPieceApply.applyForTest(col("w"), col("m"))
+        graft.text.WordPieceTrain.WordPieceApply.applyExpr(col("w"), col("m"))
           .as("st"))
       .collect().map(r => r.getString(0) ->
         (r.getStruct(1).getLong(2), r.getStruct(1).getString(3))).toMap
